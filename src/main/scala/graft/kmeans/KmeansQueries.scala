@@ -57,10 +57,7 @@ object KmeansQueries {
     "q_argmin" -> { (s, dir) =>
       val pts = Tables.points(s, dir)
       val cents = Lloyd.initCentroidsFor(s, dir, K)
-      val minStruct = array_min(array(cents.sortBy(_.cid).map { c =>
-        val cl = array(c.coordinates.map(lit).toSeq: _*)
-        struct(Vec.sqDist(col("coordinates"), cl).as("d"), lit(c.cid).as("cid"))
-      }: _*))
+      val minStruct = Lloyd.nearest(cents, col("coordinates"))
       pts.select(col("vec_id"), round(minStruct.getField("d"), 9).as("d2"),
           minStruct.getField("cid").as("cid"))
         .orderBy("vec_id")
@@ -134,16 +131,16 @@ object KmeansQueries {
         .agg(sum(when(Vec.dist(col("coordinates"), col("c0")) < lit(1e-6), 1L).otherwise(0L)).as("n_converged"),
              count(lit(1)).as("n_centroids"))
     },
-    // The codegen SquaredDistance Expression (§2.10 q_expr_dist): same
-    // probe as q_dist_euclid, evaluated through the custom Catalyst
-    // expression's fused primitive loop (bit-equal to the HOF form, so the
-    // oracle is the plain list arithmetic).
+    // The codegen SquaredDistance Expression (§2.10 q_expr_dist): squared
+    // distance to the same probe as q_dist_euclid, evaluated in the custom
+    // Catalyst expression's fused primitive loop (bit-equal to the list
+    // arithmetic the oracle replays).
     "q_expr_dist" -> { (s, dir) =>
       val pts = Tables.points(s, dir)
       val probe = Lloyd.initCentroidsFor(s, dir, 1).head
       val pl = array(probe.coordinates.map(lit).toSeq: _*)
       pts.select(col("vec_id"),
-          round(graft.functions.SquaredDistance(col("coordinates"), pl), 9).as("d2"))
+          round(Vec.sqDist(col("coordinates"), pl), 9).as("d2"))
         .orderBy("vec_id")
     },
     // N-D Euclidean distance of every point to a fixed probe (= centroid 1):
@@ -164,9 +161,7 @@ object KmeansQueries {
     // points score 0 on both engines.
     "q_silhouette" -> { (s, dir) =>
       val cents = Lloyd.initCentroidsFor(s, dir, K)
-      val dists = array(cents.sortBy(_.cid).map(c =>
-        graft.functions.SquaredDistance(col("coordinates"),
-          array(c.coordinates.map(lit).toSeq: _*))): _*)
+      val dists = array(Lloyd.centroidDists(cents, col("coordinates")).map(_._2): _*)
       val sorted = sort_array(dists)
       val a = sqrt(element_at(sorted, 1))
       val b = sqrt(element_at(sorted, 2))
@@ -184,9 +179,7 @@ object KmeansQueries {
     // one K-group partial+final aggregate.
     "q_inertia" -> { (s, dir) =>
       val cents = Lloyd.initCentroidsFor(s, dir, K)
-      val minD2 = array_min(array(cents.sortBy(_.cid).map(c =>
-        graft.functions.SquaredDistance(col("coordinates"),
-          array(c.coordinates.map(lit).toSeq: _*))): _*))
+      val minD2 = array_min(array(Lloyd.centroidDists(cents, col("coordinates")).map(_._2): _*))
       Tables.points(s, dir)
         .withColumn("cid", Lloyd.assignCol(cents, col("coordinates")))
         .select(col("cid"), minD2.as("d2"))
@@ -340,9 +333,8 @@ object KmeansQueries {
     // chord) in pure integer cross-multiplication over the 5-row curve.
     "q_elbow_scan" -> { (s, dir) =>
       val cents = Lloyd.initCentroidsFor(s, dir, K).sortBy(_.cid)
-      val d2Cols = cents.map { c =>
-        graft.functions.SquaredDistance(col("coordinates"),
-          array(c.coordinates.map(lit).toSeq: _*)).as(s"d2_${c.cid}")
+      val d2Cols = Lloyd.centroidDists(cents, col("coordinates")).map { case (cid, d) =>
+        d.as(s"d2_$cid")
       }
       val prefixCols = (1 to K).map { k =>
         val ds = cents.take(k).map(c => col(s"d2_${c.cid}"))
@@ -386,9 +378,8 @@ object KmeansQueries {
     "q_gmm_estep" -> { (s, dir) =>
       val cents = Lloyd.initCentroidsFor(s, dir, K).sortBy(_.cid)
       val pts = Tables.points(s, dir)
-      val d2Cols = cents.map { c =>
-        graft.functions.SquaredDistance(col("coordinates"),
-          array(c.coordinates.map(lit).toSeq: _*)).as(s"d2_${c.cid}")
+      val d2Cols = Lloyd.centroidDists(cents, col("coordinates")).map { case (cid, d) =>
+        d.as(s"d2_$cid")
       }
       val withD = pts
         .withColumn("hard", Lloyd.assignCol(cents, col("coordinates")))

@@ -66,21 +66,27 @@ object Lloyd {
     initCache.computeIfAbsent((sfDir, k),
       _ => initCentroids(graft.core.Tables.points(spark, sfDir), k))
 
-  /** Literal `array<struct<cid,c>>` of the current centroids, ordered by cid
-    * ascending so lexicographic min over (dist, cid) reproduces the
-    * reference's tie-break.
+  /** Squared distance from `coords` to each literal centroid, as (cid, d²)
+    * in ascending cid order — the reference mapper's distance scan
+    * (mapper.py:57-68) as K per-row kernel calls. Ascending cid lets a
+    * lexicographic min over (d², cid) reproduce the reference's tie-break.
     */
-  private def centroidArray(cents: Seq[Centroid]): Seq[(Int, Column)] =
-    cents.sortBy(_.cid).map(c => (c.cid, array(c.coordinates.map(lit).toSeq: _*)))
+  def centroidDists(cents: Seq[Centroid], coords: Column): Seq[(Int, Column)] =
+    cents.sortBy(_.cid).map(c =>
+      (c.cid, Vec.sqDist(coords, array(c.coordinates.map(lit).toSeq: _*))))
 
-  /** Nearest-centroid id for a coordinates column: argmin over the K literal
-    * centroids via `array_min` on (dist, cid) structs — per-row expression,
+  /** Nearest centroid as `struct<d, cid>`: argmin over the K literal
+    * centroids via `array_min` on (d², cid) structs — per-row expression,
     * zero shuffle (reference's mapper inner loop, mapper.py:57-68).
     */
+  def nearest(cents: Seq[Centroid], coords: Column): Column =
+    array_min(array(centroidDists(cents, coords).map { case (cid, d) =>
+      struct(d.as("d"), lit(cid).as("cid"))
+    }: _*))
+
+  /** Nearest-centroid id for a coordinates column. */
   def assignCol(cents: Seq[Centroid], coords: Column): Column =
-    array_min(array(centroidArray(cents).map { case (cid, c) =>
-      struct(graft.functions.SquaredDistance(coords, c).as("d"), lit(cid).as("cid"))
-    }: _*)).getField("cid")
+    nearest(cents, coords).getField("cid")
 
   /** points(vec_id, coordinates) -> assigned(vec_id, coordinates, cid). */
   def assign(points: DataFrame, cents: Seq[Centroid]): DataFrame =
@@ -104,21 +110,9 @@ object Lloyd {
   def updateAgg(assigned: DataFrame): DataFrame =
     assigned.groupBy("cid").agg(VecMeanAgg(col("coordinates")).as("coordinates"))
 
-  /** One full Lloyd iteration as a single DataFrame query (SURVEY.md §7.2
-    * minimum slice): fixed init -> assign -> group -> mean.
-    */
-  def iterateOnce(points: DataFrame, k: Int, useAgg: Boolean = false): DataFrame = {
-    val cents = initCentroids(points, k)
-    val assigned = assign(points, cents)
-    val upd = if (useAgg) updateAgg(assigned) else updateExplode(assigned)
-    upd.orderBy("cid")
-  }
-
   /** Sum of squared distances to the assigned centroid (for MLlib parity). */
   def sse(points: DataFrame, cents: Seq[Centroid]): Double = {
-    val minD = array_min(array(centroidArray(cents).map { case (_, c) =>
-      graft.functions.SquaredDistance(col("coordinates"), c)
-    }: _*))
+    val minD = array_min(array(centroidDists(cents, col("coordinates")).map(_._2): _*))
     points.agg(sum(minD)).head().getDouble(0)
   }
 

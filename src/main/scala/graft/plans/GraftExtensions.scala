@@ -2,10 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Expression, ExpressionInfo, LambdaFunction, Literal, Multiply, NamedLambdaVariable, Subtract, ZipWith}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{DotProduct, SquaredDistance}
 
@@ -13,19 +10,11 @@ import graft.functions.{DotProduct, SquaredDistance}
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`:
   *
-  *   - SQL surface: `graft_sqdist(a, b)` — the codegen
-  *     [[graft.functions.SquaredDistance]] kernel callable from
-  *     `spark.sql(...)` text.
-  *   - [[RewriteSqDist]], an optimizer rule that pattern-matches the HOF
-  *     spelling of squared distance —
-  *     `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0d, (acc,v) -> acc+v)`
-  *     ([[graft.core.Vec.sqDist]]) — and replaces it with the fused
-  *     primitive-loop expression. Bit-equal semantics in ALL cases — same
-  *     accumulation order, null on length mismatch (zip_with null-pads),
-  *     null on null elements (checked only when the array type admits
-  *     them) — so the rewrite is a pure physical win on any input: any user
-  *     writing the idiomatic HOF form gets the kernel without knowing it
-  *     exists.
+  *   - SQL surface: `graft_sqdist(a, b)` and `graft_dot(a, b)` — the codegen
+  *     [[graft.functions.SquaredDistance]] / [[graft.functions.DotProduct]]
+  *     kernels callable from `spark.sql(...)` text. DataFrame code reaches
+  *     the same kernels through [[graft.core.Vec]].
+  *   - [[AsOfJoinStrategy]], the planner strategy for the native as-of join.
   *
   * This is the engine's whole custom-Catalyst inventory by design
   * (SURVEY.md §4): everything else is expressible in built-in operators,
@@ -41,81 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    e.injectOptimizerRule(_ => RewriteSqDist)
-    e.injectOptimizerRule(_ => RewriteDot)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
-}
-
-/** aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0.0, (acc,v) -> acc+v)
-  * => SquaredDistance(a, b).
-  *
-  * The match is deliberately exact — both Subtracts must be the same
-  * (x - y) over the zip lambda's variables in order, the seed must be
-  * literal 0.0, the merge must be acc + v over the merge lambda's
-  * variables in order, and the finish lambda must be identity — anything
-  * else is left untouched.
-  */
-object RewriteSqDist extends Rule[LogicalPlan] {
-
-  private def isDoubleArray(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  private def isVar(e: Expression, v: NamedLambdaVariable): Boolean = e match {
-    case nv: NamedLambdaVariable => nv.exprId == v.exprId
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case ArrayAggregate(
-        ZipWith(a, b,
-          LambdaFunction(Multiply(Subtract(x1, y1, _), Subtract(x2, y2, _), _),
-            Seq(zx: NamedLambdaVariable, zy: NamedLambdaVariable), _)),
-        Literal(0.0, DoubleType),
-        LambdaFunction(Add(accRef, vRef, _),
-          Seq(acc: NamedLambdaVariable, v: NamedLambdaVariable), _),
-        LambdaFunction(finishBody, Seq(fin: NamedLambdaVariable), _))
-      if isVar(x1, zx) && isVar(y1, zy) && isVar(x2, zx) && isVar(y2, zy) &&
-        isVar(accRef, acc) && isVar(vRef, v) && isVar(finishBody, fin) &&
-        isDoubleArray(a.dataType) && isDoubleArray(b.dataType) =>
-      SquaredDistance(a, b)
-  }
-}
-
-/** aggregate(zip_with(a, b, (x,y) -> x*y), 0.0, (acc,v) -> acc+v)
-  * => DotProduct(a, b) — same exact-match discipline as [[RewriteSqDist]],
-  * same all-cases bit-equality (see [[graft.functions.DotProduct]] scaladoc).
-  * This is what keeps [[graft.core.Vec.dot]]/[[graft.core.Vec.cosine]] HOF
-  * spellings (oracle-translatable, readable) while the physical plan runs
-  * the fused zero-allocation kernel — critical when the dot sits in a join
-  * residual evaluated once per candidate pair.
-  */
-object RewriteDot extends Rule[LogicalPlan] {
-
-  private def isDoubleArray(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  private def isVar(e: Expression, v: NamedLambdaVariable): Boolean = e match {
-    case nv: NamedLambdaVariable => nv.exprId == v.exprId
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case ArrayAggregate(
-        ZipWith(a, b,
-          LambdaFunction(Multiply(x1, y1, _),
-            Seq(zx: NamedLambdaVariable, zy: NamedLambdaVariable), _)),
-        Literal(0.0, DoubleType),
-        LambdaFunction(Add(accRef, vRef, _),
-          Seq(acc: NamedLambdaVariable, v: NamedLambdaVariable), _),
-        LambdaFunction(finishBody, Seq(fin: NamedLambdaVariable), _))
-      if isVar(x1, zx) && isVar(y1, zy) &&
-        isVar(accRef, acc) && isVar(vRef, v) && isVar(finishBody, fin) &&
-        isDoubleArray(a.dataType) && isDoubleArray(b.dataType) =>
-      DotProduct(a, b)
   }
 }

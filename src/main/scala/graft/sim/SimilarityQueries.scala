@@ -221,7 +221,7 @@ object SimilarityQueries {
       val emb = Tables.embeddings(s, dir)
       val probe = graft.kmeans.Lloyd.initCentroidsFor(s, dir, 1).head.coordinates.toSeq
       // driver-side replica of lshBucket: same plane constants, same
-      // sequential left-to-right accumulation as Vec.dot / DotProduct
+      // sequential left-to-right accumulation as Vec.dot
       val pb = (0 until NPlanes).map { j =>
         var acc = 0.0
         var d = 0
@@ -466,8 +466,8 @@ object SimilarityQueries {
     // bucket census is a tiny aggregate broadcast back onto the rows (never
     // a window over the hot bucket itself). Vectors are L2-normalized ONCE
     // per row before the join, so the per-pair work (the join residual) is
-    // a single dot product — fused to the codegen DotProduct kernel by
-    // RewriteDot, zero allocation per pair.
+    // a single dot product — the codegen DotProduct kernel (Vec.dot), zero
+    // allocation per pair.
     // (norm floored at 1e-12: a zero vector must normalize to zeros, not
     // NaN — Spark filters NaN cos out but DuckDB sorts NaN above 0.5.)
     "q_dedup_embed" -> { (s, dir) =>

@@ -161,8 +161,9 @@ object Streams {
   }
 
   /** Scratch base for per-query streaming checkpoints: tmpfs when the box
-    * has one, else the JVM temp dir. A TEMP checkpoint has no durability
-    * contract by design (Spark deletes its own temp checkpoints on stop;
+    * has one, else the JVM temp dir, scoped by `user.name` so users sharing
+    * a host never collide on one directory. A TEMP checkpoint has no
+    * durability contract by design (Spark deletes its own temp checkpoints on stop;
     * `forceDeleteTempCheckpointLocation` exists precisely because they are
     * scratch), so placing it on tmpfs changes no semantics — it only stops
     * charging every micro-batch's offset/commit/state-delta fsync-rename
@@ -175,8 +176,10 @@ object Streams {
     */
   private[streaming] def ckptBase(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.stream.ckptBase").getOrElse {
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_stream_ckpt"
-      else System.getProperty("java.io.tmpdir") + "/graft_stream_ckpt"
+      val root =
+        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
+        else System.getProperty("java.io.tmpdir")
+      s"$root/graft_stream_ckpt_${System.getProperty("user.name")}"
     }
 
   private[streaming] def deleteRecursively(f: java.io.File): Unit = {

@@ -150,13 +150,16 @@ class PlanPropertiesSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"cross product leaked:\n$p")
   }
 
-  test("q_dedup_embed's pair work runs the fused DotProduct kernel (no ZipWith survives)") {
-    // RewriteDot must replace every HOF dot spelling — the per-pair join
-    // residual above all — with the zero-allocation codegen kernel.
-    val p = executedPlan("q_dedup_embed")
-    assert(p.contains("dotproduct") || p.contains("DotProduct"), s"kernel not planned:\n$p")
-    assert(!p.contains("zip_with") && !p.contains("ZipWith"),
-      s"HOF dot survived in the dedup plan (allocation per candidate pair):\n$p")
+  // Vector math (Vec.sqDist / dot / cosine) must plan as the zero-allocation
+  // codegen kernels, never as an aggregate(zip_with(...)) HOF that allocates
+  // an array per row — or per candidate pair in a join residual.
+  for (key <- Seq("q_dedup_embed", "q_topk_similar", "q_ann_ivf", "q_ann_lsh",
+      "q_knn_join", "q_assign_nearest", "q_mrl_trunc")) {
+    test(s"$key runs the fused vector kernels (no ZipWith survives)") {
+      val p = executedPlan(key).toLowerCase
+      assert(p.contains("dotproduct") || p.contains("squareddistance"), s"kernel not planned:\n$p")
+      assert(!p.contains("zip_with") && !p.contains("zipwith"), s"HOF vector math survived:\n$p")
+    }
   }
 
   test("q_bloom_prune: filter and dim both broadcast — the fact side never hash-shuffles pre-agg") {

@@ -1,13 +1,11 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark
-import graft.core.Vec
 
-/** The SparkSessionExtensions surface: SQL-registered kernel + the
-  * HOF-to-kernel optimizer rewrite (plan-level and value-level).
+/** The SparkSessionExtensions SQL surface: the codegen kernels registered
+  * as SQL functions.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
   private lazy val spark = {
@@ -16,8 +14,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // shared test session (extensions can't be added post-construction)
     s.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_sqdist", exprs => graft.functions.SquaredDistance(exprs(0), exprs(1)), "scala_udf")
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations :+ RewriteSqDist
+    s.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "graft_dot", exprs => graft.functions.DotProduct(exprs(0), exprs(1)), "scala_udf")
     s
   }
 
@@ -27,35 +25,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(got == 25.0)
   }
 
-  test("optimizer rewrites the HOF sqDist pattern to SquaredDistance") {
-    val df = graft.core.Tables.embeddings(spark, TestSpark.Sf0001)
-      .select(Vec.sqDist(col("embedding"), col("embedding")).as("d"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("squareddistance") || optimized.contains("SquaredDistance"),
-      s"rewrite did not fire:\n$optimized")
-    // and the rewritten plan still evaluates (value check: d(x,x) == 0)
-    assert(df.filter(col("d") =!= 0.0).count() == 0)
-  }
-
-  test("rewrite does NOT fire on near-miss patterns") {
-    // (x-y)*(x-x) is not a squared distance; must stay an ArrayAggregate
-    val df = graft.core.Tables.embeddings(spark, TestSpark.Sf0001)
-      .select(aggregate(
-        zip_with(col("embedding"), col("embedding"), (x, y) => (x - y) * (x - x)),
-        lit(0.0), (a, v) => a + v).as("d"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.toLowerCase.contains("squareddistance"),
-      s"rewrite misfired on a non-sqdist pattern:\n$optimized")
-  }
-
-  test("rewritten HOF form is bit-equal to the explicit kernel on fixtures") {
-    val emb = graft.core.Tables.embeddings(spark, TestSpark.Sf0001)
-    val probe = emb.orderBy("vec_id").limit(1).select("embedding").head().getSeq[Double](0)
-    val pl = array(probe.map(lit): _*)
-    val diff = emb.select(
-        (Vec.sqDist(col("embedding"), pl) -
-          graft.functions.SquaredDistance(col("embedding"), pl)).as("d"))
-      .filter(col("d") =!= 0.0)
-    assert(diff.count() == 0)
+  test("graft_dot is callable from SQL text") {
+    val got = spark.sql(
+      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dot").head().getDouble(0)
+    assert(got == 11.0)
   }
 }

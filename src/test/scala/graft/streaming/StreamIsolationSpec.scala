@@ -16,10 +16,22 @@ import graft.TestSpark
 class StreamIsolationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("back-to-back drains share no state and clean their scratch checkpoints") {
+  /** A streaming session whose scratch checkpoints go to a fresh temp dir
+    * owned by this test alone, so no concurrent drain elsewhere can show
+    * up in (or race with) the leftover check.
+    */
+  private def isolatedSession(): (org.apache.spark.sql.SparkSession, File) = {
+    val base = java.nio.file.Files.createTempDirectory("graft_stream_isolation").toFile
     val ss = Streams.streamingSession(spark)
-    val base = new File(Streams.ckptBase(ss))
-    val before = Option(base.list()).map(_.toSet).getOrElse(Set.empty[String])
+    ss.conf.set("spark.graft.stream.ckptBase", base.getPath)
+    (ss, base)
+  }
+
+  private def leftovers(base: File): Seq[String] =
+    Option(base.list()).map(_.toSeq).getOrElse(Seq.empty)
+
+  test("back-to-back drains share no state and clean their scratch checkpoints") {
+    val (ss, base) = isolatedSession()
 
     val r1 = Streams.runToBatch(ss,
       Streams.tumblingCounts(Streams.readEvents(ss, TestSpark.Sf0001))).collect()
@@ -32,15 +44,13 @@ class StreamIsolationSpec extends AnyFunSuite {
     assert(r1.nonEmpty)
 
     // every per-query scratch checkpoint dir was deleted after its drain
-    val after = Option(base.list()).map(_.toSet).getOrElse(Set.empty[String])
-    assert((after -- before).isEmpty,
-      s"leftover scratch checkpoints: ${(after -- before).mkString(", ")}")
+    assert(leftovers(base).isEmpty,
+      s"leftover scratch checkpoints: ${leftovers(base).mkString(", ")}")
+    Streams.deleteRecursively(base)
   }
 
   test("scratch checkpoint is cleaned even when a drain fails") {
-    val ss = Streams.streamingSession(spark)
-    val base = new File(Streams.ckptBase(ss))
-    val before = Option(base.list()).map(_.toSet).getOrElse(Set.empty[String])
+    val (ss, base) = isolatedSession()
     // Append mode on an unwatermarked streaming aggregate is rejected at
     // start(): the scratch cleanup must still run
     intercept[Exception] {
@@ -48,7 +58,8 @@ class StreamIsolationSpec extends AnyFunSuite {
         Streams.readEvents(ss, TestSpark.Sf0001).groupBy("event_type").count(),
         org.apache.spark.sql.streaming.OutputMode.Append())
     }
-    val after = Option(base.list()).map(_.toSet).getOrElse(Set.empty[String])
-    assert((after -- before).isEmpty)
+    assert(leftovers(base).isEmpty,
+      s"leftover scratch checkpoints: ${leftovers(base).mkString(", ")}")
+    Streams.deleteRecursively(base)
   }
 }
