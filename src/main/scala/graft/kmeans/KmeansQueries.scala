@@ -175,14 +175,13 @@ object KmeansQueries {
     },
     // NS: per-cluster inertia (within-cluster SSE) — THE K-Means training
     // metric (what Lloyd minimizes; the reference's convergence quantity
-    // made queryable). min-d² is the same argmin the assignment computes;
+    // made queryable). cid and min-d² come from one nearest-centroid scan;
     // one K-group partial+final aggregate.
     "q_inertia" -> { (s, dir) =>
       val cents = Lloyd.initCentroidsFor(s, dir, K)
-      val minD2 = array_min(array(Lloyd.centroidDists(cents, col("coordinates")).map(_._2): _*))
+      val near = Lloyd.nearest(cents, col("coordinates"))
       Tables.points(s, dir)
-        .withColumn("cid", Lloyd.assignCol(cents, col("coordinates")))
-        .select(col("cid"), minD2.as("d2"))
+        .select(near.getField("cid").as("cid"), near.getField("d").as("d2"))
         .groupBy("cid")
         .agg(count(lit(1)).as("n"), round(sum("d2"), 6).as("inertia"))
         .orderBy("cid")

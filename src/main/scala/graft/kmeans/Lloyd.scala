@@ -1,9 +1,10 @@
 package graft.kmeans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{graftbridge, Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Vec
+import graft.functions.NearestCentroid
 
 /** A cluster center: id + N-dim vector (kmeans.proto:9-12). */
 case class Centroid(cid: Int, coordinates: Array[Double])
@@ -17,17 +18,21 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   * take the per-dimension mean (reducer.py:19-30,58-67) -> master concatenates
   * and checks convergence (master.py:97-103,149-152).
   *
-  * Here one iteration is ONE narrow map stage + ONE aggregation:
+  * Here one iteration ([[step]]) is ONE narrow map stage + ONE aggregation
+  * + a K-row collect, i.e. two stages:
   *
-  *   - centroids are collected to the driver (K rows) and inlined as a
-  *     literal array, so assignment is a per-row expression — *no join and
-  *     no shuffle at all* on the big side. This is strictly better than a
-  *     crossJoin+min_by plan (which shuffles N·K rows) and mirrors the
-  *     reference's broadcast of centroids inside every RPC request
-  *     (kmeans.proto:16, master.py:182-186).
+  *   - centroids are collected to the driver (K rows) and inlined as one
+  *     literal matrix, so assignment is a per-row expression — the fused
+  *     [[graft.functions.NearestCentroid]] kernel, one K×D loop per point —
+  *     with *no join and no shuffle at all* on the big side. This is
+  *     strictly better than a crossJoin+min_by plan (which shuffles N·K
+  *     rows) and mirrors the reference's broadcast of centroids inside
+  *     every RPC request (kmeans.proto:16, master.py:182-186).
   *   - the mean is either a posexplode/avg plan (oracle-translatable) or
   *     [[VecMeanAgg]] (shuffles K buffers instead of N·D rows — the 100 TB
   *     path).
+  *   - the K means are sorted by cid on the driver, so the collect needs no
+  *     range-partition exchange or sort stage.
   *   - the loop never grows lineage: every iteration's plan is rebuilt from
   *     the cached points plus the new centroid literals.
   *
@@ -67,22 +72,22 @@ object Lloyd {
       _ => initCentroids(graft.core.Tables.points(spark, sfDir), k))
 
   /** Squared distance from `coords` to each literal centroid, as (cid, d²)
-    * in ascending cid order — the reference mapper's distance scan
-    * (mapper.py:57-68) as K per-row kernel calls. Ascending cid lets a
-    * lexicographic min over (d², cid) reproduce the reference's tie-break.
+    * in ascending cid order: K separate distance columns, for queries that
+    * need every distance (silhouette, elbow scan, GMM E-step). The argmin
+    * alone is [[nearest]].
     */
   def centroidDists(cents: Seq[Centroid], coords: Column): Seq[(Int, Column)] =
     cents.sortBy(_.cid).map(c =>
       (c.cid, Vec.sqDist(coords, array(c.coordinates.map(lit).toSeq: _*))))
 
-  /** Nearest centroid as `struct<d, cid>`: argmin over the K literal
-    * centroids via `array_min` on (d², cid) structs — per-row expression,
-    * zero shuffle (reference's mapper inner loop, mapper.py:57-68).
+  /** Nearest centroid as `struct<d, cid>` (min squared distance, its cid;
+    * ties to the lower cid): the fused [[graft.functions.NearestCentroid]]
+    * kernel over the K centroids as one literal — per-row expression, zero
+    * shuffle (reference's mapper inner loop, mapper.py:57-68).
     */
   def nearest(cents: Seq[Centroid], coords: Column): Column =
-    array_min(array(centroidDists(cents, coords).map { case (cid, d) =>
-      struct(d.as("d"), lit(cid).as("cid"))
-    }: _*))
+    graftbridge.toColumn(NearestCentroid(graftbridge.toExpression(coords),
+      NearestCentroid.literal(cents.map(c => (c.cid, c.coordinates)))))
 
   /** Nearest-centroid id for a coordinates column. */
   def assignCol(cents: Seq[Centroid], coords: Column): Column =
@@ -111,10 +116,8 @@ object Lloyd {
     assigned.groupBy("cid").agg(VecMeanAgg(col("coordinates")).as("coordinates"))
 
   /** Sum of squared distances to the assigned centroid (for MLlib parity). */
-  def sse(points: DataFrame, cents: Seq[Centroid]): Double = {
-    val minD = array_min(array(centroidDists(cents, col("coordinates")).map(_._2): _*))
-    points.agg(sum(minD)).head().getDouble(0)
-  }
+  def sse(points: DataFrame, cents: Seq[Centroid]): Double =
+    points.agg(sum(nearest(cents, col("coordinates")).getField("d"))).head().getDouble(0)
 
   // (sfDir, k, maxIter, eps, useAgg, grid) -> full-loop result. With
   // `grid` set the loop is deterministic down to the bit (every round's
@@ -141,9 +144,33 @@ object Lloyd {
     java.math.BigDecimal.valueOf(v)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
 
+  /** One Lloyd iteration over `pts` from `cents`: assign, per-cid mean
+    * ([[updateAgg]], or [[updateExplode]] without `useAgg`), and collect the
+    * surviving means sorted by cid on the driver. `grid` as in [[run]].
+    */
+  def step(pts: DataFrame, cents: Seq[Centroid], useAgg: Boolean = true,
+           grid: Option[Int] = None): Seq[Centroid] =
+    run(pts, cents, useAgg, grid)
+
+  // The body of [[step]] is a `run` overload so that an iteration's action
+  // has `Lloyd$.run` as its innermost program frame whether it comes from
+  // [[run]] or from [[step]]: the benchmark in bench/ attributes iteration
+  // stages by that frame.
+  private def run(pts: DataFrame, cents: Seq[Centroid], useAgg: Boolean,
+                  grid: Option[Int]): Seq[Centroid] = {
+    val assigned = assign(pts, cents)
+    val upd = if (useAgg) updateAgg(assigned) else updateExplode(assigned)
+    upd.collect().map { r =>
+      val raw = r.getSeq[Double](r.fieldIndex("coordinates")).toArray
+      Centroid(r.getInt(r.fieldIndex("cid")),
+        grid.fold(raw)(d => raw.map(snap(_, d))))
+    }.sortBy(_.cid).toSeq
+  }
+
   /** Full driver loop: iterate until `maxIter` or all centroids moved < eps.
-    * Each iteration is one Spark action (the K-row collect); points are
-    * cached once. Returns (final centroids, iterations run).
+    * Each iteration is one [[step]], one Spark action (the K-row collect);
+    * points are cached once and unpersisted however the loop ends.
+    * Returns (final centroids, iterations run).
     *
     * `grid = Some(d)` snaps every collected mean to the 1e-d decimal grid
     * before the next assignment — the q_kmeans_iter2 determinism
@@ -156,32 +183,27 @@ object Lloyd {
   def run(points: DataFrame, k: Int, maxIter: Int = 10, eps: Double = 1e-6,
           useAgg: Boolean = true, grid: Option[Int] = None): (Seq[Centroid], Int) = {
     val pts = points.select("vec_id", "coordinates").cache()
-    var cents = initCentroids(pts, k)
-    var iters = 0
-    var converged = false
-    while (iters < maxIter && !converged) {
-      val assigned = assign(pts, cents)
-      val upd = if (useAgg) updateAgg(assigned) else updateExplode(assigned)
-      val next = upd.orderBy("cid").collect().map { r =>
-        val raw = r.getSeq[Double](r.fieldIndex("coordinates")).toArray
-        Centroid(r.getInt(r.fieldIndex("cid")),
-          grid.fold(raw)(d => raw.map(snap(_, d))))
-      }.toSeq
-      iters += 1
-      // id-join convergence: every surviving centroid moved < eps AND no
-      // cluster vanished this round (a vanish changes the id set -> not
-      // converged, matching the count==len check at master.py:149-151).
-      val prev = cents.map(c => c.cid -> c.coordinates).toMap
-      converged = next.size == cents.size && next.forall { c =>
-        prev.get(c.cid).exists { p =>
-          var s = 0.0; var i = 0
-          while (i < p.length) { val d = p(i) - c.coordinates(i); s += d * d; i += 1 }
-          math.sqrt(s) < eps
+    try {
+      var cents = initCentroids(pts, k)
+      var iters = 0
+      var converged = false
+      while (iters < maxIter && !converged) {
+        val next = step(pts, cents, useAgg, grid)
+        iters += 1
+        // id-join convergence: every surviving centroid moved < eps AND no
+        // cluster vanished this round (a vanish changes the id set -> not
+        // converged, matching the count==len check at master.py:149-151).
+        val prev = cents.map(c => c.cid -> c.coordinates).toMap
+        converged = next.size == cents.size && next.forall { c =>
+          prev.get(c.cid).exists { p =>
+            var s = 0.0; var i = 0
+            while (i < p.length) { val d = p(i) - c.coordinates(i); s += d * d; i += 1 }
+            math.sqrt(s) < eps
+          }
         }
+        cents = next
       }
-      cents = next
-    }
-    pts.unpersist()
-    (cents, iters)
+      (cents, iters)
+    } finally pts.unpersist()
   }
 }

@@ -202,7 +202,7 @@ object MLQueries {
         .orderBy("pos")
     },
 
-    // The VecMeanAgg Aggregator (§2.10) against the same oracle as the
+    // The VecMeanAgg aggregate (§2.10) against the same oracle as the
     // posexplode mean: per-label vector means, exploded back to scalars.
     // Proves the distributive (sum, count) buffer — the 100 TB path that
     // shuffles K buffers instead of N·D rows — computes the identical result.

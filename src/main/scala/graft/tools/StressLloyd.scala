@@ -7,9 +7,9 @@ import graft.kmeans.{Centroid, Lloyd}
 /** Stress-scale evidence for the flagship dataflow: one full Lloyd run
   * (K = 5, 10 fixed iterations, no early stop) over the synthetic-sf1
   * embeddings at /tmp/stress_sf1, printing per-iteration wall time. Each
-  * iteration is the production shape — literal-centroid assignment (zero
-  * shuffle on the point side) + the combinable VecMeanAgg (K buffers cross
-  * the wire) + a K-row collect. Usage:
+  * iteration is the production shape, [[Lloyd.step]]: fused literal-centroid
+  * assignment (zero shuffle on the point side) + the combinable VecMeanAgg
+  * (K buffers cross the wire) + a K-row collect sorted on the driver. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/tmp/stress_sf1 sbt "runMain graft.tools.StressLloyd"
   */
@@ -33,13 +33,8 @@ object StressLloyd {
     var cents: Seq[Centroid] = Lloyd.initCentroids(pts, 5)
     val times = (1 to 10).map { it =>
       val t0 = System.nanoTime()
-      val next = Lloyd.updateAgg(Lloyd.assign(pts, cents))
-        .orderBy("cid").collect().map { r =>
-          Centroid(r.getInt(r.fieldIndex("cid")),
-            r.getSeq[Double](r.fieldIndex("coordinates")).toArray)
-        }.toSeq
+      cents = Lloyd.step(pts, cents)
       val dt = (System.nanoTime() - t0) / 1e9
-      cents = next
       println(f"iter $it%2d: $dt%.3f s (${cents.size} centroids)")
       dt
     }

@@ -152,14 +152,34 @@ class PlanPropertiesSpec extends AnyFunSuite {
 
   // Vector math (Vec.sqDist / dot / cosine) must plan as the zero-allocation
   // codegen kernels, never as an aggregate(zip_with(...)) HOF that allocates
-  // an array per row — or per candidate pair in a join residual.
+  // an array per row — or per candidate pair in a join residual. Nearest-
+  // centroid assignment is the fused NearestCentroid kernel.
+  private val assignmentKeys = Set("q_assign_nearest", "q_argmin")
   for (key <- Seq("q_dedup_embed", "q_topk_similar", "q_ann_ivf", "q_ann_lsh",
-      "q_knn_join", "q_assign_nearest", "q_mrl_trunc")) {
+      "q_knn_join", "q_assign_nearest", "q_argmin", "q_mrl_trunc")) {
     test(s"$key runs the fused vector kernels (no ZipWith survives)") {
       val p = executedPlan(key).toLowerCase
-      assert(p.contains("dotproduct") || p.contains("squareddistance"), s"kernel not planned:\n$p")
+      val kernels =
+        if (assignmentKeys(key)) Seq("nearestcentroid") else Seq("dotproduct", "squareddistance")
+      assert(kernels.exists(p.contains), s"kernel not planned:\n$p")
       assert(!p.contains("zip_with") && !p.contains("zipwith"), s"HOF vector math survived:\n$p")
     }
+  }
+
+  test("Lloyd.assign plans one NearestCentroid over one centroid literal (K = 16, D = 64)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.DoubleType
+    import graft.functions.NearestCentroid
+    import graft.kmeans.{Centroid, Lloyd}
+    val pts = graft.core.Tables.points(spark, TestSpark.Sf0001)
+    val cents = (1 to 16).map(c => Centroid(c, Array.tabulate(64)(d => (c * 64 + d) / 1000.0)))
+    val plan = Lloyd.assign(pts, cents).queryExecution.optimizedPlan
+    val exprs = plan.collect { case n => n.expressions }.flatten
+    val kernels = exprs.flatMap(_.collect { case k: NearestCentroid => k })
+    assert(kernels.size == 1, s"expected one NearestCentroid:\n$plan")
+    assert(kernels.head.right.isInstanceOf[Literal], s"centroids are not one literal:\n$plan")
+    val doubleLits = exprs.flatMap(_.collect { case l @ Literal(_, DoubleType) => l })
+    assert(doubleLits.isEmpty, s"${doubleLits.size} per-coordinate literals in the plan:\n$plan")
   }
 
   test("q_bloom_prune: filter and dim both broadcast — the fact side never hash-shuffles pre-agg") {
