@@ -166,11 +166,15 @@ object NearestCentroid {
   }
 
   object Table {
-    def apply(cents: ArrayData): Table = {
-      val rows = Array.tabulate(cents.numElements()) { k =>
+    def apply(cents: ArrayData): Table =
+      apply(Seq.tabulate(cents.numElements()) { k =>
         val r = cents.getStruct(k, 2)
         (r.getInt(0), r.getArray(1).toDoubleArray())
-      }.sortBy(_._1)
+      })
+
+    /** The (cid, coordinates) pairs in any order. */
+    def apply(cents: Seq[(Int, Array[Double])]): Table = {
+      val rows = cents.sortBy(_._1).toArray
       Table(rows.map(_._1), rows.map(_._2.length).scanLeft(0)(_ + _), rows.flatMap(_._2))
     }
   }

@@ -1,7 +1,10 @@
 package graft.kmeans
 
 import org.apache.spark.sql.{graftbridge, Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.core.Vec
 import graft.functions.NearestCentroid
@@ -18,23 +21,26 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   * take the per-dimension mean (reducer.py:19-30,58-67) -> master concatenates
   * and checks convergence (master.py:97-103,149-152).
   *
-  * Here one iteration ([[step]]) is ONE narrow map stage + ONE aggregation
-  * + a K-row collect, i.e. two stages:
+  * Here one iteration ([[step]]) is ONE Spark job of one stage, the
+  * in-mapper combining shape of MLlib's KMeans:
   *
-  *   - centroids are collected to the driver (K rows) and inlined as one
-  *     literal matrix, so assignment is a per-row expression — the fused
-  *     [[graft.functions.NearestCentroid]] kernel, one K×D loop per point —
-  *     with *no join and no shuffle at all* on the big side. This is
-  *     strictly better than a crossJoin+min_by plan (which shuffles N·K
-  *     rows) and mirrors the reference's broadcast of centroids inside
-  *     every RPC request (kmeans.proto:16, master.py:182-186).
-  *   - the mean is either a posexplode/avg plan (oracle-translatable) or
-  *     [[VecMeanAgg]] (shuffles K buffers instead of N·D rows — the 100 TB
-  *     path).
-  *   - the K means are sorted by cid on the driver, so the collect needs no
-  *     range-partition exchange or sort stage.
-  *   - the loop never grows lineage: every iteration's plan is rebuilt from
-  *     the cached points plus the new centroid literals.
+  *   - the K centroids live on the driver and ship with the job's closure
+  *     as one flattened K×D table, so each partition runs the fused
+  *     [[graft.functions.NearestCentroid]] argmin loop over its points with
+  *     *no join and no shuffle at all* on the big side. This mirrors the
+  *     reference's broadcast of centroids inside every RPC request
+  *     (kmeans.proto:16, master.py:182-186).
+  *   - each partition folds its points, in row order, into one K×D buffer
+  *     of coordinate sums plus K counts; `treeAggregate` merges the
+  *     partitions' buffers, so K×(D+1) numbers per partition cross the wire.
+  *   - the driver divides, drops empty clusters and keeps the means in cid
+  *     order.
+  *   - the loop never grows lineage, and the point scan is planned once:
+  *     every iteration reuses the cached points' `queryExecution.toRdd`.
+  *
+  * `useAgg = false` keeps a DataFrame iteration instead — assignment by
+  * [[assign]], means by the posexplode/avg plan [[updateExplode]] — which a
+  * DuckDB replay can translate.
   *
   * Semantics kept from the reference (SURVEY.md §2.11): ties go to the
   * lower centroid id (strict `<` in mapper.py:64 keeps the earlier one);
@@ -99,7 +105,7 @@ object Lloyd {
 
   /** Per-cid mean via posexplode -> per-(cid,pos) avg -> re-assemble.
     * Oracle-translatable (DuckDB unnest+avg); shuffles D rows per point, so
-    * only for correctness cross-checks — the scale path is [[updateAgg]].
+    * only for correctness cross-checks — the scale path is [[step]].
     */
   def updateExplode(assigned: DataFrame): DataFrame =
     assigned
@@ -108,12 +114,6 @@ object Lloyd {
       .groupBy("cid")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         x => x.getField("m")).as("coordinates"))
-
-  /** Per-cid mean via the distributive [[VecMeanAgg]]: map-side partial
-    * (sum, count) buffers, K merged buffers on the wire.
-    */
-  def updateAgg(assigned: DataFrame): DataFrame =
-    assigned.groupBy("cid").agg(VecMeanAgg(col("coordinates")).as("coordinates"))
 
   /** Sum of squared distances to the assigned centroid (for MLlib parity). */
   def sse(points: DataFrame, cents: Seq[Centroid]): Double =
@@ -144,9 +144,14 @@ object Lloyd {
     java.math.BigDecimal.valueOf(v)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
 
-  /** One Lloyd iteration over `pts` from `cents`: assign, per-cid mean
-    * ([[updateAgg]], or [[updateExplode]] without `useAgg`), and collect the
-    * surviving means sorted by cid on the driver. `grid` as in [[run]].
+  /** One Lloyd iteration over `pts` from `cents`: the surviving per-cid
+    * means, sorted by cid. With `useAgg` it is one job folding `pts` into
+    * per-partition sum/count buffers; without it, [[updateExplode]] over
+    * [[assign]]. `grid` as in [[run]].
+    *
+    * A row whose `coordinates` is null is skipped: it joins no cluster. A
+    * null element, or a point whose length differs from the centroids',
+    * fails the job.
     */
   def step(pts: DataFrame, cents: Seq[Centroid], useAgg: Boolean = true,
            grid: Option[Int] = None): Seq[Centroid] =
@@ -158,18 +163,88 @@ object Lloyd {
   // stages by that frame.
   private def run(pts: DataFrame, cents: Seq[Centroid], useAgg: Boolean,
                   grid: Option[Int]): Seq[Centroid] = {
-    val assigned = assign(pts, cents)
-    val upd = if (useAgg) updateAgg(assigned) else updateExplode(assigned)
-    upd.collect().map { r =>
-      val raw = r.getSeq[Double](r.fieldIndex("coordinates")).toArray
-      Centroid(r.getInt(r.fieldIndex("cid")),
-        grid.fold(raw)(d => raw.map(snap(_, d))))
-    }.sortBy(_.cid).toSeq
+    require(cents.nonEmpty, "Lloyd.step needs at least one centroid")
+    val means =
+      if (useAgg) {
+        // `queryExecution` and its `toRdd` are lazy vals of `pts`: the scan
+        // is planned on the first iteration and reused by the rest
+        val qe = pts.queryExecution
+        val at = pts.schema.fieldIndex("coordinates")
+        val checkNulls = pts.schema(at).dataType match {
+          case ArrayType(_, containsNull) => containsNull
+          case _ => false
+        }
+        val table = NearestCentroid.Table(cents.map(c => (c.cid, c.coordinates)))
+        SQLExecution.withNewExecutionId(qe, Some("Lloyd.step")) {
+          qe.toRdd.treeAggregate(new Sums)(
+            (s, row) => if (row.isNullAt(at)) s else s.add(table, row.getArray(at), checkNulls),
+            (a, b) => a.merge(b))
+        }.means(table)
+      } else
+        updateExplode(assign(pts, cents)).collect().map { r =>
+          (r.getInt(r.fieldIndex("cid")), r.getSeq[Double](r.fieldIndex("coordinates")).toArray)
+        }.sortBy(_._1).toSeq
+    means.map { case (cid, raw) => Centroid(cid, grid.fold(raw)(d => raw.map(snap(_, d)))) }
+  }
+
+  /** One iteration's running state: the coordinate sums of every centroid
+    * (centroid `j`'s at `j·D`) and its point count. The arrays are allocated
+    * by the first point folded in, so the zero value every task receives is
+    * empty; `dist` is scratch and never leaves the task.
+    */
+  private final class Sums extends Serializable {
+    private var sum: Array[Double] = _
+    private var n: Array[Long] = _
+    @transient private var dist: Array[Double] = _
+
+    /** Folds the non-null point `x` into its nearest centroid's sums. */
+    def add(t: NearestCentroid.Table, x: ArrayData, checkNulls: Boolean): Sums = {
+      if (n == null) {
+        sum = new Array[Double](t.flat.length)
+        n = new Array[Long](t.cids.length)
+        dist = new Array[Double](t.cids.length)
+      }
+      val j = t.nearest(x, checkNulls, dist)
+      val d = x.numElements()
+      if (j < 0) {
+        val c = -1 - j
+        val nullAt = if (checkNulls) (0 until d).find(x.isNullAt) else None
+        throw new IllegalArgumentException(nullAt.fold(
+          s"Lloyd.step: point of length $d, centroid ${t.cids(c)} of length " +
+            s"${t.offsets(c + 1) - t.offsets(c)}")(i => s"Lloyd.step: null element at $i"))
+      }
+      val o = j * d
+      var i = 0
+      while (i < d) { sum(o + i) += x.getDouble(i); i += 1 }
+      n(j) += 1
+      this
+    }
+
+    def merge(that: Sums): Sums =
+      if (that.n == null) this
+      else if (n == null) that
+      else {
+        var i = 0
+        while (i < sum.length) { sum(i) += that.sum(i); i += 1 }
+        i = 0
+        while (i < n.length) { n(i) += that.n(i); i += 1 }
+        this
+      }
+
+    /** (cid, mean) of every centroid that got a point, in cid order. */
+    def means(t: NearestCentroid.Table): Seq[(Int, Array[Double])] =
+      if (n == null) Nil
+      else {
+        val d = sum.length / n.length
+        t.cids.indices.filter(n(_) > 0L).map { j =>
+          (t.cids(j), Array.tabulate(d)(i => sum(j * d + i) / n(j)))
+        }
+      }
   }
 
   /** Full driver loop: iterate until `maxIter` or all centroids moved < eps.
-    * Each iteration is one [[step]], one Spark action (the K-row collect);
-    * points are cached once and unpersisted however the loop ends.
+    * Each iteration is one [[step]], one Spark job; points are cached once
+    * and unpersisted however the loop ends.
     * Returns (final centroids, iterations run).
     *
     * `grid = Some(d)` snaps every collected mean to the 1e-d decimal grid
@@ -182,9 +257,11 @@ object Lloyd {
     */
   def run(points: DataFrame, k: Int, maxIter: Int = 10, eps: Double = 1e-6,
           useAgg: Boolean = true, grid: Option[Int] = None): (Seq[Centroid], Int) = {
+    require(k >= 1, s"Lloyd.run needs k >= 1, got $k")
     val pts = points.select("vec_id", "coordinates").cache()
     try {
       var cents = initCentroids(pts, k)
+      require(cents.nonEmpty, "Lloyd.run needs at least one point")
       var iters = 0
       var converged = false
       while (iters < maxIter && !converged) {

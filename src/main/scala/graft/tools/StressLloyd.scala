@@ -7,9 +7,10 @@ import graft.kmeans.{Centroid, Lloyd}
 /** Stress-scale evidence for the flagship dataflow: one full Lloyd run
   * (K = 5, 10 fixed iterations, no early stop) over the synthetic-sf1
   * embeddings at /tmp/stress_sf1, printing per-iteration wall time. Each
-  * iteration is the production shape, [[Lloyd.step]]: fused literal-centroid
-  * assignment (zero shuffle on the point side) + the combinable VecMeanAgg
-  * (K buffers cross the wire) + a K-row collect sorted on the driver. Usage:
+  * iteration is the production shape, [[Lloyd.step]]: one job in which every
+  * partition folds its points, through the fused nearest-centroid loop, into
+  * K sum/count buffers that `treeAggregate` merges (K×(D+1) numbers per
+  * partition cross the wire; the points are never shuffled). Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/tmp/stress_sf1 sbt "runMain graft.tools.StressLloyd"
   */

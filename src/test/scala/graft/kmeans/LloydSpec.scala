@@ -1,6 +1,12 @@
 package graft.kmeans
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.grafttest.Bus
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -54,7 +60,8 @@ class LloydSpec extends AnyFunSuite {
   test("Aggregator and posexplode mean paths agree") {
     val df = TestSpark.refPointsDf
     val cents = Lloyd.initCentroids(df, 3)
-    val a = Lloyd.updateAgg(Lloyd.assign(df, cents)).orderBy("cid")
+    val a = Lloyd.assign(df, cents).groupBy("cid").agg(VecMeanAgg(col("coordinates")))
+      .orderBy("cid")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
     val b = Lloyd.updateExplode(Lloyd.assign(df, cents)).orderBy("cid")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
@@ -95,7 +102,8 @@ class LloydSpec extends AnyFunSuite {
       val sse = Lloyd.sse(pts, cents)
       assert(sse <= prevSse + 1e-6, s"SSE increased: $prevSse -> $sse")
       prevSse = sse
-      cents = Lloyd.updateAgg(Lloyd.assign(pts, cents)).orderBy("cid")
+      cents = Lloyd.assign(pts, cents).groupBy("cid").agg(VecMeanAgg(col("coordinates")))
+        .orderBy("cid")
         .collect().map(r => Centroid(r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
     }
     pts.unpersist()
@@ -106,7 +114,8 @@ class LloydSpec extends AnyFunSuite {
     val (cents, iters) = Lloyd.run(df, k = 2, maxIter = 50, eps = 1e-9)
     assert(iters < 50, "did not converge")
     // one more update moves nothing
-    val next = Lloyd.updateAgg(Lloyd.assign(df, cents)).orderBy("cid")
+    val next = Lloyd.assign(df, cents).groupBy("cid").agg(VecMeanAgg(col("coordinates")))
+      .orderBy("cid")
       .collect().map(r => Centroid(r.getInt(0), r.getSeq[Double](1).toArray))
     assert(next.length == cents.length)
     for ((n, c) <- next.zip(cents.sortBy(_.cid)); i <- n.coordinates.indices)
@@ -170,5 +179,122 @@ class LloydSpec extends AnyFunSuite {
     assert(c >= -5L && c <= 1000000L, s"completeness $c")
     assert(v == 2 * h * c / (h + c), "V must be the harmonic mean")
     assert(v <= math.max(h, c) && v >= math.min(h, c) - 1)
+  }
+
+  /** `Lloyd.step` against the DataFrame reference `updateExplode(assign)`:
+    * the same cids, and means within 1e-12.
+    */
+  private def assertStepMatchesExplode(pts: DataFrame, cents: Seq[Centroid]): Unit = {
+    val got = Lloyd.step(pts, cents)
+    val want = Lloyd.updateExplode(Lloyd.assign(pts, cents)).orderBy("cid")
+      .collect().map(r => Centroid(r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    assert(got.map(_.cid) == want.map(_.cid))
+    for ((g, w) <- got.zip(want); i <- w.coordinates.indices)
+      assert(math.abs(g.coordinates(i) - w.coordinates(i)) < 1e-12, s"cid=${g.cid} dim=$i")
+  }
+
+  private def sf0001In3 = graft.core.Tables.points(spark, TestSpark.Sf0001).repartition(3).cache()
+
+  test("Lloyd.step's per-partition fold matches the posexplode mean over 3 partitions") {
+    val pts = sf0001In3
+    try {
+      assertStepMatchesExplode(pts, Lloyd.initCentroids(pts, 5))
+      // K = 1: every point in one cluster
+      assertStepMatchesExplode(pts, Lloyd.initCentroids(pts, 1))
+      // cid 9 duplicates cid 1, so every point nearest to them ties and
+      // goes to cid 1; cid 9 gets no point and vanishes
+      val cents = Lloyd.initCentroids(pts, 4)
+      val tied = cents :+ Centroid(9, cents.head.coordinates)
+      assertStepMatchesExplode(pts, tied)
+      assert(!Lloyd.step(pts, tied).exists(_.cid == 9))
+    } finally pts.unpersist()
+  }
+
+  test("Lloyd.run reaches the same answer with and without useAgg") {
+    val pts = sf0001In3
+    try {
+      val (a, itersA) = Lloyd.run(pts, k = 5, maxIter = 30, eps = 1e-9, useAgg = true)
+      val (b, itersB) = Lloyd.run(pts, k = 5, maxIter = 30, eps = 1e-9, useAgg = false)
+      assert(itersA == itersB)
+      assert(a.map(_.cid) == b.map(_.cid))
+      for ((x, y) <- a.zip(b); i <- x.coordinates.indices)
+        assert(math.abs(x.coordinates(i) - y.coordinates(i)) < 1e-9, s"cid=${x.cid} dim=$i")
+    } finally pts.unpersist()
+  }
+
+  test("a row with null coordinates joins no cluster") {
+    val s = spark
+    import s.implicits._
+    val pts = Seq[(Long, Array[Double])]((0L, Array(0.0, 0.0)), (1L, Array(1.0, 0.0)),
+      (2L, null)).toDF("vec_id", "coordinates")
+    // no real point is near centroid 1, the lowest cid
+    val cents = Seq(Centroid(1, Array(1e6, 1e6)), Centroid(2, Array(0.0, 0.0)),
+      Centroid(3, Array(1.0, 0.0)))
+    for (useAgg <- Seq(true, false)) {
+      val next = Lloyd.step(pts, cents, useAgg)
+      assert(next.map(_.cid) == Seq(2, 3), s"useAgg=$useAgg")
+      assert(next.forall(_.coordinates.length == 2), s"useAgg=$useAgg")
+    }
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+
+  test("a null element or a length mismatch fails Lloyd.step, naming where") {
+    val s = spark
+    import s.implicits._
+    val cents = Seq(Centroid(1, Array(0.0, 0.0)), Centroid(2, Array(1.0, 0.0)))
+    val nullElem = Seq((0L, Seq(Some(0.5), None))).toDF("vec_id", "coordinates")
+    val e1 = intercept[Exception](Lloyd.step(nullElem, cents))
+    assert(messages(e1).contains("null element at 1"), messages(e1))
+    val long = Seq((0L, Array(0.0, 0.0, 0.0))).toDF("vec_id", "coordinates")
+    val e2 = intercept[Exception](Lloyd.step(long, cents))
+    assert(messages(e2).contains("point of length 3, centroid 1 of length 2"), messages(e2))
+  }
+
+  test("Lloyd.run rejects k < 1 and an empty input up front") {
+    val df = TestSpark.refPointsDf
+    val e1 = intercept[IllegalArgumentException](Lloyd.run(df, k = 0))
+    assert(e1.getMessage.contains("k >= 1"))
+    val e2 = intercept[IllegalArgumentException](Lloyd.run(df.limit(0), k = 2))
+    assert(e2.getMessage.contains("at least one point"))
+  }
+
+  test("one Lloyd.step on cached points is one job of one stage, with no shuffle") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val pts = sc.parallelize(TestSpark.refPoints, 3).toDF("vec_id", "coordinates").cache()
+    try {
+      val cents = Lloyd.initCentroids(pts, 3) // fills the cache
+      Bus.drain(sc)
+      val jobs, stages = ArrayBuffer[Option[String]]()
+      val sqlExecs = ArrayBuffer[Long]()
+      var shuffleBytes = 0L
+      val seen = new SparkListener {
+        private def execId(p: java.util.Properties) =
+          Option(p).flatMap(q => Option(q.getProperty("spark.sql.execution.id")))
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs += execId(e.properties)
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          stages += execId(e.properties)
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+          shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
+        }
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case x: SparkListenerSQLExecutionStart => sqlExecs += x.executionId
+          case _ =>
+        }
+      }
+      sc.addSparkListener(seen)
+      try {
+        Lloyd.step(pts, cents)
+        Bus.drain(sc)
+      } finally sc.removeSparkListener(seen)
+      assert(jobs.size == 1, s"jobs: $jobs")
+      assert(stages.size == 1, s"stages: $stages")
+      assert(shuffleBytes == 0L)
+      assert(sqlExecs.size == 1)
+      assert((jobs ++ stages).toSet == Set(Some(sqlExecs.head.toString)))
+    } finally pts.unpersist()
   }
 }
