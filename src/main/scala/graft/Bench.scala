@@ -81,10 +81,12 @@ object Bench {
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val maxS = if (results.nonEmpty) results.map(_._2).max else 0.0
     // shared-artifact honesty: pass-1 pays every memo's cold build (each
-    // printed as a [memo] stderr line as it happens); expose the sum as its
-    // own field so per-query mins can be read as consumer cost and the
-    // artifact cost is attributed explicitly, not hidden in whichever
-    // query happened to touch the memo first
+    // printed as a [memo] stderr line as it happens: the text, dedup and
+    // search artifacts, and also the Lloyd init and converged runs and the
+    // retrieval query terms); expose the sum as its own field so per-query
+    // mins can be read as consumer cost and the artifact cost is
+    // attributed explicitly, not hidden in whichever query happened to
+    // touch the memo first
     val artifactS = graft.text.ArtifactMemo.totalColdBuildSeconds
     // full per-query map: an EARLIER stdout line + a sidecar file — the
     // driver parses its contract line from a size-capped stdout tail, and

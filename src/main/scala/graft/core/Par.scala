@@ -95,12 +95,7 @@ object Par {
     else df.repartition(target, keys: _*)
   }
 
-  // NOTE (r13): a `noAqeSessionIfCompact` helper (AQE off in a child
-  // session when the input scan is compact) was implemented, probed
-  // (q_coreset_fps x0.84 interleaved) and then REJECTED by the paired
-  // full-bench adjudication (x1.26 normalized) — removed rather than left
-  // as dead code; the measurement record lives in OPTIMIZATION_r13.md and
-  // tools/AqeFloorProbe.scala. AQE's coalescing is load-bearing for
-  // many-round tiny-shuffle fixpoints (q_median_polish x2.2 WORSE without
-  // it), so no per-query AQE toggle ships.
+  // No per-query AQE toggle ships: AQE's coalescing is load-bearing for
+  // many-round tiny-shuffle fixpoints (q_median_polish x2.2 slower without
+  // it; measurements in OPTIMIZATION_r13.md).
 }

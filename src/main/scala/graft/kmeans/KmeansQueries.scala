@@ -11,8 +11,8 @@ import graft.core.{Tables, Vec}
   * float that crosses a non-order-deterministic aggregation is rounded
   * identically on BOTH sides (SURVEY.md §7.4 risk 1; means use 7 decimals
   * for extra margin against grid-boundary flips). K is fixed at 5 and
-  * init is deterministic (first K points by vec_id) so both engines compute
-  * the identical clustering.
+  * init is deterministic (first K non-null points by vec_id) so both
+  * engines compute the identical clustering.
   */
 object KmeansQueries {
 
@@ -31,7 +31,7 @@ object KmeansQueries {
   private lazy val preludeSql =
     s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
        |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-       |         FROM (SELECT vec_id, c FROM pts ORDER BY vec_id LIMIT $K) t),
+       |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
        |assign AS (
        |  SELECT vec_id, cid, d2 FROM (
        |    SELECT vec_id, cid, d2,
@@ -284,9 +284,9 @@ object KmeansQueries {
     },
 
     // NS: clustering stability — rerun the assignment under a SECOND
-    // deterministic init (points ranked K+1..2K by vec_id, disjoint from
-    // the first-K init) and grade agreement with ARI over the K×K
-    // contingency table: a geometry that genuinely clusters survives an
+    // deterministic init (non-null points ranked K+1..2K by vec_id,
+    // disjoint from the first-K init) and grade agreement with ARI over the
+    // K×K contingency table: a geometry that genuinely clusters survives an
     // init perturbation (ARI → 1); a degenerate one reshuffles (→ 0).
     // The clustering-eval family's robustness panel beside silhouette /
     // inertia / ARI-vs-truth. Same scale shape as q_ari: two zero-shuffle
@@ -294,7 +294,8 @@ object KmeansQueries {
     // pair-count BIGINTs, IEEE ratio with the DOUBLE-denominator guard.
     "q_cluster_stability" -> { (s, dir) =>
       val centsA = Lloyd.initCentroidsFor(s, dir, K)
-      val alt = Tables.points(s, dir).orderBy("vec_id").limit(2 * K)
+      val alt = Tables.points(s, dir).filter(col("coordinates").isNotNull)
+        .orderBy("vec_id").limit(2 * K)
         .collect().drop(K).take(K).zipWithIndex
         .map { case (r, i) => Centroid(i + 1, r.getSeq[Double](1).toArray) }
         .toSeq
@@ -462,7 +463,7 @@ object KmeansQueries {
          |FROM nextc n JOIN init i USING (cid)""".stripMargin,
     "q_expr_dist" ->
       """WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-        |probe AS (SELECT c FROM pts ORDER BY vec_id LIMIT 1)
+        |probe AS (SELECT c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1)
         |SELECT p.vec_id,
         |       round(list_sum(list_transform(list_zip(p.c, probe.c),
         |             z -> (z[1]-z[2])*(z[1]-z[2]))), 9) AS d2
@@ -470,7 +471,7 @@ object KmeansQueries {
         |ORDER BY p.vec_id""".stripMargin,
     "q_dist_euclid" ->
       """WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-        |probe AS (SELECT c FROM pts ORDER BY vec_id LIMIT 1)
+        |probe AS (SELECT c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1)
         |SELECT p.vec_id,
         |       round(sqrt(list_sum(list_transform(list_zip(p.c, probe.c),
         |             z -> (z[1]-z[2])*(z[1]-z[2])))), 9) AS d
@@ -568,9 +569,9 @@ object KmeansQueries {
     "q_cluster_stability" ->
       s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
          |inita AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |          FROM (SELECT vec_id, c FROM pts ORDER BY vec_id LIMIT $K) t),
+         |          FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
          |initb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |          FROM (SELECT vec_id, c FROM pts ORDER BY vec_id LIMIT $K OFFSET $K) t),
+         |          FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K OFFSET $K) t),
          |aa AS (
          |  SELECT vec_id, cid AS ca FROM (
          |    SELECT p.vec_id, i.cid,
@@ -610,7 +611,7 @@ object KmeansQueries {
     "q_elbow_scan" ->
       s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
          |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |         FROM (SELECT vec_id, c FROM pts ORDER BY vec_id LIMIT $K) t),
+         |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
          |d AS (SELECT p.vec_id, i.cid,
          |             list_sum(list_transform(list_zip(p.c, i.c),
          |               z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
@@ -638,7 +639,7 @@ object KmeansQueries {
     "q_gmm_estep" ->
       s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
          |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |         FROM (SELECT vec_id, c FROM pts ORDER BY vec_id LIMIT $K) t),
+         |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
          |d AS (SELECT p.vec_id, i.cid,
          |             list_sum(list_transform(list_zip(p.c, i.c),
          |               z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.ArrayType
 
 import graft.core.Vec
 import graft.functions.NearestCentroid
+import graft.text.ArtifactMemo
 
 /** A cluster center: id + N-dim vector (kmeans.proto:9-12). */
 case class Centroid(cid: Int, coordinates: Array[Double])
@@ -52,30 +53,26 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   */
 object Lloyd {
 
-  /** Deterministic init: first K points ordered by vec_id, cids 1..K.
-    * (Documented deviation from the reference's `random.sample`
-    * master.py:54-65, which is irreproducible across engines; the seeded
-    * variant lives in the MLlib cross-check.)
+  /** Deterministic init: the first K points with non-null coordinates,
+    * ordered by vec_id, cids 1..K. A null row joins no cluster in the
+    * iteration either. (Documented deviation from the reference's
+    * `random.sample` master.py:54-65, which is irreproducible across
+    * engines; the seeded variant lives in the MLlib cross-check.)
     */
   def initCentroids(points: DataFrame, k: Int): Seq[Centroid] =
-    points.orderBy("vec_id").limit(k).collect().zipWithIndex.map { case (r, i) =>
-      Centroid(i + 1, r.getSeq[Double](r.fieldIndex("coordinates")).toArray)
-    }.toSeq
-
-  // (sfDir, k) -> init centroids. Deterministic (first K by vec_id over an
-  // immutable fixture), so memoizing is pure: it only deletes the repeated
-  // orderBy/limit/collect driver job that every K-Means-derived query
-  // (sinks, mod-partition, union, IVF, assignment, ...) would otherwise
-  // re-run. K rows, so the cache is bytes, not data.
-  private val initCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Centroid]]()
+    points.filter(col("coordinates").isNotNull).orderBy("vec_id").limit(k).collect()
+      .zipWithIndex.map { case (r, i) =>
+        Centroid(i + 1, r.getSeq[Double](r.fieldIndex("coordinates")).toArray)
+      }.toSeq
 
   /** Memoized [[initCentroids]] over the fixture at `sfDir` (the common
-    * prologue of every registered K-Means-derived query).
+    * prologue of every registered K-Means-derived query): K rows, so the
+    * artifact is bytes, not data.
     */
   def initCentroidsFor(spark: org.apache.spark.sql.SparkSession, sfDir: String, k: Int): Seq[Centroid] =
-    initCache.computeIfAbsent((sfDir, k),
-      _ => initCentroids(graft.core.Tables.points(spark, sfDir), k))
+    ArtifactMemo(s"init_centroids(k=$k)", spark, sfDir) {
+      initCentroids(graft.core.Tables.points(spark, sfDir), k)
+    }
 
   /** Squared distance from `coords` to each literal centroid, as (cid, d²)
     * in ascending cid order: K separate distance columns, for queries that
@@ -119,22 +116,19 @@ object Lloyd {
   def sse(points: DataFrame, cents: Seq[Centroid]): Double =
     points.agg(sum(nearest(cents, col("coordinates")).getField("d"))).head().getDouble(0)
 
-  // (sfDir, k, maxIter, eps, useAgg, grid) -> full-loop result. With
-  // `grid` set the loop is deterministic down to the bit (every round's
-  // centroids are exact decimals), so the memo is pure — it lets every
-  // registered query that needs the CONVERGED centroids (q_kmeans_full,
-  // the MLlib self-eval's SSE floor) pay the iteration once per fixture,
-  // the same economics as initCache. Values are K driver-side vectors,
-  // not context-bound distributed state, so no context key is needed.
-  private val runCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Double, Boolean, Option[Int]), (Seq[Centroid], Int)]()
-
-  /** Memoized [[run]] over the fixture at `sfDir`. */
+  /** Memoized [[run]] over the fixture at `sfDir`: every registered query
+    * that needs the CONVERGED centroids (q_kmeans_full, the MLlib
+    * self-eval's SSE floor) pays the iteration once per fixture. With
+    * `grid` set the loop is deterministic down to the bit (every round's
+    * centroids are exact decimals).
+    */
   def runFor(spark: org.apache.spark.sql.SparkSession, sfDir: String, k: Int,
              maxIter: Int = 10, eps: Double = 1e-6, useAgg: Boolean = true,
              grid: Option[Int] = None): (Seq[Centroid], Int) =
-    runCache.computeIfAbsent((sfDir, k, maxIter, eps, useAgg, grid),
-      _ => run(graft.core.Tables.points(spark, sfDir), k, maxIter, eps, useAgg, grid))
+    ArtifactMemo(s"lloyd_run(k=$k,maxIter=$maxIter,eps=$eps,useAgg=$useAgg,grid=$grid)",
+        spark, sfDir) {
+      run(graft.core.Tables.points(spark, sfDir), k, maxIter, eps, useAgg, grid)
+    }
 
   /** Replica of Spark SQL `round(x, scale)` for driver-side snapping:
     * BigDecimal.valueOf (shortest decimal expansion) + HALF_UP, with -0.0
@@ -261,7 +255,7 @@ object Lloyd {
     val pts = points.select("vec_id", "coordinates").cache()
     try {
       var cents = initCentroids(pts, k)
-      require(cents.nonEmpty, "Lloyd.run needs at least one point")
+      require(cents.nonEmpty, "Lloyd.run needs at least one point with coordinates")
       var iters = 0
       var converged = false
       while (iters < maxIter && !converged) {

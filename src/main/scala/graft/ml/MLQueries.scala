@@ -10,21 +10,15 @@ import graft.kmeans.{KmeansQueries, Lloyd, VecMeanAgg}
   */
 object MLQueries {
 
-  // (context incarnation, sfDir) -> 64-row (pos, mu, v, nrm) top-component
-  // frame. At 100 TB the fitted component is a persisted model artifact
-  // that every whitening/monitoring consumer reads — the memo is that
-  // store's in-session stand-in (the dedup-artifact story, ArtifactMemo).
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[graft.text.ArtifactMemo.Key, DataFrame]()
-
   /** Memoized grid-snapped top principal component of the embedding table:
     * two unrolled power steps on the centered covariance, every stage
     * rounded to the 1e-7 grid (see q_pca_power's comment). Returns
     * (pos, mu, v, nrm) — the snapped mean, unit component, and |C·v| of
-    * the last iterate. Shared by q_pca_power and q_embed_whiten.
+    * the last iterate. Shared by q_pca_power and q_embed_whiten; at 100 TB
+    * the fitted component is a persisted model artifact.
     */
   def pcaTopFor(s: SparkSession, dir: String): DataFrame =
-    graft.text.ArtifactMemo.memo(pcaCache, "pca_top", s, dir) {
+    graft.text.ArtifactMemo("pca_top", s, dir) {
       val emb = Tables.embeddings(s, dir)
       val xl = emb.select(col("vec_id"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
@@ -424,7 +418,7 @@ object MLQueries {
     s"""WITH RECURSIVE
        |pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
        |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-       |         FROM (SELECT vec_id, c FROM pts ORDER BY vec_id LIMIT ${KmeansQueries.K}) t),
+       |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT ${KmeansQueries.K}) t),
        |it AS (
        |  SELECT 0 AS iter, FALSE AS stop, cid, c FROM init
        |  UNION ALL

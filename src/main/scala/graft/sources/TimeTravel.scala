@@ -53,15 +53,11 @@ object TimeTravel {
   private val ManifestSchema =
     "version LONG, path STRING, min_key LONG, max_key LONG, n_rows LONG"
 
-  // one snapshot-table build per (session, fixture) — the table format's
-  // files PERSIST; a query re-writing them per invocation would model the
-  // wrong thing and bill the write to every reader. Cold cost is
-  // attributed through ArtifactMemo's artifact_build_s bench line.
-  private val buildCache =
-    new java.util.concurrent.ConcurrentHashMap[graft.text.ArtifactMemo.Key, String]()
-
+  // one snapshot-table build per fixture — the table format's files
+  // PERSIST; a query re-writing them per invocation would model the wrong
+  // thing and bill the write to every reader
   def build(s: SparkSession, dir: String): String =
-    graft.text.ArtifactMemo.memoAny(buildCache, "timetravel", s, dir) {
+    graft.text.ArtifactMemo("timetravel", s, dir) {
       buildUncached(s, dir)
     }
 

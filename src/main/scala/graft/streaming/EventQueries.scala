@@ -18,11 +18,6 @@ import graft.core.Tables
   */
 object EventQueries {
 
-  // (sfDir -> embeddings schema) for q_stream_kmeans — see Streams'
-  // events-schema memo; a separate cache because the memo key is (ctx, dir)
-  private val embSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    graft.text.ArtifactMemo.Key, org.apache.spark.sql.types.StructType]()
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Events per type per 1-hour tumbling window.
     "q_stream_tumbling" -> { (s, dir) =>
@@ -232,8 +227,8 @@ object EventQueries {
       val ss = Streams.streamingSession(s)
       import ss.implicits._
       val cents = graft.kmeans.Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
-      // r13: footer-read memoized like the events schema (static per dir)
-      val schema = graft.text.ArtifactMemo.memoAny(embSchemaCache, "emb_schema", ss, dir) {
+      // footer read memoized like the events schema
+      val schema = graft.text.ArtifactMemo("emb_schema", ss, dir) {
         ss.read.parquet(s"$dir/embeddings.parquet").schema
       }
       val streamed = ss.readStream.schema(schema)
@@ -308,8 +303,7 @@ object EventQueries {
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("click_ts") &&
           col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-      Streams.runToBatch(ss, joined,
-          org.apache.spark.sql.streaming.OutputMode.Append(), availableNow = true)
+      Streams.runToBatch(ss, joined, org.apache.spark.sql.streaming.OutputMode.Append())
         .select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("gap_us"))
         .orderBy("user_id", "click_id", "purchase_id")
@@ -336,17 +330,13 @@ object EventQueries {
       val counts = Streams.readEvents(ss, dir)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("value").as("sum_v"))
-      val target = s"target/streams/fb_${System.nanoTime()}"
+      val name = s"fb_${System.nanoTime()}"
+      val target = s"target/streams/$name"
       var lastSnapshot = -1L
-      val ckpt = s"${Streams.ckptBase(ss)}/fb_${System.nanoTime()}"
-      // r13: AvailableNow drain (same snapshots on a finite source, one
-      // fewer empty batch) + scratch checkpoint on the fast medium — the
-      // versioned-parquet sink itself stays on disk: it IS the query's
-      // durable output store, not scratch
-      val q = counts.writeStream
+      // the versioned-parquet sink stays on disk: it IS the query's durable
+      // output store, not scratch like the drain's checkpoint
+      val writer = counts.writeStream
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           val merged =
             if (lastSnapshot >= 0) {
@@ -358,9 +348,7 @@ object EventQueries {
           lastSnapshot = id
           ()
         }
-        .start()
-      try q.awaitTermination()
-      finally Streams.deleteRecursively(new java.io.File(ckpt))
+      Streams.drain(ss, writer, name)
       s.read.parquet(s"$target/v$lastSnapshot")
         .select(col("event_type"), col("n"), round(col("sum_v"), 6).as("sum_v"))
         .orderBy("event_type")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** True Structured Streaming forms of the §2.9 surface: `readStream` →
   * watermarked/windowed transforms → `writeStream`. Batch-equivalent
@@ -25,17 +25,12 @@ object Streams {
     * loader produces. `maxFilesPerTrigger` keeps micro-batches bounded on a
     * multi-file 100 TB directory.
     */
-  // (sfDir -> events schema), memoized per context like the other fixture
-  // artifacts: every streaming key re-read the parquet footer just to
-  // recover the static schema (r13; ~50 ms x 6 keys of pure repeat I/O)
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    graft.text.ArtifactMemo.Key, org.apache.spark.sql.types.StructType]()
-
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     // schema via the batch loader's guarded read: a nanos fixture in a
     // conf-less session fails with the message naming NanosAsLongConf,
-    // not a bare [PARQUET_TYPE_ILLEGAL]
-    val schema = graft.text.ArtifactMemo.memoAny(schemaCache, "events_schema", spark, sfDir) {
+    // not a bare [PARQUET_TYPE_ILLEGAL]. Memoized, so the streaming keys do
+    // not each re-read the parquet footer.
+    val schema = graft.text.ArtifactMemo("events_schema", spark, sfDir) {
       graft.core.Tables.eventsRead(spark, sfDir).schema
     }
     // file streams want a directory: stream the sf dir, globbed to events
@@ -59,22 +54,6 @@ object Streams {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"))
-
-  /** Sliding 1-hour/15-minute counts under the same watermark. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("w_start"), col("n"))
-
-  /** Per-user 30-minute-gap sessions (q_stream_session, streaming form). */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("w_start"), col("n_events"))
 
   /** Exactly-once event ids within the watermark horizon (q_stream_dedup). */
   def dedupEvents(events: DataFrame): DataFrame =
@@ -144,19 +123,23 @@ object Streams {
     }
   }
 
-  /** Child session for streaming runs, with the state-partition count cut
-    * down: every stateful operator commits one state store per shuffle
-    * partition per micro-batch, so a batch-engine default (32 at bench
-    * config) is pure per-batch commit/IO overhead on small micro-batches.
-    * At 100 TB the state-partition count is sized to stream key cardinality
-    * and rate — independently of the batch engine's shuffle width — which
-    * is exactly what a separate session scope expresses. Confs set at
-    * parent-session construction (e.g. nanosAsLong) are inherited via the
-    * shared SparkContext conf.
+  /** State partitions of a streaming run: every stateful operator commits
+    * one state store per shuffle partition per micro-batch, so a
+    * batch-engine default (32 at bench config) is pure per-batch commit/IO
+    * overhead on small micro-batches.
     */
-  def streamingSession(parent: SparkSession, statePartitions: Int = 4): SparkSession = {
+  private val StatePartitions = 4
+
+  /** Child session for streaming runs, with the state-partition count cut
+    * down to [[StatePartitions]]. At 100 TB the state-partition count is
+    * sized to stream key cardinality and rate — independently of the batch
+    * engine's shuffle width — which is exactly what a separate session
+    * scope expresses. Confs set at parent-session construction (e.g.
+    * nanosAsLong) are inherited via the shared SparkContext conf.
+    */
+  def streamingSession(parent: SparkSession): SparkSession = {
     val child = parent.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    child.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     child
   }
 
@@ -187,37 +170,30 @@ object Streams {
     f.delete(); ()
   }
 
-  /** Run any of the above to completion against the (finite) file stream and
-    * return the final result as a batch DataFrame — used by tests. The
+  /** Drain a query over a finite source to completion: Trigger.AvailableNow
+    * plans the full file listing once up front, drains, and self-terminates
+    * (one fewer empty finalization micro-batch than processAllAvailable;
+    * watermarked Append still runs its no-data emission batch). The query
+    * gets a UNIQUE scratch checkpoint dir under [[ckptBase]] (state
+    * isolation — nothing is shared across queries), deleted after the drain.
+    */
+  private[streaming] def drain(spark: SparkSession, writer: DataStreamWriter[_], name: String): Unit = {
+    val ckpt = s"${ckptBase(spark)}/$name"
+    try writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    finally deleteRecursively(new java.io.File(ckpt))
+  }
+
+  /** Run any of the above to completion against the (finite) file stream
+    * ([[drain]]) and return the final result as a batch DataFrame. The
     * memory sink registers its table in the session that owns the stream
     * (which may be a [[streamingSession]] child), so the result is read
     * back from `streamed.sparkSession`, not from the caller's session.
-    *
-    * r13: Trigger.AvailableNow is the DEFAULT drain — it plans the full
-    * file listing once up front, drains, and self-terminates: one fewer
-    * empty finalization micro-batch than processAllAvailable on a finite
-    * source. Probed per shape (r13): watermarked Append still runs its
-    * no-data emission batch and returns identical rows (3590 = 3590);
-    * Update/Complete shapes drop from 2 batches to 1. Each query gets a
-    * UNIQUE scratch checkpoint dir (state isolation — nothing is shared
-    * across queries) which is deleted after the drain.
     */
-  def runToBatch(spark: SparkSession, streamed: DataFrame, mode: OutputMode = OutputMode.Complete(),
-                 availableNow: Boolean = true): DataFrame = {
+  def runToBatch(spark: SparkSession, streamed: DataFrame,
+                 mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val name = s"graft_sink_${System.nanoTime()}"
-    val ckpt = s"${ckptBase(spark)}/$name"
-    val writer = streamed.writeStream.format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", ckpt)
-    try {
-      if (availableNow) {
-        val q = writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } else {
-        val q = writer.start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    } finally deleteRecursively(new java.io.File(ckpt))
+    drain(spark, streamed.writeStream.format("memory").queryName(name).outputMode(mode), name)
     streamed.sparkSession.table(name)
   }
 }

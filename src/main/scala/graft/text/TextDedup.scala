@@ -23,22 +23,14 @@ object TextDedup {
                         maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
     candidatesFromBanded(bandedWithSize(signatures, bands), maxBucketSize)
 
-  // (context incarnation, sfDir) -> materialized LSH candidate-pair table.
-  // At 100 TB the candidate edge set is a persisted pipeline artifact that
-  // the banding report, containment scoring, and sketch-accuracy queries
-  // all consume — the three consumers previously re-ran the whole
-  // shingle→minhash→band pipeline each. Keying/eviction/cold-build
-  // reporting live in [[ArtifactMemo]].
-  private val candCache =
-    new java.util.concurrent.ConcurrentHashMap[ArtifactMemo.Key, DataFrame]()
-
   /** Memoized default-parameter LSH candidate pairs for the fixture at
-    * `dir` — one candidate-generation job per (session, fixture), shared by
-    * every consumer of the default banding.
+    * `dir`: at 100 TB the candidate edge set is a persisted pipeline
+    * artifact that the banding report, containment scoring, and
+    * sketch-accuracy queries all read.
     */
   def minhashCandidatesFor(s: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame =
-    ArtifactMemo.memo(candCache, "minhash_candidates", s, dir) {
+    ArtifactMemo("minhash_candidates", s, dir) {
       minhashCandidates(TextQueries.minhashSigsFor(s, dir)).localCheckpoint(eager = false)
     }
 

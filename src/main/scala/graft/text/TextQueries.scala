@@ -51,23 +51,16 @@ object TextQueries {
     "es" -> Seq("el", "la", "de", "y"),
     "de" -> Seq("der", "die", "das", "und"))
 
-  // (context incarnation, sfDir) -> materialized signature table: at 100 TB
-  // the MinHash sketch table is a PERSISTED artifact that banding,
-  // estimation, and dedup queries all consume — not something each query
-  // recomputes from raw text. The session-scoped localCheckpoint memo is
-  // that artifact's stand-in (same pattern as Lloyd.initCentroidsFor);
-  // rows are 3 longs per signature. Keying/eviction/cold-build reporting
-  // live in [[ArtifactMemo]].
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[ArtifactMemo.Key, org.apache.spark.sql.DataFrame]()
-
   /** Memoized (doc_id, j, minhash) signature table for the fixture at
     * `dir` — words -> shingles -> shingle hashes materialized as separate
     * projections (each computed once per row instead of once per
-    * (signature, element) inside the lambdas), then localCheckpointed.
+    * (signature, element) inside the lambdas), then localCheckpointed. At
+    * 100 TB the MinHash sketch table is a PERSISTED artifact that banding,
+    * estimation, and dedup queries all consume; rows are 3 longs per
+    * signature.
     */
   def minhashSigsFor(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    ArtifactMemo.memo(sigCache, "minhash_sigs", s, dir) {
+    ArtifactMemo("minhash_sigs", s, dir) {
       val sigs = (0 until MinhashK).map { j =>
         struct(lit(j.toLong).as("j"),
           array_min(transform(col("hs"), h => (h * mhA(j) + mhB(j)) % P)).as("minhash"))
@@ -80,18 +73,13 @@ object TextQueries {
         .localCheckpoint(eager = false)
     }
 
-  // (context incarnation, sfDir) -> per-doc distinct 3-gram shingle sets
-  // with the blocking keys (n_words, first_word). Four queries (ngram
-  // dedup, containment, sketch-accuracy, nearDupPairs) each re-derived the
-  // split→shingle→distinct arrays over the whole corpus — at 100 TB the
-  // shingle-set table is the same persisted-artifact story as the
-  // signature table above.
-  private val shCache =
-    new java.util.concurrent.ConcurrentHashMap[ArtifactMemo.Key, org.apache.spark.sql.DataFrame]()
-
-  /** Memoized (doc_id, n_words, first_word, sh) distinct-shingle table. */
+  /** Memoized (doc_id, n_words, first_word, sh) distinct-shingle table:
+    * per-doc distinct 3-gram shingle sets with the blocking keys. Four
+    * queries (ngram dedup, containment, sketch-accuracy, nearDupPairs) read
+    * it instead of each re-deriving the split→shingle→distinct arrays.
+    */
   def shingleSetsFor(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    ArtifactMemo.memo(shCache, "shingle_sets", s, dir) {
+    ArtifactMemo("shingle_sets", s, dir) {
       Tables.documents(s, dir)
         .select(col("doc_id"), words.as("ws"))
         .select(col("doc_id"),
@@ -101,34 +89,23 @@ object TextQueries {
         .localCheckpoint(eager = false)
     }
 
-  // (context incarnation, sfDir) -> simhash near-dup edge set (Hamming<=3).
-  // Three consumers (q_simhash_pairs, the CC labels below, triangle
-  // counting) each re-ran the chunk-banding self-join; at 100 TB the
-  // near-dup edge set is the central persisted artifact of the dedup
-  // pipeline — everything downstream (clustering, audits, graph
-  // diagnostics) reads it, nothing recomputes it.
-  private val simhashPairCache =
-    new java.util.concurrent.ConcurrentHashMap[ArtifactMemo.Key, org.apache.spark.sql.DataFrame]()
-
-  /** Memoized (doc_a, doc_b, hamming) simhash near-pair edges. */
+  /** Memoized (doc_a, doc_b, hamming) simhash near-pair edges
+    * (Hamming <= 3). At 100 TB the near-dup edge set is the central
+    * persisted artifact of the dedup pipeline: q_simhash_pairs, the CC
+    * labels below and triangle counting read it, nothing recomputes it.
+    */
   def simhashPairsFor(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    ArtifactMemo.memo(simhashPairCache, "simhash_pairs", s, dir) {
+    ArtifactMemo("simhash_pairs", s, dir) {
       TextDedup.simhashNearPairs(queries("q_dedup_simhash")(s, dir), maxHamming = 3)
         .localCheckpoint(eager = false)
     }
 
-  // (context incarnation, sfDir) -> converged component labels over the
-  // simhash near-dup edges. Both q_dedup_components and q_split_leakage
-  // consume the SAME fixpoint; without the memo the leakage audit re-ran
-  // the entire edge-generation + CC iteration from scratch. At 100 TB the
-  // component labeling is a persisted dedup artifact (the cluster map),
-  // not something each downstream audit recomputes.
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[ArtifactMemo.Key, org.apache.spark.sql.DataFrame]()
-
-  /** Memoized (doc_id, component) labels for the fixture at `dir`. */
+  /** Memoized (doc_id, component) labels for the fixture at `dir`: the
+    * converged components over the simhash near-dup edges, which both
+    * q_dedup_components and q_split_leakage consume (the cluster map).
+    */
   def componentLabelsFor(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    ArtifactMemo.memo(ccCache, "component_labels", s, dir) {
+    ArtifactMemo("component_labels", s, dir) {
       val docs = Tables.documents(s, dir).select("doc_id")
       val edges = simhashPairsFor(s, dir).select("doc_a", "doc_b")
       TextDedup.connectedComponents(docs, edges).localCheckpoint(eager = false)

@@ -237,6 +237,19 @@ class LloydSpec extends AnyFunSuite {
     }
   }
 
+  test("the init skips rows with null coordinates among the first K") {
+    val s = spark
+    import s.implicits._
+    val pts = Seq[(Long, Array[Double])]((0L, null), (1L, Array(0.0, 0.0)),
+      (2L, Array(4.0, 0.0)), (3L, Array(5.0, 0.0))).toDF("vec_id", "coordinates")
+    def rows(cs: Seq[Centroid]) = cs.map(c => (c.cid, c.coordinates.toSeq))
+    assert(rows(Lloyd.initCentroids(pts, 2)) == Seq((1, Seq(0.0, 0.0)), (2, Seq(4.0, 0.0))))
+    val (cents, _) = Lloyd.run(pts, k = 2, maxIter = 10, eps = 1e-9)
+    assert(rows(cents) == Seq((1, Seq(0.0, 0.0)), (2, Seq(4.5, 0.0))))
+    val e = intercept[IllegalArgumentException](Lloyd.run(pts.filter($"vec_id" === 0L), k = 2))
+    assert(e.getMessage.contains("at least one point"))
+  }
+
   private def messages(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
 
