@@ -19,7 +19,10 @@ import org.apache.spark.sql.types._
   * [[NearestCentroid.literal]] builds it. The matrix is one literal child,
   * so the plan still compares, explains and serializes like any other; it
   * is flattened to a primitive `double[]` once per expression instance
-  * (once per task), never per row.
+  * (once per task), never per row. Each row's point is copied into a
+  * scratch `double[]` held by the instance, and runs the one loop of
+  * [[NearestCentroid.Table]] over that slice, the loop `Lloyd` runs over
+  * its point blocks.
   *
   * Semantics are those of
   * `array_min(array(struct(SquaredDistance(point, c_k), cid_k) for k in cid order))`:
@@ -54,14 +57,18 @@ case class NearestCentroid(left: Expression, right: Expression) extends BinaryEx
   @transient private lazy val table: NearestCentroid.Table =
     NearestCentroid.Table(right.eval().asInstanceOf[ArrayData])
 
+  // per-instance scratch for interpreted `eval`: the K distances and the
+  // point copied out of its ArrayData
+  @transient private lazy val dist = new Array[Double](table.cids.length)
+  @transient private lazy val point = new Array[Double](table.dim)
+
   // The literal matrix itself would print as an opaque ArrayData.
   override def toString: String = s"$prettyName($left, ${table.cids.mkString("centroids[", ",", "]")})"
 
   override def eval(input: InternalRow): Any = {
     val t = table
     val v = left.eval(input)
-    val dist = new Array[Double](t.cids.length)
-    val j = if (v == null) -1 else t.nearest(v.asInstanceOf[ArrayData], elementsNullable, dist)
+    val j = if (v == null) -1 else t.nearest(v.asInstanceOf[ArrayData], elementsNullable, dist, point)
     new GenericInternalRow(Array[Any](if (j < 0) null else dist(j), t.cids(if (j < 0) -1 - j else j)))
   }
 
@@ -69,12 +76,14 @@ case class NearestCentroid(left: Expression, right: Expression) extends BinaryEx
     val t = ctx.addReferenceObj("centroids", table, classOf[NearestCentroid.Table].getName)
     val dist = ctx.addMutableState("double[]", "dist",
       v => s"$v = new double[${table.cids.length}];", forceInline = true)
+    val point = ctx.addMutableState("double[]", "point",
+      v => s"$v = new double[${table.dim}];", forceInline = true)
     val j = ctx.freshName("j")
     val p = left.genCode(ctx)
     val row = classOf[GenericInternalRow].getName
     ev.copy(code = code"""
       |${p.code}
-      |int $j = ${p.isNull} ? -1 : $t.nearest(${p.value}, $elementsNullable, $dist);
+      |int $j = ${p.isNull} ? -1 : $t.nearest(${p.value}, $elementsNullable, $dist, $point);
       |final ${CodeGenerator.javaType(dataType)} ${ev.value} = new $row(new Object[] {
       |  $j < 0 ? null : (Object) $dist[$j], (Object) $t.cids()[$j < 0 ? -1 - $j : $j] });
       """.stripMargin, isNull = FalseLiteral)
@@ -106,27 +115,49 @@ object NearestCentroid {
     */
   final case class Table(cids: Array[Int], offsets: Array[Int], flat: Array[Double]) {
 
+    /** Length of the first centroid: every centroid's, once [[mismatch]] is -1. */
+    def dim: Int = offsets(1) - offsets(0)
+
+    /** Index of the first centroid, in cid order, whose length is not `n`; -1 if none. */
+    def mismatch(n: Int): Int = {
+      var j = 0
+      while (j < cids.length) {
+        if (offsets(j + 1) - offsets(j) != n) return j
+        j += 1
+      }
+      -1
+    }
+
     /** Index `j` of the centroid nearest to the non-null point `x`, with every
       * squared distance in `dist` (length K); or `-1 - j` when centroid `j` is
       * the first whose distance is null (a null element in `x`, which
-      * `checkNulls` looks for, or a length mismatch).
+      * `checkNulls` looks for, or a length mismatch). The point is copied
+      * into `point` (length at least [[dim]]) for the loop over a slice.
       */
-    def nearest(x: ArrayData, checkNulls: Boolean, dist: Array[Double]): Int = {
+    def nearest(x: ArrayData, checkNulls: Boolean, dist: Array[Double], point: Array[Double]): Int = {
       val n = x.numElements()
-      val k = cids.length
       if (checkNulls) {
         var i = 0
         while (i < n) { if (x.isNullAt(i)) return -1; i += 1 }
       }
+      val c = mismatch(n)
+      if (c >= 0) return -1 - c
+      var i = 0
+      while (i < n) { point(i) = x.getDouble(i); i += 1 }
+      nearest(point, 0, dist)
+    }
+
+    /** Index of the centroid nearest to the point `x(off until off + dim)`,
+      * with every squared distance in `dist` (length K). Every centroid must
+      * have [[dim]] coordinates ([[mismatch]] is -1).
+      */
+    def nearest(x: Array[Double], off: Int, dist: Array[Double]): Int = {
+      val n = dim
+      val k = cids.length
+      // Row j starts at j * n. Four rows per pass give four independent add
+      // chains; each one still sums its row left to right from 0.0, as
+      // SquaredDistance does.
       var j = 0
-      while (j < k) {
-        if (offsets(j + 1) - offsets(j) != n) return -1 - j
-        j += 1
-      }
-      // Every centroid has n coordinates, so row j starts at j * n. Four
-      // rows per pass give four independent add chains; each one still sums
-      // its row left to right from 0.0, as SquaredDistance does.
-      j = 0
       while (j + 4 <= k) {
         val o0 = j * n
         val o1 = o0 + n
@@ -135,7 +166,7 @@ object NearestCentroid {
         var s0, s1, s2, s3 = 0.0
         var i = 0
         while (i < n) {
-          val a = x.getDouble(i)
+          val a = x(off + i)
           val e0 = a - flat(o0 + i); s0 += e0 * e0
           val e1 = a - flat(o1 + i); s1 += e1 * e1
           val e2 = a - flat(o2 + i); s2 += e2 * e2
@@ -149,7 +180,7 @@ object NearestCentroid {
         val o = j * n
         var s = 0.0
         var i = 0
-        while (i < n) { val e = x.getDouble(i) - flat(o + i); s += e * e; i += 1 }
+        while (i < n) { val e = x(off + i) - flat(o + i); s += e * e; i += 1 }
         dist(j) = s
         j += 1
       }

@@ -45,10 +45,12 @@ import org.apache.spark.sql.SparkSession
   * that holder's monitor. Each key builds once; concurrent callers wait for
   * it; a build that throws is not cached and the next call retries.
   *
-  * Every cold build prints ONE stderr line with its wall seconds, and
+  * Every cold build prints ONE stderr line with its own wall seconds, and
   * [[totalColdBuildSeconds]] accumulates them, so the bench reports
   * artifact cost as its own line item instead of attributing it to
-  * whichever query touched the artifact first.
+  * whichever query touched the artifact first. A build's own time excludes
+  * the builds nested in it on the same thread, so nested work is billed
+  * once.
   */
 object ArtifactMemo {
 
@@ -60,12 +62,18 @@ object ArtifactMemo {
 
     def get(label: String, dir: String, build: => Any): Any = synchronized {
       if (!built) {
+        val outer = nestedNanos.get
+        nestedNanos.set(0L)
         val t0 = System.nanoTime()
-        value = build
-        built = true
-        val dt = System.nanoTime() - t0
-        coldNanos.addAndGet(dt)
-        System.err.println(f"[memo] $label%-18s cold build ${dt / 1e9}%6.2f s  ($dir)")
+        var wall = 0L
+        try {
+          value = build
+          built = true
+          wall = System.nanoTime() - t0
+          val own = wall - nestedNanos.get
+          coldNanos.addAndGet(own)
+          System.err.println(f"[memo] $label%-18s cold build ${own / 1e9}%6.2f s  ($dir)")
+        } finally nestedNanos.set(outer + wall)
       }
       value
     }
@@ -73,6 +81,9 @@ object ArtifactMemo {
 
   private val entries = new ConcurrentHashMap[(String, String, String), Entry]()
   private val coldNanos = new AtomicLong(0L)
+  // wall nanos of the builds nested, on this thread, in the build running
+  // on it: a build is billed its own time, without theirs
+  private val nestedNanos = ThreadLocal.withInitial[Long](() => 0L)
 
   /** Total wall seconds spent on cold artifact builds in this JVM. */
   def totalColdBuildSeconds: Double = coldNanos.get() / 1e9

@@ -1,16 +1,23 @@
 package graft.tools
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
-import graft.kmeans.{Centroid, Lloyd}
+import graft.kmeans.Lloyd
 
-/** Stress-scale evidence for the flagship dataflow: one full Lloyd run
-  * (K = 5, 10 fixed iterations, no early stop) over the synthetic-sf1
-  * embeddings at /tmp/stress_sf1, printing per-iteration wall time. Each
-  * iteration is the production shape, [[Lloyd.step]]: one job in which every
-  * partition folds its points, through the fused nearest-centroid loop, into
-  * K sum/count buffers that `treeAggregate` merges (K×(D+1) numbers per
-  * partition cross the wire; the points are never shuffled). Usage:
+/** Stress-scale evidence for the flagship dataflow: one production
+  * [[Lloyd.run]] (K = 5, 10 fixed iterations, eps = 0 so no early stop) over
+  * the synthetic-sf1 embeddings at /tmp/stress_sf1. The run is one job that
+  * fills the persisted point blocks and computes the init, then one job per
+  * iteration in which every partition folds its blocks, through the fused
+  * nearest-centroid loop, into K sum/count buffers that `treeAggregate`
+  * merges (K×(D+1) numbers per partition cross the wire; the points are
+  * never shuffled). Each of these jobs is one SQL execution; the tool
+  * prints the fill-and-init execution's wall time, then each iteration's
+  * as the time between consecutive execution ends. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/tmp/stress_sf1 sbt "runMain graft.tools.StressLloyd"
   */
@@ -29,18 +36,35 @@ object StressLloyd {
     spark.sparkContext.setLogLevel("WARN")
 
     val pts = graft.core.Tables.points(spark, sfDir)
-      .select("vec_id", "coordinates").cache()
-    val n = pts.count() // materialize the cache before timing
-    var cents: Seq[Centroid] = Lloyd.initCentroids(pts, 5)
-    val times = (1 to 10).map { it =>
-      val t0 = System.nanoTime()
-      cents = Lloyd.step(pts, cents)
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"iter $it%2d: $dt%.3f s (${cents.size} centroids)")
-      dt
+    val n = pts.count()
+    // (start, end) ms of every SQL execution that Lloyd.run issues
+    val execs = scala.collection.mutable.Map[Long, (Long, Long)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = execs.synchronized {
+        e match {
+          case s: SparkListenerSQLExecutionStart => execs(s.executionId) = (s.time, 0L)
+          case x: SparkListenerSQLExecutionEnd =>
+            execs.get(x.executionId).foreach(t => execs(x.executionId) = (t._1, x.time))
+          case _ =>
+        }
+      }
+    })
+    val t0 = System.nanoTime()
+    val (cents, iters) = Lloyd.run(pts, 5, maxIter = 10, eps = 0.0)
+    val total = (System.nanoTime() - t0) / 1e9
+    spark.stop() // delivers every queued listener event
+
+    val spans = execs.synchronized(execs.values.toSeq.sortBy(_._1))
+    val fill = (spans.head._2 - spans.head._1) / 1e3
+    val ends = spans.map(_._2)
+    val times = ArrayBuffer[Double]()
+    ends.zip(ends.drop(1)).zipWithIndex.foreach { case ((a, b), i) =>
+      times += (b - a) / 1e3
+      println(f"iter ${i + 1}%2d: ${times.last}%.3f s")
     }
+    println(f"fill + init: $fill%.3f s; ${cents.size} centroids after $iters iterations")
     println(f"""{"tool":"stress_lloyd","sf_dir":"$sfDir","n_points":$n,"k":5,""" +
-      f""""iters":10,"total_sec":${times.sum}%.3f,"mean_iter_sec":${times.sum / 10}%.3f}""")
-    spark.stop()
+      f""""iters":$iters,"fill_init_sec":$fill%.3f,"total_sec":$total%.3f,""" +
+      f""""mean_iter_sec":${times.sum / times.size}%.3f}""")
   }
 }

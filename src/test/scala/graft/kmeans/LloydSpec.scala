@@ -273,41 +273,161 @@ class LloydSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("at least one point"))
   }
 
+  /** What the Spark listener bus reports while `body` runs. */
+  private final case class Seen(jobs: Seq[Option[String]], stages: Seq[Option[String]],
+                                shuffleBytes: Long, execs: Seq[SparkListenerSQLExecutionStart])
+
+  private def observe(body: => Unit): Seen = {
+    val sc = spark.sparkContext
+    Bus.drain(sc)
+    val jobs, stages = ArrayBuffer[Option[String]]()
+    val execs = ArrayBuffer[SparkListenerSQLExecutionStart]()
+    var shuffleBytes = 0L
+    val seen = new SparkListener {
+      private def execId(p: java.util.Properties) =
+        Option(p).flatMap(q => Option(q.getProperty("spark.sql.execution.id")))
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += execId(e.properties)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages += execId(e.properties)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execs += x
+        case _ =>
+      }
+    }
+    sc.addSparkListener(seen)
+    try {
+      body
+      Bus.drain(sc)
+    } finally sc.removeSparkListener(seen)
+    Seen(jobs.toSeq, stages.toSeq, shuffleBytes, execs.toSeq)
+  }
+
+  /** The innermost program frame of an execution's call site, as the
+    * benchmark in bench/ reads it.
+    */
+  private def innermost(e: SparkListenerSQLExecutionStart): String =
+    e.details.linesIterator.map(_.trim).find(_.startsWith("graft.")).map(_.takeWhile(_ != '('))
+      .getOrElse("")
+
   test("one Lloyd.step on cached points is one job of one stage, with no shuffle") {
     val s = spark
     import s.implicits._
-    val sc = spark.sparkContext
-    val pts = sc.parallelize(TestSpark.refPoints, 3).toDF("vec_id", "coordinates").cache()
+    val pts = spark.sparkContext.parallelize(TestSpark.refPoints, 3).toDF("vec_id", "coordinates").cache()
     try {
       val cents = Lloyd.initCentroids(pts, 3) // fills the cache
-      Bus.drain(sc)
-      val jobs, stages = ArrayBuffer[Option[String]]()
-      val sqlExecs = ArrayBuffer[Long]()
-      var shuffleBytes = 0L
-      val seen = new SparkListener {
-        private def execId(p: java.util.Properties) =
-          Option(p).flatMap(q => Option(q.getProperty("spark.sql.execution.id")))
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs += execId(e.properties)
-        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-          stages += execId(e.properties)
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
-          shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
-        }
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case x: SparkListenerSQLExecutionStart => sqlExecs += x.executionId
-          case _ =>
-        }
-      }
-      sc.addSparkListener(seen)
-      try {
-        Lloyd.step(pts, cents)
-        Bus.drain(sc)
-      } finally sc.removeSparkListener(seen)
-      assert(jobs.size == 1, s"jobs: $jobs")
-      assert(stages.size == 1, s"stages: $stages")
-      assert(shuffleBytes == 0L)
-      assert(sqlExecs.size == 1)
-      assert((jobs ++ stages).toSet == Set(Some(sqlExecs.head.toString)))
+      val seen = observe(Lloyd.step(pts, cents))
+      assert(seen.jobs.size == 1, s"jobs: ${seen.jobs}")
+      assert(seen.stages.size == 1, s"stages: ${seen.stages}")
+      assert(seen.shuffleBytes == 0L)
+      assert(seen.execs.size == 1)
+      assert((seen.jobs ++ seen.stages).toSet == Set(Some(seen.execs.head.executionId.toString)))
     } finally pts.unpersist()
+  }
+
+  test("Lloyd.run is one fill-and-init job, then one job per iteration, at the frames bench/ reads") {
+    val s = spark
+    import s.implicits._
+    val pts = spark.sparkContext.parallelize(TestSpark.refPoints, 3).toDF("vec_id", "coordinates")
+    val seen = observe(Lloyd.run(pts, k = 3, maxIter = 3, eps = 0.0))
+    assert(seen.jobs.size == 4, s"jobs: ${seen.jobs}")
+    assert(seen.stages.size == 4, s"stages: ${seen.stages}")
+    assert(seen.shuffleBytes == 0L)
+    assert(seen.execs.size == 4)
+    assert((seen.jobs ++ seen.stages).toSet == seen.execs.map(e => Some(e.executionId.toString)).toSet)
+    val frames = seen.execs.sortBy(_.executionId).map(innermost)
+    assert(frames == "graft.kmeans.Lloyd$.initCentroids" +: Seq.fill(3)("graft.kmeans.Lloyd$.run"),
+      frames.mkString(", "))
+  }
+
+  /** `n` points per partition in `parts` partitions: 64-D Gaussian blobs
+    * around 6 centers, ids in row order, plus one row with null coordinates.
+    * Points 0 and 1 are equal, so with K = 8 the second init centroid ties
+    * with the first everywhere, gets no point and vanishes.
+    */
+  private def blobs(parts: Int, n: Int): (DataFrame, Array[(Long, Array[Double])]) = {
+    val rnd = new scala.util.Random(7)
+    val centers = Array.fill(6, 64)(rnd.nextGaussian() * 4)
+    val rows = (0 until parts * n).map { i =>
+      val c = centers(rnd.nextInt(6))
+      (i.toLong, c.map(_ + rnd.nextGaussian()))
+    }.toArray
+    rows(1) = (1L, rows(0)._2.clone)
+    val withNull = rows.toSeq.patch(n / 2, Seq((-1L, null: Array[Double])), 0)
+    val s = spark
+    import s.implicits._
+    (spark.sparkContext.parallelize(withNull, parts).toDF("vec_id", "coordinates"), rows)
+  }
+
+  /** Plain-Scala Lloyd, the rule of the benchmark's replay: first-K init by
+    * vec_id, ties to the lower cid, vanished clusters dropped, `iters`
+    * rounds; sums in the order of `points`.
+    */
+  private def replay(points: Array[(Long, Array[Double])], k: Int, iters: Int): Seq[Centroid] = {
+    var cents = points.sortBy(_._1).take(k).zipWithIndex
+      .map { case ((_, p), i) => Centroid(i + 1, p.clone) }.toSeq
+    val d = points.head._2.length
+    for (_ <- 1 to iters) {
+      val cs = cents.toArray
+      val sums = Array.fill(cs.length)(new Array[Double](d))
+      val counts = new Array[Long](cs.length)
+      points.foreach { case (_, p) =>
+        var best = -1; var bestD = Double.PositiveInfinity; var j = 0
+        while (j < cs.length) {
+          var s = 0.0; var i = 0
+          while (i < d) { val x = p(i) - cs(j).coordinates(i); s += x * x; i += 1 }
+          if (s < bestD) { bestD = s; best = j }
+          j += 1
+        }
+        var i = 0
+        while (i < d) { sums(best)(i) += p(i); i += 1 }
+        counts(best) += 1
+      }
+      cents = cs.indices.filter(counts(_) > 0)
+        .map(j => Centroid(cs(j).cid, sums(j).map(_ / counts(j)))).toSeq
+    }
+    cents
+  }
+
+  test("Lloyd.run over several blocks per partition matches a plain-Scala replay") {
+    val (three, points) = blobs(parts = 3, n = 5000)
+    val want = replay(points, k = 8, iters = 5)
+    assert(want.size < 8, "the replay should drop a cluster")
+    val (got, iters) = Lloyd.run(three, k = 8, maxIter = 5, eps = 0.0)
+    assert(iters == 5)
+    assert(got.map(_.cid) == want.map(_.cid))
+    for ((g, w) <- got.zip(want); i <- w.coordinates.indices)
+      assert(math.abs(g.coordinates(i) - w.coordinates(i)) < 1e-12, s"cid=${g.cid} dim=$i")
+    // one partition folds every point in row order: the same bits
+    val (one, _) = blobs(parts = 1, n = 15000)
+    val (exact, _) = Lloyd.run(one, k = 8, maxIter = 5, eps = 0.0)
+    assert(exact.map(c => (c.cid, c.coordinates.toSeq)) == want.map(c => (c.cid, c.coordinates.toSeq)))
+  }
+
+  test("Lloyd.run leaves no persisted RDD behind, however it ends") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    val before = persisted
+    Lloyd.run(TestSpark.refPointsDf, k = 2, maxIter = 3)
+    assert(persisted == before, "after a run that succeeds")
+    val nullElem = Seq((0L, Seq(Some(0.5), Some(1.0))), (1L, Seq(Some(0.5), None)))
+      .toDF("vec_id", "coordinates")
+    val e1 = intercept[Exception](Lloyd.run(nullElem, k = 1))
+    assert(messages(e1).contains("null element at 1"), messages(e1))
+    assert(persisted == before, "after a run that fails on a null element")
+    val noPoints = Seq[(Long, Array[Double])]((0L, null), (1L, null)).toDF("vec_id", "coordinates")
+    val e2 = intercept[IllegalArgumentException](Lloyd.run(noPoints, k = 2))
+    assert(e2.getMessage.contains("at least one point"))
+    assert(persisted == before, "after a run on only null coordinates")
+    // a longer point after the init's: its block fails the fold, naming both lengths
+    val mixed = Seq((0L, Array(0.0, 0.0)), (1L, Array(1.0, 0.0)), (2L, Array(1.0, 0.0, 0.0)))
+      .toDF("vec_id", "coordinates").coalesce(1)
+    val e3 = intercept[Exception](Lloyd.run(mixed, k = 2))
+    assert(messages(e3).contains("point of length 3, centroid 1 of length 2"), messages(e3))
+    assert(persisted == before, "after a run that fails on a length mismatch")
   }
 }

@@ -62,6 +62,20 @@ class ArtifactMemoSpec extends AnyFunSuite {
     }
   }
 
+  test("a nested build is billed once: each build pays only its own time") {
+    val dir = Files.createTempDirectory("artifact-memo-billing")
+    try {
+      val cold0 = ArtifactMemo.totalColdBuildSeconds
+      ArtifactMemo("spec_outer", spark, dir.toString) {
+        Thread.sleep(200)
+        ArtifactMemo("spec_inner", spark, dir.toString) { Thread.sleep(300); 1 }
+      }
+      val billed = ArtifactMemo.totalColdBuildSeconds - cold0
+      // 0.2 s of the outer build's own plus the 0.3 s inner build, not 0.8 s
+      assert(billed >= 0.5 && billed < 0.7, s"billed $billed s")
+    } finally delete(dir)
+  }
+
   test("an input rewritten under the same path is rebuilt, not served stale") {
     withFixtureCopy { dir =>
       val docs0 = TextQueries.shingleSetsFor(spark, dir).count()
