@@ -1,6 +1,10 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
@@ -11,8 +15,33 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `<sfDir>/<name>.parquet`. A single file's schema is read from its
+    * footer on the driver and handed to the reader. Without a schema,
+    * `spark.read.parquet` runs a one-task Spark job on every call to infer
+    * it, and that job's fixed cost dwarfs one footer read.
+    * The footer goes through `ParquetFileFormat.readSchemaFromFooter` and a
+    * `ParquetToSparkSchemaConverter` built from the session's conf, the same
+    * conversion that job runs, so names, types, nullability and metadata
+    * are Spark's own. It is read on every call, never kept, so a file
+    * rewritten in place is read with its new schema. A directory of part
+    * files (the shape at scale) and a missing path keep Spark's inference,
+    * whose one job is noise beside a large scan and whose errors
+    * ([PATH_NOT_FOUND]) are Spark's.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    val isFile =
+      try path.getFileSystem(conf).getFileStatus(path).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isFile) spark.read.parquet(path.toString)
+    else {
+      val footer = new Footer(path, ParquetFileReader.readFooter(conf, path, NO_FILTER))
+      val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path.toString)
+    }
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = table(spark, sfDir, "nation")
@@ -45,7 +74,7 @@ object Tables {
 
   /** Raw events read with the nanos-fixture failure made self-explanatory:
     * a TIMESTAMP(NANOS) fixture read in a session missing [[NanosAsLongConf]]
-    * dies inside Spark's schema inference with a bare [PARQUET_TYPE_ILLEGAL]
+    * fails the footer's schema conversion with a bare [PARQUET_TYPE_ILLEGAL]
     * — rethrown here naming the conf to set.
     */
   private[graft] def eventsRead(spark: SparkSession, sfDir: String): DataFrame =

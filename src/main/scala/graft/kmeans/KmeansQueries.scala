@@ -294,11 +294,8 @@ object KmeansQueries {
     // pair-count BIGINTs, IEEE ratio with the DOUBLE-denominator guard.
     "q_cluster_stability" -> { (s, dir) =>
       val centsA = Lloyd.initCentroidsFor(s, dir, K)
-      val alt = Tables.points(s, dir).filter(col("coordinates").isNotNull)
-        .orderBy("vec_id").limit(2 * K)
-        .collect().drop(K).take(K).zipWithIndex
-        .map { case (r, i) => Centroid(i + 1, r.getSeq[Double](1).toArray) }
-        .toSeq
+      val alt = Lloyd.initCentroids(Tables.points(s, dir), 2 * K).drop(K)
+        .map(c => c.copy(cid = c.cid - K))
       val cells = Tables.points(s, dir)
         .withColumn("ca", Lloyd.assignCol(centsA, col("coordinates")))
         .withColumn("cb", Lloyd.assignCol(alt, col("coordinates")))

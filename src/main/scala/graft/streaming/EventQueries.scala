@@ -227,10 +227,7 @@ object EventQueries {
       val ss = Streams.streamingSession(s)
       import ss.implicits._
       val cents = graft.kmeans.Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
-      // footer read memoized like the events schema
-      val schema = graft.text.ArtifactMemo("emb_schema", ss, dir) {
-        ss.read.parquet(s"$dir/embeddings.parquet").schema
-      }
+      val schema = Tables.table(ss, dir, "embeddings").schema
       val streamed = ss.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
@@ -504,6 +501,9 @@ object EventQueries {
         |x AS (SELECT time_bucket(INTERVAL 15 MINUTE, ts) - k * INTERVAL 15 MINUTE AS w_start
         |      FROM e, UNNEST([0, 1, 2, 3]) AS t(k))
         |SELECT w_start, count(*) AS n FROM x GROUP BY w_start ORDER BY w_start""".stripMargin,
+    // RANGE, not ROWS: events tied on (user_id, ts) are peers, so they share
+    // one sid whichever of them the lag sort put first. A ROWS frame let the
+    // two window sorts order such ties differently and split a session.
     "q_stream_session" ->
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
         |gaps AS (
@@ -514,7 +514,7 @@ object EventQueries {
         |sess AS (
         |  SELECT user_id, ts, value,
         |         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |                                RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
         |  FROM gaps)
         |SELECT user_id, min(ts) AS w_start, count(*) AS n_events, round(sum(value), 6) AS sum_value
         |FROM sess GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,

@@ -23,16 +23,15 @@ object Streams {
 
   /** Open the events table as a file stream with the same schema the batch
     * loader produces. `maxFilesPerTrigger` keeps micro-batches bounded on a
-    * multi-file 100 TB directory.
+    * multi-file 100 TB directory. The schema is read on every call, not
+    * memoized: for a single file [[graft.core.Tables.table]] reads only its
+    * footer, on the driver.
     */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     // schema via the batch loader's guarded read: a nanos fixture in a
     // conf-less session fails with the message naming NanosAsLongConf,
-    // not a bare [PARQUET_TYPE_ILLEGAL]. Memoized, so the streaming keys do
-    // not each re-read the parquet footer.
-    val schema = graft.text.ArtifactMemo("events_schema", spark, sfDir) {
-      graft.core.Tables.eventsRead(spark, sfDir).schema
-    }
+    // not a bare [PARQUET_TYPE_ILLEGAL]
+    val schema = graft.core.Tables.eventsRead(spark, sfDir).schema
     // file streams want a directory: stream the sf dir, globbed to events
     val raw = spark.readStream
       .schema(schema)
