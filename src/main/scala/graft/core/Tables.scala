@@ -52,20 +52,24 @@ object Tables {
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def documents(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "documents")
 
-  /** Conf every graft session must carry (applied by the Bench/Verify/test
-    * builders): `events.ts` is parquet TIMESTAMP(NANOS), which Spark's
-    * vectorized reader rejects outright ([PARQUET_TYPE_ILLEGAL]) unless read
-    * as a nanosecond long via this legacy conf. Set at session construction,
-    * NOT inside a loader — a loader mutating shared-session conf would
-    * silently change how later parquet reads interpret TIMESTAMP(NANOS).
+  /** Conf for legacy fixtures whose `events.ts` is parquet TIMESTAMP(NANOS),
+    * which Spark's reader rejects outright ([PARQUET_TYPE_ILLEGAL]) unless
+    * read as a nanosecond long via this legacy conf. Since the 2026-08-13
+    * fixture regen `events.ts` is TIMESTAMP(MICROS) and the conf changes
+    * nothing there; the Bench/Verify/test builders still set it so a nanos
+    * file reads too. Set at session construction, NOT inside a loader — a
+    * loader mutating shared-session conf would silently change how later
+    * parquet reads interpret TIMESTAMP(NANOS).
     */
   val NanosAsLongConf: (String, String) = ("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** Reads `ts` as a nanosecond long (see [[NanosAsLongConf]]) and truncates
-    * to microseconds — integer `div`, NOT `/`, because ns-since-epoch
-    * (~1.7e18) exceeds double's 53-bit mantissa and float division would
-    * corrupt the microsecond digits. DuckDB's `CAST(ts AS TIMESTAMP)`
-    * truncates ns->us identically.
+  /** The events table with `ts` as a session-tz TIMESTAMP, whatever its
+    * on-disk unit ([[normalizeEventTs]]). A legacy nanos `ts` arrives as a
+    * nanosecond long (see [[NanosAsLongConf]]) and is truncated to
+    * microseconds — integer `div`, NOT `/`, because ns-since-epoch (~1.7e18)
+    * exceeds double's 53-bit mantissa and float division would corrupt the
+    * microsecond digits. DuckDB's `CAST(ts AS TIMESTAMP)` truncates ns->us
+    * identically.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = eventsRead(spark, sfDir)

@@ -48,9 +48,4 @@ object Vec {
 
   /** Scalar multiply. */
   def scale(a: Column, k: Column): Column = transform(a, x => x * k)
-
-  /** Round every element to `d` decimals (oracle float-drift canonicalizer,
-    * SURVEY.md §7.4 risk 1).
-    */
-  def roundTo(a: Column, d: Int): Column = transform(a, x => round(x, d))
 }

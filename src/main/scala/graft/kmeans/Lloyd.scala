@@ -50,9 +50,8 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   *   - the driver divides, drops empty clusters and keeps the means in cid
   *     order. The loop never grows lineage.
   *
-  * `useAgg = false` keeps a DataFrame iteration instead — assignment by
-  * [[assign]], means by the posexplode/avg plan [[updateExplode]] — which a
-  * DuckDB replay can translate.
+  * [[assign]] and the posexplode/avg plan [[updateExplode]] express one
+  * iteration as a DataFrame, which a DuckDB replay can translate.
   *
   * Semantics kept from the reference (SURVEY.md §2.11): ties go to the
   * lower centroid id (strict `<` in mapper.py:64 keeps the earlier one);
@@ -171,11 +170,10 @@ object Lloyd {
     * centroids are exact decimals).
     */
   def runFor(spark: org.apache.spark.sql.SparkSession, sfDir: String, k: Int,
-             maxIter: Int = 10, eps: Double = 1e-6, useAgg: Boolean = true,
+             maxIter: Int = 10, eps: Double = 1e-6,
              grid: Option[Int] = None): (Seq[Centroid], Int) =
-    ArtifactMemo(s"lloyd_run(k=$k,maxIter=$maxIter,eps=$eps,useAgg=$useAgg,grid=$grid)",
-        spark, sfDir) {
-      run(graft.core.Tables.points(spark, sfDir), k, maxIter, eps, useAgg, grid)
+    ArtifactMemo(s"lloyd_run(k=$k,maxIter=$maxIter,eps=$eps,grid=$grid)", spark, sfDir) {
+      run(graft.core.Tables.points(spark, sfDir), k, maxIter, eps, grid)
     }
 
   /** Replica of Spark SQL `round(x, scale)` for driver-side snapping:
@@ -187,29 +185,19 @@ object Lloyd {
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
 
   /** One Lloyd iteration over `pts` from `cents`: the surviving per-cid
-    * means, sorted by cid. With `useAgg` it is one job that turns `pts` into
-    * point blocks, unpersisted, and folds them into per-partition sum/count
-    * buffers; without it, [[updateExplode]] over [[assign]]. `grid` as in
-    * [[run]].
+    * means, sorted by cid. It is one job that turns `pts` into point
+    * blocks, unpersisted, and folds them into per-partition sum/count
+    * buffers. `grid` as in [[run]].
     *
     * A row whose `coordinates` is null is skipped: it joins no cluster. A
     * null element, or a point whose length differs from the centroids',
     * fails the job.
     */
-  def step(pts: DataFrame, cents: Seq[Centroid], useAgg: Boolean = true,
-           grid: Option[Int] = None): Seq[Centroid] = {
+  def step(pts: DataFrame, cents: Seq[Centroid], grid: Option[Int] = None): Seq[Centroid] = {
     require(cents.nonEmpty, "Lloyd.step needs at least one centroid")
-    if (useAgg) {
-      val (qe, bs) = blocks(pts)
-      run(qe, bs, cents, grid)
-    } else
-      snapped(updateExplode(assign(pts, cents)).collect().map { r =>
-        (r.getInt(r.fieldIndex("cid")), r.getSeq[Double](r.fieldIndex("coordinates")).toArray)
-      }.sortBy(_._1).toSeq, grid)
+    val (qe, bs) = blocks(pts)
+    run(qe, bs, cents, grid)
   }
-
-  private def snapped(means: Seq[(Int, Array[Double])], grid: Option[Int]): Seq[Centroid] =
-    means.map { case (cid, raw) => Centroid(cid, grid.fold(raw)(d => raw.map(snap(_, d)))) }
 
   // One iteration over point blocks, as a SQL execution of `qe`. It is a
   // `run` overload so that the action has `Lloyd$.run` as its innermost
@@ -221,7 +209,9 @@ object Lloyd {
     val sums = SQLExecution.withNewExecutionId(qe, Some("Lloyd.step")) {
       blocks.treeAggregate(new Sums)((s, b) => s.add(table, b), (a, b) => a.merge(b))
     }
-    snapped(sums.means(table), grid)
+    sums.means(table).map { case (cid, raw) =>
+      Centroid(cid, grid.fold(raw)(d => raw.map(snap(_, d))))
+    }
   }
 
   /** Doubles per point block (2 MiB): a block of D-long points holds
@@ -375,10 +365,9 @@ object Lloyd {
   /** Full driver loop: iterate until `maxIter` or all centroids moved < eps.
     * Returns (final centroids, iterations run).
     *
-    * With `useAgg`, one job fills the persisted point blocks and computes
-    * the init, and each iteration is one job folding the blocks (see the
-    * object's scaladoc). Without it, every iteration is the DataFrame
-    * [[step]] over `points`, uncached: that path is a reference for tests.
+    * One job fills the persisted point blocks and computes the init, and
+    * each iteration is one job folding the blocks (see the object's
+    * scaladoc).
     *
     * `grid = Some(d)` snaps every collected mean to the 1e-d decimal grid
     * before the next assignment — the q_kmeans_iter2 determinism
@@ -389,17 +378,21 @@ object Lloyd {
     * the 1e-7 grid absorbs). `None` keeps raw means (MLlib parity tests).
     */
   def run(points: DataFrame, k: Int, maxIter: Int = 10, eps: Double = 1e-6,
-          useAgg: Boolean = true, grid: Option[Int] = None): (Seq[Centroid], Int) = {
+          grid: Option[Int] = None): (Seq[Centroid], Int) = {
     require(k >= 1, s"Lloyd.run needs k >= 1, got $k")
-    if (useAgg) {
-      val (qe, bs) = blocks(points)
-      bs.persist(StorageLevel.MEMORY_AND_DISK)
-      try iterate(initCentroids(qe, bs, k), maxIter, eps)(run(qe, bs, _, grid))
-      finally bs.unpersist()
-    } else {
-      val pts = points.select("vec_id", "coordinates")
-      iterate(initCentroids(pts, k), maxIter, eps)(step(pts, _, useAgg = false, grid))
-    }
+    val (qe, bs) = blocks(points)
+    bs.persist(StorageLevel.MEMORY_AND_DISK)
+    try iterate(initCentroids(qe, bs, k), maxIter, eps)(run(qe, bs, _, grid))
+    finally bs.unpersist()
+  }
+
+  /** The call form of the benchmark in bench/, which still names the
+    * removed iteration choice: `useAgg` must be true, the one path there is.
+    */
+  def run(points: DataFrame, k: Int, maxIter: Int, eps: Double,
+          useAgg: Boolean): (Seq[Centroid], Int) = {
+    require(useAgg, "Lloyd.run has one iteration path; useAgg = false is gone")
+    run(points, k, maxIter, eps)
   }
 
   private def iterate(init: Seq[Centroid], maxIter: Int, eps: Double)(

@@ -319,7 +319,7 @@ object MLQueries {
     // (reference semantics: master.py:95-151).
     "q_kmeans_full" -> { (s, dir) =>
       val (cents, iters) = Lloyd.runFor(s, dir, KmeansQueries.K,
-        maxIter = 10, eps = 1e-6, useAgg = true, grid = Some(7))
+        maxIter = 10, eps = 1e-6, grid = Some(7))
       val s2 = s
       import s2.implicits._
       cents.flatMap(c => c.coordinates.zipWithIndex.map {

@@ -534,7 +534,7 @@ object SimilarityQueries {
     // Output = per-cluster census: size, chunk count, drops, max pair cos.
     "q_semdedup" -> { (s, dir) =>
       val cents = graft.kmeans.Lloyd.runFor(s, dir, graft.kmeans.KmeansQueries.K,
-        maxIter = 10, eps = 1e-6, useAgg = true, grid = Some(7))._1
+        maxIter = 10, eps = 1e-6, grid = Some(7))._1
       val emb = Tables.points(s, dir)
         .withColumn("cid", graft.kmeans.Lloyd.assignCol(cents, col("coordinates")))
         .select(col("vec_id"), col("cid"),

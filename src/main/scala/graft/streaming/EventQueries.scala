@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -211,10 +212,8 @@ object EventQueries {
     // finalized are emitted. The oracle reproduces the emission rule:
     // window_end <= max(ts) - 1 hour.
     "q_stream_watermark" -> { (s, dir) =>
-      val ss = Streams.streamingSession(s)
-      Streams.runToBatch(ss,
-          Streams.tumblingCounts(Streams.readEvents(ss, dir)),
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      Streams.drain(s, OutputMode.Append())(ss =>
+          Streams.tumblingCounts(Streams.readEvents(ss, dir)))
         .select(col("w_start"), col("event_type"), col("n"))
         .orderBy("w_start", "event_type")
     },
@@ -224,19 +223,18 @@ object EventQueries {
     // mapGroupsWithState, emit the final means — which must equal the
     // batch iter-1 means (the oracle).
     "q_stream_kmeans" -> { (s, dir) =>
-      val ss = Streams.streamingSession(s)
-      import ss.implicits._
       val cents = graft.kmeans.Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
-      val schema = Tables.table(ss, dir, "embeddings").schema
-      val streamed = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-        .withColumn("cid", graft.kmeans.Lloyd.assignCol(cents, col("embedding")))
-        .select(col("cid"), col("embedding").as("coordinates"))
-        .as[Streams.Assigned]
-      val updates = Streams.runToBatch(s, Streams.incrementalKmeans(streamed).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
+      val updates = Streams.drain(s, OutputMode.Update()) { ss =>
+        import ss.implicits._
+        val streamed = ss.readStream.schema(Tables.table(ss, dir, "embeddings").schema)
+          .option("pathGlobFilter", "embeddings.parquet")
+          .parquet(dir)
+          .withColumn("embedding", col("embedding").cast("array<double>"))
+          .withColumn("cid", graft.kmeans.Lloyd.assignCol(cents, col("embedding")))
+          .select(col("cid"), col("embedding").as("coordinates"))
+          .as[Streams.Assigned]
+        Streams.incrementalKmeans(streamed).toDF()
+      }
       // keep each cid's LAST update (max n), then explode to scalar rows
       updates
         .groupBy("cid")
@@ -253,16 +251,14 @@ object EventQueries {
     // stream-side shuffle join when the dim outgrows the threshold —
     // Spark still broadcasts per micro-batch at fixture scale.
     "q_stream_join" -> { (s, dir) =>
-      val ss = Streams.streamingSession(s)
-      val ev = Streams.readEvents(ss, dir)
-      val cust = Tables.customer(ss, dir)
-        .select(col("c_custkey"), col("c_nationkey"))
-      val joined = ev.join(cust, ev("user_id") === cust("c_custkey"))
-        .groupBy(col("c_nationkey").cast("long").as("nationkey"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
-      Streams.runToBatch(s, joined,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
-        .orderBy("nationkey")
+      Streams.drain(s, OutputMode.Complete()) { ss =>
+        val ev = Streams.readEvents(ss, dir)
+        val cust = Tables.customer(ss, dir)
+          .select(col("c_custkey"), col("c_nationkey"))
+        ev.join(cust, ev("user_id") === cust("c_custkey"))
+          .groupBy(col("c_nationkey").cast("long").as("nationkey"))
+          .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
+      }.orderBy("nationkey")
     },
     // True stream-stream interval join: click->purchase attribution within
     // a 1-hour window — a self-join of ONE file stream (both sides derive
@@ -277,31 +273,29 @@ object EventQueries {
     // interval join (the oracle). Drained via Trigger.AvailableNow (same
     // result on a finite source, one fewer empty finalization batch).
     "q_stream_stream_join" -> { (s, dir) =>
-      val ss = Streams.streamingSession(s)
-      // r13: skip the trailing no-data micro-batch. For an INNER interval
-      // join every match is emitted in the data batch that completes it;
-      // the no-data batch only advances the watermark to EVICT state —
+      // Skip the trailing no-data micro-batch. For an INNER interval join
+      // every match is emitted in the data batch that completes it; the
+      // no-data batch only advances the watermark to EVICT state —
       // output-invariant on a drained finite stream (probed: 371 = 371
       // rows, 2 batches -> 1, 2.5 -> 1.6 s; the oracle re-pins it). On an
       // unbounded production stream this conf stays ON (state eviction is
-      // the liveness contract) — it is scoped to this drain-to-batch
-      // child session only.
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val ev = Streams.readEvents(ss, dir)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("click_ts") &&
-          col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-      Streams.runToBatch(ss, joined, org.apache.spark.sql.streaming.OutputMode.Append())
-        .select(col("user_id"), col("click_id"), col("purchase_id"),
+      // the liveness contract) — it is scoped to this drain's session.
+      Streams.drain(s, OutputMode.Append(),
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { ss =>
+        val ev = Streams.readEvents(ss, dir)
+        val clicks = ev
+          .filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
+          .withWatermark("click_ts", "1 hour")
+        val purchases = ev
+          .filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
+          .withWatermark("p_ts", "1 hour")
+        clicks.join(purchases,
+          col("user_id") === col("p_user") &&
+            col("p_ts") >= col("click_ts") &&
+            col("p_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
+      }.select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("gap_us"))
         .orderBy("user_id", "click_id", "purchase_id")
     },
@@ -315,39 +309,17 @@ object EventQueries {
     },
     // NS: foreachBatch upsert sink — the pattern for pushing a streaming
     // aggregation into a non-streaming store: Update-mode per-type totals,
-    // each micro-batch MERGEd into a versioned parquet snapshot (previous
-    // snapshot anti-joined on the key, changed keys replaced, written to
-    // snapshot v<batchId> — idempotent under micro-batch replay because the
-    // batch id names the output). On the drained stream the last snapshot
+    // each micro-batch MERGEd into a versioned parquet snapshot
+    // (Streams.drainUpserts). On the drained stream the last snapshot
     // equals the batch aggregate (the oracle). At 100 TB the same closure
-    // targets a transactional table; the read-merge-write here is the
-    // minimal store this container has.
+    // targets a transactional table; the read-merge-write on the drain's
+    // scratch dir is the minimal store this container has.
     "q_stream_foreachbatch" -> { (s, dir) =>
-      val ss = Streams.streamingSession(s)
-      val counts = Streams.readEvents(ss, dir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("value").as("sum_v"))
-      val name = s"fb_${System.nanoTime()}"
-      val target = s"target/streams/$name"
-      var lastSnapshot = -1L
-      // the versioned-parquet sink stays on disk: it IS the query's durable
-      // output store, not scratch like the drain's checkpoint
-      val writer = counts.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val merged =
-            if (lastSnapshot >= 0) {
-              ss.read.parquet(s"$target/v$lastSnapshot")
-                .join(batch, Seq("event_type"), "left_anti")
-                .unionByName(batch)
-            } else batch
-          merged.write.mode("overwrite").parquet(s"$target/v$id")
-          lastSnapshot = id
-          ()
-        }
-      Streams.drain(ss, writer, name)
-      s.read.parquet(s"$target/v$lastSnapshot")
-        .select(col("event_type"), col("n"), round(col("sum_v"), 6).as("sum_v"))
+      Streams.drainUpserts(s, "event_type") { ss =>
+        Streams.readEvents(ss, dir)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum("value").as("sum_v"))
+      }.select(col("event_type"), col("n"), round(col("sum_v"), 6).as("sum_v"))
         .orderBy("event_type")
     },
     // NS: Spark 4 `transformWithState` (the arbitrary-state successor of
@@ -357,20 +329,17 @@ object EventQueries {
     // totals per micro-batch; the LAST update per user on the drained
     // stream equals the batch group-by (the oracle).
     "q_stream_transformstate" -> { (s, dir) =>
-      val ss = Streams.streamingSession(s)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import ss.implicits._
-      val ev = Streams.readEvents(ss, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[Streams.Event]
-      val out = ev.groupByKey(_.user_id)
-        .transformWithState(new Streams.RunningTotalsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      Streams.runToBatch(s, out.toDF(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .groupBy("user_id")
+      Streams.drain(s, OutputMode.Update(), "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { ss =>
+        import ss.implicits._
+        Streams.readEvents(ss, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+          .as[Streams.Event]
+          .groupByKey(_.user_id)
+          .transformWithState(new Streams.RunningTotalsProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+          .toDF()
+      }.groupBy("user_id")
         .agg(max(struct(col("n"), col("sum_value"))).as("last"))
         .select(col("user_id"), col("last.n").as("n_events"),
           round(col("last.sum_value"), 6).as("sum_value"))

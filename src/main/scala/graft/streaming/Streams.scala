@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -122,41 +122,27 @@ object Streams {
     }
   }
 
-  /** State partitions of a streaming run: every stateful operator commits
-    * one state store per shuffle partition per micro-batch, so a
-    * batch-engine default (32 at bench config) is pure per-batch commit/IO
-    * overhead on small micro-batches.
+  /** State partitions of a drain: every stateful operator commits one
+    * state store per shuffle partition per micro-batch, so a batch-engine
+    * default (32 at bench config) is pure per-batch commit/IO overhead on
+    * small micro-batches. At 100 TB the state-partition count is sized to
+    * stream key cardinality and rate, independently of the batch engine's
+    * shuffle width, which is what a separate session scope expresses.
     */
   private val StatePartitions = 4
 
-  /** Child session for streaming runs, with the state-partition count cut
-    * down to [[StatePartitions]]. At 100 TB the state-partition count is
-    * sized to stream key cardinality and rate — independently of the batch
-    * engine's shuffle width — which is exactly what a separate session
-    * scope expresses. Confs set at parent-session construction (e.g.
-    * nanosAsLong) are inherited via the shared SparkContext conf.
-    */
-  def streamingSession(parent: SparkSession): SparkSession = {
-    val child = parent.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    child
-  }
-
-  /** Scratch base for per-query streaming checkpoints: tmpfs when the box
-    * has one, else the JVM temp dir, scoped by `user.name` so users sharing
-    * a host never collide on one directory. A TEMP checkpoint has no
-    * durability contract by design (Spark deletes its own temp checkpoints on stop;
-    * `forceDeleteTempCheckpointLocation` exists precisely because they are
-    * scratch), so placing it on tmpfs changes no semantics — it only stops
+  /** Scratch base for the drains' checkpoints: tmpfs when the box has one,
+    * else the JVM temp dir, scoped by `user.name` so users sharing a host
+    * never collide on one directory. A drain's checkpoint has no
+    * durability contract: it is deleted after the drain and never read for
+    * recovery, so placing it on tmpfs changes no semantics. It only stops
     * charging every micro-batch's offset/commit/state-delta fsync-rename
-    * traffic to a spinning-rust path (guide §6: put scratch I/O on the
-    * fast medium; measured 0.1-0.35 s per stateful key at fixture scale).
-    * Production checkpoints are DURABLE and configured per deployment —
-    * this helper is only ever used for drained-to-batch runs whose result
-    * is read back from the memory sink. Overridable via
-    * `spark.graft.stream.ckptBase` for environments where tmpfs is absent.
+    * traffic to a spinning-rust path (measured 0.1-0.35 s per stateful key
+    * at fixture scale). Production checkpoints are DURABLE and configured
+    * per deployment. Overridable via `spark.graft.stream.ckptBase`, read
+    * from the caller's session.
     */
-  private[streaming] def ckptBase(spark: SparkSession): String =
+  private def ckptBase(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.stream.ckptBase").getOrElse {
       val root =
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
@@ -164,35 +150,80 @@ object Streams {
       s"$root/graft_stream_ckpt_${System.getProperty("user.name")}"
     }
 
-  private[streaming] def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: java.io.File): Unit = {
     val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRecursively)
     f.delete(); ()
   }
 
-  /** Drain a query over a finite source to completion: Trigger.AvailableNow
-    * plans the full file listing once up front, drains, and self-terminates
-    * (one fewer empty finalization micro-batch than processAllAvailable;
-    * watermarked Append still runs its no-data emission batch). The query
-    * gets a UNIQUE scratch checkpoint dir under [[ckptBase]] (state
-    * isolation — nothing is shared across queries), deleted after the drain.
+  /** Drain the (finite) stream that `stream` builds to completion and
+    * return its final result as a local DataFrame of `parent`.
+    *
+    * `stream` gets a child session of `parent` with [[StatePartitions]]
+    * state partitions plus `confs`; confs set at parent construction (e.g.
+    * nanosAsLong) reach it through the shared SparkContext conf. The query
+    * writes to a memory sink in `mode` on a unique scratch checkpoint under
+    * [[ckptBase]] of `parent`, so no state is shared across drains.
+    * Trigger.AvailableNow plans the full file listing once, drains and
+    * self-terminates (a watermarked Append still runs its no-data emission
+    * batch). The sink's rows are already on the driver; they are copied
+    * into a local relation of `parent`. The sink view and every scratch
+    * file are gone when this returns, whether the drain succeeded or not.
     */
-  private[streaming] def drain(spark: SparkSession, writer: DataStreamWriter[_], name: String): Unit = {
-    val ckpt = s"${ckptBase(spark)}/$name"
-    try writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
-      .awaitTermination()
-    finally deleteRecursively(new java.io.File(ckpt))
+  def drain(parent: SparkSession, mode: OutputMode, confs: (String, String)*)(
+      stream: SparkSession => DataFrame): DataFrame =
+    inScratch(parent, confs) { (ss, scratch) =>
+      val name = s"graft_sink_${System.nanoTime()}"
+      try {
+        run(stream(ss).writeStream.format("memory").queryName(name).outputMode(mode), scratch)
+        local(parent, ss.table(name))
+      } finally ss.catalog.dropTempView(name)
+    }
+
+  /** [[drain]] through a foreachBatch upsert instead of a memory sink: the
+    * Update-mode rows of each micro-batch are merged on `key` into the
+    * previous snapshot (previous rows anti-joined on the key, changed keys
+    * replaced) and written as parquet snapshot `v<batchId>` under the
+    * drain's scratch dir. The batch id names the output, so a replayed
+    * micro-batch rewrites the same snapshot. Returns the last snapshot as a
+    * local DataFrame of `parent`; the snapshots go with the scratch dir.
+    */
+  private[streaming] def drainUpserts(parent: SparkSession, key: String)(
+      stream: SparkSession => DataFrame): DataFrame =
+    inScratch(parent, Nil) { (ss, scratch) =>
+      var last = -1L
+      run(stream(ss).writeStream.outputMode(OutputMode.Update())
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+          val merged =
+            if (last < 0) batch
+            else ss.read.parquet(s"$scratch/v$last").join(batch, Seq(key), "left_anti")
+              .unionByName(batch)
+          merged.write.mode("overwrite").parquet(s"$scratch/v$id")
+          last = id
+        }, scratch)
+      local(parent, ss.read.parquet(s"$scratch/v$last"))
+    }
+
+  /** `body` in a fresh child session of `parent`, with a unique scratch dir
+    * under [[ckptBase]] that is deleted afterwards, also on failure.
+    */
+  private def inScratch[A](parent: SparkSession, confs: Seq[(String, String)])(
+      body: (SparkSession, String) => A): A = {
+    val ss = parent.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    // The checkpoint is deleted after the drain and never read for
+    // recovery, so it needs no checksum files. With them on, Spark 4.1's
+    // ChecksumCheckpointFileManager starts 4 threads per state-store
+    // provider that are never stopped.
+    ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+    confs.foreach { case (k, v) => ss.conf.set(k, v) }
+    val scratch = new java.io.File(ckptBase(parent), s"drain_${System.nanoTime()}")
+    try body(ss, scratch.getPath) finally deleteRecursively(scratch)
   }
 
-  /** Run any of the above to completion against the (finite) file stream
-    * ([[drain]]) and return the final result as a batch DataFrame. The
-    * memory sink registers its table in the session that owns the stream
-    * (which may be a [[streamingSession]] child), so the result is read
-    * back from `streamed.sparkSession`, not from the caller's session.
-    */
-  def runToBatch(spark: SparkSession, streamed: DataFrame,
-                 mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val name = s"graft_sink_${System.nanoTime()}"
-    drain(spark, streamed.writeStream.format("memory").queryName(name).outputMode(mode), name)
-    streamed.sparkSession.table(name)
-  }
+  private def run(writer: DataStreamWriter[Row], scratch: String): Unit =
+    writer.option("checkpointLocation", s"$scratch/checkpoint")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  private def local(parent: SparkSession, rows: DataFrame): DataFrame =
+    parent.createDataFrame(java.util.Arrays.asList(rows.collect(): _*), rows.schema)
 }

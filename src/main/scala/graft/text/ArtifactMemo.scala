@@ -25,10 +25,9 @@ import org.apache.spark.sql.SparkSession
   * their checkpoint blocks died with it.
   *
   * The key names the context, not the session. Callers reach the memo
-  * through child sessions: every streaming key drains on a fresh
-  * `newSession()` (see `Streams.streamingSession`), so a session-keyed
-  * entry would miss on every call and the map would grow by one entry per
-  * drain. An artifact is therefore built under the confs of the first
+  * through child sessions: every `Streams.drain` builds its stream in a
+  * fresh child session, so a session-keyed entry would miss on every call
+  * and the map would grow by one entry per drain. An artifact is therefore built under the confs of the first
   * session that asks for it and served to every session of the context.
   *
   * Stamp: each entry stores the input stamp of `dir` it was built from —

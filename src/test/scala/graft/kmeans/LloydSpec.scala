@@ -181,13 +181,17 @@ class LloydSpec extends AnyFunSuite {
     assert(v <= math.max(h, c) && v >= math.min(h, c) - 1)
   }
 
-  /** `Lloyd.step` against the DataFrame reference `updateExplode(assign)`:
-    * the same cids, and means within 1e-12.
+  /** One iteration of the DataFrame reference, `updateExplode(assign)`. */
+  private def explodeStep(pts: DataFrame, cents: Seq[Centroid]): Seq[Centroid] =
+    Lloyd.updateExplode(Lloyd.assign(pts, cents)).orderBy("cid")
+      .collect().map(r => Centroid(r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** `Lloyd.step` against [[explodeStep]]: the same cids, and means within
+    * 1e-12.
     */
   private def assertStepMatchesExplode(pts: DataFrame, cents: Seq[Centroid]): Unit = {
     val got = Lloyd.step(pts, cents)
-    val want = Lloyd.updateExplode(Lloyd.assign(pts, cents)).orderBy("cid")
-      .collect().map(r => Centroid(r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    val want = explodeStep(pts, cents)
     assert(got.map(_.cid) == want.map(_.cid))
     for ((g, w) <- got.zip(want); i <- w.coordinates.indices)
       assert(math.abs(g.coordinates(i) - w.coordinates(i)) < 1e-12, s"cid=${g.cid} dim=$i")
@@ -210,11 +214,22 @@ class LloydSpec extends AnyFunSuite {
     } finally pts.unpersist()
   }
 
-  test("Lloyd.run reaches the same answer with and without useAgg") {
+  test("Lloyd.run reaches the same answer as a loop of updateExplode over assign") {
     val pts = sf0001In3
     try {
-      val (a, itersA) = Lloyd.run(pts, k = 5, maxIter = 30, eps = 1e-9, useAgg = true)
-      val (b, itersB) = Lloyd.run(pts, k = 5, maxIter = 30, eps = 1e-9, useAgg = false)
+      val (a, itersA) = Lloyd.run(pts, k = 5, maxIter = 30, eps = 1e-9)
+      // the DataFrame reference from the same init, to the same convergence rule
+      var b = Lloyd.initCentroids(pts, 5)
+      var itersB = 0
+      var moved = true
+      while (itersB < 30 && moved) {
+        val next = explodeStep(pts, b)
+        moved = next.map(_.cid) != b.map(_.cid) || next.zip(b).exists { case (x, y) =>
+          math.sqrt(x.coordinates.zip(y.coordinates).map { case (u, v) => (u - v) * (u - v) }.sum) >= 1e-9
+        }
+        b = next
+        itersB += 1
+      }
       assert(itersA == itersB)
       assert(a.map(_.cid) == b.map(_.cid))
       for ((x, y) <- a.zip(b); i <- x.coordinates.indices)
@@ -230,10 +245,9 @@ class LloydSpec extends AnyFunSuite {
     // no real point is near centroid 1, the lowest cid
     val cents = Seq(Centroid(1, Array(1e6, 1e6)), Centroid(2, Array(0.0, 0.0)),
       Centroid(3, Array(1.0, 0.0)))
-    for (useAgg <- Seq(true, false)) {
-      val next = Lloyd.step(pts, cents, useAgg)
-      assert(next.map(_.cid) == Seq(2, 3), s"useAgg=$useAgg")
-      assert(next.forall(_.coordinates.length == 2), s"useAgg=$useAgg")
+    for ((path, next) <- Seq("step" -> Lloyd.step(pts, cents), "explode" -> explodeStep(pts, cents))) {
+      assert(next.map(_.cid) == Seq(2, 3), path)
+      assert(next.forall(_.coordinates.length == 2), path)
     }
   }
 

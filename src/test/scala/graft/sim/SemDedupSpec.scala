@@ -60,7 +60,7 @@ class SemDedupSpec extends AnyFunSuite {
     // independent spelling: mark each vector whose cluster holds a
     // smaller-id vector within SemTau, then count marks per cluster
     val cents = Lloyd.runFor(spark, TestSpark.Sf0001, KmeansQueries.K,
-      maxIter = 10, eps = 1e-6, useAgg = true, grid = Some(7))._1
+      maxIter = 10, eps = 1e-6, grid = Some(7))._1
     val emb = Tables.points(spark, TestSpark.Sf0001)
       .withColumn("cid", Lloyd.assignCol(cents, col("coordinates")))
       .select(col("vec_id"), col("cid"),
@@ -98,7 +98,7 @@ class SemDedupSpec extends AnyFunSuite {
       .setMaxIter(10).setTol(1e-6).fit(data)
     val mllibSse = model.summary.trainingCost
     val (cents, _) = graft.kmeans.Lloyd.runFor(spark, TestSpark.Sf0001,
-      graft.kmeans.KmeansQueries.K, maxIter = 10, eps = 1e-6, useAgg = true, grid = Some(7))
+      graft.kmeans.KmeansQueries.K, maxIter = 10, eps = 1e-6, grid = Some(7))
     val lloydSse = graft.kmeans.Lloyd.sse(pts, cents)
     assert(mllibSse > 0 && mllibSse <= 1.5 * lloydSse,
       s"MLlib SSE $mllibSse outside the 1.5x Lloyd band (Lloyd SSE $lloydSse)")

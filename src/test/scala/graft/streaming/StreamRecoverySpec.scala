@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -29,45 +29,49 @@ class StreamRecoverySpec extends AnyFunSuite {
 
   test("restart from checkpoint recovers state and never double-counts committed files") {
     val nonce = System.nanoTime()
-    val base = Paths.get(s"target/streams/recovery_$nonce")
-    val src = Files.createDirectories(base.resolve("src"))
-    val cp = base.resolve("cp").toString
+    val base = Files.createTempDirectory("graft_stream_recovery")
+    try {
+      val src = Files.createDirectories(base.resolve("src"))
+      val cp = base.resolve("cp").toString
 
-    // ts re-written as plain TIMESTAMP (micros) so the restream needs no
-    // nanos handling; two disjoint halves by event_id parity
-    val events = graft.core.Tables.events(spark, TestSpark.Sf0001)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val h1 = base.resolve("h1"); val h2 = base.resolve("h2")
-    events.filter(pmod(col("event_id"), lit(2)) === 0).write.parquet(h1.toString)
-    events.filter(pmod(col("event_id"), lit(2)) === 1).write.parquet(h2.toString)
+      // ts re-written as plain TIMESTAMP (micros) so the restream needs no
+      // nanos handling; two disjoint halves by event_id parity
+      val events = graft.core.Tables.events(spark, TestSpark.Sf0001)
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+      val h1 = base.resolve("h1"); val h2 = base.resolve("h2")
+      events.filter(pmod(col("event_id"), lit(2)) === 0).write.parquet(h1.toString)
+      events.filter(pmod(col("event_id"), lit(2)) === 1).write.parquet(h2.toString)
 
-    val ss = Streams.streamingSession(spark)
-    val schema = ss.read.parquet(h1.toString).schema
-    def counts(sinkName: String): Map[String, Long] = {
-      val q = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", cp)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(sinkName).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+      val ss = spark.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", "4")
+      val schema = ss.read.parquet(h1.toString).schema
+      def counts(sinkName: String): Map[String, Long] = {
+        val q = ss.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .parquet(src.toString)
+          .groupBy("event_type").agg(count(lit(1)).as("n"))
+          .writeStream.format("memory").queryName(sinkName)
+          .option("checkpointLocation", cp)
+          .outputMode(OutputMode.Complete())
+          .start()
+        q.processAllAvailable()
+        q.stop()
+        try ss.table(sinkName).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        finally ss.catalog.dropTempView(sinkName)
+      }
 
-    copyParts(h1, src, "a")
-    val afterFirst = counts(s"rec1_$nonce")
-    val expectFirst = events.filter(pmod(col("event_id"), lit(2)) === 0)
-      .groupBy("event_type").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(afterFirst == expectFirst, "first run must count exactly the first half")
+      copyParts(h1, src, "a")
+      val afterFirst = counts(s"rec1_$nonce")
+      val expectFirst = events.filter(pmod(col("event_id"), lit(2)) === 0)
+        .groupBy("event_type").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(afterFirst == expectFirst, "first run must count exactly the first half")
 
-    // deliver the second half, restart from the SAME checkpoint
-    copyParts(h2, src, "b")
-    val afterRestart = counts(s"rec2_$nonce")
-    val expectAll = events.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(afterRestart == expectAll,
-      "restarted query must resume state (include half 1) and not re-count half 1's files")
+      // deliver the second half, restart from the SAME checkpoint
+      copyParts(h2, src, "b")
+      val afterRestart = counts(s"rec2_$nonce")
+      val expectAll = events.groupBy("event_type").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(afterRestart == expectAll,
+        "restarted query must resume state (include half 1) and not re-count half 1's files")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 }

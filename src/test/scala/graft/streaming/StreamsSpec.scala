@@ -85,8 +85,8 @@ class StreamsSpec extends AnyFunSuite {
   test("streaming tumbling counts equal the batch query on the events fixture") {
     val batch = EventQueries.queries("q_stream_tumbling")(spark, TestSpark.Sf0001)
       .select("w_start", "event_type", "n")
-    val streamed = Streams.runToBatch(spark,
-      Streams.tumblingCounts(Streams.readEvents(spark, TestSpark.Sf0001)))
+    val streamed = Streams.drain(spark, OutputMode.Complete())(ss =>
+        Streams.tumblingCounts(Streams.readEvents(ss, TestSpark.Sf0001)))
       .groupBy("w_start", "event_type").agg(sum("n").as("n"))
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
