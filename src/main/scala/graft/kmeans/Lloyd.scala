@@ -1,5 +1,6 @@
 package graft.kmeans
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{graftbridge, Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -36,19 +37,31 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   *     uses: a partition that does not fit in memory spills to disk instead
   *     of being recomputed from the source. [[run]] unpersists them however
   *     the loop ends. Filling them and computing the first-K init
-  *     ([[initCentroids]]) are one job.
-  *   - the K centroids live on the driver and ship with the job's closure
+  *     ([[initCentroids]]) are one job with a task per partition.
+  *   - an iteration reads the blocks in at most one group of partitions per
+  *     core (`coalesce`, no shuffle), so its tasks, and the partial sums the
+  *     driver receives, are bounded by cores rather than by input splits.
+  *   - the K centroids live on the driver and ship with the job's function
   *     as one flattened K×D table, so each task runs the fused
   *     [[graft.functions.NearestCentroid]] argmin loop over `double[]`
   *     slices of its blocks with *no join and no shuffle at all* on the big
   *     side, and decodes no row. This mirrors the reference's broadcast of
   *     centroids inside every RPC request (kmeans.proto:16,
   *     master.py:182-186).
-  *   - each partition folds its points, in row order, into one K×D buffer
-  *     of coordinate sums plus K counts; `treeAggregate` merges the
-  *     partitions' buffers, so K×(D+1) numbers per partition cross the wire.
+  *   - each task folds its points, in order, into one K×D buffer of
+  *     coordinate sums plus K counts, so K×(D+1) numbers per group reach
+  *     the driver. `SparkContext.runJob` puts each group's buffer in the
+  *     slot of its partition index, and the driver merges them in index
+  *     order, so the same grouping gives the same bits.
   *   - the driver divides, drops empty clusters and keeps the means in cid
   *     order. The loop never grows lineage.
+  *
+  * Every function a job ships is a named class ([[ToBlocks]], [[FirstK]],
+  * [[FoldBlocks]]), not a Scala lambda. Spark's `ClosureCleaner` reads and
+  * parses the bytecode of the class that defines each lambda it is handed,
+  * and of the lambdas Spark's own RDD operations wrap around it, on every
+  * job; that work was most of an iteration's driver time. A named class is
+  * no closure to it. `JobLintSpec` keeps lambdas out of these calls.
   *
   * [[assign]] and the posexplode/avg plan [[updateExplode]] express one
   * iteration as a DataFrame, which a DuckDB replay can translate.
@@ -81,7 +94,7 @@ object Lloyd {
   // init also fills them.
   private def initCentroids(qe: QueryExecution, blocks: RDD[Block], k: Int): Seq[Centroid] = {
     val firsts = SQLExecution.withNewExecutionId(qe, Some("Lloyd.initCentroids")) {
-      blocks.mapPartitionsWithIndex((part, bs) => Iterator(firstK(bs, part, k))).collect()
+      blocks.sparkContext.runJob(blocks, FirstK(k))
     }
     firsts.flatten.sortBy(f => (f.id, f.part, f.row)).take(k).zipWithIndex
       .map { case (f, i) => Centroid(i + 1, f.coordinates) }.toSeq
@@ -90,26 +103,30 @@ object Lloyd {
   private final case class First(id: Long, part: Int, row: Long, coordinates: Array[Double])
 
   /** The K points of one partition's blocks with the smallest (vec_id, row). */
-  private def firstK(bs: Iterator[Block], part: Int, k: Int): Array[First] = {
-    // max-heap on (id, row): its head is the first point to drop
-    val heap = new java.util.PriorityQueue[First](math.min(k, 64),
-      (a: First, b: First) => if (a.id != b.id) java.lang.Long.compare(b.id, a.id)
-                              else java.lang.Long.compare(b.row, a.row))
-    var row = 0L
-    bs.foreach { b =>
-      var r = 0
-      while (r < b.ids.length) {
-        // within a partition rows only grow, so an equal id never displaces
-        if (heap.size < k || b.ids(r) < heap.peek.id) {
-          if (heap.size == k) heap.poll()
-          heap.add(First(b.ids(r), part, row,
-            java.util.Arrays.copyOfRange(b.x, r * b.d, (r + 1) * b.d)))
+  private final case class FirstK(k: Int)
+    extends ((TaskContext, Iterator[Block]) => Array[First]) {
+    def apply(ctx: TaskContext, bs: Iterator[Block]): Array[First] = {
+      val part = ctx.partitionId()
+      // max-heap on (id, row): its head is the first point to drop
+      val heap = new java.util.PriorityQueue[First](math.min(k, 64),
+        (a: First, b: First) => if (a.id != b.id) java.lang.Long.compare(b.id, a.id)
+                                else java.lang.Long.compare(b.row, a.row))
+      var row = 0L
+      bs.foreach { b =>
+        var r = 0
+        while (r < b.ids.length) {
+          // within a partition rows only grow, so an equal id never displaces
+          if (heap.size < k || b.ids(r) < heap.peek.id) {
+            if (heap.size == k) heap.poll()
+            heap.add(First(b.ids(r), part, row,
+              java.util.Arrays.copyOfRange(b.x, r * b.d, (r + 1) * b.d)))
+          }
+          r += 1
+          row += 1
         }
-        r += 1
-        row += 1
       }
+      heap.toArray(new Array[First](0))
     }
-    heap.toArray(new Array[First](0))
   }
 
   /** Memoized [[initCentroids]] over the fixture at `sfDir` (the common
@@ -186,8 +203,8 @@ object Lloyd {
 
   /** One Lloyd iteration over `pts` from `cents`: the surviving per-cid
     * means, sorted by cid. It is one job that turns `pts` into point
-    * blocks, unpersisted, and folds them into per-partition sum/count
-    * buffers. `grid` as in [[run]].
+    * blocks, unpersisted, and folds them into one sum/count buffer per
+    * group of partitions. `grid` as in [[run]].
     *
     * A row whose `coordinates` is null is skipped: it joins no cluster. A
     * null element, or a point whose length differs from the centroids',
@@ -196,22 +213,33 @@ object Lloyd {
   def step(pts: DataFrame, cents: Seq[Centroid], grid: Option[Int] = None): Seq[Centroid] = {
     require(cents.nonEmpty, "Lloyd.step needs at least one centroid")
     val (qe, bs) = blocks(pts)
-    run(qe, bs, cents, grid)
+    run(qe, perCore(bs), cents, grid)
   }
 
-  // One iteration over point blocks, as a SQL execution of `qe`. It is a
-  // `run` overload so that the action has `Lloyd$.run` as its innermost
-  // program frame whether it comes from [[run]] or from [[step]]: the
-  // benchmark in bench/ attributes iteration stages by that frame.
-  private def run(qe: QueryExecution, blocks: RDD[Block], cents: Seq[Centroid],
+  // One iteration over grouped point blocks, as a SQL execution of `qe`.
+  // It is a `run` overload so that the action has `Lloyd$.run` as its
+  // innermost program frame whether it comes from [[run]] or from [[step]]:
+  // the benchmark in bench/ attributes iteration stages by that frame.
+  private def run(qe: QueryExecution, groups: RDD[Block], cents: Seq[Centroid],
                   grid: Option[Int]): Seq[Centroid] = {
     val table = NearestCentroid.Table(cents.map(c => (c.cid, c.coordinates)))
-    val sums = SQLExecution.withNewExecutionId(qe, Some("Lloyd.step")) {
-      blocks.treeAggregate(new Sums)((s, b) => s.add(table, b), (a, b) => a.merge(b))
+    val parts = SQLExecution.withNewExecutionId(qe, Some("Lloyd.step")) {
+      groups.sparkContext.runJob(groups, FoldBlocks(table))
     }
-    sums.means(table).map { case (cid, raw) =>
+    parts.foldLeft(new Sums)(_ merge _).means(table).map { case (cid, raw) =>
       Centroid(cid, grid.fold(raw)(d => raw.map(snap(_, d))))
     }
+  }
+
+  /** `blocks` in at most one partition per core: past that many, a
+    * `coalesce` (no shuffle) merges them into one group per core. The
+    * groups hold equal counts of partitions, not of points, so a skewed
+    * input gives up the scheduler's balancing over its partitions; SCALE.md
+    * has what each side costs.
+    */
+  private def perCore(blocks: RDD[Block]): RDD[Block] = {
+    val cores = blocks.sparkContext.defaultParallelism
+    if (blocks.getNumPartitions <= cores) blocks else blocks.coalesce(cores)
   }
 
   /** Doubles per point block (2 MiB): a block of D-long points holds
@@ -238,7 +266,13 @@ object Lloyd {
       case _ => false
     }
     val qe = pts.queryExecution
-    (qe, qe.toRdd.mapPartitions(rows => new BlockIterator(rows, checkNulls)))
+    (qe, qe.toRdd.mapPartitions(ToBlocks(checkNulls)))
+  }
+
+  /** One partition's rows as blocks. */
+  private final case class ToBlocks(checkNulls: Boolean)
+    extends (Iterator[InternalRow] => Iterator[Block]) {
+    def apply(rows: Iterator[InternalRow]): Iterator[Block] = new BlockIterator(rows, checkNulls)
   }
 
   private final class BlockIterator(rows: Iterator[InternalRow], checkNulls: Boolean)
@@ -304,10 +338,22 @@ object Lloyd {
     }
   }
 
+  /** One task of an iteration: every point of its blocks, in order,
+    * folded into the sums of its nearest centroid in `table`.
+    */
+  private final case class FoldBlocks(table: NearestCentroid.Table)
+    extends ((TaskContext, Iterator[Block]) => Sums) {
+    def apply(ctx: TaskContext, bs: Iterator[Block]): Sums = {
+      val s = new Sums
+      while (bs.hasNext) s.add(table, bs.next())
+      s
+    }
+  }
+
   /** One iteration's running state: the coordinate sums of every centroid
     * (centroid `j`'s at `j·D`) and its point count. The arrays are allocated
-    * by the first block folded in, so the zero value every task receives is
-    * empty; `dist` is scratch and never leaves the task.
+    * by the first block folded in, so a task without points returns an
+    * empty one; `dist` is scratch and never leaves the task.
     */
   private final class Sums extends Serializable {
     private var sum: Array[Double] = _
@@ -366,8 +412,8 @@ object Lloyd {
     * Returns (final centroids, iterations run).
     *
     * One job fills the persisted point blocks and computes the init, and
-    * each iteration is one job folding the blocks (see the object's
-    * scaladoc).
+    * each iteration is one job folding them in per-core groups (see the
+    * object's scaladoc).
     *
     * `grid = Some(d)` snaps every collected mean to the 1e-d decimal grid
     * before the next assignment — the q_kmeans_iter2 determinism
@@ -382,8 +428,11 @@ object Lloyd {
     require(k >= 1, s"Lloyd.run needs k >= 1, got $k")
     val (qe, bs) = blocks(points)
     bs.persist(StorageLevel.MEMORY_AND_DISK)
-    try iterate(initCentroids(qe, bs, k), maxIter, eps)(run(qe, bs, _, grid))
-    finally bs.unpersist()
+    try {
+      val init = initCentroids(qe, bs, k)
+      val groups = perCore(bs)
+      iterate(init, maxIter, eps)(run(qe, groups, _, grid))
+    } finally bs.unpersist()
   }
 
   /** The call form of the benchmark in bench/, which still names the

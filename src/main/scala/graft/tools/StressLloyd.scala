@@ -12,10 +12,10 @@ import graft.kmeans.Lloyd
   * [[Lloyd.run]] (K = 5, 10 fixed iterations, eps = 0 so no early stop) over
   * the synthetic-sf1 embeddings at /tmp/stress_sf1. The run is one job that
   * fills the persisted point blocks and computes the init, then one job per
-  * iteration in which every partition folds its blocks, through the fused
-  * nearest-centroid loop, into K sum/count buffers that `treeAggregate`
-  * merges (K×(D+1) numbers per partition cross the wire; the points are
-  * never shuffled). Each of these jobs is one SQL execution; the tool
+  * iteration in which each core's group of partitions folds its blocks,
+  * through the fused nearest-centroid loop, into K sum/count buffers that
+  * the driver merges (K×(D+1) numbers per group cross the wire; nothing is
+  * shuffled). Each of these jobs is one SQL execution; the tool
   * prints the fill-and-init execution's wall time, then each iteration's
   * as the time between consecutive execution ends. Usage:
   *

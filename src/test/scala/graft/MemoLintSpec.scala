@@ -1,9 +1,5 @@
 package graft
 
-import java.io.File
-
-import scala.io.Source
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint for the one-memo rule: `graft.text.ArtifactMemo` is the
@@ -21,26 +17,12 @@ class MemoLintSpec extends AnyFunSuite {
   /** `file:line: text` for every banned token in `lines` of `file`. */
   private def violations(file: String, lines: Seq[String]): Seq[String] =
     if (file.endsWith("/" + Allowed)) Nil
-    else lines.zipWithIndex.collect {
-      case (l, i) if Banned.exists(l.contains) => s"$file:${i + 1}: ${l.trim}"
-    }
-
-  private def scalaFiles(dir: File): Seq[File] =
-    Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
-      if (f.isDirectory) scalaFiles(f)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    }
+    else SourceLint.hits(file, lines, Banned)
 
   test("no memo map in src/main outside ArtifactMemo") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath} is missing")
-    val files = scalaFiles(root)
+    val files = SourceLint.mainFiles
     assert(files.exists(_.getName == Allowed))
-    val found = files.flatMap { f =>
-      val src = Source.fromFile(f, "UTF-8")
-      try violations(f.getPath, src.getLines().toSeq) finally src.close()
-    }
+    val found = files.flatMap(f => violations(f.getPath, SourceLint.lines(f)))
     assert(found.isEmpty, s"${found.length} memo maps outside $Allowed:\n${found.mkString("\n")}")
   }
 

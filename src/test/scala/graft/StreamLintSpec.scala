@@ -1,9 +1,5 @@
 package graft
 
-import java.io.File
-
-import scala.io.Source
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint for the one-drain rule: `graft.streaming.Streams` decides
@@ -20,26 +16,12 @@ class StreamLintSpec extends AnyFunSuite {
   /** `file:line: text` for every banned token in `lines` of `file`. */
   private def violations(file: String, lines: Seq[String]): Seq[String] =
     if (file.endsWith("/" + Allowed)) Nil
-    else lines.zipWithIndex.collect {
-      case (l, i) if Banned.exists(l.contains) => s"$file:${i + 1}: ${l.trim}"
-    }
-
-  private def scalaFiles(dir: File): Seq[File] =
-    Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
-      if (f.isDirectory) scalaFiles(f)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    }
+    else SourceLint.hits(file, lines, Banned)
 
   test("no session, memory sink or checkpoint location in src/main outside Streams") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath} is missing")
-    val files = scalaFiles(root)
+    val files = SourceLint.mainFiles
     assert(files.exists(_.getName == Allowed))
-    val found = files.flatMap { f =>
-      val src = Source.fromFile(f, "UTF-8")
-      try violations(f.getPath, src.getLines().toSeq) finally src.close()
-    }
+    val found = files.flatMap(f => violations(f.getPath, SourceLint.lines(f)))
     assert(found.isEmpty, s"${found.length} stream placements outside $Allowed:\n${found.mkString("\n")}")
   }
 

@@ -287,22 +287,28 @@ class LloydSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("at least one point"))
   }
 
-  /** What the Spark listener bus reports while `body` runs. */
+  /** What the Spark listener bus reports while `body` runs; `tasks` holds
+    * each submitted stage's task count, in submission order.
+    */
   private final case class Seen(jobs: Seq[Option[String]], stages: Seq[Option[String]],
-                                shuffleBytes: Long, execs: Seq[SparkListenerSQLExecutionStart])
+                                shuffleBytes: Long, execs: Seq[SparkListenerSQLExecutionStart],
+                                tasks: Seq[Int])
 
   private def observe(body: => Unit): Seen = {
     val sc = spark.sparkContext
     Bus.drain(sc)
     val jobs, stages = ArrayBuffer[Option[String]]()
     val execs = ArrayBuffer[SparkListenerSQLExecutionStart]()
+    val tasks = ArrayBuffer[Int]()
     var shuffleBytes = 0L
     val seen = new SparkListener {
       private def execId(p: java.util.Properties) =
         Option(p).flatMap(q => Option(q.getProperty("spark.sql.execution.id")))
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs += execId(e.properties)
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
         stages += execId(e.properties)
+        tasks += e.stageInfo.numTasks
+      }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
         shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
       }
@@ -316,7 +322,7 @@ class LloydSpec extends AnyFunSuite {
       body
       Bus.drain(sc)
     } finally sc.removeSparkListener(seen)
-    Seen(jobs.toSeq, stages.toSeq, shuffleBytes, execs.toSeq)
+    Seen(jobs.toSeq, stages.toSeq, shuffleBytes, execs.toSeq, tasks.toSeq)
   }
 
   /** The innermost program frame of an execution's call site, as the
@@ -418,6 +424,35 @@ class LloydSpec extends AnyFunSuite {
     val (one, _) = blobs(parts = 1, n = 15000)
     val (exact, _) = Lloyd.run(one, k = 8, maxIter = 5, eps = 0.0)
     assert(exact.map(c => (c.cid, c.coordinates.toSeq)) == want.map(c => (c.cid, c.coordinates.toSeq)))
+  }
+
+  test("past one partition per core, the fill runs a task per partition and an iteration one per core") {
+    val cores = spark.sparkContext.defaultParallelism
+    val parts = cores + 2
+    val (many, _) = blobs(parts, n = 200)
+    val seen = observe(Lloyd.run(many, k = 8, maxIter = 3, eps = 0.0))
+    assert(seen.jobs.size == 4, s"jobs: ${seen.jobs}")
+    assert(seen.stages.size == 4, s"stages: ${seen.stages}")
+    assert(seen.tasks == parts +: Seq.fill(3)(math.min(parts, cores)), s"tasks: ${seen.tasks}")
+    assert(seen.shuffleBytes == 0L)
+    // one step on unpersisted blocks: one stage, one task per core
+    val cents = Lloyd.initCentroids(many, 8)
+    val one = observe(Lloyd.step(many, cents))
+    assert(one.tasks == Seq(cores), s"tasks: ${one.tasks}")
+    assert(one.shuffleBytes == 0L)
+  }
+
+  test("past one partition per core, runs are bit-identical and match the plain-Scala replay") {
+    val parts = spark.sparkContext.defaultParallelism + 3
+    val (many, points) = blobs(parts, n = 1000)
+    val want = replay(points, k = 8, iters = 5)
+    val (a, itersA) = Lloyd.run(many, k = 8, maxIter = 5, eps = 0.0)
+    val (b, _) = Lloyd.run(many, k = 8, maxIter = 5, eps = 0.0)
+    assert(itersA == 5)
+    assert(a.map(c => (c.cid, c.coordinates.toSeq)) == b.map(c => (c.cid, c.coordinates.toSeq)))
+    assert(a.map(_.cid) == want.map(_.cid))
+    for ((g, w) <- a.zip(want); i <- w.coordinates.indices)
+      assert(math.abs(g.coordinates(i) - w.coordinates(i)) < 1e-9, s"cid=${g.cid} dim=$i")
   }
 
   test("Lloyd.run leaves no persisted RDD behind, however it ends") {
