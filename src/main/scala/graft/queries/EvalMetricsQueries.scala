@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.text.TextQueries.h32
 
 /** Classifier / ranker evaluation operators: the confusion-matrix family
   * (per-class precision/recall/F1, Cohen's kappa agreement), threshold
@@ -36,9 +37,6 @@ import graft.core.Tables
 object EvalMetricsQueries {
 
   /** 32-bit md5-prefix hash, the cross-engine deterministic random. */
-  private def h32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
   /** Hash-perturbed prediction over the embeddings labels: FlipPct% of
     * rows predict a hash-chosen WRONG class, the rest predict the truth.
     * Stands in for a real classifier column; the eval math is identical.

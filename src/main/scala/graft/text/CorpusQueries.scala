@@ -214,12 +214,9 @@ object CorpusQueries {
         .groupBy("doc_a", "doc_b")
         .agg(round(sum(when(col("mh_a") === col("mh_b"), 1.0).otherwise(0.0)) /
           TextQueries.MinhashK, 6).as("est_jaccard"))
-      val docs = TextQueries.shingleSetsFor(s, dir).select("doc_id", "sh")
-      est.join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+      TextDedup.withShingleSets(est, TextQueries.shingleSetsFor(s, dir))
         .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
-          round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6).as("jaccard"))
+          round(TextDedup.jaccard, 6).as("jaccard"))
         .orderBy("doc_a", "doc_b")
     },
 
@@ -235,13 +232,9 @@ object CorpusQueries {
     // recall floor — the standard index-tuning telescope, stated in the
     // column name `fire_lo_given_cand`.)
     "q_lsh_tuning" -> { (s, dir) =>
-      val pairs = TextDedup.minhashCandidatesFor(s, dir)
-      val docs = TextQueries.shingleSetsFor(s, dir).select("doc_id", "sh")
-      val jac = pairs
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-        .select(round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6).as("j"))
+      val jac = TextDedup.withShingleSets(TextDedup.minhashCandidatesFor(s, dir),
+          TextQueries.shingleSetsFor(s, dir))
+        .select(round(TextDedup.jaccard, 6).as("j"))
       val configs = Seq((32, 1), (16, 2), (8, 4), (4, 8))
       val cfg = explode(array(configs.map { case (b, r) =>
         struct(lit(b.toLong).as("b"), lit(r.toLong).as("r"))
@@ -271,13 +264,9 @@ object CorpusQueries {
       val isNew = pmod(TextQueries.h32(concat(lit("inc:"), col("doc_id").cast("string"))),
         lit(100L)) >= 80
       val tagged = Tables.documents(s, dir).select(col("doc_id"), isNew.as("is_new"))
-      val pairs = TextDedup.minhashCandidatesFor(s, dir)
-      val docs = TextQueries.shingleSetsFor(s, dir).select("doc_id", "sh")
-      val hi = pairs
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-        .filter(round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6) >= 0.8)
+      val hi = TextDedup.withShingleSets(TextDedup.minhashCandidatesFor(s, dir),
+          TextQueries.shingleSetsFor(s, dir))
+        .filter(round(TextDedup.jaccard, 6) >= 0.8)
         .select(col("doc_a"), col("doc_b"))
       val t = tagged
       val cross = hi
@@ -334,13 +323,9 @@ object CorpusQueries {
     // and a left join keeps zero-dup sources in the report. Rate is integer
     // ppm — engine-version-proof.
     "q_dup_rate" -> { (s, dir) =>
-      val pairs = TextDedup.minhashCandidatesFor(s, dir)
-      val docs = TextQueries.shingleSetsFor(s, dir).select("doc_id", "sh")
-      val hi = pairs
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-        .filter(round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6) >= 0.8)
+      val hi = TextDedup.withShingleSets(TextDedup.minhashCandidatesFor(s, dir),
+          TextQueries.shingleSetsFor(s, dir))
+        .filter(round(TextDedup.jaccard, 6) >= 0.8)
       val dupIds = hi.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
       val bySrc = Tables.documents(s, dir).select(col("doc_id"), col("source"))
         .join(dupIds, "doc_id")
@@ -397,13 +382,8 @@ object CorpusQueries {
     // materialize for candidate pairs, never all-pairs); ANSI-safe because
     // shingle-less docs (<3 words) are filtered before any denominator.
     "q_dedup_containment" -> { (s, dir) =>
-      val pairs = TextDedup.minhashCandidatesFor(s, dir)
-      val docs = TextQueries.shingleSetsFor(s, dir)
-        .select("doc_id", "sh")
-        .filter(size(col("sh")) > 0)
-      pairs
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+      TextDedup.withShingleSets(TextDedup.minhashCandidatesFor(s, dir),
+          TextQueries.shingleSetsFor(s, dir).filter(size(col("sh")) > 0))
         .select(col("doc_a"), col("doc_b"),
           size(array_intersect(col("sh_a"), col("sh_b"))).cast("double").as("n_common"),
           size(col("sh_a")).cast("double").as("n_a"),
@@ -432,27 +412,17 @@ object CorpusQueries {
     // join everything is four counts crossed into one row — exact
     // integers plus two single-division ratios.
     "q_dedup_eval" -> { (s, dir) =>
+      import TextQueries.{NgramBlockCap, NgramKeys}
       val sets = TextQueries.shingleSetsFor(s, dir)
-      val census = sets.groupBy("n_words", "first_word").agg(count(lit(1)).as("n_blk"))
-      val blocked = sets.join(census, Seq("n_words", "first_word"))
-        .filter(col("n_blk") <= TextQueries.NgramBlockCap)
-      val bp = blocked.select(col("doc_id").as("doc_a"), col("n_words"), col("first_word"))
-        .join(blocked.select(col("doc_id").as("doc_b"), col("n_words"), col("first_word")),
-          Seq("n_words", "first_word"))
-        .filter(col("doc_a") < col("doc_b"))
+      val bp = TextDedup.blockPairs(TextDedup.withBlockSize(sets, NgramKeys), NgramKeys, NgramBlockCap)
         .select("doc_a", "doc_b")
       val cand = TextDedup.minhashCandidatesFor(s, dir)
       val pool = bp.union(cand).distinct()
-      val shs = sets.select(col("doc_id"), col("sh")).filter(size(col("sh")) > 0)
-      val jac = round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6)
       // truth is pair-pool-sized (tiny next to the corpus at any scale);
       // at 100 TB it would persist as an eval artifact — here the three
       // count consumers just recompute the cheap scoring join
-      val truth = pool
-        .join(shs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(shs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-        .filter(jac >= DedupEvalTau)
+      val truth = TextDedup.withShingleSets(pool, sets.filter(size(col("sh")) > 0))
+        .filter(round(TextDedup.jaccard, 6) >= DedupEvalTau)
         .select("doc_a", "doc_b")
       val hits = truth.join(cand, Seq("doc_a", "doc_b"))
       val btr = truth.join(bp, Seq("doc_a", "doc_b"))
@@ -480,7 +450,7 @@ object CorpusQueries {
     // bound as every df table here. Source cardinality is corpus-defined:
     // the pair join is hint-free (AQE broadcasts at fixture scale).
     "q_sketch_merge" -> { (s, dir) =>
-      import TextQueries.{MinhashK, P, mhA, mhB}
+      import TextQueries.MinhashK
       // ride the memoized per-doc distinct shingle-set artifact instead of
       // re-shingling the corpus (min is duplicate-blind, so per-doc distinct
       // inputs produce the identical signature); source arrives via a
@@ -488,8 +458,7 @@ object CorpusQueries {
       val sh = TextQueries.shingleSetsFor(s, dir)
         .join(Tables.documents(s, dir).select("doc_id", "source"), "doc_id")
         .select(col("source"), explode(col("sh")).as("shingle"))
-      val sigAggs = (0 until MinhashK).map(j =>
-        min((col("h") * mhA(j) + mhB(j)) % P).as(s"sig$j"))
+      val sigAggs = TextQueries.minhashAggs
       val srcSig = sh.withColumn("h", TextQueries.h32(col("shingle")))
         .groupBy("source").agg(sigAggs.head, sigAggs.tail: _*)
       val a = srcSig.columns.foldLeft(srcSig)((d, c) => d.withColumnRenamed(c, s"a_$c"))
@@ -528,20 +497,15 @@ object CorpusQueries {
     // the audit adds two broadcast-sized source lookups and a filter,
     // nothing corpus-scaled.
     "q_dedup_cross_source" -> { (s, dir) =>
-      val pairs = TextDedup.minhashCandidatesFor(s, dir)
-      val docs = TextQueries.shingleSetsFor(s, dir)
-        .select("doc_id", "sh")
-        .filter(size(col("sh")) > 0)
+      val pairs = TextDedup.withShingleSets(TextDedup.minhashCandidatesFor(s, dir),
+        TextQueries.shingleSetsFor(s, dir).filter(size(col("sh")) > 0))
       val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
       pairs
-        .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
         .join(src.select(col("doc_id").as("doc_a"), col("source").as("source_a")), "doc_a")
         .join(src.select(col("doc_id").as("doc_b"), col("source").as("source_b")), "doc_b")
         .filter(col("source_a") =!= col("source_b"))
         .select(col("doc_a"), col("doc_b"), col("source_a"), col("source_b"),
-          round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6).as("jaccard"))
+          round(TextDedup.jaccard, 6).as("jaccard"))
         .orderBy("doc_a", "doc_b")
     },
 
@@ -956,12 +920,8 @@ object CorpusQueries {
   )
 
   def oracleSql: Map[String, String] = {
-    import TextQueries.{MinhashK, P, mhA, mhB}
-    val sigSelects = (0 until MinhashK).map { j =>
-      s"SELECT doc_id, CAST($j AS BIGINT) AS j, list_min(list_transform(sh, x -> ((('0x' || substr(md5(x), 1, 8))::BIGINT) * ${mhA(j)} + ${mhB(j)}) % $P)) AS minhash FROM shl"
-    }.mkString("\nUNION ALL\n")
-    val srcSigAggCols = (0 until MinhashK)
-      .map(j => s"min((h * ${mhA(j)} + ${mhB(j)}) % $P) AS sig$j").mkString(", ")
+    import TextDedup.{CandidateCtes, JaccardSql, cappedSql, selfJoinSql, shingleSetsCte, verifyJoinSql}
+    import TextQueries.{MinhashK, NgramBlockCap, NgramKeys, Shingles3Sql}
     val srcSigAgreeSum = (0 until MinhashK)
       .map(j => s"(CASE WHEN a.sig$j = b.sig$j THEN 1 ELSE 0 END)").mkString(" + ")
 
@@ -980,8 +940,7 @@ object CorpusQueries {
            |FROM c ORDER BY c_custkey""".stripMargin,
       "q_contamination" ->
         s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 1),
-           |              i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh FROM w),
+           |sh AS (SELECT doc_id, list_distinct($Shingles3Sql) AS sh FROM w),
            |h AS (SELECT doc_id, unnest(list_transform(sh,
            |             x -> ('0x' || substr(md5(x), 1, 8))::BIGINT)) AS h FROM sh),
            |ev AS (SELECT DISTINCT h FROM h WHERE doc_id < $EvalDocs)
@@ -1021,24 +980,7 @@ object CorpusQueries {
           |FROM chunks GROUP BY 1 HAVING count(*) >= 2
           |ORDER BY chunk_hash""".stripMargin,
       "q_minhash_est" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
+        s"""WITH $CandidateCtes,
            |est AS (
            |  SELECT p.doc_a, p.doc_b,
            |         round(sum(CASE WHEN sa.minhash = sb.minhash THEN 1.0 ELSE 0.0 END) / $MinhashK, 6) AS est_jaccard
@@ -1047,39 +989,16 @@ object CorpusQueries {
            |  JOIN sigs sb ON sb.doc_id = p.doc_b AND sb.j = sa.j
            |  GROUP BY p.doc_a, p.doc_b
            |),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl)
-           |SELECT e.doc_a, e.doc_b, e.est_jaccard,
-           |       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |             CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) AS jaccard
-           |FROM est e JOIN ds a ON a.doc_id = e.doc_a JOIN ds b ON b.doc_id = e.doc_b
+           |${shingleSetsCte(nonEmpty = false)}
+           |SELECT p.doc_a, p.doc_b, p.est_jaccard, round($JaccardSql, 6) AS jaccard
+           |FROM ${verifyJoinSql("est")}
            |ORDER BY doc_a, doc_b""".stripMargin,
       // same candidate prelude as q_minhash_est; the S-curve math is then
       // pure scalar arithmetic over (jaccard, config) rows
       "q_lsh_tuning" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl),
-           |jac AS (
-           |  SELECT round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |               CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) AS j
-           |  FROM pairs p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b
-           |),
+        s"""WITH $CandidateCtes,
+           |${shingleSetsCte(nonEmpty = false)},
+           |jac AS (SELECT round($JaccardSql, 6) AS j FROM ${verifyJoinSql("pairs")}),
            |cfg AS (SELECT CAST(b AS BIGINT) AS b, CAST(r AS BIGINT) AS r
            |        FROM (VALUES (32, 1), (16, 2), (8, 4), (4, 8)) AS t(b, r)),
            |scored AS (SELECT b, r, j, 1 - pow(1 - pow(j, r), b) AS p
@@ -1092,31 +1011,10 @@ object CorpusQueries {
       // candidate prelude + the same deterministic 20% hash split; the
       // cross filter keeps only (standing, batch) pairs
       "q_dedup_incremental" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl),
-           |hi AS (
-           |  SELECT p.doc_a, p.doc_b
-           |  FROM pairs p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b
-           |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |              CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) >= 0.8
-           |),
+        s"""WITH $CandidateCtes,
+           |${shingleSetsCte(nonEmpty = false)},
+           |hi AS (SELECT p.doc_a, p.doc_b FROM ${verifyJoinSql("pairs")}
+           |       WHERE round($JaccardSql, 6) >= 0.8),
            |tag AS (SELECT doc_id,
            |               (('0x' || substr(md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) >= 80 AS is_new
            |        FROM documents),
@@ -1156,31 +1054,10 @@ object CorpusQueries {
       // same candidate prelude; members of >= 0.8 pairs union + distinct,
       // then two source-keyed counts
       "q_dup_rate" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl),
-           |hi AS (
-           |  SELECT p.doc_a, p.doc_b
-           |  FROM pairs p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b
-           |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |              CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) >= 0.8
-           |),
+        s"""WITH $CandidateCtes,
+           |${shingleSetsCte(nonEmpty = false)},
+           |hi AS (SELECT p.doc_a, p.doc_b FROM ${verifyJoinSql("pairs")}
+           |       WHERE round($JaccardSql, 6) >= 0.8),
            |ids AS (SELECT DISTINCT doc_id FROM
            |        (SELECT doc_a AS doc_id FROM hi UNION ALL SELECT doc_b FROM hi)),
            |nd AS (SELECT source, count(*) AS n_neardup
@@ -1216,57 +1093,23 @@ object CorpusQueries {
       // same candidate prelude as q_minhash_est; exact set math adds the
       // two directed containments beside the resemblance
       "q_dedup_containment" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl WHERE len(list_distinct(sh)) > 0)
+        s"""WITH $CandidateCtes,
+           |${shingleSetsCte(nonEmpty = true)}
            |SELECT p.doc_a, p.doc_b,
            |       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh), 6) AS containment_a_in_b,
            |       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(b.sh), 6) AS containment_b_in_a,
            |       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
            |             (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-           |FROM pairs p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b
+           |FROM ${verifyJoinSql("pairs")}
            |ORDER BY doc_a, doc_b""".stripMargin,
       // same candidate prelude; source lookup + cross-source filter on top
       "q_dedup_cross_source" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl WHERE len(list_distinct(sh)) > 0)
+        s"""WITH $CandidateCtes,
+           |${shingleSetsCte(nonEmpty = true)}
            |SELECT p.doc_a, p.doc_b, da.source AS source_a, db.source AS source_b,
            |       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
            |             (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-           |FROM pairs p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b
+           |FROM ${verifyJoinSql("pairs")}
            |JOIN documents da ON da.doc_id = p.doc_a
            |JOIN documents db ON db.doc_id = p.doc_b
            |WHERE da.source <> db.source
@@ -1274,45 +1117,22 @@ object CorpusQueries {
       // same candidate prelude + the q_dedup_ngram blocked prelude; pooled
       // truth scored once, then four counts over the pool joins
       "q_dedup_eval" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |shl AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-           |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh FROM w),
-           |sigs AS (
-           |$sigSelects
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM banded a JOIN banded b
-           |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |),
+        s"""WITH $CandidateCtes,
            |d0 AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words, ws[1] AS first_word
            |       FROM w),
-           |d AS (SELECT * FROM d0
-           |      QUALIFY count(*) OVER (PARTITION BY n_words, first_word) <= ${TextQueries.NgramBlockCap}),
-           |bp AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM d a JOIN d b ON a.n_words = b.n_words AND a.first_word = b.first_word
-           |                    AND a.doc_id < b.doc_id
-           |),
-           |pool AS (SELECT doc_a, doc_b FROM bp UNION SELECT doc_a, doc_b FROM cand),
-           |ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl WHERE len(list_distinct(sh)) > 0),
-           |truth AS (SELECT p.doc_a, p.doc_b
-           |          FROM pool p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b
-           |          WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |                      CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) >= $DedupEvalTau),
-           |hits AS (SELECT t.doc_a FROM truth t JOIN cand c
+           |d AS (SELECT * FROM d0 ${cappedSql(NgramKeys, NgramBlockCap)}),
+           |bp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+           |       FROM ${selfJoinSql("d", NgramKeys)}),
+           |pool AS (SELECT doc_a, doc_b FROM bp UNION SELECT doc_a, doc_b FROM pairs),
+           |${shingleSetsCte(nonEmpty = true)},
+           |truth AS (SELECT p.doc_a, p.doc_b FROM ${verifyJoinSql("pool")}
+           |          WHERE round($JaccardSql, 6) >= $DedupEvalTau),
+           |hits AS (SELECT t.doc_a FROM truth t JOIN pairs c
            |         ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b),
            |btr AS (SELECT t.doc_a FROM truth t JOIN bp p
            |        ON t.doc_a = p.doc_a AND t.doc_b = p.doc_b),
            |n AS (SELECT (SELECT count(*) FROM truth) AS n_truth,
-           |             (SELECT count(*) FROM cand) AS n_cand,
+           |             (SELECT count(*) FROM pairs) AS n_cand,
            |             (SELECT count(*) FROM hits) AS n_hits,
            |             (SELECT count(*) FROM btr) AS n_blocked_truth)
            |SELECT n_truth, n_cand, n_hits, n_blocked_truth,
@@ -1324,11 +1144,9 @@ object CorpusQueries {
       // the minhash of the source's distinct vocabulary)
       "q_sketch_merge" ->
         s"""WITH w AS (SELECT source, string_split(text, ' ') AS ws FROM documents),
-           |sh AS (SELECT source, unnest(list_transform(range(1, len(ws) - 1),
-           |              i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingle
-           |       FROM w),
+           |sh AS (SELECT source, unnest($Shingles3Sql) AS shingle FROM w),
            |h AS (SELECT source, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
-           |sig AS (SELECT source, $srcSigAggCols FROM h GROUP BY source),
+           |sig AS (SELECT source, ${TextQueries.MinhashAggSql} FROM h GROUP BY source),
            |pairs AS (SELECT a.source AS source_a, b.source AS source_b,
            |                 CAST($srcSigAgreeSum AS BIGINT) AS n_agree
            |          FROM sig a JOIN sig b ON a.source < b.source),
@@ -1338,7 +1156,7 @@ object CorpusQueries {
            |           FROM ss a JOIN ss b ON a.shingle = b.shingle AND a.source < b.source
            |           GROUP BY 1, 2)
            |SELECT p.source_a, p.source_b, p.n_agree,
-           |       round(CAST(p.n_agree AS DOUBLE) / ${TextQueries.MinhashK}, 6) AS est_jaccard,
+           |       round(CAST(p.n_agree AS DOUBLE) / $MinhashK, 6) AS est_jaccard,
            |       CAST(coalesce(c.n_common, 0) AS BIGINT) AS n_common,
            |       CAST(sa.n_sh + sb.n_sh - coalesce(c.n_common, 0) AS BIGINT) AS n_union,
            |       round(CAST(coalesce(c.n_common, 0) AS DOUBLE) /

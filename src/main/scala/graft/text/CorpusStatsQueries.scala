@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.text.TextQueries.h32
 
 /** Corpus-shape statistics: the empirical-law fits and canonicalization
   * censuses a curation run publishes beside its dedup/quality reports —
@@ -25,9 +26,6 @@ import graft.core.Tables
   * wherever rational; the fit coefficients round at 6dp.
   */
 object CorpusStatsQueries {
-
-  private def h32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
   /** Least-squares slope/intercept of y on x over a small frame — shared
     * by the two log-space law fits. Returns (slope, intercept) columns

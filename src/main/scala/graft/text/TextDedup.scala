@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -8,8 +9,14 @@ import org.apache.spark.sql.functions._
   * near-dup search into an equi-join on a small derived key, so candidate
   * generation is one shuffle of sketch rows (never document bodies, never
   * an all-pairs product).
+  *
+  * The MinHash near-dup pipeline's decisions each live in one place, with
+  * their DuckDB spelling beside the Spark one: shingles and the MinHash
+  * functions in [[TextQueries]]; here the band key, the capped block
+  * self-join (band buckets and n-gram blocks alike) and the pair ⋈
+  * shingle-sets Jaccard verify.
   */
-object TextDedup {
+object TextDedup extends Logging {
 
   /** MinHash LSH banding: split each doc's k-value signature into `bands`
     * bands of k/bands values; docs sharing ANY band land in the same bucket
@@ -39,32 +46,26 @@ object TextDedup {
     * report (e.g. [[nearDupPairs]]) band once, not twice.
     */
   def candidatesFromBanded(banded: DataFrame,
-                           maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val kept = banded.filter(col("n_bucket") <= maxBucketSize)
-    val a = kept.select(col("doc_id").as("doc_a"), col("band"), col("band_key"))
-    val b = kept.select(col("doc_id").as("doc_b"), col("band"), col("band_key"))
-    a.join(b, Seq("band", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
+                           maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    blockPairs(banded, BandKeys, maxBucketSize).select("doc_a", "doc_b").distinct()
 
   /** Bucket-population guard default: a band bucket of b docs yields
     * b(b-1)/2 candidate pairs, so ONE degenerate key (e.g. an empty-doc
     * signature repeated across a 100 TB corpus) would go quadratic.
     * Over-full buckets are dropped from candidate generation — a bounded,
-    * observable recall sacrifice ([[overfullBuckets]] reports what was
+    * observable recall sacrifice ([[overfullFromBanded]] reports what was
     * dropped) instead of an unbounded shuffle explosion.
     */
   val DefaultMaxBucketSize = 1000
 
-  /** Per-(band, band_key) rows annotated with their bucket population.
-    * Census + co-partitioned join (both sides shuffle on the same key; the
-    * census is NOT broadcast because distinct band keys scale with corpus
-    * size). Materialized once (`localCheckpoint`): the output is small —
-    * `bands` rows of (id, key, count) per doc, never document bodies — but
-    * every consumer reads it at least twice (self-join sides, census,
-    * over-full report), and without the cut each read would re-run the
-    * whole shingle→minhash pipeline upstream.
+  private val BandKeys = Seq("band", "band_key")
+
+  /** Per-(band, band_key) rows annotated with their bucket population
+    * ([[withBlockSize]]). Materialized once (`localCheckpoint`): the
+    * output is small — `bands` rows of (id, key, count) per doc, never
+    * document bodies — but every consumer reads it at least twice
+    * (self-join sides, census, over-full report), and without the cut each
+    * read would re-run the whole shingle→minhash pipeline upstream.
     */
   def bandedWithSize(signatures: DataFrame, bands: Int = 4): DataFrame = {
     val banded = signatures
@@ -75,23 +76,102 @@ object TextDedup {
         transform(array_sort(collect_list(struct(col("j"), col("minhash")))),
           x => x.getField("minhash").cast("string")))).as("band_key"))
       .localCheckpoint(eager = false)
-    val census = banded.groupBy("band", "band_key").agg(count(lit(1)).as("n_bucket"))
-    banded.join(census, Seq("band", "band_key")).localCheckpoint(eager = false)
+    withBlockSize(banded, BandKeys).localCheckpoint(eager = false)
   }
 
-  /** The band buckets [[minhashCandidates]] would drop at `maxBucketSize` —
-    * the "log what was dropped" half of the guard.
+  /** Over-full-bucket report from a pre-computed [[bandedWithSize]] frame:
+    * the band buckets [[candidatesFromBanded]] drops at `maxBucketSize`.
     */
-  def overfullBuckets(signatures: DataFrame, bands: Int = 4,
-                      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    overfullFromBanded(bandedWithSize(signatures, bands), maxBucketSize)
-
-  /** Over-full-bucket report from a pre-computed [[bandedWithSize]] frame. */
   def overfullFromBanded(banded: DataFrame,
                          maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
     banded
       .filter(col("n_bucket") > maxBucketSize)
       .select("band", "band_key", "n_bucket").distinct()
+
+  /** DuckDB CTEs through `pairs(doc_a, doc_b)`, the oracle twin of
+    * [[minhashCandidatesFor]]: [[TextQueries.MinhashSigsCtes]], then
+    * `banded` — each doc's band keys, in buckets of at most
+    * DefaultMaxBucketSize docs — and its block self-join.
+    */
+  private[text] val CandidateCtes: String =
+    s"""${TextQueries.MinhashSigsCtes},
+       |banded AS (
+       |  SELECT doc_id, j % 4 AS band,
+       |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
+       |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
+       |  FROM sigs GROUP BY doc_id, band
+       |  ${cappedSql(BandKeys, DefaultMaxBucketSize)}
+       |),
+       |pairs AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM ${selfJoinSql("banded", BandKeys)}
+       |)""".stripMargin
+
+  /** Block census: `rows` annotated with `n_bucket`, the number of rows
+    * sharing their `keys` (the block). Census + co-partitioned join: both
+    * sides shuffle on the key, and the census is NOT broadcast because
+    * distinct keys scale with corpus size.
+    */
+  private[text] def withBlockSize(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.join(rows.groupBy(keys.head, keys.tail: _*).agg(count(lit(1)).as("n_bucket")), keys)
+
+  /** The capped block self-join over [[withBlockSize]] rows: blocks of at
+    * most `cap` rows are paired within themselves as (doc_a < doc_b),
+    * carrying each `carry` column as `<c>_a` and `<c>_b`; larger blocks
+    * are dropped — a block of b rows costs b(b-1)/2 pairs.
+    */
+  private[text] def blockPairs(sized: DataFrame, keys: Seq[String], cap: Int,
+                               carry: String*): DataFrame = {
+    val kept = sized.filter(col("n_bucket") <= cap)
+    def side(s: String): DataFrame = kept.select(
+      (col("doc_id").as(s"doc_$s") +: keys.map(col)) ++ carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys).filter(col("doc_a") < col("doc_b"))
+  }
+
+  /** DuckDB spelling of the census cap: a QUALIFY clause keeping the rows
+    * whose block over `keys` holds at most `cap` rows.
+    */
+  private[text] def cappedSql(keys: Seq[String], cap: Int): String =
+    s"QUALIFY count(*) OVER (PARTITION BY ${keys.mkString(", ")}) <= $cap"
+
+  /** DuckDB spelling of the block self-join: `rel` as `a` and `b`, paired
+    * within a block, `a.doc_id < b.doc_id`.
+    */
+  private[text] def selfJoinSql(rel: String, keys: Seq[String]): String =
+    s"$rel a JOIN $rel b ON ${keys.map(k => s"a.$k = b.$k").mkString(" AND ")} AND a.doc_id < b.doc_id"
+
+  /** The pair verify: (doc_a, doc_b, ...) `pairs` joined to the (doc_id,
+    * sh) shingle `sets` of both ends, as `sh_a` and `sh_b`; a pair with an
+    * end missing from `sets` drops out.
+    */
+  private[text] def withShingleSets(pairs: DataFrame, sets: DataFrame): DataFrame =
+    pairs
+      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+
+  /** Exact Jaccard of the `sh_a` and `sh_b` shingle sets. */
+  private[text] def jaccard: Column =
+    size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+      size(array_union(col("sh_a"), col("sh_b"))).cast("double")
+
+  /** DuckDB spelling of [[jaccard]] over the `a.sh` and `b.sh` sets. */
+  private[text] val JaccardSql =
+    "CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / " +
+      "CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)"
+
+  /** DuckDB `ds(doc_id, sh)`: the distinct shingle sets of `shl`, the
+    * oracle twin of [[TextQueries.shingleSetsFor]]'s `sh`; `nonEmpty`
+    * drops the docs without a shingle.
+    */
+  private[text] def shingleSetsCte(nonEmpty: Boolean): String =
+    "ds AS (SELECT doc_id, list_distinct(sh) AS sh FROM shl" +
+      (if (nonEmpty) " WHERE len(list_distinct(sh)) > 0)" else ")")
+
+  /** DuckDB spelling of [[withShingleSets]]: `pairs` as `p`, joined to
+    * `ds` as `a` and `b`.
+    */
+  private[text] def verifyJoinSql(pairs: String): String =
+    s"$pairs p JOIN ds a ON a.doc_id = p.doc_a JOIN ds b ON b.doc_id = p.doc_b"
 
   /** SimHash near-dup candidates: band the 32-bit fingerprint into four
     * 8-bit chunks; two docs within Hamming distance 3 must agree on at
@@ -202,12 +282,12 @@ object TextDedup {
       }
     }
     if (converged)
-      System.err.println(s"[TextDedup] connectedComponents converged in $i rounds")
+      logInfo(s"connectedComponents converged in $i rounds")
     else
       // the labeling below the fixpoint is still a valid (coarser-ward)
       // upper bound on components, but it is NOT the answer — say so loudly
       // instead of claiming convergence.
-      System.err.println(s"[TextDedup] WARNING: connectedComponents stopped at maxIter=$maxIter WITHOUT reaching the fixpoint — labels may be unconverged")
+      logWarning(s"connectedComponents stopped at maxIter=$maxIter WITHOUT reaching the fixpoint — labels may be unconverged")
     (labels, i, converged)
   }
 
@@ -219,21 +299,15 @@ object TextDedup {
                    jaccardThreshold: Double = 0.8): DataFrame = {
     val sigs = TextQueries.minhashSigsFor(spark, sfDir)
     // band ONCE; both the over-full report and the kept candidates read the
-    // same materialized frame (banding was previously computed twice here)
+    // same materialized frame
     val banded = bandedWithSize(sigs)
     // size-guard observability: say what the cap threw away (one tiny
     // aggregate job over sketch rows; nothing at fixture scale)
     val dropped = overfullFromBanded(banded).count()
     if (dropped > 0)
-      System.err.println(s"[TextDedup] dropped $dropped over-full band buckets (> $DefaultMaxBucketSize docs) from candidate generation")
-    val cands = candidatesFromBanded(banded)
-    val docs = TextQueries.shingleSetsFor(spark, sfDir).select("doc_id", "sh")
-    cands
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
+      logWarning(s"dropped $dropped over-full band buckets (> $DefaultMaxBucketSize docs) from candidate generation")
+    withShingleSets(candidatesFromBanded(banded), TextQueries.shingleSetsFor(spark, sfDir))
+      .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"))
       .filter(col("jaccard") >= jaccardThreshold)
   }
 }

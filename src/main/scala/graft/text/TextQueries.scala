@@ -34,14 +34,37 @@ object TextQueries {
         i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
       .otherwise(array().cast("array<string>"))
 
-  /** q_dedup_ngram blocking-key population cap (see the query's comment). */
+  /** DuckDB spelling of [[shingles3]] over a `ws` word list
+    * (`range(1, len - 1)` is empty below 3 words).
+    */
+  private[text] val Shingles3Sql =
+    "list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])"
+
+  /** q_dedup_ngram blocking key and its population cap (see the query's
+    * comment).
+    */
+  val NgramKeys = Seq("n_words", "first_word")
   val NgramBlockCap = 1000
 
   // MinHash parameters: k independent universal hashes over a Mersenne prime.
   val MinhashK = 16
   val P: Long = 2147483647L // 2^31 - 1
-  private[text] def mhA(j: Int): Long = 2L * j + 1
-  private[text] def mhB(j: Int): Long = 12345L * j + 7
+  private def mhA(j: Int): Long = 2L * j + 1
+  private def mhB(j: Int): Long = 12345L * j + 7
+
+  /** MinHash function `j` of a 32-bit hash; a signature value is its min
+    * over a doc's shingle hashes.
+    */
+  private def minhash(j: Int, h: Column): Column = (h * mhA(j) + mhB(j)) % P
+  private def minhashSql(j: Int, h: String): String = s"($h * ${mhA(j)} + ${mhB(j)}) % $P"
+
+  /** The k signature values as min aggregates over an `h` hash column,
+    * named `sig0` .. `sig15`, and their DuckDB spelling.
+    */
+  private[text] def minhashAggs: Seq[Column] =
+    (0 until MinhashK).map(j => min(minhash(j, col("h"))).as(s"sig$j"))
+  private[text] val MinhashAggSql: String =
+    (0 until MinhashK).map(j => s"min(${minhashSql(j, "h")}) AS sig$j").mkString(", ")
 
   /** Per-language tiny stopword lists for the n-gram/stopword language-ID
     * heuristic (decide by hit-count ratio; deterministic argmax).
@@ -63,7 +86,7 @@ object TextQueries {
     ArtifactMemo("minhash_sigs", s, dir) {
       val sigs = (0 until MinhashK).map { j =>
         struct(lit(j.toLong).as("j"),
-          array_min(transform(col("hs"), h => (h * mhA(j) + mhB(j)) % P)).as("minhash"))
+          array_min(transform(col("hs"), h => minhash(j, h))).as("minhash"))
       }
       Tables.documents(s, dir)
         .select(col("doc_id"), words.as("ws"))
@@ -72,6 +95,22 @@ object TextQueries {
         .select(col("doc_id"), col("sig.j").as("j"), col("sig.minhash").as("minhash"))
         .localCheckpoint(eager = false)
     }
+
+  /** DuckDB CTEs `w(doc_id, ws)`, `shl(doc_id, sh)` (each doc's shingles,
+    * repeats kept) and `sigs(doc_id, j, minhash)`: the oracle twin of
+    * [[minhashSigsFor]].
+    */
+  private[text] val MinhashSigsCtes: String = {
+    val sigs = (0 until MinhashK).map { j =>
+      val minhash = minhashSql(j, "('0x' || substr(md5(x), 1, 8))::BIGINT")
+      s"SELECT doc_id, CAST($j AS BIGINT) AS j, list_min(list_transform(sh, x -> $minhash)) AS minhash FROM shl"
+    }.mkString("\nUNION ALL\n")
+    s"""w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+       |shl AS (SELECT doc_id, $Shingles3Sql AS sh FROM w),
+       |sigs AS (
+       |$sigs
+       |)""".stripMargin
+  }
 
   /** Memoized (doc_id, n_words, first_word, sh) distinct-shingle table:
     * per-doc distinct 3-gram shingle sets with the blocking keys. Four
@@ -274,8 +313,7 @@ object TextQueries {
     // on the map side, so the shuffle carries 16 longs per (doc,partition).
     // Same signature values as q_dedup_minhash's per-row HOF form.
     "q_udaf_minhash" -> { (s, dir) =>
-      val aggs = (0 until MinhashK).map(j =>
-        min((col("h") * mhA(j) + mhB(j)) % P).as(s"sig$j"))
+      val aggs = minhashAggs
       graft.core.Par.fanOutIfCompact( // r12: parallelize shingle explode
           Tables.documents(s, dir).select("doc_id", "text"), col("doc_id"))
         .select(col("doc_id"), words.as("ws"))
@@ -302,25 +340,18 @@ object TextQueries {
     // N-gram Jaccard near-dup: candidate pairs blocked on (n_words,
     // first_word) — an equi-join, never an all-pairs cross product — then
     // exact Jaccard over distinct 3-gram shingle sets. Blocks larger than
-    // NgramBlockCap are dropped (census + co-partitioned join, mirrored in
-    // the oracle): a block of b docs costs b(b-1)/2 pairs, so one hot key
-    // ("the ..." x 10M docs) must not go quadratic at 100 TB.
+    // NgramBlockCap are dropped (the capped block self-join the LSH bands
+    // use, mirrored in the oracle): a block of b docs costs b(b-1)/2
+    // pairs, so one hot key ("the ..." x 10M docs) must not go quadratic
+    // at 100 TB.
     "q_dedup_ngram" -> { (s, dir) =>
       // shared shingle-set artifact (shingleSetsFor memo); the memo itself
       // materializes words once per row before shingling — referencing
       // `split(text)` inside the shingle lambda would re-split per element
       // (no CSE across HOF lambda bodies), O(words^2) per doc
-      val blocked = shingleSetsFor(s, dir)
-      val census = blocked.groupBy("n_words", "first_word").agg(count(lit(1)).as("n_blk"))
-      val docs = blocked.join(census, Seq("n_words", "first_word"))
-        .filter(col("n_blk") <= NgramBlockCap)
-      val a = docs.select(col("doc_id").as("doc_a"), col("n_words"), col("first_word"), col("sh").as("sh_a"))
-      val b = docs.select(col("doc_id").as("doc_b"), col("n_words"), col("first_word"), col("sh").as("sh_b"))
-      a.join(b, Seq("n_words", "first_word"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6).as("jaccard"))
+      val sized = TextDedup.withBlockSize(shingleSetsFor(s, dir), NgramKeys)
+      TextDedup.blockPairs(sized, NgramKeys, NgramBlockCap, "sh")
+        .select(col("doc_a"), col("doc_b"), round(TextDedup.jaccard, 6).as("jaccard"))
         .filter(col("jaccard") >= 0.05)
         .orderBy("doc_a", "doc_b")
     },
@@ -481,45 +512,31 @@ object TextQueries {
     }
   )
 
-  /** DuckDB fragments for the 32-bit simhash rebuild — shared with
-    * [[GraphQueries]]'s oracle, which reruns the same near-dup edge set.
-    */
-  private[graft] val simhashBitSumCols: String = (0 until 32)
-    .map(j => s"sum(((v >> $j) & 1) * 2 - 1) AS s$j").mkString(", ")
-  private[graft] val simhashPackedCols: String = (0 until 32)
-    .map(j => s"CASE WHEN s$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END").mkString(" + ")
-
   /** DuckDB CTE prefix yielding `f(doc_id, simhash)` on the documents
-    * table — the oracle-side twin of `queries("q_dedup_simhash")`.
+    * table — the oracle-side twin of `queries("q_dedup_simhash")`, shared
+    * with [[GraphQueries]]'s oracle, which reruns the same near-dup edge set.
     */
-  private[graft] def simhashFrameCte: String =
+  private[graft] val simhashFrameCte: String = {
+    val bitSums = (0 until 32).map(j => s"sum(((v >> $j) & 1) * 2 - 1) AS s$j").mkString(", ")
+    val packed = (0 until 32)
+      .map(j => s"CASE WHEN s$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END").mkString(" + ")
     s"""w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
        |v AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT AS v FROM w),
-       |s AS (SELECT doc_id, $simhashBitSumCols FROM v GROUP BY doc_id),
-       |f AS (SELECT doc_id, $simhashPackedCols AS simhash FROM s)""".stripMargin
+       |s AS (SELECT doc_id, $bitSums FROM v GROUP BY doc_id),
+       |f AS (SELECT doc_id, $packed AS simhash FROM s)""".stripMargin
+  }
 
   def oracleSql: Map[String, String] = {
-    val bitSumCols = simhashBitSumCols
-    val packedCols = simhashPackedCols
-    val sigSelects = (0 until MinhashK).map { j =>
-      s"SELECT doc_id, CAST($j AS BIGINT) AS j, list_min(list_transform(sh, x -> (hv(x) * ${mhA(j)} + ${mhB(j)}) % $P)) AS minhash FROM sh"
-    }.mkString("\nUNION ALL\n")
     val langScore = langMarkers.map { case (lang, ws) =>
       val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
       s"struct_pack(hits := CAST(len(list_intersect(ws, $arr)) AS BIGINT), lang := '$lang')"
     }.mkString("[", ", ", "]")
 
-    val sigAggCols = (0 until MinhashK)
-      .map(j => s"min((h * ${mhA(j)} + ${mhB(j)}) % $P) AS sig$j").mkString(", ")
-
     // simhash frame -> symmetric near-pair edges -> recursive min-reachable
     // fixpoint; shared by q_dedup_components and q_split_leakage
     val ccPrelude =
       s"""WITH RECURSIVE
-         |w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-         |v AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT AS v FROM w),
-         |s AS (SELECT doc_id, $bitSumCols FROM v GROUP BY doc_id),
-         |f AS (SELECT doc_id, $packedCols AS simhash FROM s),
+         |$simhashFrameCte,
          |e0 AS (SELECT a.doc_id AS a, b.doc_id AS b
          |       FROM f a JOIN f b ON a.doc_id < b.doc_id
          |       WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
@@ -533,11 +550,10 @@ object TextQueries {
     Map(
       "q_udaf_minhash" ->
         s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |sh AS (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-           |              i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingle
+           |sh AS (SELECT doc_id, unnest($Shingles3Sql) AS shingle
            |       FROM w),
            |h AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh)
-           |SELECT doc_id, $sigAggCols
+           |SELECT doc_id, $MinhashAggSql
            |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin,
       "q_text_langid" ->
         s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -588,18 +604,17 @@ object TextQueries {
           |                   (acc, v) -> (acc * 31 + v) % 1000000007) AS fingerprint
           |FROM t ORDER BY doc_id""".stripMargin,
       "q_ngram_novelty" ->
-        """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-          |shl AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 1),
-          |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh FROM w),
-          |e AS (SELECT doc_id, unnest(sh) AS sh FROM shl),
-          |df AS (SELECT sh, count(*) AS n_docs FROM e GROUP BY sh)
-          |SELECT e.doc_id, count(*) AS n_shingles,
-          |       CAST(sum(CASE WHEN df.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
-          |       round(sum(CASE WHEN df.n_docs >= 2 THEN 1 ELSE 0 END) / count(*), 6)
-          |         AS boilerplate_ratio
-          |FROM e JOIN df USING (sh)
-          |GROUP BY e.doc_id
-          |ORDER BY e.doc_id""".stripMargin,
+        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+           |shl AS (SELECT doc_id, list_distinct($Shingles3Sql) AS sh FROM w),
+           |e AS (SELECT doc_id, unnest(sh) AS sh FROM shl),
+           |df AS (SELECT sh, count(*) AS n_docs FROM e GROUP BY sh)
+           |SELECT e.doc_id, count(*) AS n_shingles,
+           |       CAST(sum(CASE WHEN df.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
+           |       round(sum(CASE WHEN df.n_docs >= 2 THEN 1 ELSE 0 END) / count(*), 6)
+           |         AS boilerplate_ratio
+           |FROM e JOIN df USING (sh)
+           |GROUP BY e.doc_id
+           |ORDER BY e.doc_id""".stripMargin,
       "q_dedup_exact" ->
         """SELECT md5(text) AS content_hash, min(doc_id) AS canonical_id, count(*) AS n_copies
           |FROM documents GROUP BY content_hash ORDER BY canonical_id""".stripMargin,
@@ -636,43 +651,16 @@ object TextQueries {
           |FROM r JOIN g USING (content_hash)
           |WHERE r.rn = 1 ORDER BY survivor_id""".stripMargin,
       "q_dedup_minhash" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |sh AS (SELECT doc_id,
-           |              list_transform(range(1, len(ws) - 1),
-           |                i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh
-           |       FROM w),
-           |sigs AS (
-           |${sigSelects.replace("hv(x)", "('0x' || substr(md5(x), 1, 8))::BIGINT")}
-           |)
+        s"""WITH $MinhashSigsCtes
            |SELECT doc_id, j, minhash FROM sigs ORDER BY doc_id, j""".stripMargin,
       "q_dedup_simhash" ->
-        s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-           |v AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT AS v FROM w),
-           |s AS (SELECT doc_id, $bitSumCols FROM v GROUP BY doc_id)
-           |SELECT doc_id, $packedCols AS simhash FROM s ORDER BY doc_id""".stripMargin,
+        s"""WITH $simhashFrameCte
+           |SELECT doc_id, simhash FROM f ORDER BY doc_id""".stripMargin,
       // LSH banding candidates: rebuild the per-(doc, band) signature
-      // fingerprint exactly (minhashes in j order, comma-joined, md5'd) and
-      // replay the size-capped band-bucket equi-join.
+      // fingerprint exactly and replay the size-capped band-bucket equi-join.
       "q_lsh_candidates" ->
-        s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |sh AS (SELECT doc_id,
-           |              list_transform(range(1, len(ws) - 1),
-           |                i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS sh
-           |       FROM w),
-           |sigs AS (
-           |${sigSelects.replace("hv(x)", "('0x' || substr(md5(x), 1, 8))::BIGINT")}
-           |),
-           |banded AS (
-           |  SELECT doc_id, j % 4 AS band,
-           |         md5(array_to_string(list_transform(list(minhash ORDER BY j),
-           |             x -> CAST(x AS VARCHAR)), ',')) AS band_key
-           |  FROM sigs GROUP BY doc_id, band
-           |  QUALIFY count(*) OVER (PARTITION BY band, band_key) <= ${TextDedup.DefaultMaxBucketSize}
-           |)
-           |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |FROM banded a JOIN banded b
-           |  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-           |ORDER BY doc_a, doc_b""".stripMargin,
+        s"""WITH ${TextDedup.CandidateCtes}
+           |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin,
       // recursive min-reachable-id fixpoint over the symmetric simhash edge
       // set == the label-propagation result (undirected reachability)
       "q_dedup_components" ->
@@ -701,10 +689,7 @@ object TextQueries {
       // brute-force all-pairs Hamming filter: the chunk-banding plan must
       // produce EXACTLY this (pigeonhole completeness for d<=3)
       "q_simhash_pairs" ->
-        s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-           |v AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT AS v FROM w),
-           |s AS (SELECT doc_id, $bitSumCols FROM v GROUP BY doc_id),
-           |f AS (SELECT doc_id, $packedCols AS simhash FROM s)
+        s"""WITH $simhashFrameCte
            |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
            |FROM f a JOIN f b ON a.doc_id < b.doc_id
@@ -712,20 +697,14 @@ object TextQueries {
            |ORDER BY doc_a, doc_b""".stripMargin,
       "q_dedup_ngram" ->
         s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-          |d0 AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words, ws[1] AS first_word,
-          |             list_distinct(list_transform(range(1, len(ws) - 1),
-          |               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-          |      FROM w),
-          |d AS (SELECT * FROM d0
-          |      QUALIFY count(*) OVER (PARTITION BY n_words, first_word) <= $NgramBlockCap)
-          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          |       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-          |             CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) AS jaccard
-          |FROM d a JOIN d b ON a.n_words = b.n_words AND a.first_word = b.first_word
-          |                  AND a.doc_id < b.doc_id
-          |WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-          |            CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6) >= 0.05
-          |ORDER BY doc_a, doc_b""".stripMargin,
+           |d0 AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words, ws[1] AS first_word,
+           |              list_distinct($Shingles3Sql) AS sh
+           |       FROM w),
+           |d AS (SELECT * FROM d0 ${TextDedup.cappedSql(NgramKeys, NgramBlockCap)})
+           |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, round(${TextDedup.JaccardSql}, 6) AS jaccard
+           |FROM ${TextDedup.selfJoinSql("d", NgramKeys)}
+           |WHERE round(${TextDedup.JaccardSql}, 6) >= 0.05
+           |ORDER BY doc_a, doc_b""".stripMargin,
       "q_text_normalize" ->
         """WITH n AS (SELECT doc_id,
           |                  trim(regexp_replace(regexp_replace(lower(text),

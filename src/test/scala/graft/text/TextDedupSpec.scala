@@ -81,30 +81,29 @@ class TextDedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands == Set((0L, 1L)),
       s"hot bucket must be dropped, normal pair kept; got ${cands.size} pairs")
-    val dropped = TextDedup.overfullBuckets(sigs, maxBucketSize = 10)
+    val dropped = TextDedup.overfullFromBanded(TextDedup.bandedWithSize(sigs), maxBucketSize = 10)
       .collect().map(r => r.getLong(r.fieldIndex("n_bucket")))
     assert(dropped.nonEmpty && dropped.forall(_ == 40L),
-      "overfullBuckets must report the 40-doc bucket per band")
+      "overfullFromBanded must report the 40-doc bucket per band")
   }
 
   test("q_dedup_ngram drops over-cap blocking keys (synthetic hot key)") {
     val s = spark
     import s.implicits._
-    // same first word + word count for every doc -> one blocking key.
-    // Under a cap smaller than the corpus, the query shape must emit
-    // nothing rather than all-pairs. (The registered query's cap is
-    // NgramBlockCap; here we exercise the guard logic with the census
-    // shape inlined at cap=5.)
-    val docs = (0L until 20L).map(i =>
-      (i, s"alpha beta gamma delta epsilon zeta eta theta word$i"))
-      .toDF("doc_id", "text")
+    // two blocking keys through the capped block self-join q_dedup_ngram
+    // and q_dedup_eval use, at cap 5: "alpha" holds exactly 5 docs (kept,
+    // all 10 pairs), "omega" holds 20 (over the cap: no pair at all)
+    val docs = ((0L until 5L).map(i => (i, s"alpha beta gamma word$i")) ++
+      (10L until 30L).map(i => (i, s"omega beta gamma word$i"))).toDF("doc_id", "text")
     val ws = split(col("text"), " ")
     val blocked = docs.select(col("doc_id"), ws.as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("long").as("n_words"),
         element_at(col("ws"), 1).as("first_word"))
-    val census = blocked.groupBy("n_words", "first_word").agg(count(lit(1)).as("n_blk"))
-    val kept = blocked.join(census, Seq("n_words", "first_word")).filter(col("n_blk") <= 5)
-    assert(kept.count() == 0, "20-doc block must be dropped at cap=5")
+    val keys = TextQueries.NgramKeys
+    val pairs = TextDedup.blockPairs(TextDedup.withBlockSize(blocked, keys), keys, cap = 5)
+      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val alpha = for (a <- 0L until 5L; b <- a + 1 until 5L) yield (a, b)
+    assert(pairs == alpha.toSet, s"want the 10 pairs of the 5-doc block only; got $pairs")
     // and the registered query still runs green on the fixture (cap is a
     // no-op there -- fixture blocks are far below NgramBlockCap)
     assert(TextQueries.queries("q_dedup_ngram")(spark, TestSpark.Sf0001).count() >= 0)
