@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
 
 /** Scan-parallelism repair for CPU-heavy per-row expansions (optimization
   * guide §2.5 "input skew": one huge unsplittable input → repartition
@@ -36,19 +37,21 @@ object Par {
     * CONTRACT: callers must pass only bare scans / projections / filters /
     * unions of scans. `toRdd` forces the physical plan, and under AQE a
     * plan containing an Exchange or subquery would eagerly EXECUTE its
-    * shuffle stages at query-construction time. Guarded below: any plan
-    * that already contains an exchange is treated as "not compact" without
-    * touching `toRdd` (an exchanged frame has already left the
-    * single-split-scan regime this helper exists to repair).
+    * shuffle stages and its subqueries at query-construction time. Guarded
+    * below: any plan that already contains an exchange or a subquery
+    * expression is treated as "not compact" without touching `toRdd` (such
+    * a frame has already left the single-split-scan regime this helper
+    * exists to repair).
     */
   private def plannedPartitions(df: DataFrame): Int = {
     // sparkPlan (not executedPlan): the pre-adaptive physical plan — pure
-    // planning, traversable, never materializes a query stage
-    val hasExchange = df.queryExecution.sparkPlan.exists {
+    // planning, traversable, never materializes a query stage. Its
+    // subqueries are still unplanned `PlanExpression`s here.
+    val eager = df.queryExecution.sparkPlan.exists {
       case _: org.apache.spark.sql.execution.exchange.Exchange => true
-      case _ => false
+      case p => p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
     }
-    if (hasExchange) Int.MaxValue
+    if (eager) Int.MaxValue
     else df.queryExecution.toRdd.getNumPartitions
   }
 

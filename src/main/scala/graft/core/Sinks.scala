@@ -87,18 +87,15 @@ object Sinks {
     // engines parse shortest-roundtrip doubles), so the oracle recomputes
     // the iter-1 mean heads directly.
     "q_sink_centroids" ->
-      s"""${graft.kmeans.KmeansQueries.preludeForOracle},
-         |means AS (
-         |  SELECT a.cid, CAST(u.i AS INT) AS i, round(avg(p.c[u.i]), 7) + 0.0 AS m
-         |  FROM assign a JOIN pts p USING (vec_id), UNNEST(generate_series(1, len(p.c))) AS u(i)
-         |  GROUP BY a.cid, u.i)
+      s"""${graft.kmeans.KmeansQueries.preludeSql},
+         |means AS (${graft.kmeans.Lloyd.meansSql("assign", Some(7))})
          |SELECT min(CASE WHEN i = 1 THEN m END) AS c0, count(*) AS n_dims
          |FROM means GROUP BY cid ORDER BY c0""".stripMargin,
     // Identical result set to q_groupby_key: partition counts survive the
     // partitioned write/read round trip.
     "q_sink_partitioned" -> graft.kmeans.KmeansQueries.oracleSql("q_groupby_key"),
     "q_sink_pruned" ->
-      s"""${graft.kmeans.KmeansQueries.preludeForOracle}
+      s"""${graft.kmeans.KmeansQueries.preludeSql}
          |SELECT cid, count(*) AS n_points FROM assign
          |WHERE cid IN (0, 1) GROUP BY cid ORDER BY cid""".stripMargin
   )

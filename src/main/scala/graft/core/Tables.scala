@@ -133,4 +133,7 @@ object Tables {
     */
   def points(spark: SparkSession, sfDir: String): DataFrame =
     embeddings(spark, sfDir).select(col("vec_id"), col("embedding").as("coordinates"))
+
+  /** [[points]] in DuckDB, for the oracles: the CTE `pts(vec_id, c)`. */
+  val PointsCte: String = "pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings)"
 }

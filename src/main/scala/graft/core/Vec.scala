@@ -29,6 +29,10 @@ object Vec {
   /** Squared Euclidean distance: sum_i (a_i - b_i)^2. */
   def sqDist(a: Column, b: Column): Column = kernel(SquaredDistance, a, b)
 
+  /** [[sqDist]] in DuckDB, for the oracles, over two list expressions. */
+  def sqDistSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), z -> (z[1]-z[2])*(z[1]-z[2])))"
+
   /** Euclidean distance (reference: sqrt((x2-x1)^2 + (y2-y1)^2), mapper.py:26-30). */
   def dist(a: Column, b: Column): Column = sqrt(sqDist(a, b))
 

@@ -18,30 +18,69 @@ object KmeansQueries {
 
   val K = 5
 
-  /** Common oracle prelude: points + deterministic init (SURVEY.md §7.2).
-    * Exposed for other modules whose oracle builds on the iter-1 assignment.
-    *
-    * Tie-break is EXPLICIT — row_number ordered by (d2, cid) keeps the
-    * lowest cid on equal distances, exactly Spark's `min(struct(d, cid))`
-    * and the reference's strict-`<` running min (mapper.py:64). DuckDB's
-    * `arg_min(cid, d2)` leaves ties unspecified, which would make every
-    * assign-derived oracle flaky on a distance tie.
+  /** Common oracle prelude (SURVEY.md §7.2): the points `pts`, the
+    * deterministic `init` and the iter-1 nearest-centroid `assign`
+    * (vec_id, cid, d2), built from the `Lloyd` fragments. Exposed for other
+    * modules whose oracle builds on the iter-1 assignment.
     */
-  val preludeForOracle: String = preludeSql
-  private lazy val preludeSql =
-    s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-       |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-       |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
-       |assign AS (
-       |  SELECT vec_id, cid, d2 FROM (
-       |    SELECT vec_id, cid, d2,
-       |           row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-       |    FROM (SELECT p.vec_id, i.cid,
-       |                 list_sum(list_transform(list_zip(p.c, i.c),
-       |                   z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
-       |          FROM pts p CROSS JOIN init i) d) r
-       |  WHERE rn = 1
-       |)""".stripMargin
+  val preludeSql: String =
+    s"""WITH ${Tables.PointsCte},
+       |${Lloyd.initSql(K)},
+       |assign AS (${Lloyd.nearestSql("init")})""".stripMargin
+
+  /** The ARI pair-count fold over `cells(<rows>, <cols>, nij)`: one row
+    * (n, sij, sa, sb, ari), by the arithmetic described at `q_ari`.
+    */
+  private def ari(cells: DataFrame, rows: String, cols: String): DataFrame = {
+    val sij = cells.agg(sum(expr("nij * (nij - 1) DIV 2")).as("sij"),
+      sum("nij").as("n"))
+    val sa = cells.groupBy(rows).agg(sum("nij").as("a"))
+      .agg(sum(expr("a * (a - 1) DIV 2")).as("sa"))
+    val sb = cells.groupBy(cols).agg(sum("nij").as("b"))
+      .agg(sum(expr("b * (b - 1) DIV 2")).as("sb"))
+    sij.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
+      .withColumn("n2", expr("n * (n - 1) DIV 2"))
+      // the degenerate-denominator guard evaluates on the SAME DOUBLE
+      // expression the ratio divides by: the previous BIGINT guard
+      // product `(sa+sb)*n2 - 2*sa*sb` itself overflowed past ~10x the
+      // stress scale (DuckDB errors, Spark wraps and could misfire the
+      // guard to 0.0) even though the ratio was already IEEE
+      .withColumn("den_d",
+        (col("sa").cast("double") + col("sb").cast("double")) * col("n2").cast("double") -
+          lit(2.0) * col("sa").cast("double") * col("sb").cast("double"))
+      .select(col("n"), col("sij"), col("sa"), col("sb"),
+        when(col("den_d") === 0.0, lit(0.0))
+          .otherwise(round(
+            (lit(2.0) * (col("sij").cast("double") * col("n2").cast("double") -
+              col("sa").cast("double") * col("sb").cast("double"))) / col("den_d"), 6)
+            + lit(0.0))
+          .as("ari"))
+  }
+
+  /** [[ari]] in DuckDB over the CTE `cells(<rows>, <cols>, nij)`: the CTEs
+    * up to `ari(n, sij, sa, sb, ari)`.
+    */
+  private def ariSql(rows: String, cols: String): String =
+    s"""sij AS (SELECT CAST(sum(nij * (nij - 1) // 2) AS BIGINT) AS sij,
+       |               CAST(sum(nij) AS BIGINT) AS n FROM cells),
+       |sa AS (SELECT CAST(sum(a * (a - 1) // 2) AS BIGINT) AS sa
+       |       FROM (SELECT CAST(sum(nij) AS BIGINT) AS a FROM cells GROUP BY $rows)),
+       |sb AS (SELECT CAST(sum(b * (b - 1) // 2) AS BIGINT) AS sb
+       |       FROM (SELECT CAST(sum(nij) AS BIGINT) AS b FROM cells GROUP BY $cols)),
+       |ari AS (
+       |  SELECT n, sij.sij, sa.sa, sb.sb,
+       |         CASE WHEN (CAST(sa.sa AS DOUBLE) + CAST(sb.sb AS DOUBLE))
+       |                     * CAST(n * (n - 1) // 2 AS DOUBLE)
+       |                   - 2.0 * CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE) = 0.0
+       |              THEN 0.0
+       |              ELSE round(
+       |                (2.0 * (CAST(sij.sij AS DOUBLE) * CAST(n * (n - 1) // 2 AS DOUBLE)
+       |                        - CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE)))
+       |                / ((CAST(sa.sa AS DOUBLE) + CAST(sb.sb AS DOUBLE))
+       |                     * CAST(n * (n - 1) // 2 AS DOUBLE)
+       |                   - 2.0 * CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE)), 6) + 0.0
+       |         END AS ari
+       |  FROM sij CROSS JOIN sa CROSS JOIN sb)""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Nearest-centroid assignment — the reference mapper's argmin scan
@@ -137,8 +176,7 @@ object KmeansQueries {
     // arithmetic the oracle replays).
     "q_expr_dist" -> { (s, dir) =>
       val pts = Tables.points(s, dir)
-      val probe = Lloyd.initCentroidsFor(s, dir, 1).head
-      val pl = array(probe.coordinates.map(lit).toSeq: _*)
+      val pl = array(Lloyd.probeFor(s, dir).map(lit).toSeq: _*)
       pts.select(col("vec_id"),
           round(Vec.sqDist(col("coordinates"), pl), 9).as("d2"))
         .orderBy("vec_id")
@@ -147,8 +185,7 @@ object KmeansQueries {
     // the reference's distance function generalized (mapper.py:26-30).
     "q_dist_euclid" -> { (s, dir) =>
       val pts = Tables.points(s, dir)
-      val probe = Lloyd.initCentroidsFor(s, dir, 1).head
-      val pl = array(probe.coordinates.map(lit).toSeq: _*)
+      val pl = array(Lloyd.probeFor(s, dir).map(lit).toSeq: _*)
       pts.select(col("vec_id"), round(Vec.dist(col("coordinates"), pl), 9).as("d"))
         .orderBy("vec_id")
     },
@@ -258,29 +295,7 @@ object KmeansQueries {
       val cells = asg.join(lab, "vec_id")
         .groupBy("cid", "cls").agg(count(lit(1)).as("nij"))
         .localCheckpoint(eager = false) // K×L-bounded; feeds three pair-count folds
-      val sij = cells.agg(sum(expr("nij * (nij - 1) DIV 2")).as("sij"),
-        sum("nij").as("n"))
-      val sa = cells.groupBy("cid").agg(sum("nij").as("a"))
-        .agg(sum(expr("a * (a - 1) DIV 2")).as("sa"))
-      val sb = cells.groupBy("cls").agg(sum("nij").as("b"))
-        .agg(sum(expr("b * (b - 1) DIV 2")).as("sb"))
-      sij.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
-        .withColumn("n2", expr("n * (n - 1) DIV 2"))
-        // the degenerate-denominator guard evaluates on the SAME DOUBLE
-        // expression the ratio divides by: the previous BIGINT guard
-        // product `(sa+sb)*n2 - 2*sa*sb` itself overflowed past ~10x the
-        // stress scale (DuckDB errors, Spark wraps and could misfire the
-        // guard to 0.0) even though the ratio was already IEEE
-        .withColumn("den_d",
-          (col("sa").cast("double") + col("sb").cast("double")) * col("n2").cast("double") -
-            lit(2.0) * col("sa").cast("double") * col("sb").cast("double"))
-        .select(col("n"), col("sij"), col("sa"), col("sb"),
-          when(col("den_d") === 0.0, lit(0.0))
-            .otherwise(round(
-              (lit(2.0) * (col("sij").cast("double") * col("n2").cast("double") -
-                col("sa").cast("double") * col("sb").cast("double"))) / col("den_d"), 6)
-              + lit(0.0))
-            .as("ari"))
+      ari(cells, "cid", "cls")
     },
 
     // NS: clustering stability — rerun the assignment under a SECOND
@@ -301,24 +316,7 @@ object KmeansQueries {
         .withColumn("cb", Lloyd.assignCol(alt, col("coordinates")))
         .groupBy("ca", "cb").agg(count(lit(1)).as("nij"))
         .localCheckpoint(eager = false) // K×K-bounded; feeds three pair-count folds
-      val sij = cells.agg(sum(expr("nij * (nij - 1) DIV 2")).as("sij"),
-        sum("nij").as("n"))
-      val sa = cells.groupBy("ca").agg(sum("nij").as("a"))
-        .agg(sum(expr("a * (a - 1) DIV 2")).as("sa"))
-      val sb = cells.groupBy("cb").agg(sum("nij").as("b"))
-        .agg(sum(expr("b * (b - 1) DIV 2")).as("sb"))
-      sij.crossJoin(broadcast(sa)).crossJoin(broadcast(sb))
-        .withColumn("n2", expr("n * (n - 1) DIV 2"))
-        .withColumn("den_d",
-          (col("sa").cast("double") + col("sb").cast("double")) * col("n2").cast("double") -
-            lit(2.0) * col("sa").cast("double") * col("sb").cast("double"))
-        .select(col("n"),
-          when(col("den_d") === 0.0, lit(0.0))
-            .otherwise(round(
-              (lit(2.0) * (col("sij").cast("double") * col("n2").cast("double") -
-                col("sa").cast("double") * col("sb").cast("double"))) / col("den_d"), 6)
-              + lit(0.0))
-            .as("stability_ari"))
+      ari(cells, "ca", "cb").select(col("n"), col("ari").as("stability_ari"))
     },
 
     // NS: elbow scan for K selection — the "which K" answer the whole
@@ -410,37 +408,21 @@ object KmeansQueries {
       s"""$preludeSql
          |SELECT vec_id, round(d2, 9) AS d2, cid FROM assign ORDER BY vec_id""".stripMargin,
     "q_kmeans_iter1" ->
-      s"""$preludeSql
-         |SELECT a.cid, CAST(u.i - 1 AS INT) AS pos, round(avg(p.c[u.i]), 7) + 0.0 AS m
-         |FROM assign a JOIN pts p USING (vec_id), UNNEST(generate_series(1, len(p.c))) AS u(i)
-         |GROUP BY a.cid, pos
-         |ORDER BY a.cid, pos""".stripMargin,
+      s"""$preludeSql,
+         |means AS (${Lloyd.meansSql("assign", Some(7))})
+         |SELECT cid, CAST(i - 1 AS INT) AS pos, m FROM means ORDER BY cid, pos""".stripMargin,
     "q_groupby_key" ->
       s"""$preludeSql
          |SELECT cid, count(*) AS n_points FROM assign GROUP BY cid ORDER BY cid""".stripMargin,
     // unrolled second iteration: iter-1 means (7-dec rounded, -0.0
-    // normalized) become the iter-2 centroids; same explicit (d2, cid)
-    // tie-break as the prelude
+    // normalized) become the iter-2 centroids
     "q_kmeans_iter2" ->
       s"""$preludeSql,
-         |means1 AS (
-         |  SELECT a.cid, CAST(u.i AS INT) AS i, round(avg(p.c[u.i]), 7) + 0.0 AS m
-         |  FROM assign a JOIN pts p USING (vec_id), UNNEST(generate_series(1, len(p.c))) AS u(i)
-         |  GROUP BY a.cid, u.i),
+         |means1 AS (${Lloyd.meansSql("assign", Some(7))}),
          |c1 AS (SELECT cid, list(m ORDER BY i) AS c FROM means1 GROUP BY cid),
-         |assign2 AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid, d2,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-         |    FROM (SELECT p.vec_id, c1.cid,
-         |                 list_sum(list_transform(list_zip(p.c, c1.c),
-         |                   z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
-         |          FROM pts p CROSS JOIN c1) d) r
-         |  WHERE rn = 1)
-         |SELECT a.cid, CAST(u.i - 1 AS INT) AS pos, round(avg(p.c[u.i]), 6) + 0.0 AS m
-         |FROM assign2 a JOIN pts p USING (vec_id), UNNEST(generate_series(1, len(p.c))) AS u(i)
-         |GROUP BY a.cid, pos
-         |ORDER BY a.cid, pos""".stripMargin,
+         |assign2 AS (${Lloyd.nearestSql("c1")}),
+         |means2 AS (${Lloyd.meansSql("assign2", Some(6))})
+         |SELECT cid, CAST(i - 1 AS INT) AS pos, m FROM means2 ORDER BY cid, pos""".stripMargin,
     "q_centroid_mean" ->
       """SELECT label, CAST(u.i - 1 AS INT) AS pos,
         |       round(avg(CAST(embedding AS DOUBLE[])[u.i]), 7) + 0.0 AS m
@@ -449,36 +431,27 @@ object KmeansQueries {
         |ORDER BY label, pos""".stripMargin,
     "q_count_converged" ->
       s"""$preludeSql,
-         |means AS (
-         |  SELECT a.cid, CAST(u.i AS INT) AS i, avg(p.c[u.i]) AS m
-         |  FROM assign a JOIN pts p USING (vec_id), UNNEST(generate_series(1, len(p.c))) AS u(i)
-         |  GROUP BY a.cid, u.i),
+         |means AS (${Lloyd.meansSql("assign", None)}),
          |nextc AS (SELECT cid, list(m ORDER BY i) AS c FROM means GROUP BY cid)
-         |SELECT CAST(sum(CASE WHEN sqrt(list_sum(list_transform(list_zip(n.c, i.c),
-         |              z -> (z[1]-z[2])*(z[1]-z[2])))) < 1e-6 THEN 1 ELSE 0 END) AS BIGINT) AS n_converged,
+         |SELECT CAST(sum(CASE WHEN sqrt(${Vec.sqDistSql("n.c", "i.c")}) < 1e-6
+         |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_converged,
          |       count(*) AS n_centroids
          |FROM nextc n JOIN init i USING (cid)""".stripMargin,
     "q_expr_dist" ->
-      """WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-        |probe AS (SELECT c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1)
-        |SELECT p.vec_id,
-        |       round(list_sum(list_transform(list_zip(p.c, probe.c),
-        |             z -> (z[1]-z[2])*(z[1]-z[2]))), 9) AS d2
+      s"""WITH ${Tables.PointsCte},
+         |${Lloyd.ProbeSql}
+         |SELECT p.vec_id, round(${Vec.sqDistSql("p.c", "probe.p")}, 9) AS d2
         |FROM pts p CROSS JOIN probe
         |ORDER BY p.vec_id""".stripMargin,
     "q_dist_euclid" ->
-      """WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-        |probe AS (SELECT c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1)
-        |SELECT p.vec_id,
-        |       round(sqrt(list_sum(list_transform(list_zip(p.c, probe.c),
-        |             z -> (z[1]-z[2])*(z[1]-z[2])))), 9) AS d
+      s"""WITH ${Tables.PointsCte},
+         |${Lloyd.ProbeSql}
+         |SELECT p.vec_id, round(sqrt(${Vec.sqDistSql("p.c", "probe.p")}), 9) AS d
         |FROM pts p CROSS JOIN probe
         |ORDER BY p.vec_id""".stripMargin,
     "q_silhouette" ->
       s"""$preludeSql,
-         |d AS (SELECT p.vec_id, i.cid,
-         |             sqrt(list_sum(list_transform(list_zip(p.c, i.c),
-         |               z -> (z[1]-z[2])*(z[1]-z[2])))) AS dist
+         |d AS (SELECT p.vec_id, i.cid, sqrt(${Vec.sqDistSql("p.c", "i.c")}) AS dist
          |      FROM pts p CROSS JOIN init i),
          |r AS (SELECT vec_id, dist,
          |             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
@@ -542,76 +515,23 @@ object KmeansQueries {
          |         CAST(count(*) AS BIGINT) AS nij
          |  FROM assign a JOIN embeddings e USING (vec_id)
          |  GROUP BY 1, 2),
-         |sij AS (SELECT CAST(sum(nij * (nij - 1) // 2) AS BIGINT) AS sij,
-         |               CAST(sum(nij) AS BIGINT) AS n FROM cells),
-         |sa AS (SELECT CAST(sum(a * (a - 1) // 2) AS BIGINT) AS sa
-         |       FROM (SELECT CAST(sum(nij) AS BIGINT) AS a FROM cells GROUP BY cid)),
-         |sb AS (SELECT CAST(sum(b * (b - 1) // 2) AS BIGINT) AS sb
-         |       FROM (SELECT CAST(sum(nij) AS BIGINT) AS b FROM cells GROUP BY cls))
-         |SELECT n, sij.sij, sa.sa, sb.sb,
-         |       CASE WHEN (CAST(sa.sa AS DOUBLE) + CAST(sb.sb AS DOUBLE))
-         |                   * CAST(n * (n - 1) // 2 AS DOUBLE)
-         |                 - 2.0 * CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE) = 0.0
-         |            THEN 0.0
-         |            ELSE round(
-         |              (2.0 * (CAST(sij.sij AS DOUBLE) * CAST(n * (n - 1) // 2 AS DOUBLE)
-         |                      - CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE)))
-         |              / ((CAST(sa.sa AS DOUBLE) + CAST(sb.sb AS DOUBLE))
-         |                   * CAST(n * (n - 1) // 2 AS DOUBLE)
-         |                 - 2.0 * CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE)), 6) + 0.0
-         |       END AS ari
-         |FROM sij CROSS JOIN sa CROSS JOIN sb""".stripMargin,
-    // same two deterministic inits (first K / next K by vec_id), argmin
-    // tie-breaks, contingency folds, and the DOUBLE-denominator guard
+         |${ariSql("cid", "cls")}
+         |SELECT n, sij, sa, sb, ari FROM ari""".stripMargin,
+    // the prelude's assignment against a second one from the next K
+    // points by vec_id, then the same ARI fold
     "q_cluster_stability" ->
-      s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-         |inita AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |          FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
-         |initb AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |          FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K OFFSET $K) t),
-         |aa AS (
-         |  SELECT vec_id, cid AS ca FROM (
-         |    SELECT p.vec_id, i.cid,
-         |           row_number() OVER (PARTITION BY p.vec_id ORDER BY
-         |             list_sum(list_transform(list_zip(p.c, i.c),
-         |               z -> (z[1]-z[2])*(z[1]-z[2]))), i.cid) AS rn
-         |    FROM pts p CROSS JOIN inita i) r WHERE rn = 1),
-         |bb AS (
-         |  SELECT vec_id, cid AS cb FROM (
-         |    SELECT p.vec_id, i.cid,
-         |           row_number() OVER (PARTITION BY p.vec_id ORDER BY
-         |             list_sum(list_transform(list_zip(p.c, i.c),
-         |               z -> (z[1]-z[2])*(z[1]-z[2]))), i.cid) AS rn
-         |    FROM pts p CROSS JOIN initb i) r WHERE rn = 1),
-         |cells AS (SELECT ca, cb, CAST(count(*) AS BIGINT) AS nij
-         |          FROM aa JOIN bb USING (vec_id) GROUP BY 1, 2),
-         |sij AS (SELECT CAST(sum(nij * (nij - 1) // 2) AS BIGINT) AS sij,
-         |               CAST(sum(nij) AS BIGINT) AS n FROM cells),
-         |sa AS (SELECT CAST(sum(a * (a - 1) // 2) AS BIGINT) AS sa
-         |       FROM (SELECT CAST(sum(nij) AS BIGINT) AS a FROM cells GROUP BY ca)),
-         |sb AS (SELECT CAST(sum(b * (b - 1) // 2) AS BIGINT) AS sb
-         |       FROM (SELECT CAST(sum(nij) AS BIGINT) AS b FROM cells GROUP BY cb))
-         |SELECT n,
-         |       CASE WHEN (CAST(sa.sa AS DOUBLE) + CAST(sb.sb AS DOUBLE))
-         |                   * CAST(n * (n - 1) // 2 AS DOUBLE)
-         |                 - 2.0 * CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE) = 0.0
-         |            THEN 0.0
-         |            ELSE round(
-         |              (2.0 * (CAST(sij.sij AS DOUBLE) * CAST(n * (n - 1) // 2 AS DOUBLE)
-         |                      - CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE)))
-         |              / ((CAST(sa.sa AS DOUBLE) + CAST(sb.sb AS DOUBLE))
-         |                   * CAST(n * (n - 1) // 2 AS DOUBLE)
-         |                 - 2.0 * CAST(sa.sa AS DOUBLE) * CAST(sb.sb AS DOUBLE)), 6) + 0.0
-         |       END AS stability_ari
-         |FROM sij CROSS JOIN sa CROSS JOIN sb""".stripMargin,
+      s"""$preludeSql,
+         |${Lloyd.initSql(K, "initb", offset = K)},
+         |assignb AS (${Lloyd.nearestSql("initb")}),
+         |cells AS (SELECT a.cid AS ca, b.cid AS cb, CAST(count(*) AS BIGINT) AS nij
+         |          FROM assign a JOIN assignb b USING (vec_id) GROUP BY 1, 2),
+         |${ariSql("ca", "cb")}
+         |SELECT n, ari AS stability_ari FROM ari""".stripMargin,
     // identical prefix-min micro ledger and integer kneedle rule
     "q_elbow_scan" ->
-      s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-         |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
-         |d AS (SELECT p.vec_id, i.cid,
-         |             list_sum(list_transform(list_zip(p.c, i.c),
-         |               z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
+      s"""WITH ${Tables.PointsCte},
+         |${Lloyd.initSql(K)},
+         |d AS (SELECT p.vec_id, i.cid, ${Vec.sqDistSql("p.c", "i.c")} AS d2
          |      FROM pts p CROSS JOIN init i),
          |ks AS (SELECT CAST(k AS BIGINT) AS k
          |       FROM (SELECT unnest(range(1, ${K + 1})) AS k)),
@@ -634,12 +554,9 @@ object KmeansQueries {
     // identical init centroids and distance folds; per-term micro
     // quantization BEFORE the integer softmax so no float sum exists
     "q_gmm_estep" ->
-      s"""WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-         |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-         |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $K) t),
-         |d AS (SELECT p.vec_id, i.cid,
-         |             list_sum(list_transform(list_zip(p.c, i.c),
-         |               z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
+      s"""WITH ${Tables.PointsCte},
+         |${Lloyd.initSql(K)},
+         |d AS (SELECT p.vec_id, i.cid, ${Vec.sqDistSql("p.c", "i.c")} AS d2
          |      FROM pts p CROSS JOIN init i),
          |e AS (SELECT vec_id, cid,
          |             CAST(round(exp((min(d2) OVER (PARTITION BY vec_id) - d2) * 0.5)

@@ -64,7 +64,11 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   * no closure to it. `JobLintSpec` keeps lambdas out of these calls.
   *
   * [[assign]] and the posexplode/avg plan [[updateExplode]] express one
-  * iteration as a DataFrame, which a DuckDB replay can translate.
+  * iteration as a DataFrame. The DuckDB oracles replay each step from the
+  * one spelling kept beside its Spark owner: [[graft.core.Tables.PointsCte]]
+  * for the points, [[firstSql]] / [[initSql]] / [[ProbeSql]] for the
+  * first-K init, [[graft.core.Vec.sqDistSql]] for the squared distance,
+  * [[nearestSql]] for the assignment and [[meansSql]] for the update.
   *
   * Semantics kept from the reference (SURVEY.md §2.11): ties go to the
   * lower centroid id (strict `<` in mapper.py:64 keeps the earlier one);
@@ -138,6 +142,29 @@ object Lloyd {
       initCentroids(graft.core.Tables.points(spark, sfDir), k)
     }
 
+  /** The probe vector of the search and distance queries: the first point
+    * of the init ([[initCentroidsFor]] with k = 1).
+    */
+  def probeFor(spark: org.apache.spark.sql.SparkSession, sfDir: String): Array[Double] =
+    initCentroidsFor(spark, sfDir, 1).head.coordinates
+
+  /** The first-`n` rule in DuckDB, over [[graft.core.Tables.PointsCte]]:
+    * the points with non-null coordinates ranked `offset + 1` to
+    * `offset + n` by vec_id, as a subquery of (vec_id, c).
+    */
+  def firstSql(n: Int, offset: Int = 0): String =
+    s"(SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT $n" +
+      (if (offset > 0) s" OFFSET $offset)" else ")")
+
+  /** [[initCentroids]] in DuckDB: the CTE `name(cid, c)`, cids 1..k, over
+    * [[firstSql]]`(k, offset)`.
+    */
+  def initSql(k: Int, name: String = "init", offset: Int = 0): String =
+    s"$name AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c FROM ${firstSql(k, offset)} f)"
+
+  /** [[probeFor]] in DuckDB: the CTE `probe(p)`. */
+  val ProbeSql: String = s"probe AS (SELECT c AS p FROM ${firstSql(1)} f)"
+
   /** Squared distance from `coords` to each literal centroid, as (cid, d²)
     * in ascending cid order: K separate distance columns, for queries that
     * need every distance (silhouette, elbow scan, GMM E-step). The argmin
@@ -155,6 +182,18 @@ object Lloyd {
   def nearest(cents: Seq[Centroid], coords: Column): Column =
     graftbridge.toColumn(NearestCentroid(graftbridge.toExpression(coords),
       NearestCentroid.literal(cents.map(c => (c.cid, c.coordinates)))))
+
+  /** [[nearest]] in DuckDB: every point of `pts` with its nearest centroid
+    * of the CTE `cents(cid, c)`, as (vec_id, cid, d2). The tie-break is
+    * explicit: row_number ordered by (d2, cid) keeps the lower cid, as the
+    * kernel and the reference's strict-`<` running min (mapper.py:64) do.
+    * DuckDB's `arg_min(cid, d2)` leaves ties unspecified.
+    */
+  def nearestSql(cents: String): String =
+    s"""SELECT vec_id, cid, d2 FROM (
+       |  SELECT p.vec_id, i.cid, ${Vec.sqDistSql("p.c", "i.c")} AS d2
+       |  FROM pts p CROSS JOIN $cents i)
+       |QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1""".stripMargin
 
   /** Nearest-centroid id for a coordinates column. */
   def assignCol(cents: Seq[Centroid], coords: Column): Column =
@@ -175,6 +214,17 @@ object Lloyd {
       .groupBy("cid")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         x => x.getField("m")).as("coordinates"))
+
+  /** [[updateExplode]] in DuckDB: the per-dimension means of the points of
+    * each cid of the CTE `assigned(vec_id, cid)`, as rows (cid, i, m) with
+    * `i` from 1. `scale` rounds them as `round(m, scale) + 0.0`.
+    */
+  def meansSql(assigned: String, scale: Option[Int]): String = {
+    val m = scale.fold("avg(p.c[u.i])")(d => s"round(avg(p.c[u.i]), $d) + 0.0")
+    s"""SELECT a.cid, CAST(u.i AS INT) AS i, $m AS m
+       |FROM $assigned a JOIN pts p USING (vec_id), UNNEST(generate_series(1, len(p.c))) AS u(i)
+       |GROUP BY a.cid, u.i""".stripMargin
+  }
 
   /** Sum of squared distances to the assigned centroid (for MLlib parity). */
   def sse(points: DataFrame, cents: Seq[Centroid]): Double =

@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, Vec}
 import graft.kmeans.{KmeansQueries, Lloyd, VecMeanAgg}
 
 /** The composite K-Means entries (SURVEY.md §2.10-2.11) + MLlib cross-check.
@@ -416,29 +416,19 @@ object MLQueries {
     */
   val lloydRecursiveCte: String =
     s"""WITH RECURSIVE
-       |pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-       |init AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) AS cid, c
-       |         FROM (SELECT vec_id, c FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT ${KmeansQueries.K}) t),
+       |${Tables.PointsCte},
+       |${Lloyd.initSql(KmeansQueries.K)},
        |it AS (
        |  SELECT 0 AS iter, FALSE AS stop, cid, c FROM init
        |  UNION ALL
        |  SELECT nxt.iter, nxt.stop, nxt.cid, nxt.c FROM (
        |    WITH prev AS (SELECT iter, stop, cid, c FROM it WHERE NOT stop),
-       |    asg AS (SELECT vec_id, cid FROM (
-       |        SELECT p.vec_id, pr.cid,
-       |               row_number() OVER (PARTITION BY p.vec_id ORDER BY
-       |                 list_sum(list_transform(list_zip(p.c, pr.c),
-       |                   z -> (z[1]-z[2])*(z[1]-z[2]))), pr.cid) AS rn
-       |        FROM pts p CROSS JOIN prev pr) r WHERE rn = 1),
-       |    means AS (SELECT a.cid, CAST(u.i AS INT) AS i, round(avg(p.c[u.i]), 7) + 0.0 AS m
-       |              FROM asg a JOIN pts p USING (vec_id),
-       |                   UNNEST(generate_series(1, len(p.c))) AS u(i)
-       |              GROUP BY a.cid, u.i),
+       |    asg AS (${Lloyd.nearestSql("prev")}),
+       |    means AS (${Lloyd.meansSql("asg", Some(7))}),
        |    newc AS (SELECT cid, list(m ORDER BY i) AS c FROM means GROUP BY cid),
        |    conv AS (SELECT coalesce(
        |               (SELECT count(*) FROM newc) = (SELECT count(*) FROM prev)
-       |               AND bool_and(sqrt(list_sum(list_transform(list_zip(n.c, pr.c),
-       |                     z -> (z[1]-z[2])*(z[1]-z[2])))) < 1e-6), FALSE) AS ok
+       |               AND bool_and(sqrt(${Vec.sqDistSql("n.c", "pr.c")}) < 1e-6), FALSE) AS ok
        |             FROM newc n JOIN prev pr USING (cid)),
        |    meta AS (SELECT max(iter) + 1 AS iter FROM prev)
        |    SELECT meta.iter AS iter, (conv.ok OR meta.iter >= 10) AS stop, newc.cid, newc.c
@@ -473,14 +463,12 @@ object MLQueries {
     // identical rounded-mean start, in-row distance fold, per-row micro
     // quantization, exact integer sums
     "q_weiszfeld_step" ->
-      """WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
+      s"""WITH ${Tables.PointsCte},
         |mean AS (SELECT CAST(u.i - 1 AS BIGINT) AS pos, round(avg(c[u.i]), 7) AS m
         |         FROM pts, UNNEST(generate_series(1, len(c))) AS u(i)
         |         GROUP BY 1),
         |marr AS (SELECT list(m ORDER BY pos) AS m FROM mean),
-        |dd AS (SELECT vec_id, c,
-        |              greatest(sqrt(list_sum(list_transform(list_zip(c, marr.m),
-        |                z -> (z[1]-z[2])*(z[1]-z[2])))), 1e-9) AS d
+        |dd AS (SELECT vec_id, c, greatest(sqrt(${Vec.sqDistSql("c", "marr.m")}), 1e-9) AS d
         |       FROM pts CROSS JOIN marr),
         |t AS (SELECT CAST(u.i - 1 AS BIGINT) AS pos,
         |             CAST(round(c[u.i] / d * 1000000) AS BIGINT) AS t_micro,

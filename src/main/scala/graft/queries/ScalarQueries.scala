@@ -229,7 +229,7 @@ object ScalarQueries {
         |                       x -> CAST(round(x, 3) + 0.0 AS VARCHAR)), ',') AS line
         |FROM embeddings ORDER BY vec_id""".stripMargin,
     "q_mod_partition" ->
-      s"""${graft.kmeans.KmeansQueries.preludeForOracle}
+      s"""${graft.kmeans.KmeansQueries.preludeSql}
          |SELECT CAST(CASE WHEN cid % 2 = 0 THEN 2 ELSE cid % 2 END AS BIGINT) AS pid,
          |       count(*) AS n
          |FROM assign GROUP BY pid ORDER BY pid""".stripMargin,
@@ -284,14 +284,14 @@ object ScalarQueries {
         |       CAST(datediff('day', DATE '1995-01-01', o_orderdate) AS BIGINT) AS days_since
         |FROM orders ORDER BY o_orderkey""".stripMargin,
     "q_array_funcs" ->
-      """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings)
+      s"""WITH ${Tables.PointsCte}
         |SELECT vec_id,
         |       CAST(len(c) AS BIGINT) AS n,
         |       round(list_reduce(list_prepend(0.0, c[1:8]), (a, x) -> a + x), 6) + 0.0 AS sum8,
         |       CAST(len(list_filter(c, x -> x > 0)) AS BIGINT) AS n_pos,
         |       list_max(c) AS mx,
         |       round(list_reduce(list_prepend(0.0, list_transform(c, x -> x * x)), (a, x) -> a + x), 6) AS sq_norm
-        |FROM t ORDER BY vec_id""".stripMargin,
+        |FROM pts ORDER BY vec_id""".stripMargin,
     "q_map_funcs" ->
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |m AS (SELECT doc_id,

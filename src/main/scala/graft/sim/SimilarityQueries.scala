@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Tables, Vec}
+import graft.kmeans.Lloyd
 
 /** Similarity search over the embedding column (north-star surface).
   *
@@ -159,8 +160,8 @@ object SimilarityQueries {
     // zero-shuffle assignment pass + K-group agg.
     "q_ivf_balance" -> { (s, dir) =>
       val pts = Tables.points(s, dir)
-      val cents = graft.kmeans.Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
-      val cells = graft.kmeans.Lloyd.assign(pts, cents)
+      val cents = Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
+      val cells = Lloyd.assign(pts, cents)
         .groupBy(col("cid").cast("long").as("cid"))
         .agg(count(lit(1)).as("n_vecs"))
       val tot = cells.agg(sum("n_vecs").as("n"), max("n_vecs").as("max_n"),
@@ -177,7 +178,7 @@ object SimilarityQueries {
     "q_topk_similar" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       // probe = first vector by vec_id = memoized init centroid 1
-      val probe = graft.kmeans.Lloyd.initCentroidsFor(s, dir, 1).head.coordinates.toSeq
+      val probe = Lloyd.probeFor(s, dir).toSeq
       val pl = array(probe.map(lit): _*)
       emb.select(col("vec_id"), round(Vec.cosine(col("embedding"), pl), 9).as("sim"))
         .orderBy(col("sim").desc, col("vec_id"))
@@ -188,17 +189,16 @@ object SimilarityQueries {
     // search within. Fully deterministic, so the oracle replays it.
     "q_ann_ivf" -> { (s, dir) =>
       val pts = Tables.points(s, dir)
-      val cents = graft.kmeans.Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
-      val probe = graft.kmeans.Lloyd.initCentroidsFor(s, dir, 1).head.coordinates.toSeq
-      // nprobe=2 nearest cells to the probe, computed on the driver (K rows).
-      val probeCells = cents
-        .map(c => (c.cid, {
-          var s0 = 0.0; var i = 0
-          while (i < probe.length) { val d = probe(i) - c.coordinates(i); s0 += d * d; i += 1 }
-          s0
-        }))
+      val cents = Lloyd.initCentroidsFor(s, dir, graft.kmeans.KmeansQueries.K)
+      val probe = Lloyd.probeFor(s, dir).toSeq
+      // nprobe=2 nearest cells to the probe, computed on the driver (K rows)
+      // by the assignment kernel's own distance loop
+      val table = graft.functions.NearestCentroid.Table(cents.map(c => (c.cid, c.coordinates)))
+      val dist = new Array[Double](table.cids.length)
+      table.nearest(probe.toArray, 0, dist)
+      val probeCells = table.cids.toSeq.zip(dist)
         .sortBy { case (cid, d) => (d, cid) }.take(2).map(_._1)
-      val assigned = graft.kmeans.Lloyd.assign(pts, cents)
+      val assigned = Lloyd.assign(pts, cents)
       val pl = array(probe.map(lit): _*)
       assigned.filter(col("cid").isin(probeCells: _*))
         .select(col("vec_id"), round(Vec.cosine(col("coordinates"), pl), 9).as("sim"))
@@ -213,7 +213,7 @@ object SimilarityQueries {
     // distance to any non-bucket row.
     "q_ann_lsh" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val probe = graft.kmeans.Lloyd.initCentroidsFor(s, dir, 1).head.coordinates.toSeq
+      val probe = Lloyd.probeFor(s, dir).toSeq
       // driver-side replica of lshBucket: same plane constants, same
       // sequential left-to-right accumulation as Vec.dot
       val pb = (0 until NPlanes).map { j =>
@@ -263,11 +263,11 @@ object SimilarityQueries {
     // of 256, scan-side codes only.
     "q_ann_pq" -> { (s, dir) =>
       val M = 8; val Dsub = 8; val Kc = 4
-      val train = graft.kmeans.Lloyd.initCentroidsFor(s, dir, Kc)
+      val train = Lloyd.initCentroidsFor(s, dir, Kc)
       val cb: IndexedSeq[IndexedSeq[Array[Double]]] =
         (0 until M).map(m => (0 until Kc).map(c =>
           train(c).coordinates.slice(m * Dsub, (m + 1) * Dsub)))
-      val probe = graft.kmeans.Lloyd.initCentroidsFor(s, dir, 1).head.coordinates
+      val probe = Lloyd.probeFor(s, dir)
       def sq(a: Array[Double], b: Array[Double]): Double = {
         var s0 = 0.0; var i = 0
         while (i < a.length) { val d = a(i) - b(i); s0 += d * d; i += 1 }
@@ -533,10 +533,10 @@ object SimilarityQueries {
     // chains, deterministically on both engines).
     // Output = per-cluster census: size, chunk count, drops, max pair cos.
     "q_semdedup" -> { (s, dir) =>
-      val cents = graft.kmeans.Lloyd.runFor(s, dir, graft.kmeans.KmeansQueries.K,
+      val cents = Lloyd.runFor(s, dir, graft.kmeans.KmeansQueries.K,
         maxIter = 10, eps = 1e-6, grid = Some(7))._1
       val emb = Tables.points(s, dir)
-        .withColumn("cid", graft.kmeans.Lloyd.assignCol(cents, col("coordinates")))
+        .withColumn("cid", Lloyd.assignCol(cents, col("coordinates")))
         .select(col("vec_id"), col("cid"),
           Vec.scale(col("coordinates"),
             lit(1.0) / greatest(Vec.norm(col("coordinates")), lit(1e-12))).as("e"))
@@ -578,18 +578,18 @@ object SimilarityQueries {
     }.mkString(" + ")
 
     val topkSql =
-      """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-        |probe AS (SELECT c AS p FROM t WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1)
+      s"""WITH ${Tables.PointsCte},
+        |${Lloyd.ProbeSql}
         |SELECT t.vec_id,
         |       round(list_dot_product(t.c, probe.p) /
         |             (sqrt(list_dot_product(t.c, t.c)) * sqrt(list_dot_product(probe.p, probe.p))), 9) AS sim
-        |FROM t CROSS JOIN probe
+        |FROM pts t CROSS JOIN probe
         |ORDER BY sim DESC, t.vec_id LIMIT 10""".stripMargin
     val annLshSql =
-      s"""WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-         |probe AS (SELECT c AS p FROM t WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1),
+      s"""WITH ${Tables.PointsCte},
+         |${Lloyd.ProbeSql},
          |pb AS (SELECT ${planesSql(0, NPlanes)} AS b FROM (SELECT p AS c FROM probe)),
-         |bk AS (SELECT vec_id, c, ${planesSql(0, NPlanes)} AS b FROM t)
+         |bk AS (SELECT vec_id, c, ${planesSql(0, NPlanes)} AS b FROM pts)
          |SELECT bk.vec_id,
          |       round(list_dot_product(bk.c, probe.p) /
          |             (sqrt(list_dot_product(bk.c, bk.c)) * sqrt(list_dot_product(probe.p, probe.p))), 9) AS sim
@@ -597,12 +597,11 @@ object SimilarityQueries {
          |WHERE bk.b = pb.b
          |ORDER BY sim DESC, bk.vec_id LIMIT 10""".stripMargin
     val annIvfSql =
-      s"""${graft.kmeans.KmeansQueries.preludeForOracle},
-         |probe AS (SELECT c AS p FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1),
+      s"""${graft.kmeans.KmeansQueries.preludeSql},
+         |${Lloyd.ProbeSql},
          |cells AS (
          |  SELECT i.cid FROM init i CROSS JOIN probe
-         |  ORDER BY list_sum(list_transform(list_zip(i.c, probe.p),
-         |           z -> (z[1]-z[2])*(z[1]-z[2]))), i.cid
+         |  ORDER BY ${Vec.sqDistSql("i.c", "probe.p")}, i.cid
          |  LIMIT 2)
          |SELECT a.vec_id,
          |       round(list_dot_product(p.c, probe.p) /
@@ -613,18 +612,18 @@ object SimilarityQueries {
          |WHERE a.cid IN (SELECT cid FROM cells)
          |ORDER BY sim DESC, a.vec_id LIMIT 10""".stripMargin
     val annPqSql =
-      """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
+      s"""WITH ${Tables.PointsCte},
         |train AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, c
-        |          FROM t WHERE c IS NOT NULL ORDER BY vec_id LIMIT 4),
+        |          FROM ${Lloyd.firstSql(4)} f),
         |ms AS (SELECT unnest(range(0, 8)) AS m),
         |sub AS (SELECT t.vec_id, ms.m, tr.cidx,
         |               list_sum(list_transform(range(1, 9),
         |                 d -> (t.c[ms.m*8 + d] - tr.c[ms.m*8 + d]) *
         |                      (t.c[ms.m*8 + d] - tr.c[ms.m*8 + d]))) AS dist
-        |        FROM t CROSS JOIN ms CROSS JOIN train tr),
+        |        FROM pts t CROSS JOIN ms CROSS JOIN train tr),
         |codes AS (SELECT vec_id, m, cidx AS code FROM sub
         |          QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cidx) = 1),
-        |probe AS (SELECT c AS p FROM t WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1),
+        |${Lloyd.ProbeSql},
         |adc AS (SELECT ms.m, tr.cidx,
         |               list_sum(list_transform(range(1, 9),
         |                 d -> (probe.p[ms.m*8 + d] - tr.c[ms.m*8 + d]) *
@@ -643,7 +642,7 @@ object SimilarityQueries {
       "q_topk_similar" -> topkSql,
       // rides the kmeans assignment prelude (same init cells as q_ann_ivf)
       "q_ivf_balance" ->
-        s"""${graft.kmeans.KmeansQueries.preludeForOracle},
+        s"""${graft.kmeans.KmeansQueries.preludeSql},
            |cells AS (SELECT CAST(cid AS BIGINT) AS cid, count(*) AS n_vecs
            |          FROM assign GROUP BY 1),
            |tot AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS n,
@@ -708,12 +707,12 @@ object SimilarityQueries {
       // kNN join replay: same rounded cosine, window rank == bounded-heap
       // top-3 with (sim desc, id) ties
       "q_knn_join" ->
-        """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-          |q AS (SELECT vec_id AS q_id, c AS qc FROM t WHERE vec_id < 10),
+        s"""WITH ${Tables.PointsCte},
+          |q AS (SELECT vec_id AS q_id, c AS qc FROM pts WHERE vec_id < 10),
           |s AS (SELECT q.q_id, t.vec_id AS n_id,
           |             round(list_dot_product(t.c, q.qc) /
           |                   (sqrt(list_dot_product(t.c, t.c)) * sqrt(list_dot_product(q.qc, q.qc))), 9) AS sim
-          |      FROM t CROSS JOIN q WHERE t.vec_id <> q.q_id)
+          |      FROM pts t CROSS JOIN q WHERE t.vec_id <> q.q_id)
           |SELECT q_id,
           |       CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS BIGINT) AS rank,
           |       n_id, sim
@@ -725,25 +724,24 @@ object SimilarityQueries {
       // list so the fold matches Spark's left-to-right add
       "q_ann_pq" -> annPqSql,
       "q_embed_quantize" ->
-        """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
+        s"""WITH ${Tables.PointsCte},
           |sc AS (SELECT vec_id, c,
-          |              127.0 / greatest(list_max(list_transform(c, x -> abs(x))), 1e-12) AS scale FROM t),
+          |              127.0 / greatest(list_max(list_transform(c, x -> abs(x))), 1e-12) AS scale FROM pts),
           |q AS (SELECT vec_id, c, scale,
           |             list_transform(c, x -> CAST(floor(x * scale + 0.5) AS BIGINT)) AS q FROM sc)
           |SELECT vec_id, round(scale, 9) AS scale_r, q[1] AS q0, q[2] AS q1,
-          |       round(sqrt(list_sum(list_transform(
-          |             list_zip(c, list_transform(q, v -> CAST(v AS DOUBLE) / scale)),
-          |             z -> (z[1]-z[2])*(z[1]-z[2])))), 6) AS dequant_err
+          |       round(sqrt(${Vec.sqDistSql("c", "list_transform(q, v -> CAST(v AS DOUBLE) / scale)")}), 6)
+          |         AS dequant_err
           |FROM q ORDER BY vec_id""".stripMargin,
       // identical in-row energy folds, slices, rounded-9 cosines, and the
       // struct_pack max replaying the packed (sim desc, id asc) argmax
       "q_mrl_trunc" ->
-        """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
+        s"""WITH ${Tables.PointsCte},
           |en AS (SELECT list_sum(list_transform(c, x -> x*x)) AS e_full,
           |              list_sum(list_transform(c[1:8],  x -> x*x)) AS e_8,
           |              list_sum(list_transform(c[1:16], x -> x*x)) AS e_16,
           |              list_sum(list_transform(c[1:32], x -> x*x)) AS e_32
-          |       FROM t),
+          |       FROM pts),
           |ru AS (SELECT 8 AS d, e_8 AS e_d, e_full FROM en
           |       UNION ALL SELECT 16, e_16, e_full FROM en
           |       UNION ALL SELECT 32, e_32, e_full FROM en),
@@ -754,7 +752,7 @@ object SimilarityQueries {
           |              CAST(min(CASE WHEN e_full <= 0.0e0 THEN 1000000
           |                            ELSE CAST(floor(e_d / e_full * 1000000.0e0) AS BIGINT) END) AS BIGINT) AS min_retained_ppm
           |       FROM ru GROUP BY 1),
-          |q AS (SELECT vec_id AS q_id, c AS qc FROM t WHERE vec_id < 5),
+          |q AS (SELECT vec_id AS q_id, c AS qc FROM pts WHERE vec_id < 5),
           |s AS (SELECT q.q_id, t.vec_id AS n_id,
           |             round(list_sum(list_transform(list_zip(t.c, q.qc), z -> z[1]*z[2])) /
           |                   greatest(sqrt(list_sum(list_transform(t.c, x -> x*x))) *
@@ -768,7 +766,7 @@ object SimilarityQueries {
           |             round(list_sum(list_transform(list_zip(t.c[1:32], q.qc[1:32]), z -> z[1]*z[2])) /
           |                   greatest(sqrt(list_sum(list_transform(t.c[1:32], x -> x*x))) *
           |                            sqrt(list_sum(list_transform(q.qc[1:32], x -> x*x))), 1e-12), 9) AS sim_32
-          |      FROM t CROSS JOIN q WHERE t.vec_id <> q.q_id),
+          |      FROM pts t CROSS JOIN q WHERE t.vec_id <> q.q_id),
           |tp AS (SELECT q_id,
           |              max(struct_pack(s := sim_full, nid := -n_id)) AS t_full,
           |              max(struct_pack(s := sim_8,  nid := -n_id)) AS t_8,
@@ -787,12 +785,12 @@ object SimilarityQueries {
           |FROM rt JOIN rca ON rt.d = rca.d ORDER BY rt.d""".stripMargin,
       // identical top-3 (rounded-sim rank), pair stage, micro ILD ledger
       "q_rec_diversity" ->
-        """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-          |q AS (SELECT vec_id AS q_id, c AS qc FROM t WHERE vec_id < 10),
+        s"""WITH ${Tables.PointsCte},
+          |q AS (SELECT vec_id AS q_id, c AS qc FROM pts WHERE vec_id < 10),
           |s AS (SELECT q.q_id, t.vec_id AS n_id,
           |             round(list_dot_product(t.c, q.qc) /
           |                   (sqrt(list_dot_product(t.c, t.c)) * sqrt(list_dot_product(q.qc, q.qc))), 9) AS sim
-          |      FROM t CROSS JOIN q WHERE t.vec_id <> q.q_id),
+          |      FROM pts t CROSS JOIN q WHERE t.vec_id <> q.q_id),
           |r AS (SELECT q_id, n_id FROM s
           |      QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 3),
           |p AS (SELECT a.q_id, a.n_id, b.n_id AS m_id
@@ -801,12 +799,12 @@ object SimilarityQueries {
           |              CAST(sum(CAST(round((1.0 - list_dot_product(ta.c, tb.c) /
           |                (sqrt(list_dot_product(ta.c, ta.c)) * sqrt(list_dot_product(tb.c, tb.c))))
           |                * 1000000.0) AS BIGINT)) AS BIGINT) AS d_sum
-          |       FROM p JOIN t ta ON ta.vec_id = p.n_id JOIN t tb ON tb.vec_id = p.m_id),
+          |       FROM p JOIN pts ta ON ta.vec_id = p.n_id JOIN pts tb ON tb.vec_id = p.m_id),
           |cen AS (SELECT CAST(count(DISTINCT q_id) AS BIGINT) AS n_queries,
           |               CAST(count(*) AS BIGINT) AS n_recs,
           |               CAST(count(DISTINCT n_id) AS BIGINT) AS n_distinct_recs
           |        FROM r),
-          |co AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus FROM t)
+          |co AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus FROM pts)
           |SELECT n_queries, n_recs, n_distinct_recs,
           |       n_distinct_recs * 1000000 // n_corpus AS coverage_ppm,
           |       d_sum // n_pairs AS ild_micro
@@ -814,7 +812,7 @@ object SimilarityQueries {
       // identical md5-parity sign matrix (built once in a CTE) and the
       // same sequential dot fold
       "q_random_projection" ->
-        """WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
+        s"""WITH ${Tables.PointsCte},
           |signs AS (
           |  SELECT CAST(j AS BIGINT) AS j,
           |         list_transform(range(0, 64), i ->
@@ -825,17 +823,17 @@ object SimilarityQueries {
           |SELECT t.vec_id, s.j,
           |       CAST(round(list_sum(list_transform(list_zip(t.c, s.svec),
           |         z -> z[1] * z[2])) * 1000.0) AS BIGINT) AS y_milli
-          |FROM t CROSS JOIN signs s
+          |FROM pts t CROSS JOIN signs s
           |ORDER BY vec_id, j""".stripMargin,
       "q_ann_ivf" -> annIvfSql,
       // mirrors the Spark plan exactly: normalize first, level-1 bucket,
       // refine over-populated buckets with planes 8..15, single dot residual
       "q_dedup_embed" ->
-        s"""WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
+        s"""WITH ${Tables.PointsCte},
            |bkt AS (SELECT vec_id,
            |               list_transform(c, x -> x * (1.0 / greatest(sqrt(list_dot_product(c, c)), 1e-12))) AS e,
            |               ${planesSql(0, NPlanes)} AS b8,
-           |               ${planesSql(NPlanes, 2 * NPlanes)} AS ext8 FROM t),
+           |               ${planesSql(NPlanes, 2 * NPlanes)} AS ext8 FROM pts),
            |keyed AS (SELECT vec_id, e, b8,
            |                 CASE WHEN count(*) OVER (PARTITION BY b8) > $RefineCap
            |                      THEN ext8 ELSE 0 END AS ext
@@ -852,12 +850,7 @@ object SimilarityQueries {
       // non-negative ids) replays semDedupCensus exactly
       "q_semdedup" ->
         s"""${graft.ml.MLQueries.lloydRecursiveCte},
-           |fasg AS (SELECT vec_id, cid FROM (
-           |    SELECT p.vec_id, f.cid,
-           |           row_number() OVER (PARTITION BY p.vec_id ORDER BY
-           |             list_sum(list_transform(list_zip(p.c, f.c),
-           |               z -> (z[1]-z[2])*(z[1]-z[2]))), f.cid) AS rn
-           |    FROM pts p CROSS JOIN fin f) r WHERE rn = 1),
+           |fasg AS (${Lloyd.nearestSql("fin")}),
            |cen AS (SELECT cid, count(*) AS n,
            |               CAST((count(*) + ${SemClusterCap - 1}) // $SemClusterCap AS BIGINT) AS n_chunks
            |        FROM fasg GROUP BY cid),
@@ -879,7 +872,7 @@ object SimilarityQueries {
       // same rounded-mean prototypes; argmin replayed as the row_number
       // pattern with (d, c_label) tie order == Spark's min(struct)
       "q_centroid_classify" ->
-        """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
+        s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
           |                  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           |d AS (SELECT label, u.i AS dim, avg(v[u.i]) AS m
           |      FROM e, UNNEST(generate_series(1, len(v))) AS u(i) GROUP BY 1, 2),
@@ -887,8 +880,7 @@ object SimilarityQueries {
           |      FROM d GROUP BY 1),
           |s AS (SELECT e.vec_id, e.label, c.c_label,
           |             row_number() OVER (PARTITION BY e.vec_id ORDER BY
-          |               round(list_sum(list_transform(list_zip(e.v, c.centroid),
-          |                     z -> (z[1]-z[2])*(z[1]-z[2]))), 9), c.c_label) AS rn
+          |               round(${Vec.sqDistSql("e.v", "c.centroid")}, 9), c.c_label) AS rn
           |      FROM e CROSS JOIN c)
           |SELECT label AS true_label, c_label AS pred_label, count(*) AS n
           |FROM s WHERE rn = 1 GROUP BY 1, 2 ORDER BY true_label, pred_label""".stripMargin

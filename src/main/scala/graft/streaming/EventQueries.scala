@@ -523,13 +523,11 @@ object EventQueries {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
     // the streamed incremental state must land on the batch iter-1 means
     "q_stream_kmeans" ->
-      s"""${graft.kmeans.KmeansQueries.preludeForOracle},
-         |sizes AS (SELECT cid, count(*) AS n_points FROM assign GROUP BY cid)
-         |SELECT a.cid, CAST(u.i - 1 AS INT) AS pos, round(avg(p.c[u.i]), 7) + 0.0 AS m,
-         |       any_value(s.n_points) AS n_points
-         |FROM assign a JOIN pts p USING (vec_id) JOIN sizes s ON s.cid = a.cid,
-         |     UNNEST(generate_series(1, len(p.c))) AS u(i)
-         |GROUP BY a.cid, pos
-         |ORDER BY a.cid, pos""".stripMargin
+      s"""${graft.kmeans.KmeansQueries.preludeSql},
+         |sizes AS (SELECT cid, count(*) AS n_points FROM assign GROUP BY cid),
+         |means AS (${graft.kmeans.Lloyd.meansSql("assign", Some(7))})
+         |SELECT m.cid, CAST(m.i - 1 AS INT) AS pos, m.m, s.n_points
+         |FROM means m JOIN sizes s ON s.cid = m.cid
+         |ORDER BY m.cid, pos""".stripMargin
   )
 }

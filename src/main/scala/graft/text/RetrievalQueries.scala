@@ -231,7 +231,7 @@ object RetrievalQueries {
         .limit(TopN)
       val txt = hits.withColumn("rank_text",
         row_number().over(Window.orderBy(col("n_hits").desc, col("doc_id"))).cast("long"))
-      val probe = graft.kmeans.Lloyd.initCentroidsFor(s, dir, 1).head.coordinates.toSeq
+      val probe = graft.kmeans.Lloyd.probeFor(s, dir).toSeq
       val pl = array(probe.map(lit): _*)
       val sims = Tables.embeddings(s, dir)
         .select(col("vec_id").as("doc_id"),
@@ -389,12 +389,12 @@ object RetrievalQueries {
            |txt AS (SELECT doc_id,
            |               CAST(row_number() OVER (ORDER BY n_hits DESC, doc_id) AS BIGINT) AS rank_text
            |        FROM hits QUALIFY rank_text <= $TopN),
-           |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings),
-           |probe AS (SELECT c AS p FROM e WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1),
+           |${Tables.PointsCte},
+           |${graft.kmeans.Lloyd.ProbeSql},
            |sims AS (SELECT e.vec_id AS doc_id,
            |                round(list_dot_product(e.c, probe.p) /
            |                      (sqrt(list_dot_product(e.c, e.c)) * sqrt(list_dot_product(probe.p, probe.p))), 9) AS sim
-           |         FROM e CROSS JOIN probe),
+           |         FROM pts e CROSS JOIN probe),
            |emb AS (SELECT doc_id,
            |               CAST(row_number() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS rank_emb
            |        FROM sims QUALIFY rank_emb <= $TopN)

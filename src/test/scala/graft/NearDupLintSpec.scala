@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint for the one-spelling rule of the MinHash near-dup pipeline:
-  * each decision is written once per engine, in its owner file, and every
-  * key calls it. A second spelling drifts: the oracle replays one rule
-  * while the Spark side runs another, or one key caps its band buckets
-  * while its neighbour does not. So the tokens of each decision below may
+/** Source lint for the one-spelling rule of the MinHash near-dup pipeline
+  * and of the K-Means oracle: each decision is written once per engine, in
+  * its owner file, and every key calls it. A second spelling drifts: the
+  * oracle replays one rule while the Spark side runs another, one key caps
+  * its band buckets while its neighbour does not, or one replay breaks a
+  * distance tie the other way. So the tokens of each decision below may
   * appear in the code lines of `src/main` only in their owner; anywhere
   * else they fail the build, naming `file:line`. The canary proves the
   * lint bites.
@@ -23,7 +24,14 @@ class NearDupLintSpec extends AnyFunSuite {
       Seq("QUALIFY count(*) OVER", "PARTITION BY band, band_key",
         "PARTITION BY n_words, first_word", "\"n_bucket\"", "\"n_blk\"")),
     Rule("the pair ⋈ shingle-sets Jaccard verify", "TextDedup.scala",
-      Seq(".as(\"sh_a\")", "array_union(col(\"sh_a\")", "JOIN ds a", "list_concat(a.sh, b.sh)")))
+      Seq(".as(\"sh_a\")", "array_union(col(\"sh_a\")", "JOIN ds a", "list_concat(a.sh, b.sh)")),
+    Rule("the K-Means points CTE", "Tables.scala", Seq("AS DOUBLE[]) AS c FROM embeddings")),
+    Rule("the first-n points by vec_id and the probe", "Lloyd.scala",
+      Seq("IS NOT NULL ORDER BY vec_id LIMIT", "initCentroidsFor(s, dir, 1)")),
+    Rule("the squared distance", "Vec.scala", Seq("z -> (z[1]-z[2])")),
+    Rule("the nearest-centroid tie-break", "Lloyd.scala", Seq("ORDER BY d2, cid) = 1")),
+    Rule("the per-cid per-dimension mean", "Lloyd.scala", Seq("avg(p.c[u.i])")),
+    Rule("the ARI pair-count fold", "KmeansQueries.scala", Seq("nij * (nij - 1)")))
 
   /** `file:line: text` for every token of `rule` in the code lines of
     * `lines` of `file`, unless `file` is the rule's owner.
@@ -53,15 +61,24 @@ class NearDupLintSpec extends AnyFunSuite {
       "  val bigram = \"list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])\"",
       "  val census = \"QUALIFY count(*) OVER (PARTITION BY band, band_key) <= 1000\"",
       "  def verify(p: DataFrame, d: DataFrame) = p.join(d.select(col(\"doc_id\").as(\"doc_a\"), col(\"sh\").as(\"sh_a\")), \"doc_a\")",
-      "  // a comment may name QUALIFY count(*) OVER and ws[i+2]",
+      "  val pts = \"WITH pts AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c FROM embeddings)\"",
+      "  val probe = \"probe AS (SELECT c AS p FROM pts WHERE c IS NOT NULL ORDER BY vec_id LIMIT 1)\"",
+      "  val d2 = \"list_sum(list_transform(list_zip(p.c, i.c), z -> (z[1]-z[2])*(z[1]-z[2])))\"",
+      "  val asg = \"QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1\"",
+      "  val mean = \"round(avg(p.c[u.i]), 7) + 0.0 AS m\"",
+      "  val sij = expr(\"nij * (nij - 1) DIV 2\")",
+      "  val probeVec = Lloyd.initCentroidsFor(s, dir, 1).head.coordinates",
+      "  // a comment may name QUALIFY count(*) OVER, ws[i+2] and z -> (z[1]-z[2])",
       "}")
-    val file = "src/main/scala/graft/text/CorpusQueries.scala"
-    def flagged(f: String) = Rules.flatMap(r => violations(r, f, canary)).map(_.takeWhile(_ != ' ')).sorted
-    assert(flagged(file) == Seq(s"$file:2:", s"$file:4:", s"$file:5:"))
-    // an owner may spell its own decision, and only its own
-    assert(flagged("src/main/scala/graft/text/TextQueries.scala") ==
-      Seq("src/main/scala/graft/text/TextQueries.scala:4:", "src/main/scala/graft/text/TextQueries.scala:5:"))
-    assert(flagged("src/main/scala/graft/text/TextDedup.scala") ==
-      Seq("src/main/scala/graft/text/TextDedup.scala:2:"))
+    def flagged(f: String): Seq[Int] = Rules.flatMap(r => violations(r, s"src/main/scala/graft/$f", canary))
+      .map(_.stripPrefix(s"src/main/scala/graft/$f:").takeWhile(_ != ':').toInt).sorted
+    val all = Seq(2, 4, 5) ++ (6 to 12)
+    assert(flagged("text/CorpusQueries.scala") == all)
+    // an owner may spell its own decisions, and only its own
+    Seq("text/TextQueries.scala" -> Seq(2), "text/TextDedup.scala" -> Seq(4, 5),
+      "core/Tables.scala" -> Seq(6), "kmeans/Lloyd.scala" -> Seq(7, 9, 10, 12),
+      "core/Vec.scala" -> Seq(8), "kmeans/KmeansQueries.scala" -> Seq(11)).foreach {
+      case (owner, lines) => assert(flagged(owner) == all.diff(lines), owner)
+    }
   }
 }
