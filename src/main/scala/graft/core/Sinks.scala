@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Registered as round-trip queries: write, read back, summarize — so the
   * oracle checks the whole write/read cycle, not just the plan.
   */
-object Sinks {
+object Sinks extends graft.SparkEntry.Module {
 
   private def tmpDir(name: String): String = {
     val d = new java.io.File(s"target/sink_tmp/$name")

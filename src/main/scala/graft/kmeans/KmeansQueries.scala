@@ -14,7 +14,7 @@ import graft.core.{Tables, Vec}
   * init is deterministic (first K non-null points by vec_id) so both
   * engines compute the identical clustering.
   */
-object KmeansQueries {
+object KmeansQueries extends graft.SparkEntry.Module {
 
   val K = 5
 

@@ -3,12 +3,12 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Vec}
+import graft.core.{Hash, Tables, Vec}
 import graft.kmeans.{KmeansQueries, Lloyd, VecMeanAgg}
 
 /** The composite K-Means entries (SURVEY.md §2.10-2.11) + MLlib cross-check.
   */
-object MLQueries {
+object MLQueries extends graft.SparkEntry.Module {
 
   /** Memoized grid-snapped top principal component of the embedding table:
     * two unrolled power steps on the centered covariance, every stage
@@ -369,8 +369,7 @@ object MLQueries {
         .crossJoin(broadcast(nDocs))
         .select(col("doc_id"), col("n_docs"),
           explode(sequence(lit(1L), lit(4L))).as("k"))
-        .withColumn("cand", pmod(graft.text.TextQueries.h32(
-          concat(lit("neg:"), col("doc_id").cast("string"),
+        .withColumn("cand", pmod(Hash.prefix(concat(lit("neg:"), col("doc_id").cast("string"),
             lit(":"), col("k").cast("string"))), col("n_docs")))
         .withColumn("bumped", (col("cand") === col("doc_id")).cast("long"))
         .withColumn("neg_id",
@@ -396,8 +395,8 @@ object MLQueries {
       Tables.documents(s, dir)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .select(col("doc_id"),
-          pmod(graft.text.TextQueries.h32(concat(lit("fh:"), word)), lit(16L)).as("dim"),
-          (pmod(graft.text.TextQueries.h32(concat(lit("sg:"), word)), lit(2L)) * 2 - 1)
+          pmod(Hash.prefix(concat(lit("fh:"), word)), lit(16L)).as("dim"),
+          (pmod(Hash.prefix(concat(lit("sg:"), word)), lit(2L)) * 2 - 1)
             .as("sign"))
         .groupBy("doc_id", "dim")
         .agg(sum("sign").as("val"))
@@ -482,10 +481,10 @@ object MLQueries {
         |         AS new_center_milli
         |FROM a ORDER BY pos""".stripMargin,
     "q_negative_sampling" ->
-      """WITH n AS (SELECT count(*) AS n_docs FROM documents),
+      s"""WITH n AS (SELECT count(*) AS n_docs FROM documents),
         |p AS (SELECT doc_id, k, n_docs,
-        |             ('0x' || substr(md5('neg:' || CAST(doc_id AS VARCHAR) || ':'
-        |                || CAST(k AS VARCHAR)), 1, 8))::BIGINT % n_docs AS cand
+        |             ${Hash.prefixSql("""'neg:' || CAST(doc_id AS VARCHAR) || ':'
+        |                || CAST(k AS VARCHAR)""")} % n_docs AS cand
         |      FROM documents CROSS JOIN n CROSS JOIN (VALUES (1), (2), (3), (4)) ks(k)),
         |q AS (SELECT CAST(k AS BIGINT) AS k,
         |             CAST(cand = doc_id AS BIGINT) AS bumped,
@@ -640,10 +639,10 @@ object MLQueries {
         |GROUP BY doc_id, u.word
         |ORDER BY doc_id, u.word""".stripMargin,
     "q_feature_hash" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
+      s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
         |h AS (SELECT doc_id,
-        |             ('0x' || substr(md5('fh:' || word), 1, 8))::BIGINT % 16 AS dim,
-        |             (('0x' || substr(md5('sg:' || word), 1, 8))::BIGINT % 2) * 2 - 1 AS sign
+        |             ${Hash.prefixSql("'fh:' || word")} % 16 AS dim,
+        |             (${Hash.prefixSql("'sg:' || word")} % 2) * 2 - 1 AS sign
         |      FROM w)
         |SELECT doc_id, dim, CAST(sum(sign) AS BIGINT) AS val
         |FROM h GROUP BY doc_id, dim ORDER BY doc_id, dim""".stripMargin

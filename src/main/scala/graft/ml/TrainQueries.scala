@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Distributed model-TRAINING primitives: the two aggregates a
   * tree/linear-model trainer actually distributes — histogram-based best
@@ -27,7 +27,7 @@ import graft.core.Tables
   * w=0 the logistic residual (y - 1/2) makes grad_j = 1/2·Σ sgn·x_j a pure
   * integer sum in micro-units.
   */
-object TrainQueries {
+object TrainQueries extends graft.SparkEntry.Module {
 
   /** Split-candidate bins per feature (l_quantity DIV 5 → 0..10 bins;
     * discount cents → 0..10): a fixed histogram, the GBDT trick that
@@ -264,8 +264,7 @@ object TrainQueries {
       // this list is the one place to extend.
       val Langs = Seq("de", "en", "es", "fr", "zh")
       val docs = Tables.documents(s, dir)
-        .withColumn("is_train",
-          pmod(graft.text.TextQueries.h32(concat(lit("nb:"), col("doc_id"))), lit(2L)))
+        .withColumn("is_train", pmod(Hash.prefix(concat(lit("nb:"), col("doc_id"))), lit(2L)))
       val trainTok = docs.filter(col("is_train") === 1)
         .select(col("lang"), explode(split(col("text"), " ")).as("term"))
         .filter(length(col("term")) > 0)
@@ -535,9 +534,9 @@ object TrainQueries {
         |ORDER BY ru.item""".stripMargin,
     // identical md5 split, micro-nat rounding and packed argmax
     "q_naive_bayes" ->
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT doc_id, lang, text,
-        |         ('0x' || substr(md5('nb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS is_train
+        |         ${Hash.prefixSql("'nb:' || CAST(doc_id AS VARCHAR)")} % 2 AS is_train
         |  FROM documents),
         |ttok AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS term

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Hash
+
 /** Multimodal columns (north-star): image/audio/video as opaque `binary`
   * columns with typed metadata, processed by per-partition batch functions.
   *
@@ -16,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * The `documents.text` bytes stand in for media payloads.
   */
-object BlobQueries {
+object BlobQueries extends graft.SparkEntry.Module {
 
   /** A media row: opaque payload + typed metadata. */
   case class Blob(doc_id: Long, payload: Array[Byte], kind: String, n_bytes: Long)
@@ -262,7 +264,7 @@ object BlobQueries {
     // media lakehouse runs before training (a corrupted shard silently
     // poisons a run; the fix is quarantine, not retry). The manifest
     // digest is md5 of the payload bytes with a DETERMINISTIC ~2% fault
-    // injection (md5 of a tagged copy when h32(doc_id) % 50 == 0 — the
+    // injection (md5 of a tagged copy when Hash.prefix(doc_id) % 50 == 0 — the
     // q_forward_fill injected-fault precedent, so both engines plant
     // identical corruption); the audit recomputes the digest from bytes
     // and censuses mismatches per source. One narrow map over payloads +
@@ -271,7 +273,7 @@ object BlobQueries {
     "q_blob_integrity" -> { (s, dir) =>
       val d = graft.core.Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("text"),
-          pmod(graft.text.TextQueries.h32(concat(lit("chk:"), col("doc_id"))), lit(50L))
+          pmod(Hash.prefix(concat(lit("chk:"), col("doc_id"))), lit(50L))
             .as("h"))
         .withColumn("manifest_dg",
           when(col("h") === 0, md5(concat(lit("corrupt:"), col("text"))))
@@ -389,9 +391,9 @@ object BlobQueries {
         |FROM c CROSS JOIN e""".stripMargin,
     // identical md5-over-bytes digests and fault-injection rule
     "q_blob_integrity" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, source, text,
-        |         ('0x' || substr(md5('chk:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS h
+        |         ${Hash.prefixSql("'chk:' || CAST(doc_id AS VARCHAR)")} % 50 AS h
         |  FROM documents),
         |m AS (SELECT source,
         |             CASE WHEN h = 0 THEN md5('corrupt:' || text) ELSE md5(text) END AS manifest_dg,

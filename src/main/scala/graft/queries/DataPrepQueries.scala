@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.text.TextQueries
+import graft.core.{Hash, Tables}
 
 /** Data-maintenance / preparation operators (north-star surface): CDC
   * merge-upsert, time-series forward fill, conditional (FILTER-style)
@@ -18,7 +17,7 @@ import graft.text.TextQueries
   * else is a narrow map plus either a window (one partition-key shuffle) or
   * a tiny aggregate.
   */
-object DataPrepQueries {
+object DataPrepQueries extends graft.SparkEntry.Module {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -185,7 +184,7 @@ object DataPrepQueries {
     // each group once.
     "q_group_sample" -> { (s, dir) =>
       val w = Window.partitionBy("source")
-        .orderBy(TextQueries.h32(concat(lit("samp:"), col("doc_id").cast("string"))), col("doc_id"))
+        .orderBy(Hash.prefix(concat(lit("samp:"), col("doc_id").cast("string"))), col("doc_id"))
       Tables.documents(s, dir)
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= 5)
@@ -238,8 +237,8 @@ object DataPrepQueries {
     // data-mixture config review reads. Pure narrow map + 20-group agg; at
     // 100 TB the same query IS the mixer (swap the report agg for a write).
     "q_mix_report" -> { (s, dir) =>
-      val rate = lit(20) + pmod(TextQueries.h32(col("source")), lit(61))
-      val bucket = pmod(TextQueries.h32(
+      val rate = lit(20) + pmod(Hash.prefix(col("source")), lit(61))
+      val bucket = pmod(Hash.prefix(
         concat(lit("mix:"), col("doc_id").cast("string"), lit(":"), col("source"))), lit(100))
       Tables.documents(s, dir)
         .select(col("source"), rate.as("rate"), (bucket < rate).cast("long").as("kept"))
@@ -557,7 +556,7 @@ object DataPrepQueries {
     "q_table_hash" -> { (s, dir) =>
       def fp(df: org.apache.spark.sql.DataFrame, name: String,
              key: org.apache.spark.sql.Column) =
-        df.select(TextQueries.h32(key).as("h"))
+        df.select(Hash.prefix(key).as("h"))
           .agg(count(lit(1)).as("n_rows"), sum("h").as("hash_sum"),
             expr("bit_xor(h)").as("hash_xor"))
           .select(lit(name).as("table_name"), col("n_rows"),
@@ -680,7 +679,7 @@ object DataPrepQueries {
     // (1e-12 of a ~1e-10-gapped key space) so last-ulp libm ln()
     // differences can never flip the selection.
     "q_weighted_sample" -> { (s, dir) =>
-      val h = TextQueries.h32(concat(lit("ws:"), col("o_orderkey").cast("string")))
+      val h = Hash.prefix(concat(lit("ws:"), col("o_orderkey").cast("string")))
       val u = (pmod(h, lit(1000000L)).cast("double") + lit(0.5)) / lit(1000000.0)
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice").as("w"), u.as("u"))
@@ -768,9 +767,7 @@ object DataPrepQueries {
             .select("o_orderstatus", "o_orderkey", "o_totalprice"), col("o_orderkey"))
         .select(col("o_orderstatus").as("grp"), col("o_orderkey"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
-        .withColumn("h",
-          conv(substring(md5(concat(lit("rs:"), col("o_orderkey").cast("string"))), 1, 14),
-            16, 10).cast("long"))
+        .withColumn("h", Hash.prefix(concat(lit("rs:"), col("o_orderkey").cast("string")), 14))
       val sk = rows.groupBy("grp").agg(bottomK(col("h")).as("hs"))
         .select(col("grp"), explode(col("hs")).as("h"))
       rows.join(broadcast(sk), Seq("grp", "h"))
@@ -873,8 +870,7 @@ object DataPrepQueries {
       val scale = 10L // 1/eps, eps = 0.1
       Tables.events(s, dir)
         .groupBy("event_type").agg(count(lit(1)).as("n_true"))
-        .withColumn("u",
-          pmod(TextQueries.h32(concat(lit("dp:"), col("event_type"))), lit(2001L)) - 1000L)
+        .withColumn("u", pmod(Hash.prefix(concat(lit("dp:"), col("event_type"))), lit(2001L)) - 1000L)
         .withColumn("noise",
           expr(s"CASE WHEN u >= 0 THEN u * $scale DIV 1000 ELSE -((-u) * $scale DIV 1000) END"))
         .select(col("event_type"), col("n_true"), col("noise"),
@@ -966,10 +962,10 @@ object DataPrepQueries {
         |       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 1e2 AS revenue
         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
     "q_group_sample" ->
-      """SELECT source,
+      s"""SELECT source,
         |       CAST(row_number() OVER (
         |         PARTITION BY source
-        |         ORDER BY ('0x' || substr(md5('samp:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT, doc_id)
+        |         ORDER BY ${Hash.prefixSql("'samp:' || CAST(doc_id AS VARCHAR)")}, doc_id)
         |         AS BIGINT) AS rn,
         |       doc_id
         |FROM documents
@@ -1154,10 +1150,10 @@ object DataPrepQueries {
         |WHERE cum * 8 >= split_no * n
         |GROUP BY split_no ORDER BY split_no""".stripMargin,
     "q_mix_report" ->
-      """WITH d AS (SELECT source,
-        |                  20 + (('0x' || substr(md5(source), 1, 8))::BIGINT % 61) AS rate,
-        |                  CAST((('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR) || ':' || source), 1, 8))::BIGINT % 100
-        |                       < 20 + (('0x' || substr(md5(source), 1, 8))::BIGINT % 61)) AS BIGINT) AS kept
+      s"""WITH d AS (SELECT source,
+        |                  20 + (${Hash.prefixSql("source")} % 61) AS rate,
+        |                  CAST((${Hash.prefixSql("'mix:' || CAST(doc_id AS VARCHAR) || ':' || source")} % 100
+        |                       < 20 + (${Hash.prefixSql("source")} % 61)) AS BIGINT) AS kept
         |           FROM documents)
         |SELECT source, min(rate) AS rate, count(*) AS n_docs,
         |       CAST(sum(kept) AS BIGINT) AS n_kept,
@@ -1192,15 +1188,15 @@ object DataPrepQueries {
         |       round(regr_r2(y, x), 6) AS r2
         |FROM d GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
     "q_table_hash" ->
-      """WITH o AS (SELECT ('0x' || substr(md5(concat_ws('|',
+      s"""WITH o AS (SELECT ${Hash.prefixSql("""concat_ws('|',
         |             o_orderkey, o_custkey, o_orderstatus,
         |             CAST(round(o_totalprice * 100) AS BIGINT),
-        |             epoch_us(CAST(o_orderdate AS TIMESTAMP)), o_orderpriority)), 1, 8))::BIGINT AS h
+        |             epoch_us(CAST(o_orderdate AS TIMESTAMP)), o_orderpriority)""")} AS h
         |      FROM orders),
-        |c AS (SELECT ('0x' || substr(md5(concat_ws('|',
+        |c AS (SELECT ${Hash.prefixSql("""concat_ws('|',
         |             c_custkey, c_name, c_nationkey,
         |             CAST(round(c_acctbal * 100) AS BIGINT),
-        |             c_mktsegment)), 1, 8))::BIGINT AS h
+        |             c_mktsegment)""")} AS h
         |      FROM customer)
         |SELECT 'customer' AS table_name, count(*) AS n_rows,
         |       CAST(sum(h) AS BIGINT) AS hash_sum, bit_xor(h) AS hash_xor FROM c
@@ -1233,8 +1229,8 @@ object DataPrepQueries {
         |FROM customer c JOIN env USING (c_nationkey)
         |ORDER BY c_custkey""".stripMargin,
     "q_weighted_sample" ->
-      """WITH t AS (SELECT o_orderkey, o_totalprice AS w,
-        |                  (('0x' || substr(md5('ws:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
+      s"""WITH t AS (SELECT o_orderkey, o_totalprice AS w,
+        |                  (${Hash.prefixSql("'ws:' || CAST(o_orderkey AS VARCHAR)")}
         |                    % 1000000 + 0.5) / 1000000.0 AS u
         |           FROM orders),
         |k AS (SELECT o_orderkey, w, ln(u) / w AS key FROM t)
@@ -1289,10 +1285,10 @@ object DataPrepQueries {
     // bottom-k-distinct + bounded tie-break exactly (the 16th rank's hash
     // is always inside the 16 smallest distinct hashes)
     "q_reservoir_sample" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT o_orderstatus AS grp, o_orderkey,
         |         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |         ('0x' || substr(md5('rs:' || CAST(o_orderkey AS VARCHAR)), 1, 14))::BIGINT AS h
+        |         ${Hash.prefixSql("'rs:' || CAST(o_orderkey AS VARCHAR)", 14)} AS h
         |  FROM orders),
         |rk AS (SELECT grp, o_orderkey, price_cents,
         |              row_number() OVER (PARTITION BY grp ORDER BY h, o_orderkey) AS rk
@@ -1348,9 +1344,9 @@ object DataPrepQueries {
         |FROM dev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // deterministic md5 noise stand-in, symmetric truncating division
     "q_dp_count" ->
-      """WITH c AS (SELECT event_type, count(*) AS n_true FROM events GROUP BY 1),
+      s"""WITH c AS (SELECT event_type, count(*) AS n_true FROM events GROUP BY 1),
         |u AS (SELECT event_type, n_true,
-        |             ('0x' || substr(md5('dp:' || event_type), 1, 8))::BIGINT % 2001 - 1000 AS u
+        |             ${Hash.prefixSql("'dp:' || event_type")} % 2001 - 1000 AS u
         |      FROM c),
         |nz AS (SELECT event_type, n_true,
         |              CASE WHEN u >= 0 THEN u * 10 // 1000

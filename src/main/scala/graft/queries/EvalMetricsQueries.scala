@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.text.TextQueries.h32
+import graft.core.{Hash, Tables}
 
 /** Classifier / ranker evaluation operators: the confusion-matrix family
   * (per-class precision/recall/F1, Cohen's kappa agreement), threshold
@@ -34,7 +33,7 @@ import graft.text.TextQueries.h32
   * the repo-wide deterministic-randomness idiom — same bytes in DuckDB),
   * standing in for a model-output column joined in at 100 TB.
   */
-object EvalMetricsQueries {
+object EvalMetricsQueries extends graft.SparkEntry.Module {
 
   /** 32-bit md5-prefix hash, the cross-engine deterministic random. */
   /** Hash-perturbed prediction over the embeddings labels: FlipPct% of
@@ -47,12 +46,11 @@ object EvalMetricsQueries {
   private def labeled(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast("long").as("actual"))
-    e.withColumn("flip",
-        pmod(h32(concat(lit("pred:"), col("vec_id"))), lit(100)) < FlipPct)
+    e.withColumn("flip", pmod(Hash.prefix(concat(lit("pred:"), col("vec_id"))), lit(100)) < FlipPct)
       .withColumn("pred",
         when(col("flip"),
           pmod(col("actual") + lit(1) +
-            pmod(h32(concat(lit("tgt:"), col("vec_id"))), lit(9)), lit(10)))
+            pmod(Hash.prefix(concat(lit("tgt:"), col("vec_id"))), lit(9)), lit(10)))
           .otherwise(col("actual")))
       .select(col("vec_id"), col("actual"), col("pred"))
   }
@@ -66,7 +64,7 @@ object EvalMetricsQueries {
       .select((col("o_orderstatus") === "F").cast("long").as("pos"),
         col("o_orderkey"))
       .withColumn("score_ppm",
-        pmod(h32(concat(lit("score:"), col("o_orderkey"))), lit(700000)) +
+        pmod(Hash.prefix(concat(lit("score:"), col("o_orderkey"))), lit(700000)) +
           col("pos") * lit(300000))
       .withColumn("bin", expr("score_ppm DIV 100000"))
       .groupBy("bin")
@@ -181,9 +179,9 @@ object EvalMetricsQueries {
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), least(expr("n_chars DIV 150"), lit(3)).as("ra"))
         .withColumn("rb",
-          when(pmod(h32(concat(lit("rat:"), col("doc_id"))), lit(100)) < 25,
+          when(pmod(Hash.prefix(concat(lit("rat:"), col("doc_id"))), lit(100)) < 25,
             pmod(col("ra") + lit(1) +
-              pmod(h32(concat(lit("rb:"), col("doc_id"))), lit(3)), lit(4)))
+              pmod(Hash.prefix(concat(lit("rb:"), col("doc_id"))), lit(3)), lit(4)))
             .otherwise(col("ra")))
       val t = d.groupBy("ra", "rb").agg(count(lit(1)).as("n"))
       // pe from the margins joined on class (full outer: a class one rater
@@ -356,8 +354,8 @@ object EvalMetricsQueries {
     "q_position_bias" -> { (s, dir) =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"))
-        .withColumn("pos", pmod(h32(concat(lit("pos:"), col("event_id"))), lit(10L)) + 1)
-        .withColumn("h", pmod(h32(concat(lit("clk:"), col("event_id"))), lit(1000L)))
+        .withColumn("pos", pmod(Hash.prefix(concat(lit("pos:"), col("event_id"))), lit(10L)) + 1)
+        .withColumn("h", pmod(Hash.prefix(concat(lit("clk:"), col("event_id"))), lit(1000L)))
         .withColumn("click", (col("h") * col("pos") < 300).cast("long"))
       ev.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("click").as("clicks"),
@@ -371,19 +369,19 @@ object EvalMetricsQueries {
 
   def oracleSql: Map[String, String] = Map(
     "q_confusion_matrix" ->
-      """WITH l AS (
+      s"""WITH l AS (
         |  SELECT label::BIGINT AS actual,
-        |         CASE WHEN ('0x' || substr(md5('pred:' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 20
-        |              THEN (label + 1 + ('0x' || substr(md5('tgt:' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 9) % 10
+        |         CASE WHEN ${Hash.prefixSql("'pred:' || CAST(vec_id AS VARCHAR)")} % 100 < 20
+        |              THEN (label + 1 + ${Hash.prefixSql("'tgt:' || CAST(vec_id AS VARCHAR)")} % 9) % 10
         |              ELSE label::BIGINT END AS pred
         |  FROM embeddings)
         |SELECT actual, pred, CAST(count(*) AS BIGINT) AS n
         |FROM l GROUP BY 1, 2 ORDER BY actual, pred""".stripMargin,
     "q_f1_eval" ->
-      """WITH l AS (
+      s"""WITH l AS (
         |  SELECT label::BIGINT AS actual,
-        |         CASE WHEN ('0x' || substr(md5('pred:' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 20
-        |              THEN (label + 1 + ('0x' || substr(md5('tgt:' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 9) % 10
+        |         CASE WHEN ${Hash.prefixSql("'pred:' || CAST(vec_id AS VARCHAR)")} % 100 < 20
+        |              THEN (label + 1 + ${Hash.prefixSql("'tgt:' || CAST(vec_id AS VARCHAR)")} % 9) % 10
         |              ELSE label::BIGINT END AS pred
         |  FROM embeddings),
         |cm AS (SELECT actual, pred, count(*) AS n FROM l GROUP BY 1, 2),
@@ -410,9 +408,9 @@ object EvalMetricsQueries {
         |       acc_ppm
         |FROM p ORDER BY class""".stripMargin,
     "q_pr_curve" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT CAST(o_orderstatus = 'F' AS BIGINT) AS pos,
-        |         (('0x' || substr(md5('score:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 700000
+        |         (${Hash.prefixSql("'score:' || CAST(o_orderkey AS VARCHAR)")} % 700000
         |          + CAST(o_orderstatus = 'F' AS BIGINT) * 300000) // 100000 AS bin
         |  FROM orders),
         |b AS (SELECT bin, CAST(sum(pos) AS BIGINT) AS np, CAST(sum(1 - pos) AS BIGINT) AS nn
@@ -426,9 +424,9 @@ object EvalMetricsQueries {
         |       tp * 1000000 // p_tot AS rec_ppm
         |FROM c ORDER BY thr_bin""".stripMargin,
     "q_roc_points" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT CAST(o_orderstatus = 'F' AS BIGINT) AS pos,
-        |         (('0x' || substr(md5('score:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 700000
+        |         (${Hash.prefixSql("'score:' || CAST(o_orderkey AS VARCHAR)")} % 700000
         |          + CAST(o_orderstatus = 'F' AS BIGINT) * 300000) // 100000 AS bin
         |  FROM orders),
         |b AS (SELECT bin, CAST(sum(pos) AS BIGINT) AS np, CAST(sum(1 - pos) AS BIGINT) AS nn
@@ -456,11 +454,11 @@ object EvalMetricsQueries {
         |      FROM tot)
         |SELECT n, chi2, dof, round(sqrt(chi2 / (n * (minrc - 1))), 6) AS v FROM a""".stripMargin,
     "q_cohens_kappa" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT least(n_chars // 150, 3) AS ra, doc_id FROM documents),
         |r AS (SELECT ra,
-        |             CASE WHEN ('0x' || substr(md5('rat:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 25
-        |                  THEN (ra + 1 + ('0x' || substr(md5('rb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3) % 4
+        |             CASE WHEN ${Hash.prefixSql("'rat:' || CAST(doc_id AS VARCHAR)")} % 100 < 25
+        |                  THEN (ra + 1 + ${Hash.prefixSql("'rb:' || CAST(doc_id AS VARCHAR)")} % 3) % 4
         |                  ELSE ra END AS rb
         |      FROM d),
         |t AS (SELECT ra, rb, count(*) AS n FROM r GROUP BY 1, 2),
@@ -499,10 +497,10 @@ object EvalMetricsQueries {
         |FROM a""".stripMargin,
     // identical binarization and the same per-factor-sqrt IEEE tree
     "q_mcc_eval" ->
-      """WITH l AS (
+      s"""WITH l AS (
         |  SELECT label::BIGINT AS actual,
-        |         CASE WHEN ('0x' || substr(md5('pred:' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 20
-        |              THEN (label + 1 + ('0x' || substr(md5('tgt:' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 9) % 10
+        |         CASE WHEN ${Hash.prefixSql("'pred:' || CAST(vec_id AS VARCHAR)")} % 100 < 20
+        |              THEN (label + 1 + ${Hash.prefixSql("'tgt:' || CAST(vec_id AS VARCHAR)")} % 9) % 10
         |              ELSE label::BIGINT END AS pred
         |  FROM embeddings),
         |b AS (SELECT CAST(actual < 5 AS BIGINT) AS y, CAST(pred < 5 AS BIGINT) AS p FROM l),
@@ -566,10 +564,10 @@ object EvalMetricsQueries {
         |FROM a""".stripMargin,
     // integer click rule h*pos < 300 mirrors the Spark side exactly
     "q_position_bias" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type,
-        |         ('0x' || substr(md5('pos:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 10 + 1 AS pos,
-        |         ('0x' || substr(md5('clk:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS h
+        |         ${Hash.prefixSql("'pos:' || CAST(event_id AS VARCHAR)")} % 10 + 1 AS pos,
+        |         ${Hash.prefixSql("'clk:' || CAST(event_id AS VARCHAR)")} % 1000 AS h
         |  FROM events),
         |c AS (SELECT event_type, pos, CAST(h * pos < 300 AS BIGINT) AS click FROM ev),
         |g AS (SELECT event_type, count(*) AS n, CAST(sum(click) AS BIGINT) AS clicks,

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.text.TextQueries
+import graft.core.{Hash, Tables}
 
 /** Data-quality / dataset-curation operators: referential-integrity audit,
   * per-source quality-gate yield, deterministic stratified splits, and
@@ -18,7 +17,7 @@ import graft.text.TextQueries
   * here shuffles text bodies except the per-row derived columns they
   * reduce to.
   */
-object QualityQueries {
+object QualityQueries extends graft.SparkEntry.Module {
 
   /** Entropy alphabet: lowercase letters + space. Fixed and tiny, so the
     * per-doc histogram is 27 narrow `replace` scans (O(27·len) per row, no
@@ -27,7 +26,7 @@ object QualityQueries {
   val Alphabet: Seq[String] = ('a' to 'z').map(_.toString) :+ " "
 
   private def h100(tag: String, k: Column): Column =
-    pmod(TextQueries.h32(concat(lit(tag), k.cast("string"))), lit(100L))
+    pmod(Hash.prefix(concat(lit(tag), k.cast("string"))), lit(100L))
 
   /** q_blocklist_gate's policy list — compile-time constant, word-exact. */
   val BlockList: Seq[String] = Seq("dup", "slow", "leak")
@@ -81,9 +80,9 @@ object QualityQueries {
     // even at zero overlap). Self-eval: the true N rides beside.
     "q_capture_recapture" -> { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"))
-        .withColumn("in1", (pmod(TextQueries.h32(
+        .withColumn("in1", (pmod(Hash.prefix(
           concat(lit("cap1:"), col("doc_id").cast("string"))), lit(100L)) < 30).cast("long"))
-        .withColumn("in2", (pmod(TextQueries.h32(
+        .withColumn("in2", (pmod(Hash.prefix(
           concat(lit("cap2:"), col("doc_id").cast("string"))), lit(100L)) < 40).cast("long"))
       // coalesce: on an EMPTY universe sum() is NULL on both engines —
       // pin the capture counts to 0 so the estimates stay total
@@ -116,8 +115,7 @@ object QualityQueries {
     "q_deletion_impact" -> { (s, dir) =>
       val cohort = Tables.customer(s, dir)
         .select(col("c_custkey"))
-        .filter(pmod(TextQueries.h32(
-          concat(lit("del:"), col("c_custkey").cast("string"))), lit(100L)) < 10)
+        .filter(pmod(Hash.prefix(concat(lit("del:"), col("c_custkey").cast("string"))), lit(100L)) < 10)
       val ordImpact = Tables.orders(s, dir)
         .join(broadcast(cohort), col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"))
@@ -205,7 +203,7 @@ object QualityQueries {
     // NS: quality-proportional rejection sampling — the CCNet/Gopher-style
     // corpus downsampler: each document is kept with probability equal to
     // its quality score, implemented as the pure integer-threshold variate
-    // pmod(h32("rej:" || doc_id), 1e6) < quality_ppm (the SCALE.md design
+    // pmod(Hash.prefix("rej:" || doc_id), 1e6) < quality_ppm (the SCALE.md design
     // rule: no RNG, no sampling state — re-runs, retries and both engines
     // keep the SAME documents, and acceptance is a per-row FILTER that
     // fuses into the scan, zero shuffle before the census). Quality is the
@@ -226,7 +224,7 @@ object QualityQueries {
           "CASE WHEN n_words = 0 THEN CAST(0 AS BIGINT) " +
             "ELSE least(n_words, 100) * (n_words - n_stop) * 10000 DIV n_words END"))
         .withColumn("accept",
-          (pmod(TextQueries.h32(concat(lit("rej:"), col("doc_id").cast("string"))),
+          (pmod(Hash.prefix(concat(lit("rej:"), col("doc_id").cast("string"))),
             lit(1000000L)) < col("q_ppm")).cast("long"))
       scored.groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -295,8 +293,7 @@ object QualityQueries {
     // distinct sources (a source straddling folds would double-count).
     "q_cross_fold" -> { (s, dir) =>
       val d = Tables.documents(s, dir)
-        .withColumn("fold", pmod(TextQueries.h32(
-          concat(lit("fold:"), col("source"))), lit(5L)))
+        .withColumn("fold", pmod(Hash.prefix(concat(lit("fold:"), col("source"))), lit(5L)))
       val per = d.groupBy("fold").agg(
         count(lit(1)).as("n_docs"),
         countDistinct("source").as("n_sources"),
@@ -715,8 +712,6 @@ object QualityQueries {
     // not pay. Verdict = estimate >= 0.5.
     "q_join_discovery" -> { (s, dir) =>
       val K = 128
-      def h56(c: Column): Column =
-        conv(substring(md5(concat(lit("jd:"), c.cast("string"))), 1, 14), 16, 10).cast("long")
       val colFrames = Seq(
         ("o_orderkey", Tables.orders(s, dir).select(col("o_orderkey").as("v"))),
         ("o_custkey", Tables.orders(s, dir).select(col("o_custkey").as("v"))),
@@ -734,7 +729,8 @@ object QualityQueries {
       // partition cross the shuffle (a rank window here would sort each
       // column's whole distinct value domain in a single reducer task)
       val bottomK = udaf(new graft.functions.BottomKDistinctAgg(K))
-      val sk = values.select(col("col_name"), h56(col("v")).as("h"))
+      val sk = values.select(col("col_name"),
+        Hash.prefix(concat(lit("jd:"), col("v").cast("string")), 14).as("h"))
         .groupBy("col_name").agg(bottomK(col("h")).as("hs"))
         .select(col("col_name"), explode(col("hs")).as("h"))
         .localCheckpoint(eager = false) // 128-row-per-column frame; feeds three joins
@@ -785,9 +781,9 @@ object QualityQueries {
            |       CAST(n_flagged * 1000000 // n_docs AS BIGINT) AS flag_ppm
            |FROM per ORDER BY source""".stripMargin,
       "q_cross_fold" ->
-        """WITH d AS (
+        s"""WITH d AS (
           |  SELECT source, n_chars,
-          |         ('0x' || substr(md5('fold:' || source), 1, 8))::BIGINT % 5 AS fold
+          |         ${Hash.prefixSql("'fold:' || source")} % 5 AS fold
           |  FROM documents),
           |per AS (SELECT fold, count(*) AS n_docs,
           |               count(DISTINCT source) AS n_sources,
@@ -836,10 +832,10 @@ object QualityQueries {
           |FROM f GROUP BY source ORDER BY source""".stripMargin,
       // identical md5 captures and integer estimators (Chapman total at m=0)
       "q_capture_recapture" ->
-        """WITH d AS (
+        s"""WITH d AS (
           |  SELECT doc_id,
-          |         CAST(('0x' || substr(md5('cap1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 30 AS BIGINT) AS in1,
-          |         CAST(('0x' || substr(md5('cap2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 40 AS BIGINT) AS in2
+          |         CAST(${Hash.prefixSql("'cap1:' || CAST(doc_id AS VARCHAR)")} % 100 < 30 AS BIGINT) AS in1,
+          |         CAST(${Hash.prefixSql("'cap2:' || CAST(doc_id AS VARCHAR)")} % 100 < 40 AS BIGINT) AS in2
           |  FROM documents),
           |a AS (SELECT CAST(count(*) AS BIGINT) AS n_true,
           |             coalesce(CAST(sum(in1) AS BIGINT), 0) AS n1,
@@ -855,9 +851,9 @@ object QualityQueries {
           |FROM a""".stripMargin,
       // identical cohort, reduce-before-join cascade counts
       "q_deletion_impact" ->
-        """WITH cohort AS (
+        s"""WITH cohort AS (
           |  SELECT c_custkey FROM customer
-          |  WHERE ('0x' || substr(md5('del:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 100 < 10),
+          |  WHERE ${Hash.prefixSql("'del:' || CAST(c_custkey AS VARCHAR)")} % 100 < 10),
           |oi AS (SELECT o_orderkey FROM orders JOIN cohort ON o_custkey = c_custkey),
           |lpo AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_li
           |        FROM lineitem GROUP BY 1),
@@ -913,7 +909,7 @@ object QualityQueries {
           |FROM g GROUP BY source ORDER BY source""".stripMargin,
       // identical integer quality ppm, identical md5 threshold draw
       "q_rejection_sample" ->
-        """WITH t AS (SELECT doc_id, source, n_chars,
+        s"""WITH t AS (SELECT doc_id, source, n_chars,
           |                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
           |                  CAST(len(list_filter(string_split(text, ' '),
           |                       w -> list_contains(['the','a','of','and','to','in'], w))) AS BIGINT) AS n_stop
@@ -922,7 +918,7 @@ object QualityQueries {
           |             CASE WHEN n_words = 0 THEN 0
           |                  ELSE least(n_words, 100) * (n_words - n_stop) * 10000 // n_words
           |             END AS q_ppm,
-          |             ('0x' || substr(md5('rej:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS h
+          |             ${Hash.prefixSql("'rej:' || CAST(doc_id AS VARCHAR)")} % 1000000 AS h
           |      FROM t),
           |a AS (SELECT source, n_chars, q_ppm,
           |             CASE WHEN h < q_ppm THEN 1 ELSE 0 END AS accept FROM q)
@@ -934,8 +930,8 @@ object QualityQueries {
           |       CAST(sum(accept * n_chars) AS BIGINT) AS chars_kept
           |FROM a GROUP BY source ORDER BY source""".stripMargin,
       "q_stratified_split" ->
-        """WITH t AS (SELECT lang,
-          |  ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS h
+        s"""WITH t AS (SELECT lang,
+          |  ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS h
           |  FROM documents),
           |s AS (SELECT lang,
           |             CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
@@ -977,8 +973,8 @@ object QualityQueries {
           |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
           |GROUP BY n_name ORDER BY n_name""".stripMargin,
       "q_token_drift" ->
-        """WITH d AS (SELECT doc_id, text,
-          |                  ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS h
+        s"""WITH d AS (SELECT doc_id, text,
+          |                  ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS h
           |           FROM documents),
           |t AS (SELECT CASE WHEN h < 80 THEN 1 ELSE 0 END AS is_train,
           |             unnest(string_split(text, ' ')) AS word
@@ -1008,8 +1004,8 @@ object QualityQueries {
           |ORDER BY dev_score DESC, segment, priority
           |LIMIT 5""".stripMargin,
       "q_psi_drift" ->
-        """WITH d AS (SELECT doc_id, n_chars,
-          |                  ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS h
+        s"""WITH d AS (SELECT doc_id, n_chars,
+          |                  ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS h
           |           FROM documents),
           |b AS (SELECT CASE WHEN h < 80 THEN 1 ELSE 0 END AS is_train,
           |             least(n_chars // 50, 15) AS bin
@@ -1027,8 +1023,8 @@ object QualityQueries {
           |       CAST(psi > 0.1 AS BIGINT) AS alert
           |FROM a""".stripMargin,
       "q_jsd_drift" ->
-        """WITH d AS (SELECT doc_id, text,
-          |                  ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS h
+        s"""WITH d AS (SELECT doc_id, text,
+          |                  ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS h
           |           FROM documents),
           |t AS (SELECT CASE WHEN h < 80 THEN 1 ELSE 0 END AS is_train,
           |             unnest(string_split(text, ' ')) AS word
@@ -1168,7 +1164,7 @@ object QualityQueries {
       },
       // identical 56-bit hash space, per-column and union-sketch ranks
       "q_join_discovery" ->
-        """WITH vals AS (
+        s"""WITH vals AS (
           |  SELECT 'o_orderkey' AS col_name, CAST(o_orderkey AS VARCHAR) AS v FROM orders
           |  UNION SELECT 'o_custkey', CAST(o_custkey AS VARCHAR) FROM orders
           |  UNION SELECT 'c_custkey', CAST(c_custkey AS VARCHAR) FROM customer
@@ -1180,7 +1176,7 @@ object QualityQueries {
           |    SELECT col_name, h,
           |           row_number() OVER (PARTITION BY col_name ORDER BY h) AS rk
           |    FROM (SELECT DISTINCT col_name,
-          |                 ('0x' || substr(md5('jd:' || v), 1, 14))::BIGINT AS h
+          |                 ${Hash.prefixSql("'jd:' || v", 14)} AS h
           |          FROM vals))
           |  WHERE rk <= 128),
           |pairs AS (

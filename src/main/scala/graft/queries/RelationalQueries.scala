@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Ordinals, Tables}
+import graft.core.{Hash, Ordinals, Tables}
 
 /** Relational surface: scans, projections/filters, joins, aggregations
   * (SURVEY.md §2.1-2.4 query keys; NS = north-star extensions).
@@ -14,7 +14,7 @@ import graft.core.{Ordinals, Tables}
   * [[Tables.events]] (Spark) / `CAST(ts AS TIMESTAMP)` (DuckDB) so both
   * engines see microsecond precision.
   */
-object RelationalQueries {
+object RelationalQueries extends graft.SparkEntry.Module {
 
   /** q_shuffle_forecast: reducer count of the forecast shuffle (matches the
     * session's `spark.sql.shuffle.partitions`=32 so the forecast prices the
@@ -1151,8 +1151,7 @@ object RelationalQueries {
       val keyRows = Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey")).agg(count(lit(1)).as("f"))
       val red = keyRows
-        .groupBy(pmod(conv(substring(md5(concat(lit("red:"),
-          col("l_orderkey").cast("string"))), 1, 8), 16, 10).cast("long"), lit(n))
+        .groupBy(pmod(Hash.prefix(concat(lit("red:"), col("l_orderkey").cast("string"))), lit(n))
           .as("reducer"))
         .agg(count(lit(1)).as("n_keys"), sum("f").as("n_rows"))
       val tot = red.agg(sum("n_rows").as("total_rows"))
@@ -1323,8 +1322,7 @@ object RelationalQueries {
       val census = Tables.lineitem(s, dir)
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("c"))
       val withS = census.withColumn("in_sample",
-        (pmod(graft.text.TextQueries.h32(
-          concat(lit("sjf:"), col("l_partkey").cast("string"))), lit(100L)) < 25)
+        (pmod(Hash.prefix(concat(lit("sjf:"), col("l_partkey").cast("string"))), lit(100L)) < 25)
           .cast("long"))
       withS.agg(count(lit(1)).as("n_keys"),
           sum(col("c") * (col("c") - 1)).as("actual_pairs"),
@@ -1802,10 +1800,10 @@ object RelationalQueries {
         |ORDER BY revenue DESC, c_custkey
         |LIMIT 20""".stripMargin,
     "q_source_pointgen" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT id,
-        |    (('0x' || substr(md5('px:' || CAST(id AS VARCHAR)), 1, 8))::BIGINT % 2000000 - 1000000) / 100.0 AS x,
-        |    (('0x' || substr(md5('py:' || CAST(id AS VARCHAR)), 1, 8))::BIGINT % 2000000 - 1000000) / 100.0 AS y,
+        |    (${Hash.prefixSql("'px:' || CAST(id AS VARCHAR)")} % 2000000 - 1000000) / 100.0 AS x,
+        |    (${Hash.prefixSql("'py:' || CAST(id AS VARCHAR)")} % 2000000 - 1000000) / 100.0 AS y,
         |    CAST(id % 16 AS INT) AS bucket
         |  FROM range(0, 4000) t(id)
         |  WHERE id >= 500 AND id < 3500)
@@ -1910,9 +1908,9 @@ object RelationalQueries {
         |       CAST(1 AS BIGINT) AS col_stats_ok
         |FROM supplier""".stripMargin,
     "q_selfjoin_forecast" ->
-      """WITH census AS (SELECT l_partkey, count(*) AS c FROM lineitem GROUP BY 1),
+      s"""WITH census AS (SELECT l_partkey, count(*) AS c FROM lineitem GROUP BY 1),
         |s AS (SELECT c,
-        |             CASE WHEN ('0x' || substr(md5('sjf:' || CAST(l_partkey AS VARCHAR)), 1, 8))::BIGINT
+        |             CASE WHEN ${Hash.prefixSql("'sjf:' || CAST(l_partkey AS VARCHAR)")}
         |                       % 100 < 25 THEN 1 ELSE 0 END AS in_sample
         |      FROM census)
         |SELECT count(*) AS n_keys,
@@ -2005,7 +2003,7 @@ object RelationalQueries {
         |FROM tot CROSS JOIN p99""".stripMargin,
     "q_shuffle_forecast" ->
       s"""WITH f AS (SELECT l_orderkey, count(*) AS f FROM lineitem GROUP BY 1),
-         |r AS (SELECT ('0x' || substr(md5('red:' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT
+         |r AS (SELECT ${Hash.prefixSql("'red:' || CAST(l_orderkey AS VARCHAR)")}
          |             % $ShuffleForecastReducers AS reducer, f
          |      FROM f),
          |c AS (SELECT reducer, count(*) AS n_keys, CAST(sum(f) AS BIGINT) AS n_rows

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Vec}
+import graft.core.{Hash, Tables, Vec}
 
 /** Scalar-function surface: string / math / array / json / date / map
   * (SURVEY.md §2.8). All vector math is HOF-composed (codegen-friendly,
@@ -11,7 +11,7 @@ import graft.core.{Tables, Vec}
   * (keeps magnitudes out of exponent notation) and `+ 0.0` (DuckDB prints
   * -0.0 as "0.0", Java as "-0.0").
   */
-object ScalarQueries {
+object ScalarQueries extends graft.SparkEntry.Module {
 
   /** First `n` elements of an array column, Spark side. */
   private def head(c: Column, n: Int): Column = slice(c, 1, n)
@@ -190,8 +190,7 @@ object ScalarQueries {
     // NARROW map — zero joins, zero blowup — followed by one bounded
     // census aggregate. n_moved_in > 0 only on the new shard, spec-pinned.
     "q_rendezvous_route" -> { (s, dir) =>
-      def key(k: Int): Column =
-        graft.text.TextQueries.h32(concat(lit(s"hrw:s$k:"), col("doc_id"))) * 8 + k
+      def key(k: Int): Column = Hash.prefix(concat(lit(s"hrw:s$k:"), col("doc_id"))) * 8 + k
       def route(n: Int): Column =
         concat(lit("s"), pmod(greatest((0 until n).map(key): _*), lit(8L)))
       val routed = Tables.documents(s, dir)
@@ -240,22 +239,16 @@ object ScalarQueries {
     // same blocked edges -> recursive min-reachable fixpoint (the
     // q_dedup_components oracle pattern) -> canonical = component-min name
     "q_fuzzy_cluster" ->
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
         |names AS (SELECT p_name AS name, count(*) AS n, min(p_partkey) AS nid
         |          FROM part GROUP BY 1),
         |k AS (SELECT name, n, nid, string_split(name, ' ')[-1] AS noun FROM names),
         |e0 AS (SELECT a.nid AS a, b.nid AS b
         |       FROM k a JOIN k b ON a.noun = b.noun AND a.name < b.name
         |       WHERE levenshtein(a.name, b.name) <= 3),
-        |edges AS (SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0),
-        |reach(v, u) AS (
-        |  SELECT nid, nid FROM names
-        |  UNION
-        |  SELECT r.v, e.b FROM reach r JOIN edges e ON r.u = e.a
-        |),
-        |lab AS (SELECT v AS nid, min(u) AS component FROM reach GROUP BY v)
+        |${graft.text.TextDedup.componentsSql("names", "nid")}
         |SELECT k.name, c.name AS canonical, k.n
-        |FROM k JOIN lab ON k.nid = lab.nid JOIN k c ON c.nid = lab.component
+        |FROM k JOIN labels lab ON k.nid = lab.nid JOIN k c ON c.nid = lab.component
         |ORDER BY k.name""".stripMargin,
     "q_fuzzy_join" ->
       """WITH names AS (SELECT p_name AS name, count(*) AS n FROM part GROUP BY 1),
@@ -306,7 +299,7 @@ object ScalarQueries {
     // packed-key HRW argmax, identical on both engines
     "q_rendezvous_route" -> {
       def key(k: Int) =
-        s"(('0x' || substr(md5('hrw:s$k:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT * 8 + $k)"
+        s"(${Hash.prefixSql(s"'hrw:s$k:' || CAST(doc_id AS VARCHAR)")} * 8 + $k)"
       def route(n: Int) =
         s"'s' || CAST(greatest(${(0 until n).map(key).mkString(", ")}) % 8 AS VARCHAR)"
       s"""WITH r AS (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 import graft.text.TextQueries
 
 /** Sketch-backed pruning operators (north-star scale surface): an explicit
@@ -19,9 +19,9 @@ import graft.text.TextQueries
   * stage. At 100 TB this is exactly the shape that makes a selective
   * dim⋈fact join cheap: the 98%+ of fact rows that cannot match never
   * enter the join shuffle. All hashing is the cross-engine md5-substring
-  * pattern ([[TextQueries.h32]]) so DuckDB rebuilds bit-identical words.
+  * hash ([[graft.core.Hash]]) so DuckDB rebuilds bit-identical words.
   */
-object SketchQueries {
+object SketchQueries extends graft.SparkEntry.Module {
 
   /** 64-bit words in the filter (64 × 62 usable bits ≈ 4 Kbit). */
   val BloomWords = 64
@@ -32,8 +32,7 @@ object SketchQueries {
     */
   val BitsPerWord = 62
 
-  private def h(tag: String, k: Column): Column =
-    TextQueries.h32(concat(lit(tag), k.cast("string")))
+  private def h(tag: String, k: Column): Column = Hash.prefix(concat(lit(tag), k.cast("string")))
 
   /** FM/PCSA register machinery, shared by q_fm_sketch and the streaming
     * windowed-distinct entry (streaming/EventQueries.q_stream_distinct).
@@ -142,8 +141,7 @@ object SketchQueries {
     "q_fm_sketch" -> { (s, dir) =>
       val words = Tables.documents(s, dir)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .select(col("source"),
-          conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long").as("v"))
+        .select(col("source"), Hash.prefix(col("w"), 15).as("v"))
       val regs = words
         .select(col("source"), pmod(col("v"), lit(64L)).as("j"),
           expr("(v DIV 64) & -(v DIV 64)").as("lsb"))
@@ -196,7 +194,7 @@ object SketchQueries {
         .localCheckpoint(eager = false) // vocab-bounded; feeds both the build and the probe
       val rowsCol = explode(array(Seq(0L, 1L, 2L).map(lit): _*)).as("r")
       def cell(term: Column): Column =
-        pmod(TextQueries.h32(concat(lit("cm"), col("r"), lit(":"), term)), lit(64L))
+        pmod(Hash.prefix(concat(lit("cm"), col("r"), lit(":"), term)), lit(64L))
       val sketch = terms.select(col("term"), col("exact"), rowsCol)
         .withColumn("cell", cell(col("term")))
         .groupBy("r", "cell").agg(sum("exact").as("counter"))
@@ -320,8 +318,7 @@ object SketchQueries {
       val bottomK = udaf(new graft.functions.BottomKDistinctAgg(K.toInt))
       val hashed = Tables.orders(s, dir)
         .select(col("o_orderstatus").as("grp"),
-          conv(substring(md5(concat(lit("kmv:"), col("o_custkey"))), 1, 14), 16, 10)
-            .cast("long").as("h"))
+          Hash.prefix(concat(lit("kmv:"), col("o_custkey")), 14).as("h"))
       // no pre-distinct: the aggregator dedups map-side, so neither the
       // full (grp, h) domain nor its distinct shuffle ever materializes
       val sk = hashed.groupBy("grp").agg(bottomK(col("h")).as("hs"))
@@ -362,7 +359,7 @@ object SketchQueries {
     "q_join_size_est" -> { (s, dir) =>
       val rowsCol = explode(array(Seq(0L, 1L, 2L).map(lit): _*)).as("r")
       def cell(key: Column): Column =
-        pmod(TextQueries.h32(concat(lit("cm"), col("r"), lit(":"), key)), lit(64L))
+        pmod(Hash.prefix(concat(lit("cm"), col("r"), lit(":"), key)), lit(64L))
       def sketch(df: DataFrame, key: String, side: String): DataFrame =
         df.groupBy(col(key).as("k")).agg(count(lit(1)).as("f"))
           .select(col("k"), col("f"), rowsCol)
@@ -404,8 +401,7 @@ object SketchQueries {
     "q_hyperloglog" -> { (s, dir) =>
       val regs0 = Tables.orders(s, dir)
         .select(col("o_orderstatus").as("grp"),
-          conv(substring(md5(concat(lit("hll:"), col("o_custkey"))), 1, 14), 16, 10)
-            .cast("long").as("h"))
+          Hash.prefix(concat(lit("hll:"), col("o_custkey")), 14).as("h"))
         .select(col("grp"), pmod(col("h"), lit(64L)).as("j"), expr("h DIV 64").as("w"))
         .select(col("grp"), col("j"),
           expr("CASE WHEN w = 0 THEN CAST(51 AS BIGINT) " +
@@ -443,7 +439,7 @@ object SketchQueries {
 
   def oracleSql: Map[String, String] = {
     def h(tag: String, k: String): String =
-      s"('0x' || substr(md5('$tag' || CAST($k AS VARCHAR)), 1, 8))::BIGINT"
+      Hash.prefixSql(s"'$tag' || CAST($k AS VARCHAR)")
     Map(
       "q_bloom_prune" ->
         s"""WITH dim AS (SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'),
@@ -485,8 +481,8 @@ object SketchQueries {
       // identical md5 register derivation + integer bit arithmetic; the
       // merged '__ALL__' sketch replays the same per-source bit_or merge
       "q_fm_sketch" ->
-        """WITH w AS (SELECT source,
-          |                  ('0x' || substr(md5(word), 1, 15))::BIGINT AS v
+        s"""WITH w AS (SELECT source,
+          |                  ${Hash.prefixSql("word", 15)} AS v
           |           FROM (SELECT source, unnest(string_split(text, ' ')) AS word
           |                 FROM documents)),
           |regs AS (SELECT source, v % 64 AS j,
@@ -522,14 +518,14 @@ object SketchQueries {
       // build from the term-count frame (sums commute with the fold),
       // probe the top-10 exact terms, min across the 3 hash rows
       "q_countmin" ->
-        """WITH tc AS (
+        s"""WITH tc AS (
           |  SELECT term, count(*) AS exact
           |  FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
           |  GROUP BY term),
           |r AS (SELECT unnest([0, 1, 2]) AS r),
           |ins AS (
           |  SELECT r.r,
-          |         ('0x' || substr(md5('cm' || CAST(r.r AS VARCHAR) || ':' || term), 1, 8))::BIGINT % 64 AS cell,
+          |         ${Hash.prefixSql("'cm' || CAST(r.r AS VARCHAR) || ':' || term")} % 64 AS cell,
           |         CAST(sum(exact) AS BIGINT) AS counter
           |  FROM tc CROSS JOIN r GROUP BY 1, 2),
           |top AS (
@@ -542,7 +538,7 @@ object SketchQueries {
           |  SELECT top.rk, top.term, top.exact, min(ins.counter) AS est
           |  FROM top CROSS JOIN r
           |  JOIN ins ON ins.r = r.r
-          |          AND ins.cell = ('0x' || substr(md5('cm' || CAST(r.r AS VARCHAR) || ':' || top.term), 1, 8))::BIGINT % 64
+          |          AND ins.cell = ${Hash.prefixSql("'cm' || CAST(r.r AS VARCHAR) || ':' || top.term")} % 64
           |  GROUP BY 1, 2, 3)
           |SELECT rk, term, CAST(exact AS BIGINT) AS exact, est,
           |       (est - exact) * 1000000 // exact AS over_ppm
@@ -601,9 +597,9 @@ object SketchQueries {
           |FROM d CROSS JOIN t ORDER BY domain, fpr_ppm""".stripMargin,
       // identical 56-bit md5 hash space, rank window, and integer estimator
       "q_kmv_sketch" ->
-        """WITH hashed AS (
+        s"""WITH hashed AS (
           |  SELECT DISTINCT o_orderstatus AS grp,
-          |         ('0x' || substr(md5('kmv:' || CAST(o_custkey AS VARCHAR)), 1, 14))::BIGINT AS h
+          |         ${Hash.prefixSql("'kmv:' || CAST(o_custkey AS VARCHAR)", 14)} AS h
           |  FROM orders),
           |sk AS (
           |  SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
@@ -637,19 +633,19 @@ object SketchQueries {
       // identical CM cells (same md5 grid as q_countmin), exact inner
       // products, min across rows, DOUBLE-floored over_ppm
       "q_join_size_est" ->
-        """WITH fa0 AS (SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS f
+        s"""WITH fa0 AS (SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS f
           |            FROM orders GROUP BY 1),
           |fb0 AS (SELECT c_custkey AS k, CAST(count(*) AS BIGINT) AS f
           |        FROM customer GROUP BY 1),
           |rows3 AS (SELECT CAST(r AS BIGINT) AS r FROM (VALUES (0), (1), (2)) v(r)),
           |sa AS (SELECT r,
-          |              ('0x' || substr(md5('cm' || CAST(r AS VARCHAR) || ':'
-          |                || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 64 AS cell,
+          |              ${Hash.prefixSql("""'cm' || CAST(r AS VARCHAR) || ':'
+          |                || CAST(k AS VARCHAR)""")} % 64 AS cell,
           |              CAST(sum(f) AS BIGINT) AS f_a
           |       FROM fa0 CROSS JOIN rows3 GROUP BY 1, 2),
           |sb AS (SELECT r,
-          |              ('0x' || substr(md5('cm' || CAST(r AS VARCHAR) || ':'
-          |                || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 64 AS cell,
+          |              ${Hash.prefixSql("""'cm' || CAST(r AS VARCHAR) || ':'
+          |                || CAST(k AS VARCHAR)""")} % 64 AS cell,
           |              CAST(sum(f) AS BIGINT) AS f_b
           |       FROM fb0 CROSS JOIN rows3 GROUP BY 1, 2),
           |ip AS (SELECT sa.r, CAST(sum(sa.f_a * sb.f_b) AS BIGINT) AS ip
@@ -665,9 +661,9 @@ object SketchQueries {
       // identical register construction (bin/shift/pmod semantics verified
       // equal on both engines), exact-integer harmonic denominator
       "q_hyperloglog" ->
-        """WITH hashed AS (
+        s"""WITH hashed AS (
           |  SELECT o_orderstatus AS grp,
-          |         ('0x' || substr(md5('hll:' || CAST(o_custkey AS VARCHAR)), 1, 14))::BIGINT AS h
+          |         ${Hash.prefixSql("'hll:' || CAST(o_custkey AS VARCHAR)", 14)} AS h
           |  FROM orders),
           |jr AS (SELECT grp, h % 64 AS j, h // 64 AS w FROM hashed),
           |r0 AS (SELECT grp, j,

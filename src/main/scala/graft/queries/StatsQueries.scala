@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Statistical-evaluation operators: distribution comparison (KS), ranking
   * quality (AUC), categorical independence (chi-square), robust location /
@@ -25,7 +25,7 @@ import graft.core.Tables
   * domains the binned variants (q_ks_test) are the scale path; the
   * distinct-value variants (q_auc, q_skyline) document their domain bound.
   */
-object StatsQueries {
+object StatsQueries extends graft.SparkEntry.Module {
 
   /** KS price-bin width: 1000 currency units → ≤~600 bins over the fixture
     * price range at any sf (o_totalprice is bounded by the generator's part
@@ -155,7 +155,7 @@ object StatsQueries {
       val seg = Tables.events(s, dir)
         .select(col("event_type").as("segment"), col("user_id"),
           (col("value") > 2.5).cast("long").as("conv"))
-        .withColumn("v", pmod(graft.text.TextQueries.h32(
+        .withColumn("v", pmod(Hash.prefix(
           concat(col("segment"), lit("|bh:"), col("user_id").cast("string"))), lit(2L)))
         .groupBy("segment")
         .agg(sum(when(col("v") === 0, 1L).otherwise(0L)).as("n0"),
@@ -316,8 +316,7 @@ object StatsQueries {
       val e = Tables.events(s, dir)
         .select(col("event_type"),
           expr("CAST(round(value * 100) AS BIGINT)").as("vc"),
-          (pmod(graft.text.TextQueries.h32(
-            concat(lit("conf:"), col("event_id").cast("string"))), lit(100L)) < 50)
+          (pmod(Hash.prefix(concat(lit("conf:"), col("event_id").cast("string"))), lit(100L)) < 50)
             .cast("long").as("is_cal"))
       val center = e.filter(col("is_cal") === 1L)
         .groupBy("event_type")
@@ -455,8 +454,7 @@ object StatsQueries {
       val o = Tables.orders(s, dir).select(
         expr("CAST(round(o_totalprice * 100) AS BIGINT) DIV 5000000").as("bin"),
         (col("o_orderstatus") === "F").cast("long").as("pos"),
-        (pmod(graft.text.TextQueries.h32(
-          concat(lit("cal:"), col("o_orderkey").cast("string"))), lit(100L)) < 50)
+        (pmod(Hash.prefix(concat(lit("cal:"), col("o_orderkey").cast("string"))), lit(100L)) < 50)
           .as("is_train"))
       val train = o.filter(col("is_train"))
         .groupBy("bin").agg(count(lit(1)).as("n_train"), sum("pos").as("p_train"))
@@ -619,8 +617,8 @@ object StatsQueries {
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
         .select(col("o_orderkey"), col("cents"),
           explode(sequence(lit(0), lit(B - 1))).as("b"))
-      val u = conv(substring(md5(concat(lit("boot:"), col("b").cast("string"),
-        lit(":"), col("o_orderkey").cast("string"))), 1, 8), 16, 10).cast("long")
+      val u = Hash.prefix(concat(lit("boot:"), col("b").cast("string"),
+        lit(":"), col("o_orderkey").cast("string")))
       // build CASE WHEN u<t0 THEN 0 WHEN u<t1 THEN 1 ... ELSE 7 — fold from
       // the LARGEST threshold inward so the smallest lands outermost
       val w = thr.zipWithIndex.reverse.foldLeft(lit(7): org.apache.spark.sql.Column) {
@@ -715,8 +713,7 @@ object StatsQueries {
       val u = Tables.events(s, dir)
         .groupBy("user_id")
         .agg(expr("CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT)").as("y"))
-        .withColumn("treated",
-          pmod(graft.text.TextQueries.h32(concat(lit("qte:"), col("user_id"))), lit(2L)))
+        .withColumn("treated", pmod(Hash.prefix(concat(lit("qte:"), col("user_id"))), lit(2L)))
       def arm(t: Long, out: String) = u.filter(col("treated") === t)
         .agg(expr(s"percentile(y, array(${ps.mkString(", ")}))").as(out))
       arm(1L, "qt").crossJoin(arm(0L, "qc"))
@@ -868,8 +865,7 @@ object StatsQueries {
         .agg(
           sum(when(dayofmonth(col("ts")) <= 15, 1L).otherwise(0L)).as("pre"),
           sum(when(dayofmonth(col("ts")) > 15, 1L).otherwise(0L)).as("post"))
-        .withColumn("variant",
-          pmod(graft.text.TextQueries.h32(concat(lit("ab:"), col("user_id"))), lit(2L)))
+        .withColumn("variant", pmod(Hash.prefix(concat(lit("ab:"), col("user_id"))), lit(2L)))
         .localCheckpoint(eager = false) // user-grain frame feeds both the pooled fold and the per-variant agg
       val g = byUser.agg(count(lit(1)).as("n"),
         sum("pre").as("sp"), sum("post").as("so"),
@@ -903,7 +899,7 @@ object StatsQueries {
     "q_diff_in_diff" -> { (s, dir) =>
       val ev = Tables.events(s, dir)
         .select(
-          pmod(graft.text.TextQueries.h32(concat(lit("did:"), col("user_id"))), lit(2L))
+          pmod(Hash.prefix(concat(lit("did:"), col("user_id"))), lit(2L))
             .as("treated"),
           (dayofmonth(col("ts")) > 15).cast("long").as("is_post"),
           expr("CAST(round(value * 1000) AS BIGINT)").as("v_milli"))
@@ -938,10 +934,8 @@ object StatsQueries {
       val users = Tables.events(s, dir)
         .groupBy("user_id")
         .agg(expr("CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT)").as("y_milli"))
-        .withColumn("treated",
-          pmod(graft.text.TextQueries.h32(concat(lit("up:"), col("user_id"))), lit(2L)))
-        .withColumn("scr",
-          pmod(graft.text.TextQueries.h32(concat(lit("scr:"), col("user_id"))), lit(1000L)))
+        .withColumn("treated", pmod(Hash.prefix(concat(lit("up:"), col("user_id"))), lit(2L)))
+        .withColumn("scr", pmod(Hash.prefix(concat(lit("scr:"), col("user_id"))), lit(1000L)))
         .withColumn("decile", expr("scr DIV 100"))
       val cells = users.groupBy("decile")
         .agg(sum(when(col("treated") === 1, 1L).otherwise(0L)).as("n_t"),
@@ -974,7 +968,7 @@ object StatsQueries {
     "q_wilson_rank" -> { (s, dir) =>
       val ev = Tables.events(s, dir)
         .select(col("event_type").as("item"),
-          (pmod(graft.text.TextQueries.h32(concat(lit("wil:"), col("event_id"))), lit(1000L))
+          (pmod(Hash.prefix(concat(lit("wil:"), col("event_id"))), lit(1000L))
             * 37 < length(col("event_type")).cast("long") * 1000).cast("long").as("success"))
       val g = ev.groupBy("item")
         .agg(count(lit(1)).as("n"), sum("success").as("s"))
@@ -1111,8 +1105,7 @@ object StatsQueries {
         .select(col("event_type").as("segment"), col("user_id")).distinct()
         .unionByName(Tables.events(s, dir)
           .select(lit("__ALL__").as("segment"), col("user_id")).distinct())
-        .withColumn("variant",
-          pmod(graft.text.TextQueries.h32(concat(lit("srm:"), col("user_id"))), lit(2L)))
+        .withColumn("variant", pmod(Hash.prefix(concat(lit("srm:"), col("user_id"))), lit(2L)))
       users.groupBy("segment")
         .agg(sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n0"),
           sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n1"))
@@ -1137,8 +1130,7 @@ object StatsQueries {
       val users = Tables.events(s, dir)
         .groupBy("user_id")
         .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-        .withColumn("v", pmod(graft.text.TextQueries.h32(
-          concat(lit("ab:"), col("user_id").cast("string"))), lit(2L)))
+        .withColumn("v", pmod(Hash.prefix(concat(lit("ab:"), col("user_id").cast("string"))), lit(2L)))
       users.agg(
           sum(when(col("v") === 0, 1L).otherwise(0L)).as("n_a"),
           sum(when(col("v") === 0, col("conv")).otherwise(0L)).as("s_a"),
@@ -1173,8 +1165,7 @@ object StatsQueries {
         .join(y, col("c_custkey") === col("o_custkey"), "left_outer")
         .select(col("c_custkey"), col("b"),
           (coalesce(col("n_ord"), lit(0L)) * 1000L).as("y_milli"),
-          pmod(graft.text.TextQueries.h32(
-            concat(lit("ipw:"), col("c_custkey").cast("string"))), lit(2L)).as("t"))
+          pmod(Hash.prefix(concat(lit("ipw:"), col("c_custkey").cast("string"))), lit(2L)).as("t"))
       val byB = units.groupBy("b").agg(
         count(lit(1)).as("n_b"),
         sum("t").as("n1_b"),
@@ -1243,8 +1234,7 @@ object StatsQueries {
       val units = Tables.customer(s, dir)
         .join(y, col("c_custkey") === col("o_custkey"), "left_outer")
         .select(
-          pmod(graft.text.TextQueries.h32(
-            concat(lit("ipw:"), col("c_custkey").cast("string"))), lit(2L)).as("t"),
+          pmod(Hash.prefix(concat(lit("ipw:"), col("c_custkey").cast("string"))), lit(2L)).as("t"),
           expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("acctbal_cents"),
           col("c_nationkey").cast("long").as("nationkey"),
           coalesce(col("n_ord"), lit(0L)).as("n_orders"))
@@ -1279,21 +1269,22 @@ object StatsQueries {
     // construction), so the importance weight is the CONSTANT 5 and the
     // IPS estimator Σ r·1[π(x)=a]·5 / n is an exact integer
     // cross-multiplication in milli-units. The candidate policy is a
-    // deterministic hash model (argmax over h32(context, action) — the
+    // deterministic hash model (argmax over Hash.prefix(context, action) — the
     // q_rendezvous_route packed-key argmax); context = user_id % 16.
     // One narrow pass + one aggregate; the logged-policy baseline folds
     // in the same aggregate.
     "q_policy_replay" -> { (s, dir) =>
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val pick = types.zipWithIndex.map { case (t, i) =>
-        s"struct(CAST(conv(substring(md5(concat('pol:', CAST(ctx AS STRING), ':$t')), 1, 8), 16, 10) AS BIGINT) AS h, $i AS i)"
-      }.mkString(", ")
+      val picks = array(types.zipWithIndex.map { case (t, i) =>
+        struct(Hash.prefix(concat(lit("pol:"), col("ctx").cast("string"), lit(s":$t"))).as("h"), lit(i).as("i"))
+      }: _*)
       val ev = Tables.events(s, dir)
         .select(pmod(col("user_id"), lit(16L)).as("ctx"),
           col("event_type").as("action"),
           expr("CAST(round(value * 1000) AS BIGINT)").as("r_milli"))
+        .withColumn("picks", picks)
         .withColumn("pi_idx",
-          expr(s"CAST(aggregate(array($pick), struct(CAST(-1 AS BIGINT) AS h, -1 AS i), " +
+          expr("CAST(aggregate(picks, struct(CAST(-1 AS BIGINT) AS h, -1 AS i), " +
             "(acc, e) -> CASE WHEN e.h > acc.h THEN e ELSE acc END).i AS BIGINT)"))
         .withColumn("pi_action",
           expr(s"element_at(array(${types.map("'" + _ + "'").mkString(", ")}), CAST(pi_idx + 1 AS INT))"))
@@ -1356,10 +1347,10 @@ object StatsQueries {
 
   def oracleSql: Map[String, String] = Map(
     "q_calibration_bins" ->
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 5000000 AS bin,
         |         CAST(o_orderstatus = 'F' AS BIGINT) AS pos,
-        |         ('0x' || substr(md5('cal:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 100 < 50 AS is_train
+        |         ${Hash.prefixSql("'cal:' || CAST(o_orderkey AS VARCHAR)")} % 100 < 50 AS is_train
         |  FROM orders),
         |tr AS (SELECT bin, count(*) AS n_train,
         |              CAST(sum(pos) * 1000000 // count(*) AS BIGINT) AS pred_ppm
@@ -1443,9 +1434,9 @@ object StatsQueries {
         |       (SELECT quantile_cont(cents, 0.5) FROM li) AS unweighted_p50
         |FROM ex""".stripMargin,
     "q_conformal_interval" ->
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |                  CAST(round(value * 100) AS BIGINT) AS vc,
-        |                  CASE WHEN ('0x' || substr(md5('conf:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT
+        |                  CASE WHEN ${Hash.prefixSql("'conf:' || CAST(event_id AS VARCHAR)")}
         |                            % 100 < 50 THEN 1 ELSE 0 END AS is_cal
         |           FROM events),
         |center AS (SELECT event_type, CAST(sum(vc) // count(*) AS BIGINT) AS center,
@@ -1568,7 +1559,7 @@ object StatsQueries {
         |ORDER BY n_ab DESC, pa, pb
         |LIMIT 20""".stripMargin,
     "q_poisson_bootstrap" ->
-      """WITH rows_ AS (
+      s"""WITH rows_ AS (
         |  SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents, b
         |  FROM orders CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS b) bs),
         |wtd AS (
@@ -1579,8 +1570,8 @@ object StatsQueries {
         |           WHEN u < 4279248373 THEN 4 WHEN u < 4292415291 THEN 5
         |           WHEN u < 4294609777 THEN 6 ELSE 7 END AS w
         |  FROM (SELECT b, cents,
-        |               ('0x' || substr(md5('boot:' || CAST(b AS VARCHAR) || ':' ||
-        |                 CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS u
+        |               ${Hash.prefixSql("""'boot:' || CAST(b AS VARCHAR) || ':' ||
+        |                 CAST(o_orderkey AS VARCHAR)""")} AS u
         |        FROM rows_)),
         |reps AS (
         |  SELECT b, CAST(sum(cents * w) AS DOUBLE) / CAST(sum(w) AS BIGINT) AS mb
@@ -1627,11 +1618,11 @@ object StatsQueries {
         |FROM a""".stripMargin,
     // identical exact-integer sufficient statistics + fixed IEEE tree
     "q_cuped" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT user_id,
         |         CAST(sum(CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS pre,
         |         CAST(sum(CASE WHEN day(ts) > 15 THEN 1 ELSE 0 END) AS BIGINT) AS post,
-        |         ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS variant
+        |         ${Hash.prefixSql("'ab:' || CAST(user_id AS VARCHAR)")} % 2 AS variant
         |  FROM events GROUP BY user_id),
         |g AS (SELECT count(*) AS n,
         |             CAST(sum(pre) AS BIGINT) AS sp, CAST(sum(post) AS BIGINT) AS so,
@@ -1655,8 +1646,8 @@ object StatsQueries {
         |ORDER BY variant""".stripMargin,
     // one 4-cell conditional aggregate; truncating integer cell means
     "q_diff_in_diff" ->
-      """WITH ev AS (
-        |  SELECT ('0x' || substr(md5('did:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS treated,
+      s"""WITH ev AS (
+        |  SELECT ${Hash.prefixSql("'did:' || CAST(user_id AS VARCHAR)")} % 2 AS treated,
         |         CASE WHEN day(ts) > 15 THEN 1 ELSE 0 END AS is_post,
         |         CAST(round(value * 1000) AS BIGINT) AS v_milli
         |  FROM events),
@@ -1680,13 +1671,13 @@ object StatsQueries {
         |FROM a""".stripMargin,
     // identical hash bucketing; bounded 10-row cumulative window
     "q_uplift_deciles" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT user_id,
         |         CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT) AS y_milli
         |  FROM events GROUP BY user_id),
         |b AS (SELECT y_milli,
-        |             ('0x' || substr(md5('up:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS treated,
-        |             ('0x' || substr(md5('scr:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 1000 // 100 AS decile
+        |             ${Hash.prefixSql("'up:' || CAST(user_id AS VARCHAR)")} % 2 AS treated,
+        |             ${Hash.prefixSql("'scr:' || CAST(user_id AS VARCHAR)")} % 1000 // 100 AS decile
         |      FROM u),
         |c AS (SELECT decile,
         |             CAST(sum(CASE WHEN treated = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
@@ -1704,9 +1695,9 @@ object StatsQueries {
         |FROM m ORDER BY decile""".stripMargin,
     // same integer success rule; identical IEEE Wilson tree
     "q_wilson_rank" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type AS item,
-        |         CAST(('0x' || substr(md5('wil:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |         CAST(${Hash.prefixSql("'wil:' || CAST(event_id AS VARCHAR)")} % 1000
         |              * 37 < length(event_type) * 1000 AS BIGINT) AS success
         |  FROM events),
         |g AS (SELECT item, count(*) AS n, CAST(sum(success) AS BIGINT) AS s
@@ -1796,12 +1787,12 @@ object StatsQueries {
         |ORDER BY t.variant""".stripMargin,
     // identical md5 assignment; the chi2 is pure integer on both engines
     "q_srm_check" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT DISTINCT event_type AS segment, user_id FROM events
         |  UNION ALL
         |  SELECT DISTINCT '__ALL__', user_id FROM events),
         |v AS (SELECT segment,
-        |             ('0x' || substr(md5('srm:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS variant
+        |             ${Hash.prefixSql("'srm:' || CAST(user_id AS VARCHAR)")} % 2 AS variant
         |      FROM u),
         |c AS (SELECT segment,
         |             CAST(sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
@@ -1816,7 +1807,7 @@ object StatsQueries {
       s"""WITH e AS (
          |  SELECT event_type AS segment, user_id,
          |         CAST(value > 2.5 AS BIGINT) AS conv,
-         |         ('0x' || substr(md5(event_type || '|bh:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS v
+         |         ${Hash.prefixSql("event_type || '|bh:' || CAST(user_id AS VARCHAR)")} % 2 AS v
          |  FROM events),
          |seg AS (
          |  SELECT segment,
@@ -1844,7 +1835,7 @@ object StatsQueries {
       s"""WITH u AS (
          |  SELECT user_id,
          |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv,
-         |         ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS v
+         |         ${Hash.prefixSql("'ab:' || CAST(user_id AS VARCHAR)")} % 2 AS v
          |  FROM events GROUP BY user_id),
          |c AS (
          |  SELECT CAST(sum(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1917,7 +1908,7 @@ object StatsQueries {
       s"""WITH y AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
          |           FROM orders GROUP BY 1),
          |u AS (
-         |  SELECT ('0x' || substr(md5('ipw:' || CAST(c.c_custkey AS VARCHAR)), 1, 8))::BIGINT % 2 AS t,
+         |  SELECT ${Hash.prefixSql("'ipw:' || CAST(c.c_custkey AS VARCHAR)")} % 2 AS t,
          |         CAST(round(c.c_acctbal * 100) AS BIGINT) AS acctbal_cents,
          |         CAST(c.c_nationkey AS BIGINT) AS nationkey,
          |         coalesce(y.n_ord, 0) AS n_orders
@@ -1935,12 +1926,12 @@ object StatsQueries {
     // identical stratification, per-bucket DOUBLE-floored IPW terms,
     // integer combination (BIGINT // truncates toward zero like DIV)
     "q_ipw_ate" ->
-      """WITH y AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
+      s"""WITH y AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
         |           FROM orders GROUP BY 1),
         |u AS (
         |  SELECT c.c_custkey, CAST(c.c_nationkey AS BIGINT) % 5 AS b,
         |         coalesce(y.n_ord, 0) * 1000 AS y_milli,
-        |         ('0x' || substr(md5('ipw:' || CAST(c.c_custkey AS VARCHAR)), 1, 8))::BIGINT % 2 AS t
+        |         ${Hash.prefixSql("'ipw:' || CAST(c.c_custkey AS VARCHAR)")} % 2 AS t
         |  FROM customer c LEFT JOIN y ON y.o_custkey = c.c_custkey),
         |bb AS (
         |  SELECT b, CAST(count(*) AS BIGINT) AS n_b, CAST(sum(t) AS BIGINT) AS n1_b,
@@ -1973,9 +1964,9 @@ object StatsQueries {
         |FROM agg""".stripMargin,
     // same md5 arms, floored percentile grids and integer deltas
     "q_qte" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT user_id, CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT) AS y,
-        |         ('0x' || substr(md5('qte:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS treated
+        |         ${Hash.prefixSql("'qte:' || CAST(user_id AS VARCHAR)")} % 2 AS treated
         |  FROM events GROUP BY user_id),
         |qt AS (SELECT quantile_cont(y, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q
         |       FROM u WHERE treated = 1),
@@ -2072,7 +2063,7 @@ object StatsQueries {
         |FROM a WHERE n_hours > 1 ORDER BY event_type""".stripMargin,
     // identical hash model and constant importance weight 5
     "q_policy_replay" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id % 16 AS ctx, event_type AS action,
         |         CAST(round(value * 1000) AS BIGINT) AS r_milli
         |  FROM events),
@@ -2080,7 +2071,7 @@ object StatsQueries {
         |  SELECT DISTINCT ctx FROM ev),
         |sc AS (
         |  SELECT c.ctx, t.a,
-        |         ('0x' || substr(md5('pol:' || CAST(c.ctx AS VARCHAR) || ':' || t.a), 1, 8))::BIGINT AS h
+        |         ${Hash.prefixSql("'pol:' || CAST(c.ctx AS VARCHAR) || ':' || t.a")} AS h
         |  FROM cand c CROSS JOIN (SELECT unnest(['click', 'error', 'purchase', 'signup', 'view']) AS a) t),
         |pi AS (
         |  SELECT ctx, a AS pi_action FROM (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Time-series operators over the events stream table (north-star
   * surface — the feature-engineering shapes a telemetry/training pipeline
@@ -18,7 +18,7 @@ import graft.core.Tables
   * event count) and joined back on the SAME user_id partitioning, so
   * spine+join+fill is one co-partitioned pipeline.
   */
-object TimeSeriesQueries {
+object TimeSeriesQueries extends graft.SparkEntry.Module {
 
   /** q_pacf shared SQL fragments — identical strings compile in Spark and
     * replay in DuckDB (the q_ab_bayes discipline): lag-k Pearson r from
@@ -173,8 +173,7 @@ object TimeSeriesQueries {
         .select(col("user_id"),
           least(col("d1") - col("d0"), lit(30)).cast("long").as("t"),
           (col("d1") > col("dmax") - 7).cast("long").as("censored"))
-        .withColumn("g",
-          pmod(graft.text.TextQueries.h32(concat(lit("lr:"), col("user_id"))), lit(2L)))
+        .withColumn("g", pmod(Hash.prefix(concat(lit("lr:"), col("user_id"))), lit(2L)))
       val ends = users.groupBy("g", "t")
         .agg(count(lit(1)).as("n_ended"), sum(lit(1L) - col("censored")).as("deaths"))
       val tGrid = ends.select("t").distinct()
@@ -584,8 +583,7 @@ object TimeSeriesQueries {
     // q_skew_census double collapse); every output is an exact integer.
     "q_disorder_census" -> { (s, dir) =>
       val arr = (expr("event_id DIV 8") * 8 +
-        pmod(conv(substring(md5(concat(lit("arr:"), col("event_id").cast("string"))), 1, 8),
-          16, 10).cast("long"), lit(8))).as("arr")
+        pmod(Hash.prefix(concat(lit("arr:"), col("event_id").cast("string"))), lit(8))).as("arr")
       val w = Window.partitionBy("user_id").orderBy("arr", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val d = Tables.events(s, dir)
@@ -1530,9 +1528,9 @@ object TimeSeriesQueries {
         |             CAST(t_max - tus AS DOUBLE) / 3600000000.0)), 6) AS decayed_sum
         |FROM e CROSS JOIN m GROUP BY user_id ORDER BY user_id""".stripMargin,
     "q_disorder_census" ->
-      """WITH e AS (SELECT user_id, event_id,
+      s"""WITH e AS (SELECT user_id, event_id,
         |                  event_id // 8 * 8 +
-        |                  (('0x' || substr(md5('arr:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 8) AS arr,
+        |                  (${Hash.prefixSql("'arr:' || CAST(event_id AS VARCHAR)")} % 8) AS arr,
         |                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
         |           FROM events),
         |r AS (SELECT us, max(us) OVER (PARTITION BY user_id ORDER BY arr, event_id
@@ -1694,14 +1692,14 @@ object TimeSeriesQueries {
         |ORDER BY p_pct""".stripMargin,
     // identical duration/censoring construction and O-E/V folds
     "q_logrank" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT user_id, date_diff('day', DATE '1994-12-26', CAST(ts AS DATE)) AS d
         |  FROM events),
         |mx AS (SELECT max(d) AS dmax FROM e),
         |users AS (
         |  SELECT user_id, least(max(d) - min(d), 30) AS t,
         |         CAST(max(d) > (SELECT dmax FROM mx) - 7 AS BIGINT) AS censored,
-        |         ('0x' || substr(md5('lr:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS g
+        |         ${Hash.prefixSql("'lr:' || CAST(user_id AS VARCHAR)")} % 2 AS g
         |  FROM e GROUP BY user_id),
         |ends AS (SELECT g, t, CAST(count(*) AS BIGINT) AS n_ended,
         |                CAST(sum(1 - censored) AS BIGINT) AS deaths

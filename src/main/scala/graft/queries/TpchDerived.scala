@@ -28,7 +28,7 @@ import graft.core.Tables
   * Money stays in integer minor units end-to-end (the q_decimal_exact
   * discipline); every query ORDER BYs a total key.
   */
-object TpchDerived {
+object TpchDerived extends graft.SparkEntry.Module {
 
   /** partsupp CTE. Dialect: `v` = table-name suffix ("_v" for the Spark
     * temp views, "" for DuckDB), `unnestJ` = the 4-row j generator.

@@ -12,7 +12,7 @@ import graft.core.Tables
   * NS extensions except `q_union_centroids`, which re-expresses the
   * master's per-reducer concatenation (/root/reference/master.py:238-247).
   */
-object WindowSetQueries {
+object WindowSetQueries extends graft.SparkEntry.Module {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Vec}
+import graft.core.{Hash, Tables, Vec}
 import graft.kmeans.Lloyd
 
 /** Similarity search over the embedding column (north-star surface).
@@ -18,7 +18,7 @@ import graft.kmeans.Lloyd
   *     hyperplanes) then within-bucket exact cosine — near-dup pairs
   *     without an all-pairs cross product.
   */
-object SimilarityQueries {
+object SimilarityQueries extends graft.SparkEntry.Module {
 
   /** Deterministic pseudo-random hyperplane component for (plane j, dim d):
     * integer-hash arithmetic only, so Spark and DuckDB agree bit-for-bit.
@@ -439,8 +439,7 @@ object SimilarityQueries {
     // spec-verified driver-side.
     "q_random_projection" -> { (s, dir) =>
       def sign(i: Int, j: Int): Column =
-        when(pmod(graft.text.TextQueries.h32(lit(s"rp:$i:$j")), lit(2L)) === 1,
-          lit(-1.0)).otherwise(lit(1.0))
+        when(pmod(Hash.prefix(lit(s"rp:$i:$j")), lit(2L)) === 1, lit(-1.0)).otherwise(lit(1.0))
       val projCols = (0 until 8).map { j =>
         struct(lit(j.toLong).as("j"),
           round(graft.core.Vec.dot(col("embedding"),
@@ -816,8 +815,8 @@ object SimilarityQueries {
           |signs AS (
           |  SELECT CAST(j AS BIGINT) AS j,
           |         list_transform(range(0, 64), i ->
-          |           CASE WHEN ('0x' || substr(md5('rp:' || CAST(i AS VARCHAR) || ':'
-          |             || CAST(j AS VARCHAR)), 1, 8))::BIGINT % 2 = 1
+          |           CASE WHEN ${Hash.prefixSql("""'rp:' || CAST(i AS VARCHAR) || ':'
+          |             || CAST(j AS VARCHAR)""")} % 2 = 1
           |           THEN -1.0e0 ELSE 1.0e0 END) AS svec
           |  FROM (SELECT unnest(range(0, 8)) AS j))
           |SELECT t.vec_id, s.j,

@@ -25,7 +25,7 @@ import graft.core.Tables
   * integer comparison dx^2 + dy^2 <= eps^2 in micro^2 — no float boundary
   * can flip an engine.
   */
-object SpatialQueries {
+object SpatialQueries extends graft.SparkEntry.Module {
 
   /** eps = 0.05 in micro-units; minPts = 5 (core iff >= 4 neighbors). */
   private val EpsMicro = 50000L

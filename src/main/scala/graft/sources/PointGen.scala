@@ -30,9 +30,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     row-group skipping. Non-id filters stay residual (returned back to
   *     Spark, evaluated post-scan).
   *
-  * Rows are a pure function of id (md5-derived, the repo-wide determinism
-  * discipline), so the DuckDB oracle regenerates the identical table from
-  * `range(n)` — the source is oracle-checkable end to end.
+  * Rows are a pure function of id (the md5 prefix of [[graft.core.Hash]],
+  * the repo-wide determinism discipline), so the DuckDB oracle regenerates
+  * the identical table from `range(n)` — the source is oracle-checkable
+  * end to end.
   *
   * At 100 TB-scale the same shape serves any deterministic synthetic
   * benchmark corpus: planning cost is O(partitions), state per reader is
@@ -45,20 +46,12 @@ object PointGen {
     StructField("y", DoubleType, nullable = false),
     StructField("bucket", IntegerType, nullable = false)))
 
-  /** First 8 md5 hex digits of `tag:id` as an unsigned 32-bit value —
-    * bit-identical to DuckDB's `('0x' || substr(md5(tag || id), 1, 8))::BIGINT`.
+  /** Coordinate in [-10000.00, 10000.00) with two decimals: the hash of
+    * `tag || id` as an exact integer divided by 100 — the same IEEE
+    * division in both engines.
     */
-  def hash32(tag: String, id: Long): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$tag$id".getBytes("UTF-8"))
-    // first 4 bytes == first 8 hex digits
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
-  /** Coordinate in [-10000.00, 10000.00) with two decimals: an exact
-    * integer divided by 100 — the same IEEE division in both engines.
-    */
-  def coord(tag: String, id: Long): Double = (hash32(tag, id) % 2000000L - 1000000L) / 100.0
+  def coord(tag: String, id: Long): Double =
+    (graft.core.Hash.prefixOf(s"$tag$id") % 2000000L - 1000000L) / 100.0
 }
 
 /** `spark.read.format("graft.sources.PointGen").option("rows", n)

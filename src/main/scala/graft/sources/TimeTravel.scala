@@ -29,7 +29,7 @@ import graft.core.Tables
   * membership, and every census are pure functions of the input, so the
   * DuckDB oracle recomputes both snapshots without seeing the files.
   */
-object TimeTravel {
+object TimeTravel extends graft.SparkEntry.Module {
 
   private def baseDir(name: String): String = {
     val d = new java.io.File(s"target/sink_tmp/$name")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Streaming semantics (SURVEY.md §2.9), registered in their
   * batch-equivalent forms so the DuckDB oracle can check them: Spark's
@@ -17,7 +17,7 @@ import graft.core.Tables
   * The reference is batch-only; its iterative loop is its only notion of
   * time (/root/reference/master.py:115-152).
   */
-object EventQueries {
+object EventQueries extends graft.SparkEntry.Module {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Events per type per 1-hour tumbling window.
@@ -108,8 +108,7 @@ object EventQueries {
       val base = Tables.events(s, dir)
         .select(window(col("ts"), "1 hour").getField("start").as("w_start"),
           col("user_id"))
-      val v = conv(substring(md5(concat(lit("sd:"), col("user_id").cast("string"))),
-        1, 15), 16, 10).cast("long")
+      val v = Hash.prefix(concat(lit("sd:"), col("user_id").cast("string")), 15)
       val regs = base
         .select(col("w_start"), v.as("v"))
         .select(col("w_start"), pmod(col("v"), lit(64L)).as("j"),
@@ -280,8 +279,7 @@ object EventQueries {
       // rows, 2 batches -> 1, 2.5 -> 1.6 s; the oracle re-pins it). On an
       // unbounded production stream this conf stays ON (state eviction is
       // the liveness contract) — it is scoped to this drain's session.
-      Streams.drain(s, OutputMode.Append(),
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { ss =>
+      Streams.drain(s, OutputMode.Append(), Streams.NoDataBatches -> "false") { ss =>
         val ev = Streams.readEvents(ss, dir)
         val clicks = ev
           .filter(col("event_type") === "click")
@@ -401,8 +399,8 @@ object EventQueries {
         |ORDER BY w_start, rk""".stripMargin,
     // same md5 register derivation + LC/PCSA branch as q_fm_sketch
     "q_stream_distinct" ->
-      """WITH b AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start, user_id,
-        |                  ('0x' || substr(md5('sd:' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS v
+      s"""WITH b AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start, user_id,
+        |                  ${Hash.prefixSql("'sd:' || CAST(user_id AS VARCHAR)", 15)} AS v
         |           FROM events),
         |regs AS (SELECT w_start, v % 64 AS j,
         |                bit_or((v // 64) & -(v // 64)) AS b

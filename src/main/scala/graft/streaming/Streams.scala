@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -131,6 +132,8 @@ object Streams {
     */
   private val StatePartitions = 4
 
+  private[graft] val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** Scratch base for the drains' checkpoints: tmpfs when the box has one,
     * else the JVM temp dir, scoped by `user.name` so users sharing a host
     * never collide on one directory. A drain's checkpoint has no
@@ -168,13 +171,20 @@ object Streams {
     * batch). The sink's rows are already on the driver; they are copied
     * into a local relation of `parent`. The sink view and every scratch
     * file are gone when this returns, whether the drain succeeded or not.
+    * An Append drain of a streaming aggregate must keep [[NoDataBatches]]
+    * on: only the no-data batch emits its last windows. An inner join, which
+    * emits each match in the batch that completes it, may turn it off.
     */
   def drain(parent: SparkSession, mode: OutputMode, confs: (String, String)*)(
       stream: SparkSession => DataFrame): DataFrame =
     inScratch(parent, confs) { (ss, scratch) =>
+      val df = stream(ss)
+      require(mode != OutputMode.Append() || ss.conf.get(NoDataBatches, "true").toBoolean ||
+        !df.queryExecution.analyzed.exists(_.isInstanceOf[Aggregate]),
+        s"an Append drain of a streaming aggregate needs $NoDataBatches=true")
       val name = s"graft_sink_${System.nanoTime()}"
       try {
-        run(stream(ss).writeStream.format("memory").queryName(name).outputMode(mode), scratch)
+        run(df.writeStream.format("memory").queryName(name).outputMode(mode), scratch)
         local(parent, ss.table(name))
       } finally ss.catalog.dropTempView(name)
     }

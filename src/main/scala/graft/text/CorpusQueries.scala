@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Training-corpus hygiene operators (north-star LLM-pipeline surface, all
   * NS — the reference has no text ops): PII redaction, benchmark
@@ -17,7 +17,7 @@ import graft.core.Tables
   * corpus is 100 TB); chunk dedup shuffles (hash, position) pairs, never
   * chunk text bodies beyond the md5 input.
   */
-object CorpusQueries {
+object CorpusQueries extends graft.SparkEntry.Module {
 
   private val words: Column = split(col("text"), " ")
 
@@ -129,7 +129,7 @@ object CorpusQueries {
         .select(col("doc_id"), words.as("ws"))
         .select(col("doc_id"),
           transform(array_distinct(TextQueries.shingles3(col("ws"))),
-            x => TextQueries.h32(x)).as("hs"))
+            x => Hash.prefix(x)).as("hs"))
         .localCheckpoint(eager = false)
       val evalSet = hashed.filter(col("doc_id") < EvalDocs)
         .select(explode(col("hs")).as("h")).distinct()
@@ -183,8 +183,7 @@ object CorpusQueries {
       val wordsExp = graft.core.Par.fanOutIfCompact(
           Tables.documents(s, dir).select("doc_id", "text"), col("doc_id"))
         .select(col("doc_id"), posexplode(words).as(Seq("pos", "w")))
-        .withColumn("bnd", (pmod(TextQueries.h32(concat(lit("cdc:"), col("w"))),
-          lit(8L)) === 0L).cast("long"))
+        .withColumn("bnd", (pmod(Hash.prefix(concat(lit("cdc:"), col("w"))), lit(8L)) === 0L).cast("long"))
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val chunks = wordsExp
         .withColumn("chunk_idx", coalesce(sum("bnd")
@@ -261,8 +260,7 @@ object CorpusQueries {
     // new doc reports its match count and the smallest matching standing
     // doc (the dedup survivor it would collapse into).
     "q_dedup_incremental" -> { (s, dir) =>
-      val isNew = pmod(TextQueries.h32(concat(lit("inc:"), col("doc_id").cast("string"))),
-        lit(100L)) >= 80
+      val isNew = pmod(Hash.prefix(concat(lit("inc:"), col("doc_id").cast("string"))), lit(100L)) >= 80
       val tagged = Tables.documents(s, dir).select(col("doc_id"), isNew.as("is_new"))
       val hi = TextDedup.withShingleSets(TextDedup.minhashCandidatesFor(s, dir),
           TextQueries.shingleSetsFor(s, dir))
@@ -459,7 +457,7 @@ object CorpusQueries {
         .join(Tables.documents(s, dir).select("doc_id", "source"), "doc_id")
         .select(col("source"), explode(col("sh")).as("shingle"))
       val sigAggs = TextQueries.minhashAggs
-      val srcSig = sh.withColumn("h", TextQueries.h32(col("shingle")))
+      val srcSig = sh.withColumn("h", Hash.prefix(col("shingle")))
         .groupBy("source").agg(sigAggs.head, sigAggs.tail: _*)
       val a = srcSig.columns.foldLeft(srcSig)((d, c) => d.withColumnRenamed(c, s"a_$c"))
       val b = srcSig.columns.foldLeft(srcSig)((d, c) => d.withColumnRenamed(c, s"b_$c"))
@@ -625,7 +623,7 @@ object CorpusQueries {
         .agg(min(struct(col("doc_id"), col("source"), col("n_words"))).as("keep"))
         .select(col("keep.doc_id").as("doc_id"), col("keep.source").as("source"),
           col("keep.n_words").as("n_words"))
-      val bucket = pmod(TextQueries.h32(concat(lit("split:"), col("doc_id").cast("string"))), lit(100))
+      val bucket = pmod(Hash.prefix(concat(lit("split:"), col("doc_id").cast("string"))), lit(100))
       canonical
         .withColumn("split",
           when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test"))
@@ -942,7 +940,7 @@ object CorpusQueries {
         s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
            |sh AS (SELECT doc_id, list_distinct($Shingles3Sql) AS sh FROM w),
            |h AS (SELECT doc_id, unnest(list_transform(sh,
-           |             x -> ('0x' || substr(md5(x), 1, 8))::BIGINT)) AS h FROM sh),
+           |             x -> ${Hash.prefixSql("x")})) AS h FROM sh),
            |ev AS (SELECT DISTINCT h FROM h WHERE doc_id < $EvalDocs)
            |SELECT c.doc_id, count(*) AS n_shared,
            |       CAST(count(*) >= 3 AS BIGINT) AS contaminated
@@ -961,11 +959,11 @@ object CorpusQueries {
            |FROM c GROUP BY chunk_hash HAVING count(*) >= 2
            |ORDER BY chunk_hash""".stripMargin,
       "q_dedup_cdc" ->
-        """WITH p AS (SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos, ws[u.i] AS w
+        s"""WITH p AS (SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos, ws[u.i] AS w
           |           FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
           |                UNNEST(generate_series(1, len(ws))) AS u(i)),
           |b AS (SELECT doc_id, pos, w,
-          |             CASE WHEN ('0x' || substr(md5('cdc:' || w), 1, 8))::BIGINT % 8 = 0
+          |             CASE WHEN ${Hash.prefixSql("'cdc:' || w")} % 8 = 0
           |                  THEN 1 ELSE 0 END AS bnd
           |      FROM p),
           |ci AS (SELECT doc_id, pos, w,
@@ -1016,7 +1014,7 @@ object CorpusQueries {
            |hi AS (SELECT p.doc_a, p.doc_b FROM ${verifyJoinSql("pairs")}
            |       WHERE round($JaccardSql, 6) >= 0.8),
            |tag AS (SELECT doc_id,
-           |               (('0x' || substr(md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100) >= 80 AS is_new
+           |               (${Hash.prefixSql("'inc:' || CAST(doc_id AS VARCHAR)")} % 100) >= 80 AS is_new
            |        FROM documents),
            |cx AS (
            |  SELECT CASE WHEN ta.is_new THEN h.doc_a ELSE h.doc_b END AS new_doc,
@@ -1145,7 +1143,7 @@ object CorpusQueries {
       "q_sketch_merge" ->
         s"""WITH w AS (SELECT source, string_split(text, ' ') AS ws FROM documents),
            |sh AS (SELECT source, unnest($Shingles3Sql) AS shingle FROM w),
-           |h AS (SELECT source, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh),
+           |h AS (SELECT source, ${Hash.prefixSql("shingle")} AS h FROM sh),
            |sig AS (SELECT source, ${TextQueries.MinhashAggSql} FROM h GROUP BY source),
            |pairs AS (SELECT a.source AS source_a, b.source AS source_b,
            |                 CAST($srcSigAgreeSum AS BIGINT) AS n_agree
@@ -1282,7 +1280,7 @@ object CorpusQueries {
           |       round(exp(CAST(sum_u AS DOUBLE) / 1e6 / n_bigram_tokens), 6) AS ppl
           |FROM a""".stripMargin,
       "q_corpus_pipeline" ->
-        """WITH n AS (SELECT doc_id, source,
+        s"""WITH n AS (SELECT doc_id, source,
           |                  trim(regexp_replace(regexp_replace(lower(text),
           |                    '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS norm
           |           FROM documents),
@@ -1293,7 +1291,7 @@ object CorpusQueries {
           |k AS (SELECT keep.doc_id AS doc_id, keep.source AS source,
           |             keep.n_words AS n_words FROM c),
           |b AS (SELECT *,
-          |             ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket
+          |             ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
           |      FROM k)
           |SELECT CASE WHEN bucket < 80 THEN 'train'
           |            WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split,

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.text.TextQueries.h32
+import graft.core.{Hash, Tables}
 
 /** Corpus-shape statistics: the empirical-law fits and canonicalization
   * censuses a curation run publishes beside its dedup/quality reports —
@@ -25,7 +24,7 @@ import graft.text.TextQueries.h32
   * 10-100 bounded rows. Ranks/rates are integer cross-multiplications
   * wherever rational; the fit coefficients round at 6dp.
   */
-object CorpusStatsQueries {
+object CorpusStatsQueries extends graft.SparkEntry.Module {
 
   /** Least-squares slope/intercept of y on x over a small frame — shared
     * by the two log-space law fits. Returns (slope, intercept) columns
@@ -168,9 +167,9 @@ object CorpusStatsQueries {
     // under test. One distinct-agg per source; dup rate integer ppm.
     "q_url_dedup" -> { (s, dir) =>
       val d = Tables.documents(s, dir)
-        .withColumn("h1", pmod(h32(concat(lit("u1:"), col("doc_id"))), lit(2)))
-        .withColumn("h2", pmod(h32(concat(lit("u2:"), col("doc_id"))), lit(2)))
-        .withColumn("h3", pmod(h32(concat(lit("u3:"), col("doc_id"))), lit(3)))
+        .withColumn("h1", pmod(Hash.prefix(concat(lit("u1:"), col("doc_id"))), lit(2)))
+        .withColumn("h2", pmod(Hash.prefix(concat(lit("u2:"), col("doc_id"))), lit(2)))
+        .withColumn("h3", pmod(Hash.prefix(concat(lit("u3:"), col("doc_id"))), lit(3)))
         .withColumn("raw_url", concat(
           when(col("h1") === 0, "http").otherwise("HTTPS"), lit("://"),
           when(col("h2") === 0, "www.").otherwise(""),
@@ -477,11 +476,11 @@ object CorpusStatsQueries {
         |SELECT bucket, tokens_cum, vocab_cum, beta FROM curve CROSS JOIN beta
         |ORDER BY bucket""".stripMargin,
     "q_url_dedup" ->
-      """WITH d AS (
+      raw"""WITH d AS (
         |  SELECT source,
-        |         ('0x' || substr(md5('u1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS h1,
-        |         ('0x' || substr(md5('u2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS h2,
-        |         ('0x' || substr(md5('u3:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 AS h3,
+        |         ${Hash.prefixSql("'u1:' || CAST(doc_id AS VARCHAR)")} % 2 AS h1,
+        |         ${Hash.prefixSql("'u2:' || CAST(doc_id AS VARCHAR)")} % 2 AS h2,
+        |         ${Hash.prefixSql("'u3:' || CAST(doc_id AS VARCHAR)")} % 3 AS h3,
         |         doc_id % 50 AS p
         |  FROM documents),
         |u AS (SELECT source,
@@ -496,9 +495,9 @@ object CorpusStatsQueries {
         |               regexp_replace(
         |                 regexp_replace(
         |                   regexp_replace(
-        |                     regexp_replace(lower(raw_url), '#.*$', ''),
-        |                     '\?utm_[^#]*$', ''),
-        |                   '/index\.html$', ''),
+        |                     regexp_replace(lower(raw_url), '#.*$$', ''),
+        |                     '\?utm_[^#]*$$', ''),
+        |                   '/index\.html$$', ''),
         |                 '^http://', 'https://'),
         |               '://www\.', '://') AS canon
         |      FROM u)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Graph analytics over the corpus word-adjacency graph (north-star
   * surface; complements [[TextDedup.connectedComponents]]'s fixpoint
@@ -22,7 +22,7 @@ import graft.core.Tables
   * broadcast, but the code keeps shuffle joins: at 100 TB the node set of a
   * general graph does NOT fit one executor, and this shape survives that.
   */
-object GraphQueries {
+object GraphQueries extends graft.SparkEntry.Module {
 
   /** Damping factor (the standard 0.85). */
   val D = 0.85
@@ -298,7 +298,7 @@ object GraphQueries {
     "q_label_prop" -> { (s, dir) =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
       val seeds = docs
-        .filter(pmod(TextQueries.h32(concat(lit("lps:"), col("doc_id"))), lit(10)) === 0)
+        .filter(pmod(Hash.prefix(concat(lit("lps:"), col("doc_id"))), lit(10)) === 0)
         .select(col("doc_id").as("b"), col("source").as("lbl"))
         .localCheckpoint(eager = false)
       val e = TextQueries.simhashPairsFor(s, dir)
@@ -666,7 +666,7 @@ object GraphQueries {
            |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
            |und AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
            |seeds AS (SELECT doc_id AS b, source AS lbl FROM documents
-           |          WHERE ('0x' || substr(md5('lps:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 = 0),
+           |          WHERE ${Hash.prefixSql("'lps:' || CAST(doc_id AS VARCHAR)")} % 10 = 0),
            |votes AS (SELECT und.a AS doc_id, s.lbl, count(*) AS n_votes
            |          FROM und JOIN seeds s USING (b)
            |          WHERE und.a NOT IN (SELECT b FROM seeds)

@@ -20,7 +20,7 @@ import graft.core.Tables
   * tiny frame at any corpus scale — rank the counts, never the corpus) and
   * broadcasts it back onto the exploded prefix tokens.
   */
-object PackingQueries {
+object PackingQueries extends graft.SparkEntry.Module {
 
   /** Tokens per packed training example (context window length). */
   val PackBudget = 512

@@ -20,7 +20,7 @@ import graft.core.{Tables, Vec}
   * merge) BEFORE any window — the row_number window only ever sees ≤50
   * rows, never the corpus.
   */
-object RetrievalQueries {
+object RetrievalQueries extends graft.SparkEntry.Module {
 
   /** BM25 shape parameters (Robertson–Spärck Jones defaults). */
   val K1 = 1.2

@@ -214,6 +214,21 @@ object TextDedup extends Logging {
                           maxIter: Int = 50): DataFrame =
     connectedComponentsWithRounds(nodes, edges, maxIter)._1
 
+  /** [[connectedComponents]] in DuckDB, for the oracles, as one recursive
+    * CTE chain: `edges` holds both directions of each caller-defined
+    * `e0(a, b)` pair, `reach(v, u)` pairs every `id` of `nodes` with each
+    * node it reaches (itself included), and `labels($id, component)` keeps
+    * the least. The caller opens with `WITH RECURSIVE`.
+    */
+  private[graft] def componentsSql(nodes: String, id: String): String =
+    s"""edges AS (SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0),
+       |reach(v, u) AS (
+       |  SELECT $id, $id FROM $nodes
+       |  UNION
+       |  SELECT r.v, e.b FROM reach r JOIN edges e ON r.u = e.a
+       |),
+       |labels AS (SELECT v AS $id, min(u) AS component FROM reach GROUP BY v)""".stripMargin
+
   /** [[connectedComponents]] plus its observability: (labels, rounds run,
     * reached fixpoint). The round count is how the O(log diameter)
     * pointer-jumping claim is ASSERTED (TextDedupSpec plants a long chain

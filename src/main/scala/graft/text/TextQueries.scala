@@ -3,22 +3,17 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Hash, Tables}
 
 /** Text analysis + deduplication over `documents` (north-star LLM-pipeline
   * surface; the reference has no text ops — all NS).
   *
-  * Cross-engine determinism trick used throughout: a 32-bit word/shingle
-  * hash derived from the md5 hex prefix — `conv(substr(md5(s),1,8),16,10)`
-  * in Spark ≡ `('0x'||substr(md5(s),1,8))::BIGINT` in DuckDB — so sketch
+  * Word and shingle hashes are [[graft.core.Hash]]'s md5 prefix, so sketch
   * queries (MinHash, SimHash, fingerprints) hash-match the oracle exactly.
   * At 100 TB every query here is embarrassingly parallel per document
   * (narrow, no shuffle) or shuffles only small sketch rows.
   */
-object TextQueries {
-
-  /** 32-bit deterministic hash of a string column (cross-engine md5 trick). */
-  def h32(c: Column): Column = conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+object TextQueries extends graft.SparkEntry.Module {
 
   private val words: Column = split(col("text"), " ")
 
@@ -90,7 +85,7 @@ object TextQueries {
       }
       Tables.documents(s, dir)
         .select(col("doc_id"), words.as("ws"))
-        .select(col("doc_id"), transform(shingles3(col("ws")), x => h32(x)).as("hs"))
+        .select(col("doc_id"), transform(shingles3(col("ws")), x => Hash.prefix(x)).as("hs"))
         .select(col("doc_id"), explode(array(sigs: _*)).as("sig"))
         .select(col("doc_id"), col("sig.j").as("j"), col("sig.minhash").as("minhash"))
         .localCheckpoint(eager = false)
@@ -102,7 +97,7 @@ object TextQueries {
     */
   private[text] val MinhashSigsCtes: String = {
     val sigs = (0 until MinhashK).map { j =>
-      val minhash = minhashSql(j, "('0x' || substr(md5(x), 1, 8))::BIGINT")
+      val minhash = minhashSql(j, Hash.prefixSql("x"))
       s"SELECT doc_id, CAST($j AS BIGINT) AS j, list_min(list_transform(sh, x -> $minhash)) AS minhash FROM shl"
     }.mkString("\nUNION ALL\n")
     s"""w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -221,7 +216,7 @@ object TextQueries {
     // Document fingerprint: left-fold polynomial rolling hash over 32-bit
     // word hashes, h = (h*31 + v) mod (1e9+7).
     "q_text_fingerprint" -> { (s, dir) =>
-      val fp = aggregate(transform(words, w => h32(w)), lit(0L),
+      val fp = aggregate(transform(words, w => Hash.prefix(w)), lit(0L),
         (acc, v) => (acc * 31 + v) % 1000000007L)
       Tables.documents(s, dir)
         .select(col("doc_id"), fp.as("fingerprint"))
@@ -318,7 +313,7 @@ object TextQueries {
           Tables.documents(s, dir).select("doc_id", "text"), col("doc_id"))
         .select(col("doc_id"), words.as("ws"))
         .select(col("doc_id"), explode(shingles3(col("ws"))).as("shingle"))
-        .withColumn("h", h32(col("shingle")))
+        .withColumn("h", Hash.prefix(col("shingle")))
         .groupBy("doc_id")
         .agg(aggs.head, aggs.tail: _*)
         .orderBy("doc_id")
@@ -331,7 +326,7 @@ object TextQueries {
         when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
       Tables.documents(s, dir)
         .select(col("doc_id"), explode(words).as("word"))
-        .withColumn("v", h32(col("word")))
+        .withColumn("v", Hash.prefix(col("word")))
         .groupBy("doc_id")
         .agg(bitSums.head, bitSums.tail: _*)
         .select(col("doc_id"), packed.as("simhash"))
@@ -388,7 +383,7 @@ object TextQueries {
     // corpus scale (clusters, not docs, reach the report).
     "q_split_leakage" -> { (s, dir) =>
       val labels = componentLabelsFor(s, dir)
-      val bucket = pmod(h32(concat(lit("split:"), col("doc_id").cast("string"))), lit(100))
+      val bucket = pmod(Hash.prefix(concat(lit("split:"), col("doc_id").cast("string"))), lit(100))
       val split = Tables.documents(s, dir)
         .select(col("doc_id"), when(bucket < 80, "train")
           .when(bucket < 90, "valid").otherwise("test").as("split"))
@@ -421,12 +416,12 @@ object TextQueries {
         .orderBy("doc_id")
     },
     // NS: deterministic train/valid/test split via content-free hash
-    // bucketing — `h32("split:" || doc_id) mod 100` -> 80/10/10. No RNG, so
+    // bucketing — `Hash.prefix("split:" || doc_id) mod 100` -> 80/10/10. No RNG, so
     // the split is stable under retries, re-runs, and re-partitioning (the
     // property `sample(fraction)` does NOT have on a task retry), and any
     // engine can reproduce the assignment from doc_id alone.
     "q_sample_hash" -> { (s, dir) =>
-      val bucket = pmod(h32(concat(lit("split:"), col("doc_id").cast("string"))), lit(100))
+      val bucket = pmod(Hash.prefix(concat(lit("split:"), col("doc_id").cast("string"))), lit(100))
       Tables.documents(s, dir)
         .select(col("doc_id"), bucket.cast("long").as("bucket"),
           when(bucket < 80, "train").when(bucket < 90, "valid")
@@ -439,8 +434,8 @@ object TextQueries {
     // 30%, books at 70%" mixing step of a training-data pipeline, as one
     // narrow filter: no shuffle, no RNG, reproducible at any scale.
     "q_mix_sources" -> { (s, dir) =>
-      val rate = pmod(h32(col("source")), lit(60)) + lit(20)
-      val bucket = pmod(h32(concat(lit("mix:"), col("doc_id").cast("string"))), lit(100))
+      val rate = pmod(Hash.prefix(col("source")), lit(60)) + lit(20)
+      val bucket = pmod(Hash.prefix(concat(lit("mix:"), col("doc_id").cast("string"))), lit(100))
       Tables.documents(s, dir)
         .withColumn("rate_pct", rate)
         .withColumn("bucket", bucket)
@@ -521,7 +516,7 @@ object TextQueries {
     val packed = (0 until 32)
       .map(j => s"CASE WHEN s$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END").mkString(" + ")
     s"""w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-       |v AS (SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT AS v FROM w),
+       |v AS (SELECT doc_id, ${Hash.prefixSql("word")} AS v FROM w),
        |s AS (SELECT doc_id, $bitSums FROM v GROUP BY doc_id),
        |f AS (SELECT doc_id, $packed AS simhash FROM s)""".stripMargin
   }
@@ -532,27 +527,22 @@ object TextQueries {
       s"struct_pack(hits := CAST(len(list_intersect(ws, $arr)) AS BIGINT), lang := '$lang')"
     }.mkString("[", ", ", "]")
 
-    // simhash frame -> symmetric near-pair edges -> recursive min-reachable
-    // fixpoint; shared by q_dedup_components and q_split_leakage
+    // simhash frame -> near-pair edges -> min-label components; shared by
+    // q_dedup_components and q_split_leakage
     val ccPrelude =
       s"""WITH RECURSIVE
          |$simhashFrameCte,
          |e0 AS (SELECT a.doc_id AS a, b.doc_id AS b
          |       FROM f a JOIN f b ON a.doc_id < b.doc_id
          |       WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |edges AS (SELECT a, b FROM e0 UNION ALL SELECT b AS a, a AS b FROM e0),
-         |reach(v, u) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.v, e.b FROM reach r JOIN edges e ON r.u = e.a
-         |)""".stripMargin
+         |${TextDedup.componentsSql("documents", "doc_id")}""".stripMargin
 
     Map(
       "q_udaf_minhash" ->
         s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
            |sh AS (SELECT doc_id, unnest($Shingles3Sql) AS shingle
            |       FROM w),
-           |h AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh)
+           |h AS (SELECT doc_id, ${Hash.prefixSql("shingle")} AS h FROM sh)
            |SELECT doc_id, $MinhashAggSql
            |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin,
       "q_text_langid" ->
@@ -595,9 +585,9 @@ object TextQueries {
           |            u -> CAST(ceil(length(u) / 4.0) AS BIGINT))) AS BIGINT) AS n_subword
           |FROM documents ORDER BY doc_id""".stripMargin,
       "q_text_fingerprint" ->
-        """WITH t AS (SELECT doc_id,
+        s"""WITH t AS (SELECT doc_id,
           |                  list_transform(string_split(text, ' '),
-          |                    u -> ('0x' || substr(md5(u), 1, 8))::BIGINT) AS vs
+          |                    u -> ${Hash.prefixSql("u")}) AS vs
           |           FROM documents)
           |SELECT doc_id,
           |       list_reduce(list_prepend(CAST(0 AS BIGINT), vs),
@@ -665,18 +655,16 @@ object TextQueries {
       // set == the label-propagation result (undirected reachability)
       "q_dedup_components" ->
         s"""$ccPrelude
-           |SELECT v AS doc_id, min(u) AS component
-           |FROM reach GROUP BY v ORDER BY doc_id""".stripMargin,
+           |SELECT doc_id, component FROM labels ORDER BY doc_id""".stripMargin,
       // same CC fixpoint + the q_sample_hash split; clusters spanning >1
       // split are the leakage report
       "q_split_leakage" ->
         s"""$ccPrelude,
-           |labels AS (SELECT v AS doc_id, min(u) AS component FROM reach GROUP BY v),
            |sp AS (SELECT doc_id,
            |              CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'valid'
            |                   ELSE 'test' END AS split
            |       FROM (SELECT doc_id,
-           |                    ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
+           |                    ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS b
            |             FROM documents) t)
            |SELECT l.component, count(*) AS n_docs,
            |       CAST(count(DISTINCT s.split) AS BIGINT) AS n_splits,
@@ -715,17 +703,17 @@ object TextQueries {
           |       CAST(len(string_split(norm, ' ')) AS BIGINT) AS n_tokens_norm
           |FROM n ORDER BY doc_id""".stripMargin,
       "q_sample_hash" ->
-        """WITH b AS (SELECT doc_id,
-          |                  ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket
+        s"""WITH b AS (SELECT doc_id,
+          |                  ${Hash.prefixSql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
           |           FROM documents)
           |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
           |       CASE WHEN bucket < 80 THEN 'train'
           |            WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split
           |FROM b ORDER BY doc_id""".stripMargin,
       "q_mix_sources" ->
-        """WITH d AS (SELECT doc_id, source,
-          |                  (('0x' || substr(md5(source), 1, 8))::BIGINT % 60) + 20 AS rate_pct,
-          |                  ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket
+        s"""WITH d AS (SELECT doc_id, source,
+          |                  (${Hash.prefixSql("source")} % 60) + 20 AS rate_pct,
+          |                  ${Hash.prefixSql("'mix:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
           |           FROM documents)
           |SELECT doc_id, source, CAST(rate_pct AS BIGINT) AS rate_pct
           |FROM d WHERE bucket < rate_pct ORDER BY doc_id""".stripMargin,

@@ -49,6 +49,27 @@ class OracleLintSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"query registered without a DuckDB oracle: $missing")
   }
 
+  test("every oracle has a registered query (3-way key parity, reverse direction)") {
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"DuckDB oracle registered without a query: $orphans")
+  }
+
+  test("the registry refuses a key registered twice or half registered, naming it") {
+    val query: SparkEntry.Query = (_, _) => null
+    def module(qs: Seq[String], os: Seq[String]): SparkEntry.Module = new SparkEntry.Module {
+      val queries: Map[String, SparkEntry.Query] = qs.map(_ -> query).toMap
+      val oracleSql: Map[String, String] = os.map(_ -> "SELECT 1").toMap
+    }
+    def refusal(modules: SparkEntry.Module*): String =
+      intercept[IllegalStateException](SparkEntry.registry(modules)).getMessage
+    val a = module(Seq("q_a", "q_b"), Seq("q_a", "q_b"))
+    assert(refusal(a, module(Seq("q_b"), Seq("q_b"))).contains("key q_b is registered twice"))
+    assert(refusal(a, module(Seq("q_c"), Nil)) == "query q_c has no DuckDB oracle")
+    assert(refusal(a, module(Nil, Seq("q_c"))) == "oracle q_c has no query")
+    val (qs, os) = SparkEntry.registry(Seq(a, module(Seq("q_c"), Seq("q_c"))))
+    assert(qs.keySet == Set("q_a", "q_b", "q_c") && os.keySet == qs.keySet)
+  }
+
   test("no oracle exposes a raw integer sum as an output column (HUGEINT dtype trap)") {
     val violations = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
       val intAliases = IntAliasDefs.flatMap(_.findAllMatchIn(sql).map(_.group(1))).toSet

@@ -142,7 +142,7 @@ class TrainPrimSpec extends AnyFunSuite {
   test("q_naive_bayes: missing-lang and empty-train edges match the tall-model semantics") {
     val dir = java.nio.file.Files.createTempDirectory("nb_edge").toString
     import spark.implicits._
-    // parities of pmod(h32("nb:" + id), 2) computed via the engine itself
+    // parities of pmod(Hash.prefix("nb:" + id), 2) computed via the engine itself
     val par = spark.range(1, 41)
       .selectExpr("id",
         "CAST(conv(substring(md5(concat('nb:', CAST(id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2 AS t")

@@ -158,7 +158,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val reordered = graft.core.Tables.orders(spark, dir)
       .orderBy(col("o_totalprice").desc, col("o_orderkey").desc)
       .repartition(7)
-    val h = graft.text.TextQueries.h32(concat_ws("|",
+    val h = graft.core.Hash.prefix(concat_ws("|",
       col("o_orderkey").cast("string"), col("o_custkey").cast("string"),
       col("o_orderstatus"),
       round(col("o_totalprice") * 100).cast("long").cast("string"),

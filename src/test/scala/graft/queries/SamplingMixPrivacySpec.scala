@@ -72,7 +72,7 @@ class SamplingMixPrivacySpec extends AnyFunSuite {
       .select(col("c_custkey"), pmod(col("c_nationkey").cast("long"), lit(5L)).as("b"))
       .join(y, col("c_custkey") === col("o_custkey"), "left_outer")
       .select(col("b"), (coalesce(col("n_ord"), lit(0L)) * 1000L).as("ym"),
-        pmod(graft.text.TextQueries.h32(
+        pmod(graft.core.Hash.prefix(
           concat(lit("ipw:"), col("c_custkey").cast("string"))), lit(2L)).as("t"))
       .collect().map(u => (u.getLong(0), u.getLong(1), u.getLong(2)))
     assert(r.getAs[Long]("n_units") == units.length)

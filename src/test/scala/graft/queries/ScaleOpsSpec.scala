@@ -387,7 +387,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val sh = graft.core.Tables.documents(spark, TestSpark.Sf0001)
       .select(col("source"), col("doc_id"),
         explode(TextQueries.shingles3(split(col("text"), " "))).as("shingle"))
-      .withColumn("h", TextQueries.h32(col("shingle")))
+      .withColumn("h", graft.core.Hash.prefix(col("shingle")))
     def sig(df: org.apache.spark.sql.DataFrame) = {
       val aggs = (0 until MinhashK).map(j =>
         min((col("h") * (2L * j + 1) + (12345L * j + 7)) % P).as(s"sig$j"))

@@ -302,7 +302,7 @@ class SignalProjectionSpec extends AnyFunSuite {
     val r = run("q_deletion_impact").head
     import org.apache.spark.sql.functions._
     val cohort = graft.core.Tables.customer(spark, TestSpark.Sf0001)
-      .filter(pmod(graft.text.TextQueries.h32(
+      .filter(pmod(graft.core.Hash.prefix(
         concat(lit("del:"), col("c_custkey").cast("string"))), lit(100L)) < 10)
       .select("c_custkey")
     val orders = graft.core.Tables.orders(spark, TestSpark.Sf0001)

@@ -123,7 +123,7 @@ class SemDedupSpec extends AnyFunSuite {
     val spark = graft.TestSpark.spark
     val rows = graft.SparkEntry.queries("q_blob_integrity")(spark,
       graft.TestSpark.Sf0001).collect()
-    // the planted rule is h32('chk:'||doc_id) % 50 == 0 — recompute it
+    // the planted rule is Hash.prefix('chk:'||doc_id) % 50 == 0 — recompute it
     val expected = graft.core.Tables.documents(spark, graft.TestSpark.Sf0001)
       .selectExpr("source",
         "CAST(conv(substring(md5(concat('chk:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 50 AS h")

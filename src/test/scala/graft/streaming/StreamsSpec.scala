@@ -91,6 +91,13 @@ class StreamsSpec extends AnyFunSuite {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 
+  test("an Append drain of a streaming aggregate with no-data batches off fails, naming the conf") {
+    val e = intercept[IllegalArgumentException](
+      Streams.drain(spark, OutputMode.Append(), "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(ss =>
+        Streams.tumblingCounts(Streams.readEvents(ss, TestSpark.Sf0001))))
+    assert(e.getMessage.contains("spark.sql.streaming.noDataMicroBatches.enabled"))
+  }
+
   test("drained stream-stream interval join equals the batch interval join (q_stream_stream_join)") {
     val streamed = EventQueries.queries("q_stream_stream_join")(spark, TestSpark.Sf0001)
     val e = graft.core.Tables.events(spark, TestSpark.Sf0001)

@@ -38,7 +38,7 @@ class TextDedupSpec extends AnyFunSuite {
         array_min(transform(col("hs"), h => (h * (2L * j + 1) + (12345L * j + 7)) % TextQueries.P)).as("minhash"))
     }
     df.select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), transform(sh3, x => TextQueries.h32(x)).as("hs"))
+      .select(col("doc_id"), transform(sh3, x => graft.core.Hash.prefix(x)).as("hs"))
       .select(col("doc_id"), explode(array(sigs: _*)).as("sig"))
       .select(col("doc_id"), col("sig.j").as("j"), col("sig.minhash").as("minhash"))
   }
